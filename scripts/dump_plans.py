@@ -22,9 +22,9 @@ SF = "/root/testdata/sf0.001"
 CLAIMS = {
     "e2e_records": "one scan; html-null prune PUSHED to the scan; literal-map "
     "enrich (no join, no shuffle before the sink router)",
-    "domain_route_counts": "two-phase salted aggregate: partial agg on "
-    "(sink, domain, _salt), final on (sink, domain) — Zipf-head domain "
-    "spreads over salt buckets",
+    "domain_route_counts": "one groupBy(sink, domain) count: the partial "
+    "agg combines map-side, so the Zipf-head domain sends one row per map "
+    "task (salting stays only in salted_skew_join)",
     "quality_classifier": "BroadcastHashJoin against the 512-row weight "
     "table; token stream never shuffles by bucket; doc_id agg map-side "
     "combined",

@@ -1,11 +1,13 @@
-"""Per-sink aggregations with explicit heavy-tail skew handling.
+"""Per-sink aggregations, plus the skew-proof join for Zipf-heavy keys.
 
-Domains are Zipf-distributed (the head domain owns ~20% of all pages), so a
-naive groupBy(domain) puts a fifth of a 100 TB shuffle into one reducer.
-Pattern (SURVEY.md §4): salt the hot key-space with a small uniform salt,
-partially aggregate per (key, salt) — map-side combine shrinks this to
-|keys|·S rows — then re-aggregate per key. AQE skew handling stays on as a
-safety net, but the salt makes the plan skew-proof by construction.
+Domains are Zipf-distributed (the head domain owns ~20% of all pages), but
+a count per (sink, domain) needs no salt: map-side combine (the partial
+HashAggregate) sends at most one row per map task for any key, so the
+hot key's reducer gets one row per map task however hot the key is.
+Among this module's aggregates and joins, only `salted_skew_join` salts: a
+non-broadcast join has no map-side combine to lean on. (Top-k ranks
+elsewhere in this module salt their window partitions, which is a
+different problem: a window cannot combine map-side.)
 """
 
 from __future__ import annotations
@@ -18,70 +20,18 @@ from pyspark.sql import functions as F
 DEFAULT_SALT_BUCKETS = 16
 
 
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, str],
-    salt_col: str = "url",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
-    """Two-phase skew-safe aggregate.
-
-    aggs: output_name -> one of 'count' | 'sum:<col>' | 'max:<col>' |
-    'min:<col>'. Only algebraic aggregates (decomposable into
-    partial+final) are accepted — that is what makes salting sound.
-    """
-    salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(salt_buckets)).alias("_salt")
-
-    partial_exprs = []
-    final_exprs = []
-    value_cols: list[str] = []
-    for out, spec in aggs.items():
-        if spec == "count":
-            partial_exprs.append(F.count(F.lit(1)).alias(f"_p_{out}"))
-            final_exprs.append(F.sum(f"_p_{out}").alias(out))
-        else:
-            op, _, col = spec.partition(":")
-            value_cols.append(col)
-            if op == "sum":
-                partial_exprs.append(F.sum(col).alias(f"_p_{out}"))
-                final_exprs.append(F.sum(f"_p_{out}").alias(out))
-            elif op == "max":
-                partial_exprs.append(F.max(col).alias(f"_p_{out}"))
-                final_exprs.append(F.max(f"_p_{out}").alias(out))
-            elif op == "min":
-                partial_exprs.append(F.min(col).alias(f"_p_{out}"))
-                final_exprs.append(F.min(f"_p_{out}").alias(out))
-            else:
-                raise ValueError(f"unsupported agg spec: {spec}")
-
-    pruned = df.select(*keys, *dict.fromkeys(value_cols), salt)
-    partial = pruned.groupBy(*keys, "_salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*final_exprs)
-
-
 def sink_counts(records: DataFrame) -> DataFrame:
     """Per-sink record counts (O4 grouped emission: zero-row sinks produce
     no group — 'lazy creation' for free)."""
     return records.groupBy("sink").agg(F.count(F.lit(1)).alias("records"))
 
 
-def domain_counts(
-    records: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
-    """Per-(sink, domain) counts, salt-protected against Zipf-head skew."""
+def domain_counts(records: DataFrame) -> DataFrame:
+    """Per-(sink, domain) record counts."""
     # try_parse_url: under ANSI mode (Spark 4 default) parse_url THROWS on
     # a malformed url and would fail the whole job; malformed -> NULL domain
-    with_domain = records.withColumn(
-        "domain", F.try_parse_url(F.col("url"), F.lit("HOST"))
-    )
-    return salted_agg(
-        with_domain,
-        keys=["sink", "domain"],
-        aggs={"records": "count"},
-        salt_col="url",
-        salt_buckets=salt_buckets,
-    )
+    domain = F.try_parse_url(F.col("url"), F.lit("HOST")).alias("domain")
+    return records.groupBy("sink", domain).agg(F.count(F.lit(1)).alias("records"))
 
 
 def salted_skew_join(
@@ -99,7 +49,7 @@ def salted_skew_join(
     spread across `salt_buckets` reducers instead of one. Dim inflation
     costs |dim|·S rows, the price of removing the straggler. AQE's skew
     split stays on as a runtime net; the salt makes the plan skew-proof
-    by construction (same contract as salted_agg).
+    by construction.
     """
     if how not in ("inner", "left", "left_outer", "leftouter", "left_semi",
                    "leftsemi", "left_anti", "leftanti"):

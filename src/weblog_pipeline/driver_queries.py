@@ -464,9 +464,9 @@ def q_domain_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(sink, domain) record counts over the full pipeline — the
     SQL-checked twin of ``aggregate.domain_counts`` (SURVEY §2 addition
     (c)). Domains are Zipf(a=1.3)-distributed (the head domain owns ~20%
-    of all pages), so the Spark side runs the two-phase salted aggregate;
-    the oracle recomputes identical counts from doc_id integer arithmetic
-    plus the exported ZIPF_THRESHOLDS ladder."""
+    of all pages); the Spark side is a plain map-side-combined groupBy
+    count; the oracle recomputes identical counts from doc_id integer
+    arithmetic plus the exported ZIPF_THRESHOLDS ladder."""
     docs = _read(spark, sf_dir, "documents")
     result = build_pipeline(
         webpages_from_documents(docs), FLAGSHIP_CFG, observed_ts_us=OBSERVED_TS_US

@@ -57,6 +57,17 @@ class SpanEvent:
     res_attrs: dict = field(default_factory=dict)
 
 
+INT64_MIN, INT64_MAX = -(2**63), 2**63 - 1
+
+
+def int64(v: int) -> int:
+    """`v` if it fits the int64 columns it lands in (ts_ns, integer
+    event attrs), else OverflowError — which quarantines the page."""
+    if not INT64_MIN <= v <= INT64_MAX:
+        raise OverflowError(f"int {v} is outside the int64 range")
+    return v
+
+
 _HEX32_RE = re.compile(r"[0-9a-f]{32}\Z")
 _HEX16_RE = re.compile(r"[0-9a-f]{16}\Z")
 
@@ -78,8 +89,9 @@ def render_marker(ev: SpanEvent) -> str:
     for fname, v in (("span_name", ev.span_name), ("span_kind", ev.span_kind)):
         if "/" in v or " " in v or "-->" in v or "\n" in v:
             raise ValueError(f"{fname} may not contain '/', ' ', '-->' or newline: {v!r}")
-    if not isinstance(ev.ts_ns, int) or isinstance(ev.ts_ns, bool) or ev.ts_ns < 0:
-        raise ValueError(f"ts_ns must be a non-negative int: {ev.ts_ns!r}")
+    if (not isinstance(ev.ts_ns, int) or isinstance(ev.ts_ns, bool)
+            or not 0 <= ev.ts_ns <= INT64_MAX):
+        raise ValueError(f"ts_ns must be a non-negative int64: {ev.ts_ns!r}")
     if " attrs=" in ev.name or "-->" in ev.name or "\n" in ev.name:
         raise ValueError(f"event name may not contain ' attrs=', '-->' or newline: {ev.name!r}")
     payloads = []
@@ -87,6 +99,8 @@ def render_marker(ev: SpanEvent) -> str:
         for k, v in d.items():
             if not isinstance(v, (str, int)) or isinstance(v, bool):
                 raise ValueError(f"{fname}[{k!r}] must be str or int, got {type(v).__name__}")
+            if isinstance(v, int) and not INT64_MIN <= v <= INT64_MAX:
+                raise ValueError(f"{fname}[{k!r}] is outside the int64 range: {v}")
         payload = j(d)
         if "-->" in payload or "} span_attrs=" in payload or "} res_attrs=" in payload or "\n" in payload:
             raise ValueError(f"{fname} JSON collides with the marker grammar: {payload!r}")
@@ -97,6 +111,13 @@ def render_marker(ev: SpanEvent) -> str:
         f" ts={ev.ts_ns} name={ev.name} attrs={payloads[0]}"
         f" span_attrs={payloads[1]} res_attrs={payloads[2]}-->"
     )
+
+
+def _int64_attrs(attrs: dict) -> dict:
+    for v in attrs.values():
+        if isinstance(v, int):
+            int64(v)
+    return attrs
 
 
 def parse_markers(html: bytes, json_cache: dict | None = None) -> list[SpanEvent]:
@@ -128,9 +149,9 @@ def parse_markers(html: bytes, json_cache: dict | None = None) -> list[SpanEvent
                 span_name=m.group(3).decode("utf-8", "strict"),
                 span_kind=m.group(4).decode("utf-8", "strict"),
                 trace_state="",
-                ts_ns=int(m.group(5)),
+                ts_ns=int64(int(m.group(5))),
                 name=m.group(6).decode("utf-8", "strict"),
-                attrs=loads(m.group(7)),
+                attrs=_int64_attrs(loads(m.group(7))),
                 span_attrs=loads(m.group(8)),
                 res_attrs=loads(m.group(9)),
             )

@@ -113,7 +113,7 @@ def pagerank(
     at most two iterations deep, so plan analysis cost is flat in
     `iters` and a failed run resumes from the last materialized iterate
     instead of replaying the whole chain — the checkpoint discipline the
-    pipeline's lineage ledger (lineage.py) expects of iterative jobs,
+    pipeline's run_metrics ledger expects of iterative jobs,
     at half the eager-materialization jobs of a per-round checkpoint.
 
     Output: host, n_out, rank_scaled (all integers).

@@ -19,8 +19,9 @@ Scale notes (100 TB design):
   * Pages with zero events emit one sentinel row (event_idx = -1) so the
     byte-identical text invariant stays checkable in the same single scan
     of html — no second pass over the input.
-  * Corrupt markers (invalid UTF-8 / JSON) don't fail the task: the page is
-    quarantined via parse_error and contributes no event rows.
+  * Corrupt markers (invalid UTF-8 / JSON, an int outside int64) don't
+    fail the task: the page is quarantined via parse_error and contributes
+    no event rows.
   * The hot loop builds Arrow arrays directly (mapInArrow, not
     mapInPandas): page-grain passthrough columns (url/warc_ts/lang) are
     re-emitted with a `take` over the input batch — no Python objects —
@@ -38,7 +39,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
-from .markers import _MARKER_RE, _TEXT_RE
+from .markers import _MARKER_RE, _TEXT_RE, int64
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -90,7 +91,7 @@ def _split_flat(raw: bytes) -> tuple[list, list, list, list]:
             sv.append("true" if v else "false")
         elif isinstance(v, int):
             ik.append(k)
-            iv.append(v)
+            iv.append(int64(v))
         else:
             sk.append(k)
             sv.append(str(v))
@@ -205,7 +206,7 @@ def _parse_arrow_batches(
                         g[1].decode("utf-8", "strict"),
                         g[2].decode("utf-8", "strict"),
                         g[3].decode("utf-8", "strict"),
-                        int(g[4]),
+                        int64(int(g[4])),
                         g[5].decode("utf-8", "strict"),
                         a if a is not None else memo_a.setdefault(g[6], _split_flat(g[6])),
                         sp if sp is not None else memo_s.setdefault(g[7], _str_flat(g[7])),

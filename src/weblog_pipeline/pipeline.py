@@ -7,10 +7,16 @@ the same stage as the UDF output; only the final aggregations shuffle.
 
 from __future__ import annotations
 
+import hashlib
+import re
 import time
+import uuid
+from collections import Counter
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import domain_counts, sink_counts
@@ -18,6 +24,12 @@ from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig, SinkRoute
 from .enrich import enrich_events
 from .parse import event_rows, page_texts, parse_events
 from .route import with_sink
+
+#: run_metrics is the run ledger: one row per committed chunk
+LEDGER_SCHEMA = (
+    "run_id string, chunk int, chunk_files int, input_digest string, "
+    "observed_ts_us long, pages_in long, records map<string, long>"
+)
 
 
 @dataclass
@@ -29,6 +41,12 @@ class PipelineResult:
     observed_ts_us: int
     sink_names: tuple[str, ...] = ()
     metrics: dict = field(default_factory=dict)
+    webpages: DataFrame | None = None
+    #: input pages with html (the parse's input), observed on the scan by
+    #: whichever write runs first
+    pages_in: Observation | None = None
+    #: (webpages, observed_ts_us) -> the same pipeline over other input
+    rebuild: Callable[[DataFrame, int], PipelineResult] | None = None
 
 
 def build_pipeline(
@@ -42,8 +60,12 @@ def build_pipeline(
     if observed_ts_us is None:
         observed_ts_us = int(time.time() * 1_000_000)
 
-    # cheap prunes BEFORE the opaque UDF (Catalyst can't push through it)
-    scanned = webpages.where(F.col("html").isNotNull())
+    # cheap prunes BEFORE the opaque UDF (Catalyst can't push through it);
+    # the pages that reach the parse are counted above the pushed-down prune
+    pages_in = Observation()
+    scanned = webpages.where(F.col("html").isNotNull()).observe(
+        pages_in, F.count(F.lit(1)).alias("pages")
+    )
 
     parsed = parse_events(scanned)
     events = event_rows(parsed)
@@ -68,7 +90,44 @@ def build_pipeline(
         sink_names=tuple(
             dict.fromkeys(tuple(r.sink for r in routes) + (default_sink,))
         ),
+        webpages=webpages,
+        pages_in=pages_in,
+        rebuild=lambda pages, ts: build_pipeline(pages, cfg, routes, default_sink, ts),
     )
+
+
+def _chunk_width(spark: SparkSession, webpages: DataFrame, files: list[str]) -> int:
+    """Input files per chunk: as many as one scan wave reads (every core
+    busy on one spark.sql.files.maxPartitionBytes split), so an input of
+    up to one wave is one chunk. An input that cannot be narrowed by file
+    (generated or decoded pages carry no _metadata) is always one chunk."""
+    if len(files) < 2:
+        return 1
+    try:
+        webpages.select("_metadata.file_path")
+    except AnalysisException:
+        return len(files)
+    wave = (
+        spark.sparkContext.defaultParallelism
+        * spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()  # noqa: SLF001
+    )
+    total = webpages._jdf.queryExecution().analyzed().stats().sizeInBytes()  # noqa: SLF001
+    return min(len(files), max(1, len(files) * wave // max(int(total), 1)))
+
+
+def _chunk_input(webpages: DataFrame, files: list[str]) -> DataFrame:
+    """The input rows of `files` only; the file listing prunes on the
+    _metadata predicate, so a chunk reads only its own files."""
+    # inputFiles() spells an empty URI authority "file:///", _metadata as
+    # Hadoop's Path does ("file:/")
+    paths = [re.sub(r"^([A-Za-z][\w+.-]*):///", r"\1:/", f) for f in files]
+    return webpages.where(F.col("_metadata.file_path").isin(paths))
+
+
+def _ledger(io, run_id: str) -> list:
+    if not io.exists("run_metrics"):
+        return []
+    return io.read("run_metrics").where(F.col("run_id") == run_id).collect()
 
 
 def run_to_sinks(
@@ -76,39 +135,76 @@ def run_to_sinks(
     result: PipelineResult,
     io,
     write_texts: bool = False,
+    run_id: str | None = None,
 ) -> dict[str, int]:
-    """Materialize: ONE partitioned write fans records out to all sinks
-    (sink=<name> partition dirs == per-sink Iceberg tables); per-sink
-    counts ride along as an Observation on the same pass (O23 counters)
-    instead of a second execution of the DAG. Returns {sink: records}."""
-    from pyspark.sql import Observation
+    """The job's only writer, resumable per chunk of input files.
 
-    if write_texts:
-        io.append(result.texts, "page_texts")
+    Each chunk's page_texts and log_records replace exactly their own
+    (run_id, chunk) partitions, so a chunk that re-runs after a crash
+    overwrites its partial output: no duplicates, no gaps. Then one
+    run_metrics row commits the chunk (the ledger). A re-run with the same
+    run_id skips committed chunks and reuses the run's observed_ts_us and
+    chunk width, so resumed rows equal a clean run's; it refuses an input
+    whose file list changed. An input of up to one scan wave is one chunk
+    and runs the plan `result` already holds. Per-sink counts ride the
+    log_records write as an Observation. Returns the run's {sink: records}.
+    """
+    run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
+    files = sorted(result.webpages.inputFiles())
+    digest = hashlib.md5("\n".join(files).encode()).hexdigest()
+    rows = _ledger(io, run_id)
+    if rows and rows[0]["input_digest"] != digest:
+        raise ValueError(
+            f"run {run_id}: input file list changed since the first attempt; "
+            "start a new run_id"
+        )
+    ts = rows[0]["observed_ts_us"] if rows else result.observed_ts_us
+    width = rows[0]["chunk_files"] if rows else _chunk_width(spark, result.webpages, files)
+    chunks = [files[i : i + width] for i in range(0, len(files), width)] or [files]
+    done = {r["chunk"] for r in rows}
 
-    # per-sink counts are algebraic count_if aggregates over the statically
-    # known sink set, so they ride the write as an Observation
-    obs = Observation("pipeline")
-    obs_exprs = [F.count(F.lit(1)).alias("records")] + [
-        F.count_if(F.col("sink") == s).alias(f"n_{s}") for s in result.sink_names
-    ]
-    observed = result.logs.observe(obs, *obs_exprs)
+    pages_now = 0
+    for k, chunk_files in enumerate(chunks):
+        if k in done:
+            continue
+        part = result
+        if len(chunks) > 1:
+            part = result.rebuild(_chunk_input(result.webpages, chunk_files), ts)
+        elif ts != result.observed_ts_us:
+            part = result.rebuild(result.webpages, ts)
+        scope = {"run_id": F.lit(run_id), "chunk": F.lit(k)}
 
-    # single pass, partitioned by sink (O20 fan-out without N scans)
-    io.append(observed, "log_records", partition_by=["sink"])
+        if write_texts:
+            io.overwrite_partitions(
+                part.texts.withColumns(scope), "page_texts", ["run_id", "chunk"]
+            )
+        # per-sink counts are algebraic count_if aggregates over the
+        # statically known sink set, so they ride the write as an Observation
+        obs = Observation()
+        observed = part.logs.observe(
+            obs, *[F.count_if(F.col("sink") == s).alias(s) for s in part.sink_names]
+        )
+        # single pass, partitioned by sink (O20 fan-out without N scans)
+        io.overwrite_partitions(
+            observed.withColumns(scope), "log_records", ["sink", "run_id", "chunk"]
+        )
+        row = Row(run_id=run_id, chunk=k, chunk_files=width, input_digest=digest,
+                  observed_ts_us=ts, pages_in=part.pages_in.get["pages"], records=obs.get)
+        io.append(spark.createDataFrame([row], LEDGER_SCHEMA).coalesce(1), "run_metrics")
+        rows.append(row)
+        pages_now += row.pages_in
 
-    got = obs.get
-    counts = {s: got[f"n_{s}"] for s in result.sink_names if got[f"n_{s}"] > 0}
-    result.metrics["per_sink_counts"] = counts
-    result.metrics["records"] = got["records"]
-
-    # persist run-level counters (O23 observability; north rule: metrics
-    # checkpointed alongside lineage) — one row per (run, sink)
-    metrics_rows = [
-        (result.observed_ts_us, s, int(got[f"n_{s}"])) for s in result.sink_names
-    ]
-    metrics_df = spark.createDataFrame(
-        metrics_rows, "run_ts_us long, sink string, records long"
+    totals = Counter()
+    for r in rows:
+        totals.update(r["records"])
+    counts = {s: n for s, n in totals.items() if n > 0}
+    result.metrics.update(
+        run_id=run_id,
+        chunks=len(chunks),
+        chunks_skipped=len(done),
+        pages_in=sum(r["pages_in"] for r in rows),
+        pages_processed=pages_now,
+        records=sum(counts.values()),
+        per_sink_counts=counts,
     )
-    io.append(metrics_df.coalesce(1), "run_metrics")
     return counts

@@ -88,21 +88,16 @@ class TableIO:
         `df`, leaving every other partition untouched — re-running one
         day's extraction must not truncate the table. Iceberg gives this
         natively (overwritePartitions); the parquet seam uses Spark's
-        dynamic partitionOverwriteMode scoped to this one write."""
+        dynamic partitionOverwriteMode as an option of this one write."""
         if self.use_iceberg:
             df.writeTo(self._target(table)).overwritePartitions()
             return
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.write.mode("overwrite")
-                .partitionBy(*partition_by)
-                .parquet(self._target(table))
-            )
-        finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_by)
+            .parquet(self._target(table))
+        )
 
     def exists(self, table: str) -> bool:
         if self.use_iceberg:

@@ -1,167 +1,245 @@
-"""Checkpoint/resume: kill-and-rerun produces no duplicates and no missing
-rows; completed chunks are skipped on resume."""
+"""Checkpoint/resume through the job's one writer, ``run_to_sinks``: a
+re-run with the same run_id skips the chunks the run_metrics ledger holds,
+and a crashed chunk re-runs and overwrites its own partial output, so a
+resumed run has no duplicates and no gaps. Tests get several chunks by
+lowering spark.sql.files.maxPartitionBytes, which narrows the scan wave a
+chunk is sized to."""
 
+import glob
+import json
 import os
+import shutil
+import signal
+import subprocess
+import sys
+import time
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from weblog_pipeline.config import PipelineConfig
 from weblog_pipeline.driver_queries import OBSERVED_TS_US
-from weblog_pipeline.lineage import LineageStore, run_resumable
-from weblog_pipeline.pipeline import build_pipeline
+from weblog_pipeline.pipeline import build_pipeline, run_to_sinks
+from weblog_pipeline.tableio import TableIO
 from weblog_pipeline.webpages import generate_webpages
 
 CFG = PipelineConfig()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MPB = "spark.sql.files.maxPartitionBytes"
 
 
-def _build_logs(webpages):
-    return build_pipeline(webpages, CFG, observed_ts_us=OBSERVED_TS_US).logs
+def _write_input(spark, path, pages, files):
+    generate_webpages(spark, pages, partitions=files).write.parquet(path)
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
 @pytest.fixture()
 def input_path(spark, tmp_path):
     path = str(tmp_path / "webpages")
-    generate_webpages(spark, 120, partitions=4).write.parquet(path)
+    _write_input(spark, path, 120, 4)
     return path
 
 
-def expected_rows(spark, input_path):
-    return _build_logs(spark.read.parquet(input_path)).count()
+@pytest.fixture()
+def two_file_chunks(spark, input_path):
+    """One scan wave (every core on one maxPartitionBytes split) covers
+    half the input: the four input files make two chunks of two."""
+    total = sum(os.path.getsize(f) for f in glob.glob(input_path + "/*.parquet"))
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(MPB, str(-(-total // (2 * cores))))
+    yield
+    spark.conf.unset(MPB)
 
 
-def read_output(spark, out):
-    return spark.read.option("basePath", out).parquet(out + "/run=r1/*")
+def _run(spark, input_path, out, run_id="r1", io=None, observed_ts_us=OBSERVED_TS_US):
+    result = build_pipeline(spark.read.parquet(input_path), CFG, observed_ts_us=observed_ts_us)
+    counts = run_to_sinks(spark, result, io or TableIO(spark, out), run_id=run_id)
+    return counts, result.metrics
 
 
-def test_full_run_then_noop_resume(spark, tmp_path, input_path):
-    out = str(tmp_path / "out")
-    ledger = LineageStore(spark, str(tmp_path / "ledger"))
-
-    s1 = run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
-    assert s1["chunks_skipped"] == 0 and s1["units_total"] == 4
-    n = expected_rows(spark, input_path)
-    assert s1["rows_out"] == n
-    assert read_output(spark, out).count() == n
-
-    # resume with nothing pending: all chunks skipped, output unchanged
-    s2 = run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
-    assert s2["chunks_skipped"] == s2["chunks_total"] == 2
-    assert s2["rows_out"] == 0
-    assert read_output(spark, out).count() == n
+def expected_counts(spark, input_path):
+    logs = build_pipeline(spark.read.parquet(input_path), CFG, observed_ts_us=OBSERVED_TS_US).logs
+    return {r["sink"]: r["count"] for r in logs.groupBy("sink").count().collect()}
 
 
-def test_crash_mid_run_resumes_exactly(spark, tmp_path, input_path):
-    out = str(tmp_path / "out")
-    ledger = LineageStore(spark, str(tmp_path / "ledger"))
+def read_output(spark, out, run_id="r1"):
+    return TableIO(spark, out).read("log_records").where(F.col("run_id") == run_id)
 
-    calls = {"n": 0}
 
-    def flaky_build(webpages):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("simulated executor loss")
-        return _build_logs(webpages)
-
-    with pytest.raises(RuntimeError):
-        run_resumable(spark, input_path, out, "r1", flaky_build, ledger, unit_batch=2)
-
-    # chunk 0 committed, chunk 1 not: resume completes only chunk 1
-    s = run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
-    assert s["chunks_skipped"] == 1
-
-    n = expected_rows(spark, input_path)
+def assert_exact(spark, input_path, out):
+    """Every sink holds exactly a clean run's rows: no duplicates, no gaps."""
     got = read_output(spark, out)
-    assert got.count() == n  # no dups, no gaps
-    assert got.select("url", "event_name", "ts_ns").distinct().count() == n
+    by_sink = {r["sink"]: r["count"] for r in got.groupBy("sink").count().collect()}
+    assert by_sink == expected_counts(spark, input_path)
+    assert got.count() == got.select("url", "event_name", "ts_ns").distinct().count()
 
-def test_crash_between_sink_write_and_ledger_commit(spark, tmp_path, input_path):
+
+class CrashingIO(TableIO):
+    """Dies on the n-th write of `table`, before that write happens."""
+
+    def __init__(self, spark, location, table, n):
+        super().__init__(spark, location)
+        self.table, self.n, self.seen = table, n, 0
+
+    def _maybe_crash(self, table):
+        if table == self.table:
+            self.seen += 1
+            if self.seen == self.n:
+                raise RuntimeError(f"simulated kill before write {self.n} of {table}")
+
+    def overwrite_partitions(self, df, table, partition_by):
+        self._maybe_crash(table)
+        super().overwrite_partitions(df, table, partition_by)
+
+    def append(self, df, table, partition_by=None):
+        self._maybe_crash(table)
+        super().append(df, table, partition_by)
+
+
+def test_full_run_then_noop_resume(spark, tmp_path, input_path, two_file_chunks):
+    out = str(tmp_path / "out")
+    counts, m = _run(spark, input_path, out)
+    assert m["chunks"] == 2 and m["chunks_skipped"] == 0
+    assert counts == expected_counts(spark, input_path)
+    assert_exact(spark, input_path, out)
+
+    # resume with nothing pending: every chunk skipped, output unchanged,
+    # and the run's counts still come back (from the ledger)
+    again, m2 = _run(spark, input_path, out)
+    assert m2["chunks_skipped"] == m2["chunks"] == 2
+    assert m2["pages_processed"] == 0
+    assert again == counts
+    assert_exact(spark, input_path, out)
+
+
+def test_crash_mid_run_resumes_exactly(spark, tmp_path, input_path, two_file_chunks):
+    out = str(tmp_path / "out")
+    crashy = CrashingIO(spark, out, "log_records", 2)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        _run(spark, input_path, out, io=crashy)
+
+    # chunk 0 committed, chunk 1 not. The resume runs with Spark's default
+    # split size, which alone would plan one chunk, and a new clock: the
+    # run keeps its first attempt's chunks and observed_ts
+    spark.conf.unset(MPB)
+    _, m = _run(spark, input_path, out, observed_ts_us=OBSERVED_TS_US + 1)
+    assert (m["chunks"], m["chunks_skipped"]) == (2, 1)
+    assert_exact(spark, input_path, out)
+    ts = read_output(spark, out).select(F.unix_micros("observed_ts")).distinct().collect()
+    assert [r[0] for r in ts] == [OBSERVED_TS_US]
+
+
+def test_crash_between_sink_write_and_ledger_commit(spark, tmp_path, input_path, two_file_chunks):
     """Chaos test for the sink-boundary window: the process dies AFTER a
-    chunk's multi-sink output is on disk but BEFORE the ledger records it
-    — and worse, one sink partition of that chunk is only half there
-    (mid-write kill). The rerun must re-execute exactly that chunk and
-    its static chunk-dir overwrite must replace the partial output, so
-    every sink ends with exactly its expected rows — no duplicates, no
-    gaps, per sink (SURVEY §4 overwrite-by-filter idempotency)."""
-    import shutil
-
+    chunk's multi-sink output is on disk but BEFORE its ledger row — and
+    one sink partition of that chunk is only half there (mid-write kill).
+    The rerun re-executes exactly that chunk, and its (run, chunk)-scoped
+    overwrite replaces the partial output, so every sink ends with exactly
+    its expected rows (SURVEY §4 overwrite-by-filter idempotency)."""
     out = str(tmp_path / "out")
-    ledger = LineageStore(spark, str(tmp_path / "ledger"))
+    crashy = CrashingIO(spark, out, "run_metrics", 2)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        _run(spark, input_path, out, io=crashy)
 
-    class CrashAfterWrite(LineageStore):
-        # record() is called once for the manifest, then once per chunk
-        # AFTER that chunk's sink write: dying inside call 3 leaves chunk
-        # 1's output committed on disk with no ledger row
-        calls = 0
+    chunk1 = glob.glob(os.path.join(out, "log_records", "sink=*", "run_id=r1", "chunk=1"))
+    assert len(chunk1) >= 2, "fixture must route to multiple sinks"
+    shutil.rmtree(sorted(chunk1)[0])
 
-        def record(self, rows):
-            CrashAfterWrite.calls += 1
-            if CrashAfterWrite.calls == 3:
-                raise RuntimeError("simulated kill between write and ledger")
-            super().record(rows)
-
-    crashy = CrashAfterWrite(spark, str(tmp_path / "ledger"))
-    with pytest.raises(RuntimeError, match="between write and ledger"):
-        run_resumable(spark, input_path, out, "r1", _build_logs, crashy, unit_batch=2)
-
-    # chunk 1's output exists but is unrecorded; amputate one sink
-    # partition of it to simulate the kill landing mid-write
-    chunk1 = os.path.join(out, "run=r1", "chunk=000001")
-    sink_dirs = sorted(
-        d for d in os.listdir(chunk1) if d.startswith("sink=")
-    )
-    assert len(sink_dirs) >= 2, "fixture must route to multiple sinks"
-    shutil.rmtree(os.path.join(chunk1, sink_dirs[0]))
-
-    # rerun with a healthy ledger: only chunk 0 is skipped; chunk 1
-    # re-executes and its overwrite replaces the amputated output
-    s = run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
-    assert s["chunks_skipped"] == 1
-
-    expected = (
-        _build_logs(spark.read.parquet(input_path))
-        .groupBy("sink")
-        .count()
-        .collect()
-    )
-    got = {
-        r["sink"]: r["count"]
-        for r in read_output(spark, out).groupBy("sink").count().collect()
-    }
-    assert got == {r["sink"]: r["count"] for r in expected}
-    # and no row-level duplicates hiding inside equal counts
-    o = read_output(spark, out)
-    assert o.count() == o.select("url", "event_name", "ts_ns").distinct().count()
+    _, m = _run(spark, input_path, out)
+    assert m["chunks_skipped"] == 1
+    assert_exact(spark, input_path, out)
 
 
-def test_resume_refuses_changed_input_list(spark, tmp_path, input_path):
+def test_resume_refuses_changed_input_list(spark, tmp_path, input_path, two_file_chunks):
     out = str(tmp_path / "out")
-    ledger = LineageStore(spark, str(tmp_path / "ledger"))
-    run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
+    _run(spark, input_path, out)
 
-    # add a file: chunk numbering would shift -> resume must refuse
-    extra = str(tmp_path / "webpages")
-    generate_webpages(spark, 30, partitions=1).write.mode("append").parquet(extra)
+    # an added file would shift the chunks: the resume must refuse
+    generate_webpages(spark, 30, partitions=1).write.mode("append").parquet(input_path)
     with pytest.raises(ValueError, match="input file list changed"):
-        run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
+        _run(spark, input_path, out)
     # a fresh run_id accepts the new list
-    s = run_resumable(spark, input_path, out, "r2", _build_logs, ledger, unit_batch=2)
-    assert s["chunks_skipped"] == 0
+    _, m = _run(spark, input_path, out, run_id="r2")
+    assert m["chunks_skipped"] == 0
 
 
-def test_ledger_records_real_rows_in(spark, tmp_path, input_path):
-    """rows_in/rows_out live on chunk-grain rows (status='chunk_done'),
-    one per chunk, so a plain SUM over them equals the input row count —
-    even with multiple units per chunk (unit_batch=2 -> 2 chunks of 2
-    units here, the multi-chunk case where grain duplication would
-    overcount)."""
+def test_ledger_records_real_rows_in(spark, tmp_path, input_path, two_file_chunks):
+    """One run_metrics row per chunk, so plain sums over a run's rows give
+    the input pages and the per-sink records."""
     out = str(tmp_path / "out")
-    ledger = LineageStore(spark, str(tmp_path / "ledger"))
-    run_resumable(spark, input_path, out, "r1", _build_logs, ledger, unit_batch=2)
-    ledger_df = spark.read.parquet(str(tmp_path / "ledger"))
-    chunk_rows = ledger_df.where("status = 'chunk_done'").collect()
-    assert chunk_rows and all(r["rows_in"] >= 0 for r in chunk_rows)
-    assert sum(r["rows_in"] for r in chunk_rows) == 120
-    # unit rows exist for resume planning and carry no counts (chunk grain)
-    unit_rows = ledger_df.where("status = 'done'").collect()
-    assert unit_rows and all(r["rows_in"] == -1 for r in unit_rows)
-    assert all(not r["unit_id"].startswith("__") for r in unit_rows)
+    counts, m = _run(spark, input_path, out)
+    rows = TableIO(spark, out).read("run_metrics").where("run_id = 'r1'").collect()
+    assert sorted(r["chunk"] for r in rows) == [0, 1]
+    assert sum(r["pages_in"] for r in rows) == m["pages_in"] == 120
+    summed = {}
+    for r in rows:
+        for sink, n in r["records"].items():
+            summed[sink] = summed.get(sink, 0) + n
+    assert {s: n for s, n in summed.items() if n} == counts
+    assert {(r["observed_ts_us"], r["input_digest"], r["chunk_files"]) for r in rows} == {
+        (OBSERVED_TS_US, rows[0]["input_digest"], 2)
+    }
+
+
+def _comparable(df):
+    return df.select(*[
+        F.to_json(f.name).alias(f.name) if isinstance(f.dataType, T.MapType) else f.name
+        for f in df.schema.fields
+    ])
+
+
+def _assert_same_rows(a, b):
+    a, b = _comparable(a), _comparable(b)
+    assert a.count() == b.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_main_run_id_resumes_after_kill(spark, tmp_path):
+    """`main.py --run-id R` killed after its first chunk commits, then run
+    again with the same --run-id, leaves a clean run's rows: no duplicates,
+    no gaps, one observed_ts."""
+    files = _write_input(spark, str(tmp_path / "webpages"), 120, 4)
+    smallest = min(os.path.getsize(f) for f in files)
+    # a wave below one file for 2 and for 4 cores: one file per chunk
+    mpb = str(smallest // 8)
+    env = dict(os.environ, PYSPARK_SUBMIT_ARGS=f"--conf {MPB}={mpb} pyspark-shell")
+    out = str(tmp_path / "out")
+    cmd = [sys.executable, os.path.join(REPO, "main.py"), "--input", str(tmp_path / "webpages"),
+           "--output", out, "--run-id", "R", "--cpus", "2", "--write-texts"]
+    ledger = os.path.join(out, "run_metrics", "part-*.parquet")
+
+    def committed():
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(ledger))
+
+    with open(tmp_path / "killed.log", "w") as log:
+        proc = subprocess.Popen(cmd, env=env, stdout=log, stderr=log, start_new_session=True)
+        deadline = time.time() + 600
+        while proc.poll() is None and not committed() and time.time() < deadline:
+            time.sleep(0.02)
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+    n_committed = committed()
+    assert 1 <= n_committed < 4, "the kill must land between the first and the last chunk"
+
+    done = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+    assert done.returncode == 0, done.stderr[-2000:]
+    report = json.loads(done.stdout.strip().splitlines()[-1])
+    assert (report["chunks"], report["chunks_skipped"]) == (4, n_committed)
+    assert report["pages_in"] == 120
+
+    spark.conf.set(MPB, mpb)
+    try:
+        clean = str(tmp_path / "clean")
+        result = build_pipeline(spark.read.parquet(str(tmp_path / "webpages")), CFG)
+        run_to_sinks(spark, result, TableIO(spark, clean), write_texts=True, run_id="R")
+        assert result.metrics["chunks"] == 4
+    finally:
+        spark.conf.unset(MPB)
+
+    got, want = TableIO(spark, out), TableIO(spark, clean)
+    logs = got.read("log_records")
+    assert logs.select("observed_ts").distinct().count() == 1
+    _assert_same_rows(logs.drop("observed_ts"), want.read("log_records").drop("observed_ts"))
+    _assert_same_rows(got.read("page_texts"), want.read("page_texts"))

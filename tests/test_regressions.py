@@ -1,5 +1,5 @@
 """Regression tests for review findings: int span/resource attrs, ns->us
-precision, ANSI-safe urls, salted_agg value columns, int32 severity wrap."""
+precision, ANSI-safe urls, int32 severity wrap."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,21 +80,6 @@ def test_malformed_url_does_not_crash_domain_agg(spark):
     assert all(r["domain"] is None for r in rows)
 
 
-def test_salted_agg_value_specs(spark):
-    from weblog_pipeline.aggregate import salted_agg
-
-    df = spark.createDataFrame(
-        [("a", 1, "u1"), ("a", 5, "u2"), ("b", 2, "u3")], ["k", "v", "url"]
-    )
-    got = {
-        r["k"]: (r["total"], r["biggest"], r["smallest"])
-        for r in salted_agg(
-            df, ["k"], {"total": "sum:v", "biggest": "max:v", "smallest": "min:v"}
-        ).collect()
-    }
-    assert got == {"a": (6, 5, 1), "b": (2, 2, 2)}
-
-
 @pytest.mark.parametrize("raw,wrapped", [
     (5_000_000_000, 705_032_704),
     (2**31, -(2**31)),
@@ -135,6 +120,9 @@ def test_render_marker_rejects_grammar_violations():
         {"name": "evil attrs={}"},                    # collides with ' attrs='
         {"ts_ns": -5},
         {"ts_ns": True},  # bool is an int subclass but not grammar-valid
+        {"ts_ns": 2**63},                             # outside int64
+        {"attrs": {"k": -(2**63) - 1}},               # outside int64
+        {"span_attrs": {"k": 2**63}},                 # outside int64
         {"attrs": {"k": 1.5}},                        # float not in grammar
         {"attrs": {"k": True}},                       # bool not in grammar
         {"attrs": {"k": 'x"} span_attrs={"y": "z'}},  # payload collision

@@ -134,17 +134,30 @@ def test_include_event_names_zero_output(spark):
     assert result.texts.count() == 60
 
 
-def test_corrupt_marker_quarantined(spark):
+@pytest.mark.parametrize(
+    "ts,attrs,error",
+    [
+        (b"1", b"{not-json}", "JSONDecodeError"),
+        # one int outside int64 fails only its own page, as in the oracle
+        (b"1", b'{"n":1180591620717411303424}', "OverflowError"),
+        (b"1180591620717411303424", b"{}", "OverflowError"),
+    ],
+    ids=["json", "attr-int-overflow", "ts-overflow"],
+)
+def test_corrupt_marker_quarantined(spark, ts, attrs, error):
     """A page with an unparseable marker must not fail the task: it yields
     a parse_error row, contributes no events, and other pages are fine."""
-    from pyspark.sql import Row
+    from weblog_pipeline.markers import parse_markers
+    from weblog_pipeline.webpages import WEBPAGES_SCHEMA
 
     good = gen_page(11)
     bad_html = (
         b"<p>fine</p><!--otel span_ctx=" + b"a" * 32 + b"/" + b"b" * 16
-        + b"/s/k ts=1 name=x attrs={not-json} span_attrs={} res_attrs={}-->"
+        + b"/s/k ts=" + ts + b" name=x attrs=" + attrs + b" span_attrs={} res_attrs={}-->"
     )
-    from weblog_pipeline.webpages import WEBPAGES_SCHEMA
+    with pytest.raises(Exception) as oracle_error:
+        parse_markers(bad_html)
+    assert type(oracle_error.value).__name__ == error
 
     df = spark.createDataFrame(
         [
@@ -156,7 +169,7 @@ def test_corrupt_marker_quarantined(spark):
     result = build_pipeline(df, PipelineConfig(), observed_ts_us=OBS_US)
     texts = {r["url"]: r for r in result.texts.collect()}
     bad = texts["https://bad.example.com/x"]
-    assert bad["parse_error"] is not None and "JSONDecodeError" in bad["parse_error"]
+    assert bad["parse_error"].startswith(f"{error}: ")
     assert bad["page_text"] is None and bad["n_page_events"] == 0
     # the good page still produced its records
     logs = result.logs.collect()
@@ -164,7 +177,7 @@ def test_corrupt_marker_quarantined(spark):
     assert len(logs) == 5
 
 
-def test_domain_counts_salted(spark):
+def test_domain_counts(spark):
     cfg = PipelineConfig()
     webpages = generate_webpages(spark, N_PAGES, partitions=4)
     result = build_pipeline(webpages, cfg, observed_ts_us=OBS_US)
@@ -249,6 +262,8 @@ def test_spark_submit_pyfiles_launch_path(tmp_path):
     report = json.loads(line)
     assert report["observed_records"] > 0
     assert sum(report["per_sink_counts"].values()) == report["observed_records"]
+    # pages in come from the write's own scan, not a second count of the input
+    assert report["pages_in"] == 400
     sink_dirs = [
         d for d in os.listdir(os.path.join(out_dir, "log_records"))
         if d.startswith("sink=")

@@ -125,6 +125,8 @@ def test_compact_reduces_file_count_preserving_rows(spark, tmp_path):
 def test_overwrite_partitions_is_surgical(spark, tmp_path):
     from weblog_pipeline.tableio import TableIO
 
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(mode)
     io = TableIO(spark, str(tmp_path))
     d1 = spark.createDataFrame([(1, "a"), (2, "b")], "id int, sink string")
     io.overwrite_partitions(d1, "t", ["sink"])
@@ -133,8 +135,8 @@ def test_overwrite_partitions_is_surgical(spark, tmp_path):
     io.overwrite_partitions(d2, "t", ["sink"])
     rows = {(r["id"], r["sink"]) for r in io.read("t").collect()}
     assert rows == {(9, "a"), (2, "b")}
-    # and the session conf is restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+    # and the session conf is untouched
+    assert spark.conf.get(mode) == before
 
 
 def test_compact_self_heals_after_crash_between_renames(spark, tmp_path):
