@@ -34,6 +34,8 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import json
+import sys
+import zipimport
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -116,6 +118,23 @@ def _str_flat(raw: bytes) -> tuple[list, list]:
     return ks, vs
 
 
+def _trim_importers() -> None:
+    """Keep the worker's per-task import bookkeeping to one directory read
+    per archive. pyspark's worker calls importlib.invalidate_caches() at
+    the start of every task, and on CPython 3.11 each cached zipimporter
+    then re-reads its archive's whole central directory: one per imported
+    package of pyspark.zip, and the spark-core jar Spark puts on the worker
+    path (thousands of entries, no Python). sys.path_importer_cache is a
+    pure cache: a dropped package importer is rebuilt from
+    zipimport._zip_directory_cache on the next import; the archive roots
+    on sys.path stay."""
+    sys.path[:] = [p for p in sys.path if not p.endswith(".jar")]
+    roots = set(sys.path)
+    for key, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and key not in roots:
+            del sys.path_importer_cache[key]
+
+
 class _MapCol:
     """Flat builder for one Arrow map column: contiguous key/value
     buffers plus per-row offsets (None offset = NULL map entry)."""
@@ -149,6 +168,8 @@ def _parse_arrow_batches(
     decode order within a marker fixed, first failure wins and the page
     contributes one sentinel row with parse_error set."""
     import pyarrow as pa
+
+    _trim_importers()
 
     str_t = pa.string()
     int_t = pa.int64()

@@ -15,9 +15,11 @@ from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .aggregate import domain_counts, sink_counts
 from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig, SinkRoute
@@ -36,6 +38,8 @@ LEDGER_SCHEMA = (
 class PipelineResult:
     logs: DataFrame
     texts: DataFrame
+    #: the parse output both logs and texts read
+    parsed: DataFrame
     per_sink: DataFrame
     per_domain: DataFrame
     observed_ts_us: int
@@ -82,6 +86,7 @@ def build_pipeline(
     return PipelineResult(
         logs=logs,
         texts=page_texts(parsed),
+        parsed=parsed,
         per_sink=sink_counts(logs),
         per_domain=domain_counts(logs),
         observed_ts_us=observed_ts_us,
@@ -130,6 +135,17 @@ def _ledger(io, run_id: str) -> list:
     return io.read("run_metrics").where(F.col("run_id") == run_id).collect()
 
 
+def _ledger_row(spark: SparkSession, row: Row) -> DataFrame:
+    """One run_metrics row as literals over a one-row range: built in the
+    JVM, so committing a chunk starts no Python worker (createDataFrame
+    would run a Python RDD)."""
+    records = F.create_map(*[F.lit(x) for kv in row.records.items() for x in kv])
+    return spark.range(0, 1, 1, 1).select(
+        *[F.lit(v).alias(k) for k, v in row.asDict().items() if k != "records"],
+        records.alias("records"),
+    ).to(T.StructType.fromDDL(LEDGER_SCHEMA))
+
+
 def run_to_sinks(
     spark: SparkSession,
     result: PipelineResult,
@@ -147,7 +163,9 @@ def run_to_sinks(
     chunk width, so resumed rows equal a clean run's; it refuses an input
     whose file list changed. An input of up to one scan wave is one chunk
     and runs the plan `result` already holds. Per-sink counts ride the
-    log_records write as an Observation. Returns the run's {sink: records}.
+    log_records write as an Observation. When texts are written too, the
+    chunk's parse output is cached for its two writes, so each page is
+    parsed once. Returns the run's {sink: records}.
     """
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
     files = sorted(result.webpages.inputFiles())
@@ -158,6 +176,11 @@ def run_to_sinks(
             f"run {run_id}: input file list changed since the first attempt; "
             "start a new run_id"
         )
+    if not rows:
+        # an attempt that died before its first ledger row may have planned
+        # other chunks: what it wrote cannot be told apart, so drop it all
+        for table in ("page_texts", "log_records"):
+            io.delete_partitions(table, "run_id", run_id)
     ts = rows[0]["observed_ts_us"] if rows else result.observed_ts_us
     width = rows[0]["chunk_files"] if rows else _chunk_width(spark, result.webpages, files)
     chunks = [files[i : i + width] for i in range(0, len(files), width)] or [files]
@@ -174,23 +197,31 @@ def run_to_sinks(
             part = result.rebuild(result.webpages, ts)
         scope = {"run_id": F.lit(run_id), "chunk": F.lit(k)}
 
+        # a chunk is one scan wave, so its cached parse output is bounded
+        # by one wave's; it spills to disk when memory runs short
         if write_texts:
-            io.overwrite_partitions(
-                part.texts.withColumns(scope), "page_texts", ["run_id", "chunk"]
+            part.parsed.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if write_texts:
+                io.overwrite_partitions(
+                    part.texts.withColumns(scope), "page_texts", ["run_id", "chunk"]
+                )
+            # per-sink counts are algebraic count_if aggregates over the
+            # statically known sink set, so they ride the write as an Observation
+            obs = Observation()
+            observed = part.logs.observe(
+                obs, *[F.count_if(F.col("sink") == s).alias(s) for s in part.sink_names]
             )
-        # per-sink counts are algebraic count_if aggregates over the
-        # statically known sink set, so they ride the write as an Observation
-        obs = Observation()
-        observed = part.logs.observe(
-            obs, *[F.count_if(F.col("sink") == s).alias(s) for s in part.sink_names]
-        )
-        # single pass, partitioned by sink (O20 fan-out without N scans)
-        io.overwrite_partitions(
-            observed.withColumns(scope), "log_records", ["sink", "run_id", "chunk"]
-        )
+            # single pass, partitioned by sink (O20 fan-out without N scans)
+            io.overwrite_partitions(
+                observed.withColumns(scope), "log_records", ["sink", "run_id", "chunk"]
+            )
+        finally:
+            if write_texts:
+                part.parsed.unpersist()
         row = Row(run_id=run_id, chunk=k, chunk_files=width, input_digest=digest,
                   observed_ts_us=ts, pages_in=part.pages_in.get["pages"], records=obs.get)
-        io.append(spark.createDataFrame([row], LEDGER_SCHEMA).coalesce(1), "run_metrics")
+        io.append(_ledger_row(spark, row), "run_metrics")
         rows.append(row)
         pages_now += row.pages_in
 

@@ -12,6 +12,7 @@ catalog conf; call sites do not change.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,6 +100,26 @@ class TableIO:
             .parquet(self._target(table))
         )
 
+    def delete_partitions(self, table: str, column: str, value: str) -> None:
+        """Drop every row of `table` whose partition `column` equals
+        `value` (a no-op when the table does not exist)."""
+        if not self.exists(table):
+            return
+        if self.use_iceberg:
+            self.spark.sql(
+                f"DELETE FROM {self._target(table)} WHERE {column} = :value",
+                args={"value": value},
+            )
+            return
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+        name = f"{column}={utils.escapePathName(value)}"
+        for root, dirs, _ in os.walk(self._target(table)):
+            # descend only through the partition levels above `column`
+            for d in [d for d in dirs if d.startswith(f"{column}=")]:
+                dirs.remove(d)
+                if d == name:
+                    shutil.rmtree(os.path.join(root, d))
+
     def exists(self, table: str) -> bool:
         if self.use_iceberg:
             return self.spark.catalog.tableExists(self._target(table))
@@ -152,7 +173,6 @@ def compact(
     Returns the new file count.
     """
     import math
-    import shutil
 
     tmp = path.rstrip("/") + "._compact_tmp"
     old = path.rstrip("/") + "._compact_old"

@@ -16,12 +16,13 @@ import time
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from weblog_pipeline.config import PipelineConfig
 from weblog_pipeline.driver_queries import OBSERVED_TS_US
-from weblog_pipeline.pipeline import build_pipeline, run_to_sinks
+from weblog_pipeline.pipeline import LEDGER_SCHEMA, _ledger_row, build_pipeline, run_to_sinks
 from weblog_pipeline.tableio import TableIO
 from weblog_pipeline.webpages import generate_webpages
 
@@ -181,6 +182,165 @@ def test_ledger_records_real_rows_in(spark, tmp_path, input_path, two_file_chunk
     assert {(r["observed_ts_us"], r["input_digest"], r["chunk_files"]) for r in rows} == {
         (OBSERVED_TS_US, rows[0]["input_digest"], 2)
     }
+
+
+class _Listener:
+    """QueryExecutionListener (a py4j callback) keeping each finished
+    QueryExecution, writes included."""
+
+    def __init__(self):
+        self.qes = []
+
+    def onSuccess(self, func_name, qe, duration_ns):  # noqa: N802
+        self.qes.append(qe)
+
+    def onFailure(self, func_name, qe, exception):  # noqa: N802
+        pass
+
+    def equals(self, other):  # unregister compares listeners through py4j
+        return other is self
+
+    def hashCode(self):  # noqa: N802
+        return id(self) & 0x7FFFFFFF
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def _parse_nodes(spark, plan) -> set:
+    """Identities of the parse (MapInArrow) nodes under an executed plan,
+    looking through AQE stages and into the plan that filled a cache: two
+    writes that read one cached parse reach the same node."""
+    found, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "MapInArrowExec":
+            found.add(spark._jvm.System.identityHashCode(node))
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif cls == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_one_parse_pass_per_chunk(spark, tmp_path, input_path, two_file_chunks):
+    """With texts written, a chunk's page_texts and log_records writes both
+    read one parse of its pages, and the pages-in Observation below the
+    cached parse still counts every input page."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    listener = _Listener()
+    per_chunk = []  # (writes that read a parse, distinct parse nodes)
+
+    class ChunkPlans(TableIO):
+        def append(self, df, table, partition_by=None):
+            super().append(df, table, partition_by)
+            if table == "run_metrics":  # the chunk's commit: close its group
+                spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+                reads = [_parse_nodes(spark, qe.executedPlan()) for qe in listener.qes]
+                reads = [r for r in reads if r]
+                per_chunk.append((len(reads), len(set().union(*reads))))
+                listener.qes.clear()
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    manager = spark._jsparkSession.listenerManager()
+    # py4j makes a new JVM proxy each time a Python object is passed, so
+    # unregister must get the proxy register got, or the listener stays
+    proxy = spark._jvm.java.util.Collections.singletonList(listener).get(0)
+    manager.register(proxy)
+    out = str(tmp_path / "out")
+    try:
+        result = build_pipeline(spark.read.parquet(input_path), CFG, observed_ts_us=OBSERVED_TS_US)
+        counts = run_to_sinks(spark, result, ChunkPlans(spark, out), write_texts=True, run_id="r1")
+    finally:
+        manager.unregister(proxy)
+
+    assert per_chunk == [(2, 1), (2, 1)]
+    rows = TableIO(spark, out).read("run_metrics").collect()
+    assert sum(r["pages_in"] for r in rows) == result.metrics["pages_in"] == 120
+    assert counts == expected_counts(spark, input_path)
+    assert TableIO(spark, out).read("page_texts").count() == 120
+
+
+def test_ledger_row_is_built_in_the_jvm(spark, tmp_path, input_path):
+    """The run_metrics row runs no Python task, has exactly the ledger's
+    types, holds an empty records map, and a resume reads it back as
+    written."""
+    schema = T.StructType.fromDDL(LEDGER_SCHEMA)
+    for records in ({}, {"sink_db": 2**40, "sink_default": 0}):
+        row = Row(run_id="r", chunk=3, chunk_files=2, input_digest="d",
+                  observed_ts_us=OBSERVED_TS_US, pages_in=7, records=records)
+        df = _ledger_row(spark, row)
+        assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+        # names and types are the ledger's exactly; literals are never null
+        assert df.schema.simpleString() == schema.simpleString()
+        assert df.collect() == [row]
+
+    # nothing passes the event-name filter: every per-sink count is zero
+    cfg = PipelineConfig(include_event_names=("no-such-event",))
+    out = str(tmp_path / "out")
+
+    def run():
+        result = build_pipeline(spark.read.parquet(input_path), cfg, observed_ts_us=OBSERVED_TS_US)
+        return run_to_sinks(spark, result, TableIO(spark, out), run_id="r1"), result.metrics
+
+    counts, m = run()
+    ledger = TableIO(spark, out).read("run_metrics")
+    assert ledger.schema == schema
+    written = ledger.collect()
+    assert counts == {} and [r["pages_in"] for r in written] == [120]
+    assert set(written[0]["records"].values()) == {0}
+
+    again, m2 = run()
+    assert m2["chunks_skipped"] == m2["chunks"] == 1
+    assert (again, m2["pages_in"]) == ({}, 120)
+    assert TableIO(spark, out).read("run_metrics").collect() == written
+
+
+def test_stale_partitions_cleared_when_width_changes_before_first_commit(spark, tmp_path):
+    """An attempt that dies after writing its chunk 0 but before its first
+    ledger row may have planned other chunks than the re-run does. Here the
+    re-run's chunk 0 holds only pages without markers, so it writes no
+    log_records partition that would replace the first attempt's: the
+    re-run must drop the run's partitions first to equal a clean run."""
+    path = str(tmp_path / "webpages")
+    plain = F.encode(F.lit("<p>no markers here</p>"), "UTF-8")
+    generate_webpages(spark, 120, partitions=4).withColumn(
+        "html", F.when(F.spark_partition_id() < 2, plain).otherwise(F.col("html"))
+    ).write.parquet(path)
+    total = sum(os.path.getsize(f) for f in glob.glob(os.path.join(path, "*.parquet")))
+    two_files = str(-(-total // (2 * spark.sparkContext.defaultParallelism)))
+
+    def run(out, mpb=None, io=None):
+        """One chunk of four files at the default split size; chunks of
+        two files at `two_files`."""
+        if mpb:
+            spark.conf.set(MPB, mpb)
+        try:
+            result = build_pipeline(spark.read.parquet(path), CFG, observed_ts_us=OBSERVED_TS_US)
+            run_to_sinks(spark, result, io or TableIO(spark, out), write_texts=True, run_id="r1")
+            return result.metrics
+        finally:
+            spark.conf.unset(MPB)
+
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run(out, io=CrashingIO(spark, out, "run_metrics", 1))
+    assert glob.glob(os.path.join(out, "log_records", "sink=*", "run_id=r1", "chunk=0"))
+    m = run(out, two_files)
+    assert (m["chunks"], m["chunks_skipped"]) == (2, 0)
+
+    clean = str(tmp_path / "clean")
+    run(clean, two_files)
+    got, want = TableIO(spark, out), TableIO(spark, clean)
+    _assert_same_rows(got.read("log_records"), want.read("log_records"))
+    _assert_same_rows(got.read("page_texts"), want.read("page_texts"))
 
 
 def _comparable(df):

@@ -230,9 +230,12 @@ def test_spark_submit_pyfiles_launch_path(tmp_path):
     spark-submit --py-files in a FRESH JVM (no PYTHONPATH leakage of
     src/), and assert the job prints the observed per-sink counts and
     writes the partitioned sink dirs."""
+    import glob
     import json
     import shutil
     import subprocess
+
+    import pyarrow.parquet as pq
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spark_submit = shutil.which("spark-submit")
@@ -254,6 +257,7 @@ def test_spark_submit_pyfiles_launch_path(tmp_path):
             os.path.join(repo, "main.py"),
             "--generate", "400",
             "--output", out_dir,
+            "--write-texts",
         ],
         env=env, capture_output=True, text=True, timeout=600,
     )
@@ -264,11 +268,71 @@ def test_spark_submit_pyfiles_launch_path(tmp_path):
     assert sum(report["per_sink_counts"].values()) == report["observed_records"]
     # pages in come from the write's own scan, not a second count of the input
     assert report["pages_in"] == 400
+    # both writes read the chunk's one cached parse, in workers that import
+    # the package from pipeline.zip
+    texts = glob.glob(os.path.join(out_dir, "page_texts", "**", "*.parquet"), recursive=True)
+    assert sum(pq.ParquetFile(f).metadata.num_rows for f in texts) == 400
     sink_dirs = [
         d for d in os.listdir(os.path.join(out_dir, "log_records"))
         if d.startswith("sink=")
     ]
     assert len(sink_dirs) >= 2
+
+
+def test_parse_task_trims_worker_importers(spark):
+    """After a parse task the worker holds at most one zipimporter per
+    archive, all of them archive roots on sys.path, and no .jar path entry;
+    a pyspark submodule not yet imported still imports from the zip after
+    the next task's importlib.invalidate_caches()."""
+    import json
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+        from collections import Counter
+
+        import pyarrow as pa
+
+        from weblog_pipeline.parse import _parse_arrow_batches
+
+        for _ in _parse_arrow_batches(batches):
+            pass
+        zips = {k: f.archive for k, f in sys.path_importer_cache.items()
+                if isinstance(f, zipimport.zipimporter)}
+        state = {
+            "per_archive": max(Counter(zips.values()).values(), default=0),
+            "off_path": [k for k in zips if k not in sys.path],
+            "jars": [p for p in sys.path if p.endswith(".jar")],
+        }
+        # what the worker does before its next task, then a fresh import
+        importlib.invalidate_caches()
+        fresh = [m for m in ("pyspark.sql.avro.functions", "pyspark.sql.protobuf.functions",
+                             "pyspark.mllib.common") if m not in sys.modules][:1]
+        state["fresh"] = [importlib.import_module(m).__file__ for m in fresh]
+        yield pa.RecordBatch.from_pydict({"state": [json.dumps(state)]})
+
+    pages = generate_webpages(spark, 40, partitions=1).select("url", "warc_ts", "html", "lang")
+    [row] = pages.mapInArrow(probe, "state string").collect()
+    state = json.loads(row["state"])
+    assert state["per_archive"] <= 1 and not state["off_path"] and not state["jars"]
+    assert len(state["fresh"]) == 1 and ".zip" in state["fresh"][0]
+
+    def fresh_import(batches):
+        import importlib
+        import sys
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        left = [m for m in ("pyspark.sql.protobuf.functions", "pyspark.mllib.common",
+                            "pyspark.ml.param") if m not in sys.modules][:1]
+        yield pa.RecordBatch.from_pydict(
+            {"file": [importlib.import_module(m).__file__ for m in left]})
+
+    [row] = spark.range(0, 1, 1, 1).mapInArrow(fresh_import, "file string").collect()
+    assert ".zip" in row["file"]
 
 
 def test_parse_arrow_map_assembly_memo_and_sentinels(spark):
