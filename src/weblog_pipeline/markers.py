@@ -120,26 +120,12 @@ def _int64_attrs(attrs: dict) -> dict:
     return attrs
 
 
-def parse_markers(html: bytes, json_cache: dict | None = None) -> list[SpanEvent]:
-    """Extract every embedded span event from raw page bytes, in order.
+def _loads(raw: bytes) -> dict:
+    return json.loads(raw.decode("utf-8", "strict"))
 
-    json_cache: optional {raw_bytes: parsed_dict} memo — markers repeat the
-    same attr payloads heavily (span/resource attrs are per-span constants),
-    so a batch-scoped cache skips most json.loads calls. Cached dicts are
-    shared instances: callers that mutate event attrs must not pass a cache
-    (the vectorized parse stage only reads them).
-    """
-    if json_cache is None:
-        def loads(raw: bytes) -> dict:
-            return json.loads(raw.decode("utf-8", "strict"))
-    else:
-        def loads(raw: bytes) -> dict:
-            hit = json_cache.get(raw)
-            if hit is None:
-                hit = json.loads(raw.decode("utf-8", "strict"))
-                json_cache[raw] = hit
-            return hit
 
+def parse_markers(html: bytes) -> list[SpanEvent]:
+    """Extract every embedded span event from raw page bytes, in order."""
     events: list[SpanEvent] = []
     for m in _MARKER_RE.finditer(html):
         events.append(
@@ -151,9 +137,9 @@ def parse_markers(html: bytes, json_cache: dict | None = None) -> list[SpanEvent
                 trace_state="",
                 ts_ns=int64(int(m.group(5))),
                 name=m.group(6).decode("utf-8", "strict"),
-                attrs=_int64_attrs(loads(m.group(7))),
-                span_attrs=loads(m.group(8)),
-                res_attrs=loads(m.group(9)),
+                attrs=_int64_attrs(_loads(m.group(7))),
+                span_attrs=_loads(m.group(8)),
+                res_attrs=_loads(m.group(9)),
             )
         )
     return events

@@ -22,18 +22,16 @@ Scale notes (100 TB design):
   * Corrupt markers (invalid UTF-8 / JSON, an int outside int64) don't
     fail the task: the page is quarantined via parse_error and contributes
     no event rows.
-  * The hot loop builds Arrow arrays directly (mapInArrow, not
-    mapInPandas): page-grain passthrough columns (url/warc_ts/lang) are
-    re-emitted with a `take` over the input batch — no Python objects —
-    and the four map columns are assembled as flat key/value buffers +
-    offsets (MapArray.from_arrays), never per-row dicts through pandas
-    object columns. Attr payload bytes are memoized per batch (span/
-    resource attrs repeat per span), so most rows skip json entirely.
+  * The hot loop never goes through pandas (mapInArrow): url/warc_ts/lang
+    are re-emitted with a `take` over the input batch, and the other
+    columns are one Python tuple per output row, transposed once and built
+    by pyarrow (maps from the decoded JSON dicts). Attr payload bytes are
+    memoized per batch (span/resource attrs repeat per span), so most rows
+    skip json entirely.
 """
 
 from __future__ import annotations
 
-import json
 import sys
 import zipimport
 from collections.abc import Iterator
@@ -41,7 +39,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
-from .markers import _MARKER_RE, _TEXT_RE, int64
+from .markers import _MARKER_RE, _TEXT_RE, _loads, int64
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -73,49 +71,36 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
-_FIELD_NAMES = [f.name for f in EVENT_SCHEMA.fields]
-
-
-def _split_flat(raw: bytes) -> tuple[list, list, list, list]:
+def _split_flat(raw: bytes) -> tuple[dict, dict]:
     """Decode an event-attrs JSON payload and partition by value type
     (Str vs Int), mirroring the pcommon Value type-switch the reference
-    performs (connector.go:275,284,301,350) — flat (str_keys, str_vals,
-    int_keys, int_vals) lists ready for MapArray assembly. JSON bools
-    render as strings; key order (JSON document order) is preserved."""
-    d = json.loads(raw.decode("utf-8", "strict"))
-    sk: list = []
-    sv: list = []
-    ik: list = []
-    iv: list = []
-    for k, v in d.items():
-        if isinstance(v, bool):
-            sk.append(k)
-            sv.append("true" if v else "false")
-        elif isinstance(v, int):
-            ik.append(k)
-            iv.append(int64(v))
-        else:
-            sk.append(k)
-            sv.append(str(v))
-    return sk, sv, ik, iv
+    performs (connector.go:275,284,301,350). JSON bools render as strings;
+    key order (JSON document order) is preserved."""
+    d = _loads(raw)
+    ints = {k: int64(v) for k, v in d.items() if type(v) is int}
+    for k in ints:
+        del d[k]
+    return _as_str(d), ints
 
 
-def _str_flat(raw: bytes) -> tuple[list, list]:
+def _str_flat(raw: bytes) -> dict:
     """All-values-as-strings rendering for span/resource attr payloads:
     the reference copies these regardless of type
     (connector.go:233,382-385); ints render in canonical string form
     (oracle._render_value twin)."""
-    d = json.loads(raw.decode("utf-8", "strict"))
-    ks: list = []
-    vs: list = []
+    return _as_str(_loads(raw))
+
+
+def _as_str(d: dict) -> dict:
+    """`d` with every value in its canonical string form, in place. The
+    decoded dict itself is the map value pyarrow converts: a dict of
+    strings is not tracked by the cycle collector, while (key, value) entry
+    tuples are, and collecting them costs more CPU than pyarrow's slower
+    walk over dicts saves (scripts/parse_ab.py)."""
     for k, v in d.items():
-        if isinstance(v, bool):
-            ks.append(k)
-            vs.append("true" if v else "false")
-        else:
-            ks.append(k)
-            vs.append(str(v))
-    return ks, vs
+        if type(v) is not str:
+            d[k] = ("true" if v else "false") if isinstance(v, bool) else str(v)
+    return d
 
 
 def _trim_importers() -> None:
@@ -135,177 +120,85 @@ def _trim_importers() -> None:
             del sys.path_importer_cache[key]
 
 
-class _MapCol:
-    """Flat builder for one Arrow map column: contiguous key/value
-    buffers plus per-row offsets (None offset = NULL map entry)."""
+class _Memo(dict):
+    """Per-batch {attr payload bytes: decoded map}: span and resource attrs
+    repeat per span, so most lookups skip json entirely."""
 
-    __slots__ = ("ks", "vs", "offs", "cur")
+    def __init__(self, decode) -> None:
+        self.decode = decode
 
-    def __init__(self) -> None:
-        self.ks: list = []
-        self.vs: list = []
-        self.offs: list = []
-        self.cur = 0
+    def __missing__(self, raw: bytes):
+        self[raw] = entries = self.decode(raw)
+        return entries
 
-    def build(self, pa_mod, value_type) -> "pa.MapArray":
-        self.offs.append(self.cur)
-        return pa_mod.MapArray.from_arrays(
-            pa_mod.array(self.offs, pa_mod.int32()),
-            pa_mod.array(self.ks, pa_mod.string()),
-            pa_mod.array(self.vs, value_type),
-        )
+
+#: the columns of a zero-event page's sentinel row after event_idx
+_NO_EVENT = (None,) * 11
+
+
+def _events(blob: bytes, memo_a: _Memo, memo_s: _Memo) -> list[tuple]:
+    """One row per marker in `blob`, in EVENT_SCHEMA column order from
+    page_text (None) on. Fields decode in the oracle's order (trace_id,
+    span_id, span_name, span_kind, ts, name, attrs, span_attrs,
+    res_attrs), so the first corrupt field names the quarantine class."""
+    found = _MARKER_RE.findall(blob)
+    n = len(found)
+    out = []
+    for j, (tid, sid, snm, skd, ts, nm, a, sp, rs) in enumerate(found):
+        tid = tid.decode("utf-8", "strict")
+        sid = sid.decode("utf-8", "strict")
+        snm = snm.decode("utf-8", "strict")
+        skd = skd.decode("utf-8", "strict")
+        ts = int64(int(ts))
+        nm = nm.decode("utf-8", "strict")
+        a_s, a_i = memo_a[a]
+        out.append((None, n, None, j, nm, ts, tid, sid, snm, skd, "", a_s, a_i, memo_s[sp], memo_s[rs]))
+    return out
 
 
 def _parse_arrow_batches(
     batches: Iterator["pa.RecordBatch"],
 ) -> Iterator["pa.RecordBatch"]:
-    """Hot path: inline marker scan + direct Arrow column assembly.
+    """Hot path: inline marker scan, one row tuple per output row.
 
     Page-grain passthrough columns re-emit input Arrow values via `take`
-    (no Python round trip); attr payload bytes memoize to their flat
-    key/value split per batch. Quarantine semantics match the classic
-    path exactly: text extraction first, then markers in order, field
-    decode order within a marker fixed, first failure wins and the page
-    contributes one sentinel row with parse_error set."""
+    (no Python round trip); every other column is one `pa.array` over the
+    transposed rows. Quarantine semantics match the oracle exactly: text
+    extraction first, then markers in order, first failure wins and the
+    page contributes one sentinel row with parse_error set."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     _trim_importers()
-
-    str_t = pa.string()
-    int_t = pa.int64()
-    mfind = _MARKER_RE.finditer
-    tfindall = _TEXT_RE.findall
+    types = [to_arrow_type(f.dataType) for f in EVENT_SCHEMA.fields[3:]]
 
     for rb in batches:
         if rb.num_rows == 0:
             continue
-        sch = rb.schema
-        htmls = rb.column(sch.get_field_index("html")).to_pylist()
-
-        idx: list = []
-        page_text: list = []
-        n_page_events: list = []
-        parse_error: list = []
-        event_idx: list = []
-        event_name: list = []
-        ts_ns: list = []
-        trace_id: list = []
-        span_id: list = []
-        span_name: list = []
-        span_kind: list = []
-        trace_state: list = []
-        m_es = _MapCol()
-        m_ei = _MapCol()
-        m_sp = _MapCol()
-        m_rs = _MapCol()
-        memo_a: dict = {}
-        memo_s: dict = {}
-
-        # bound-method locals: the loop body runs per event row and
-        # attribute lookups dominate at this grain
-        es_ext = m_es.ks.extend; es_vext = m_es.vs.extend; es_off = m_es.offs.append
-        ei_ext = m_ei.ks.extend; ei_vext = m_ei.vs.extend; ei_off = m_ei.offs.append
-        sp_ext = m_sp.ks.extend; sp_vext = m_sp.vs.extend; sp_off = m_sp.offs.append
-        rs_ext = m_rs.ks.extend; rs_vext = m_rs.vs.extend; rs_off = m_rs.offs.append
-        es_cur = ei_cur = sp_cur = rs_cur = 0
-
-        for i, blob in enumerate(htmls):
-            if blob is None:
-                blob = b""
+        memo_a, memo_s = _Memo(_split_flat), _Memo(_str_flat)
+        idx, rows = [], []
+        for i, blob in enumerate(rb.column("html").to_pylist()):
+            blob = blob or b""
             try:
                 # join the <p> byte blocks, decode ONCE (newline is
                 # ASCII, UTF-8 self-synchronizing — identical text)
-                text = b"\n".join(tfindall(blob)).decode("utf-8", "strict")
-                evs = []
-                for m in mfind(blob):
-                    g = m.groups()
-                    a = memo_a.get(g[6])
-                    sp = memo_s.get(g[7])
-                    rs = memo_s.get(g[8])
-                    ev = (
-                        g[0].decode("utf-8", "strict"),
-                        g[1].decode("utf-8", "strict"),
-                        g[2].decode("utf-8", "strict"),
-                        g[3].decode("utf-8", "strict"),
-                        int64(int(g[4])),
-                        g[5].decode("utf-8", "strict"),
-                        a if a is not None else memo_a.setdefault(g[6], _split_flat(g[6])),
-                        sp if sp is not None else memo_s.setdefault(g[7], _str_flat(g[7])),
-                        rs if rs is not None else memo_s.setdefault(g[8], _str_flat(g[8])),
-                    )
-                    evs.append(ev)
-                err = None
+                text = b"\n".join(_TEXT_RE.findall(blob)).decode("utf-8", "strict")
+                evs, err = _events(blob, memo_a, memo_s), None
             except Exception as exc:  # corrupt marker -> quarantine page
                 text, evs, err = None, [], f"{type(exc).__name__}: {exc}"
-
-            if not evs:
-                idx.append(i)
-                page_text.append(text)
-                n_page_events.append(0)
-                parse_error.append(err)
-                event_idx.append(-1)
-                event_name.append(None)
-                ts_ns.append(None)
-                trace_id.append(None)
-                span_id.append(None)
-                span_name.append(None)
-                span_kind.append(None)
-                trace_state.append(None)
-                es_off(None)
-                ei_off(None)
-                sp_off(None)
-                rs_off(None)
-                continue
-            n = len(evs)
-            for j, (tid, sid, snm, skd, ts, nm, a, sp, rs) in enumerate(evs):
-                idx.append(i)
+            if evs:
                 # page_text rides only the first row per page (see above)
-                page_text.append(text if j == 0 else None)
-                n_page_events.append(n)
-                parse_error.append(None)
-                event_idx.append(j)
-                event_name.append(nm)
-                ts_ns.append(ts)
-                trace_id.append(tid)
-                span_id.append(sid)
-                span_name.append(snm)
-                span_kind.append(skd)
-                trace_state.append("")
-                ak = a[0]
-                es_ext(ak); es_vext(a[1]); es_off(es_cur); es_cur += len(ak)
-                ik = a[2]
-                ei_ext(ik); ei_vext(a[3]); ei_off(ei_cur); ei_cur += len(ik)
-                sk = sp[0]
-                sp_ext(sk); sp_vext(sp[1]); sp_off(sp_cur); sp_cur += len(sk)
-                rk = rs[0]
-                rs_ext(rk); rs_vext(rs[1]); rs_off(rs_cur); rs_cur += len(rk)
+                evs[0] = (text,) + evs[0][1:]
+                idx += [i] * len(evs)
+                rows += evs
+            else:
+                idx.append(i)
+                rows.append((text, 0, err, -1) + _NO_EVENT)
 
-        m_es.cur = es_cur
-        m_ei.cur = ei_cur
-        m_sp.cur = sp_cur
-        m_rs.cur = rs_cur
         take = pa.array(idx, pa.int32())
-        arrays = [
-            rb.column(sch.get_field_index("url")).take(take),
-            rb.column(sch.get_field_index("warc_ts")).take(take),
-            rb.column(sch.get_field_index("lang")).take(take),
-            pa.array(page_text, str_t),
-            pa.array(n_page_events, pa.int32()),
-            pa.array(parse_error, str_t),
-            pa.array(event_idx, pa.int32()),
-            pa.array(event_name, str_t),
-            pa.array(ts_ns, int_t),
-            pa.array(trace_id, str_t),
-            pa.array(span_id, str_t),
-            pa.array(span_name, str_t),
-            pa.array(span_kind, str_t),
-            pa.array(trace_state, str_t),
-            m_es.build(pa, str_t),
-            m_ei.build(pa, int_t),
-            m_sp.build(pa, str_t),
-            m_rs.build(pa, str_t),
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, names=_FIELD_NAMES)
+        arrays = [rb.column(c).take(take) for c in ("url", "warc_ts", "lang")]
+        arrays += [pa.array(col, t) for col, t in zip(zip(*rows), types)]
+        yield pa.RecordBatch.from_arrays(arrays, names=EVENT_SCHEMA.names)
 
 
 def parse_events(webpages: "DataFrame") -> "DataFrame":

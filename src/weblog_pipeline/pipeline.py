@@ -53,6 +53,41 @@ class PipelineResult:
     rebuild: Callable[[DataFrame, int], PipelineResult] | None = None
 
 
+def route_events(
+    events: DataFrame,
+    cfg: PipelineConfig,
+    observed_ts_us: int,
+    routes: tuple[SinkRoute, ...],
+    default_sink: str,
+) -> DataFrame:
+    """Span-event rows -> routed log records."""
+    # O3 predicate filter: empty list = pass-all (connector.go:103-109,220-224)
+    if cfg.include_event_names:
+        events = events.where(
+            F.col("event_name").isin(list(cfg.include_event_names))
+        )
+    return with_sink(enrich_events(events, cfg, observed_ts_us), routes, default_sink)
+
+
+def record_plan(
+    pages: DataFrame,
+    cfg: PipelineConfig,
+    observed_ts_us: int,
+    routes: tuple[SinkRoute, ...],
+    default_sink: str,
+    pages_in: Observation | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """pages -> (parse output, routed log records): the plan batch and
+    streaming runs share. `pages_in` counts the pages that reach the parse."""
+    # cheap prunes BEFORE the opaque UDF (Catalyst can't push through it);
+    # the pages that reach the parse are counted above the pushed-down prune
+    pages = pages.where(F.col("html").isNotNull())
+    if pages_in is not None:
+        pages = pages.observe(pages_in, F.count(F.lit(1)).alias("pages"))
+    parsed = parse_events(pages)
+    return parsed, route_events(event_rows(parsed), cfg, observed_ts_us, routes, default_sink)
+
+
 def build_pipeline(
     webpages: DataFrame,
     cfg: PipelineConfig,
@@ -64,24 +99,8 @@ def build_pipeline(
     if observed_ts_us is None:
         observed_ts_us = int(time.time() * 1_000_000)
 
-    # cheap prunes BEFORE the opaque UDF (Catalyst can't push through it);
-    # the pages that reach the parse are counted above the pushed-down prune
     pages_in = Observation()
-    scanned = webpages.where(F.col("html").isNotNull()).observe(
-        pages_in, F.count(F.lit(1)).alias("pages")
-    )
-
-    parsed = parse_events(scanned)
-    events = event_rows(parsed)
-
-    # O3 predicate filter: empty list = pass-all (connector.go:103-109,220-224)
-    if cfg.include_event_names:
-        events = events.where(
-            F.col("event_name").isin(list(cfg.include_event_names))
-        )
-
-    logs = enrich_events(events, cfg, observed_ts_us)
-    logs = with_sink(logs, routes, default_sink)
+    parsed, logs = record_plan(webpages, cfg, observed_ts_us, routes, default_sink, pages_in)
 
     return PipelineResult(
         logs=logs,

@@ -16,13 +16,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: pages per Arrow batch sent to the parse UDF, which holds a whole batch's
+#: `html` in worker memory at once (see above)
+ARROW_BATCH_ROWS = 1024
+
 
 def build_session(
     app_name: str = "weblog-pipeline",
     master: str | None = None,
     parallelism: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 1024,
     files_max_partition_bytes: str | None = None,
 ) -> SparkSession:
     if master is None:
@@ -68,7 +71,7 @@ def build_session(
             os.environ.get("SPARK_SHJ_LOCALMAP_THRESHOLD", "64m"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         # reliable checkpoints (connected_components iterations, when a
         # checkpoint dir is set) are deleted once their RDD is GC'd instead

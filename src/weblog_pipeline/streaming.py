@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig, SinkRoute
-from .enrich import enrich_events
-from .parse import event_rows, parse_events
-from .route import with_sink
+from .pipeline import record_plan, route_events
 from .webpages import WEBPAGES_SCHEMA
 
 
@@ -40,14 +38,8 @@ def streaming_logs(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-    stream = stream.where(F.col("html").isNotNull())
-    events = event_rows(parse_events(stream))
-    if cfg.include_event_names:
-        events = events.where(
-            F.col("event_name").isin(list(cfg.include_event_names))
-        )
-    logs = enrich_events(events, cfg, observed_ts_us)
-    return with_sink(logs, routes, default_sink)
+    _, logs = record_plan(stream, cfg, observed_ts_us, routes, default_sink)
+    return logs
 
 
 def start_sink_writer(
@@ -250,12 +242,7 @@ def streaming_otlp_logs(
         .withColumn("warc_ts", F.lit(None).cast("timestamp"))
         .withColumn("lang", F.lit(None).cast("string"))
     )
-    if cfg.include_event_names:
-        events = events.where(
-            F.col("event_name").isin(list(cfg.include_event_names))
-        )
-    logs = enrich_events(events, cfg, observed_ts_us)
-    return with_sink(logs, routes, default_sink)
+    return route_events(events, cfg, observed_ts_us, routes, default_sink)
 
 
 # ---------------------------------------------------------------------------

@@ -134,27 +134,43 @@ def test_include_event_names_zero_output(spark):
     assert result.texts.count() == 60
 
 
+def _marker(ts=b"1", name=b"x", span_name=b"s", attrs=b"{}"):
+    return (
+        b"<!--otel span_ctx=" + b"a" * 32 + b"/" + b"b" * 16 + b"/" + span_name
+        + b"/k ts=" + ts + b" name=" + name + b" attrs=" + attrs
+        + b" span_attrs={} res_attrs={}-->"
+    )
+
+
+_INT_OVER_INT64 = b"1180591620717411303424"
+
+
 @pytest.mark.parametrize(
-    "ts,attrs,error",
+    "markers,error",
     [
-        (b"1", b"{not-json}", "JSONDecodeError"),
+        (_marker(attrs=b"{not-json}"), "JSONDecodeError"),
         # one int outside int64 fails only its own page, as in the oracle
-        (b"1", b'{"n":1180591620717411303424}', "OverflowError"),
-        (b"1180591620717411303424", b"{}", "OverflowError"),
+        (_marker(attrs=b'{"n":' + _INT_OVER_INT64 + b"}"), "OverflowError"),
+        (_marker(ts=_INT_OVER_INT64), "OverflowError"),
+        # within a marker the first faulty field in decode order names the
+        # class: ts before the event name, span_name before attrs
+        (_marker(ts=_INT_OVER_INT64, name=b"\xff"), "OverflowError"),
+        (_marker(span_name=b"\xff", attrs=b"{not-json}"), "UnicodeDecodeError"),
+        # across markers the first faulty marker wins
+        (_marker(attrs=b"{not-json}") + _marker(ts=_INT_OVER_INT64), "JSONDecodeError"),
+        (_marker(ts=_INT_OVER_INT64) + _marker(attrs=b"{not-json}"), "OverflowError"),
     ],
-    ids=["json", "attr-int-overflow", "ts-overflow"],
+    ids=["json", "attr-int-overflow", "ts-overflow", "ts-before-name",
+         "span-name-before-attrs", "first-marker-wins", "first-marker-wins-swapped"],
 )
-def test_corrupt_marker_quarantined(spark, ts, attrs, error):
+def test_corrupt_marker_quarantined(spark, markers, error):
     """A page with an unparseable marker must not fail the task: it yields
     a parse_error row, contributes no events, and other pages are fine."""
     from weblog_pipeline.markers import parse_markers
     from weblog_pipeline.webpages import WEBPAGES_SCHEMA
 
     good = gen_page(11)
-    bad_html = (
-        b"<p>fine</p><!--otel span_ctx=" + b"a" * 32 + b"/" + b"b" * 16
-        + b"/s/k ts=" + ts + b" name=x attrs=" + attrs + b" span_attrs={} res_attrs={}-->"
-    )
+    bad_html = b"<p>fine</p>" + markers
     with pytest.raises(Exception) as oracle_error:
         parse_markers(bad_html)
     assert type(oracle_error.value).__name__ == error
@@ -338,8 +354,8 @@ def test_parse_task_trims_worker_importers(spark):
 def test_parse_arrow_map_assembly_memo_and_sentinels(spark):
     """Focused guard for the mapInArrow parse internals: repeated attr
     payloads (the byte-level memo path), zero-event sentinel pages (NULL
-    map entries via null offsets, not empty maps), and str/int/bool attr
-    splitting must all survive the flat-buffer map assembly."""
+    maps, not empty maps), and str/int/bool attr splitting must all
+    survive the parse's Arrow column build."""
     from weblog_pipeline.parse import parse_events
     from weblog_pipeline.webpages import WEBPAGES_SCHEMA
 
