@@ -7,6 +7,11 @@ PipelineConfig is compiled into pure Catalyst Column expressions — literal
 map lookups and `when` ladders — so the hot path is 100% JVM whole-stage
 codegen with zero Python and zero shuffles.
 
+The severity chain is stated once: it resolves the severity number, and the
+text derives from that number (its canonical name) unless the connector
+keeps the text attribute verbatim. Each literal lookup table (text->number,
+number->text) is built at most once per `enrich_events` call.
+
 Operators covered (SURVEY.md §2): O5-O18 (severity precedence chain, scalar
 map_severity / severityNumberToText as literal maps, body fallback,
 timestamp projection, attribute copies & merge order, event-name
@@ -24,39 +29,9 @@ from .severity import FULL_TEXT_DOMAIN, NUMBER_TO_TEXT, map_severity
 # -- literal lookup tables (driver-side constant folding) --------------------
 
 
-def _sev_num_map() -> Column:
-    """map_severity's text->number domain as a literal MapType column."""
-    pairs: list[Column] = []
-    for text, num in sorted(FULL_TEXT_DOMAIN.items()):
-        pairs.append(F.lit(text))
-        pairs.append(F.lit(num))
-    return F.create_map(*pairs)
-
-
-def _num_text_map() -> Column:
-    """Canonical number->text as a literal MapType column."""
-    pairs: list[Column] = []
-    for num, text in sorted(NUMBER_TO_TEXT.items()):
-        pairs.append(F.lit(num))
-        pairs.append(F.lit(text))
-    return F.create_map(*pairs)
-
-
-def parse_severity_num(col: Column) -> Column:
-    """mapSeverity's number half as an expression: NULL when invalid
-    (connector.go:418-444)."""
-    return F.element_at(_sev_num_map(), F.lower(col))
-
-
-def canonical_text(num_col: Column) -> Column:
-    """Canonical text for a known-valid severity number (1..24)."""
-    return F.element_at(_num_text_map(), num_col)
-
-
-def severity_number_to_text_expr(num_col: Column) -> Column:
-    """severityNumberToText: unknown numbers default to 'info'
-    (connector.go:448-453)."""
-    return F.coalesce(F.element_at(_num_text_map(), num_col.cast("int")), F.lit("info"))
+def _literal_map(table: dict) -> Column:
+    """A Python dict as a literal MapType column."""
+    return F.create_map(*[F.lit(x) for kv in sorted(table.items()) for x in kv])
 
 
 EMPTY_STR_MAP = "cast(map() as map<string,string>)"
@@ -85,8 +60,14 @@ def severity_columns(
     event_attrs_s: Column,
     event_attrs_i: Column,
 ) -> tuple[Column, Column]:
-    """(severity_number, severity_text) columns for a flattened event row."""
+    """(severity_number, severity_text) columns for a flattened event row.
+
+    The chain resolves the number; the text is the verbatim text attribute
+    where the connector keeps it (a number attribute is set, or the text
+    does not parse), else the canonical text of the number
+    (oracle.resolve_severity's shape)."""
     am = cfg.attribute_mappings
+    no_int = F.lit(None).cast("int")
 
     n_attr = (
         F.element_at(event_attrs_i, F.lit(am.severity_number))
@@ -98,12 +79,16 @@ def severity_columns(
         if am.severity_text
         else F.lit(None).cast("string")
     )
-    parsed_t = parse_severity_num(t_attr)
-
+    # map_severity's number half, NULL when invalid (connector.go:418-444);
+    # one literal table for both text sources, none when neither is read
+    text_num = (
+        _literal_map(FULL_TEXT_DOMAIN) if am.severity_text or cfg.severity_attribute else None
+    )
+    parsed_t = F.element_at(text_num, F.lower(t_attr)) if am.severity_text else no_int
     sa_parsed = (
-        parse_severity_num(F.element_at(event_attrs_s, F.lit(cfg.severity_attribute)))
+        F.element_at(text_num, F.lower(F.element_at(event_attrs_s, F.lit(cfg.severity_attribute))))
         if cfg.severity_attribute
-        else F.lit(None).cast("int")
+        else no_int
     )
 
     # severity_by_event_name: longest case-insensitive substring match.
@@ -111,7 +96,7 @@ def severity_columns(
     # order keys by length desc (strictly-longer wins) with lexicographic
     # tie-break (documented spec refinement; Go map order is undefined),
     # emit an ordered `when` ladder — first hit == longest match.
-    name_num = F.lit(None).cast("int")
+    name_num = no_int
     valid_entries = []
     for key, sev in cfg.severity_by_event_name:
         num, _ = map_severity(sev)
@@ -128,26 +113,22 @@ def severity_columns(
                 if ladder is None
                 else ladder.when(cond, F.lit(num))
             )
-        name_num = ladder.otherwise(F.lit(None).cast("int"))
+        name_num = ladder
 
     # Go narrows the attr to int32 with two's-complement wrap
     # (plog.SeverityNumber(attrValue.Int()), connector.go:276); a plain
     # cast would throw CAST_OVERFLOW under ANSI mode instead
-    n_attr_i32 = _wrap_int32(n_attr)
-
     number = (
-        F.when(n_attr.isNotNull(), n_attr_i32)
+        F.when(n_attr.isNotNull(), _wrap_int32(n_attr))
         .when(t_attr.isNotNull(), F.coalesce(parsed_t, F.lit(9)))
-        .when(sa_parsed.isNotNull(), sa_parsed)
-        .when(name_num.isNotNull(), name_num)
-        .otherwise(F.lit(9))
+        .otherwise(F.coalesce(sa_parsed, name_num, F.lit(9)))
     )
-    text = (
-        F.when(n_attr.isNotNull(), F.coalesce(t_attr, severity_number_to_text_expr(n_attr_i32)))
-        .when(t_attr.isNotNull(), F.coalesce(canonical_text(parsed_t), t_attr))
-        .when(sa_parsed.isNotNull(), canonical_text(sa_parsed))
-        .when(name_num.isNotNull(), canonical_text(name_num))
-        .otherwise(F.lit("info"))
+    # severityNumberToText: unknown numbers default to 'info'
+    # (connector.go:448-453)
+    text = F.coalesce(
+        F.when(n_attr.isNotNull() | parsed_t.isNull(), t_attr),
+        F.element_at(_literal_map(NUMBER_TO_TEXT), number),
+        F.lit("info"),
     )
     return number, text
 

@@ -35,11 +35,6 @@ def canonical_text_sql(n: str) -> str:
     return f"(CASE {n}{branches} ELSE NULL END)"
 
 
-def severity_number_to_text_sql(n: str) -> str:
-    """severityNumberToText: unknown -> 'info'."""
-    return f"COALESCE({canonical_text_sql(f'CAST({n} AS INTEGER)')}, 'info')"
-
-
 def name_match_num_sql(cfg: PipelineConfig, name_sql: str) -> str:
     """severity_by_event_name longest-substring ladder (NULL when no match)."""
     valid = []

@@ -77,23 +77,6 @@ def windowed_sink_counts(logs: DataFrame, window: str = "1 hour",
     )
 
 
-def start_counts_writer(
-    counts: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    trigger_available_now: bool = True,
-):
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def dedup_stream(
     pages: DataFrame, watermark: str = "2 hours"
 ) -> DataFrame:

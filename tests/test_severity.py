@@ -4,6 +4,8 @@ basics, *1 variants, *2 variants, case-insensitivity, aliases, invalids."""
 
 import pytest
 
+from weblog_pipeline.config import AttributeMappings, PipelineConfig
+from weblog_pipeline.markers import SpanEvent
 from weblog_pipeline.severity import (
     FULL_TEXT_DOMAIN,
     NUMBER_TO_TEXT,
@@ -72,3 +74,92 @@ def test_tables_are_consistent():
     for key, num in FULL_TEXT_DOMAIN.items():
         assert key == key.lower()
         assert 1 <= num <= 24
+
+
+# one event per branch of the precedence chain (connector.go:261-335):
+# (event name, event attributes)
+_CHAIN_EVENTS = [
+    # number attribute: in range, unknown, beyond int32 (wraps), with and
+    # without a text attribute, and a string where the int is expected
+    ("x", {"sev.num": 17}),
+    ("x", {"sev.num": 17, "sev.text": "Custom"}),
+    ("x", {"sev.num": 99}),
+    ("x", {"sev.num": 99, "sev.text": "loud"}),
+    ("x", {"sev.num": 2**32 + 13}),
+    ("x", {"sev.num": 2**31 + 5}),
+    ("x", {"sev.num": -(2**40) - 3, "sev.text": "warn"}),
+    ("exception", {"sev.num": "17"}),
+    # text attribute: canonical, aliases, suffix forms, unparsable, empty,
+    # an int where the string is expected
+    ("x", {"sev.text": "ERROR"}),
+    ("x", {"sev.text": "warning"}),
+    ("x", {"sev.text": "err"}),
+    ("x", {"sev.text": "trace21"}),
+    ("x", {"sev.text": "warning3"}),
+    ("exception", {"sev.text": "NOTICE"}),
+    ("x", {"sev.text": ""}),
+    ("x", {"sev.text": 5, "log.level": "debug2"}),
+    # severity attribute: valid, invalid (falls through to the name)
+    ("x", {"log.level": "Fatal2"}),
+    ("db connection error", {"log.level": "bogus"}),
+    # event name: longest match wins, an invalid mapped severity is dropped
+    ("db connection error timeout", {}),
+    ("an ERROR happened", {}),
+    ("exception", {}),
+    # no signal at all
+    ("custom", {}),
+]
+
+_CHAIN_NAMES = (
+    ("exception", "error"),
+    ("connection error", "fatal"),
+    ("connection error timeout", "unspecified"),
+    ("error", "error2"),
+)
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        PipelineConfig(
+            attribute_mappings=AttributeMappings(
+                severity_number="sev.num", severity_text="sev.text"
+            ),
+            severity_attribute="log.level",
+            severity_by_event_name=_CHAIN_NAMES,
+        ),
+        PipelineConfig(
+            attribute_mappings=AttributeMappings(severity_number="sev.num"),
+            severity_by_event_name=_CHAIN_NAMES,
+        ),
+        PipelineConfig(
+            attribute_mappings=AttributeMappings(severity_text="sev.text"),
+            severity_attribute="log.level",
+        ),
+        PipelineConfig(severity_attribute="log.level", severity_by_event_name=_CHAIN_NAMES),
+        PipelineConfig(severity_by_event_name=()),
+    ],
+    ids=["full-chain", "number-only", "text-only", "no-mappings", "no-signal"],
+)
+def test_spark_severity_chain_matches_oracle(spark, cfg):
+    """Spark's enrich_events resolves (severity_number, severity_text) as
+    oracle.resolve_severity does, for every branch of the chain."""
+    from weblog_pipeline.enrich import enrich_events
+    from weblog_pipeline.oracle import resolve_severity
+    from weblog_pipeline.parse import EVENT_SCHEMA
+
+    events = [
+        SpanEvent(trace_id="", span_id="", span_name="s", span_kind="k",
+                  trace_state="", ts_ns=i, name=name, attrs=attrs)
+        for i, (name, attrs) in enumerate(_CHAIN_EVENTS)
+    ]
+    rows = [
+        (f"u{e.ts_ns}", None, "en", None, 1, None, 0, e.name, e.ts_ns, "", "", "s", "k", "",
+         {k: v for k, v in e.attrs.items() if isinstance(v, str)},
+         {k: v for k, v in e.attrs.items() if isinstance(v, int)},
+         {}, {})
+        for e in events
+    ]
+    df = enrich_events(spark.createDataFrame(rows, schema=EVENT_SCHEMA), cfg, 0)
+    got = {r["ts_ns"]: (r["severity_number"], r["severity_text"]) for r in df.collect()}
+    assert got == {e.ts_ns: resolve_severity(cfg, e) for e in events}
