@@ -18,25 +18,23 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "src"))
 
+from weblog_pipeline.session import export_worker_path
 
-def _bootstrap_workers() -> None:
-    """Python workers need the package on PYTHONPATH (local mode inherits
-    the driver env; clusters use spark-submit --py-files instead)."""
-    src_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "src")
-    existing = os.environ.get("PYTHONPATH", "")
-    if src_dir not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            src_dir + (os.pathsep + existing if existing else "")
-        )
+export_worker_path()
 
-
-_bootstrap_workers()
+#: applicationId of the SparkContext the package zip was last shipped to
+_shipped_to: str | None = None
 
 
 def _ship_package(spark: SparkSession) -> None:
     """Distribute the package to python workers of an externally created
     session (addPyFile works mid-session; PYTHONPATH env only helps when
-    this module is imported before the JVM starts)."""
+    this module is imported before the JVM starts). Once per SparkContext:
+    a second addPyFile of the same zip only logs "has been added already"."""
+    global _shipped_to
+    sc = spark.sparkContext
+    if sc.applicationId == _shipped_to:
+        return
     import hashlib
     import shutil
     import tempfile
@@ -60,9 +58,10 @@ def _ship_package(spark: SparkSession) -> None:
     if not os.path.exists(zip_path + ".zip"):
         shutil.make_archive(zip_path, "zip", src)
     try:
-        spark.sparkContext.addPyFile(zip_path + ".zip")
+        sc.addPyFile(zip_path + ".zip")
     except Exception:
         pass  # already registered or unsupported — PYTHONPATH fallback applies
+    _shipped_to = sc.applicationId
 
 
 def _configure(spark: SparkSession) -> None:

@@ -1,7 +1,7 @@
 """spark-submit entrypoint: run the parse→enrich→route→aggregate job.
 
 Cluster launch (north rule):
-    zip -r pipeline.zip -j src weblog_pipeline  # or: cd src && zip -r ../pipeline.zip weblog_pipeline
+    scripts/package.sh  # writes pipeline.zip with weblog_pipeline/ at its root
     spark-submit --master <cluster> --py-files pipeline.zip main.py \
         --input <webpages table/path> --output <sink namespace/dir>
 

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import materialize
+
 DEFAULT_SALT_BUCKETS = 16
 
 
@@ -2461,14 +2463,15 @@ def markov_stationary(
     Output: event_type, p_bp (the round-`iters` vector, sums to
     <= 10000 with floor loss).
     """
-    m = event_transitions(events).select(
-        "from_type", "to_type", F.col("p_bp").alias("p_bp_m")
-    ).localCheckpoint()
-    states = (
+    m = materialize(
+        event_transitions(events).select(
+            "from_type", "to_type", F.col("p_bp").alias("p_bp_m")
+        )
+    )
+    states = materialize(
         m.select(F.col("from_type").alias("event_type"))
         .unionByName(m.select(F.col("to_type").alias("event_type")))
         .distinct()
-        .localCheckpoint()
     )
     n_states = states.count()
     v = states.select(
@@ -2497,7 +2500,7 @@ def markov_stationary(
             F.sum("p_new").alias("p_raw")
         )
         tot = nxt.agg(F.sum("p_raw").alias("_t"))
-        v = (
+        v = materialize(
             nxt.crossJoin(F.broadcast(tot))
             .select(
                 "event_type",
@@ -2505,7 +2508,6 @@ def markov_stationary(
                     "p_bp"
                 ),
             )
-            .localCheckpoint()
         )
     return v
 

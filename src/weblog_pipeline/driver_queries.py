@@ -48,6 +48,7 @@ from . import otlp
 from .parse import page_texts, parse_events
 from .pipeline import build_pipeline
 from .route import with_sink
+from .session import materialize
 from .sqlgen import (
     attrs_str_sql,
     body_sql,
@@ -8282,7 +8283,7 @@ SELECT src_host, dst_host, n_links FROM edges
 
 def q_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration integer PageRank over the planted domain graph —
-    the iterative-algorithm exemplar: localCheckpoint'd iterate, pure
+    the iterative-algorithm exemplar: checkpointed iterate, pure
     integer updates, bit-identical to the oracle's unrolled recursion."""
     docs = _link_planted(_read(spark, sf_dir, "documents"))
     return graph.pagerank(graph.link_graph(graph.extract_links(docs)))
@@ -10309,10 +10310,9 @@ def queries() -> dict:
         # materialize brute force ONCE: it is the most expensive result set
         # and appears in every method's semi-join + the shared n_true —
         # without this the unioned plan re-executes it per reference
-        bf = (
+        bf = materialize(
             similarity.brute_force_topk(emb, q, k=5)
             .select("query_id", "neighbor_id")
-            .localCheckpoint()
         )
         n_true = bf.agg(F.count(F.lit(1)).alias("n_true"))
         out = None

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
 SHINGLE_K = 3
@@ -554,9 +556,10 @@ def dedup_edges(
     # consumer — the same one-shuffle-instead-of-N reasoning as
     # pagerank's iterate, and it keeps every consumer's analyzed plan a
     # leaf instead of a window subtree
-    marked = documents.select(
-        "doc_id", "text", content_hash_col().alias("content_hash")
-    ).withColumn("keeper", F.min("doc_id").over(w)).localCheckpoint()
+    marked = materialize(
+        documents.select("doc_id", "text", content_hash_col().alias("content_hash"))
+        .withColumn("keeper", F.min("doc_id").over(w))
+    )
     exact_edges = marked.where(F.col("doc_id") != F.col("keeper")).select(
         F.col("keeper").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
@@ -584,31 +587,20 @@ def connected_components(
     near-dup clusters are shallow (stars/cliques), so typically 2-3
     rounds. Deterministic: labels are doc_ids, min is total.
 
-    Checkpoint durability: if the session has a RELIABLE checkpoint dir
-    configured (`sparkContext.setCheckpointDir` — on HDFS/S3 for a real
-    cluster), per-iteration state uses `DataFrame.checkpoint()`, which
-    survives executor loss. Without one it falls back to
-    `localCheckpoint()`, whose blocks live on executors only: fine in
-    local mode and for short jobs, but on a 1000-executor run losing one
-    executor mid-iteration kills the job — production deployments should
-    set a checkpoint dir. Each iteration writes one labels snapshot to
-    that dir; set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-    (build_session does) so snapshots are reaped when their RDD is GC'd
-    rather than accumulating until application exit.
+    Checkpoint durability is `session.materialize`'s: with a checkpoint
+    dir set (`sparkContext.setCheckpointDir`, on HDFS/S3 for a real
+    cluster) each iteration's labels survive executor loss; without one
+    they live on executors only, and on a 1000-executor run losing one
+    executor mid-iteration kills the job, so production deployments
+    should set one.
 
     Output: (doc_id, cluster_id) for every vertex, cluster_id = the
     component's minimum doc_id.
     """
-    sc = edges.sparkSession.sparkContext
-    reliable = sc._jsc.sc().getCheckpointDir().isDefined()
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable else df.localCheckpoint()
-
     # materialize the edge list ONCE: it is re-joined every iteration, and
     # without this the (possibly expensive) upstream edge derivation —
     # MinHash, Jaccard, ... — would re-execute per round
-    und = _checkpoint(
+    und = materialize(
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     )
@@ -622,7 +614,7 @@ def connected_components(
             und.join(labels, und["src"] == labels["doc_id"])
             .select(F.col("dst").alias("doc_id"), "label")
         )
-        new_labels = _checkpoint(
+        new_labels = materialize(
             labels.unionByName(nbr_min)
             .groupBy("doc_id")
             .agg(F.min("label").alias("label"))
@@ -748,7 +740,7 @@ def cdc_dup_stats(documents: DataFrame, k: int = CDC_K, modulus: int = CDC_MODUL
     # to dedup) — checkpoint it so the md5-per-position cut computation
     # runs once, not twice (the dedup_edges reasoning; chunk rows are a
     # few percent of the input bytes)
-    chunks = cdc_chunks(documents, k=k, modulus=modulus).localCheckpoint()
+    chunks = materialize(cdc_chunks(documents, k=k, modulus=modulus))
     occ = chunks.groupBy("chunk_hash").agg(F.count(F.lit(1)).alias("n_occ"))
     joined = chunks.join(occ, "chunk_hash")
     dup = F.col("n_occ") > 1

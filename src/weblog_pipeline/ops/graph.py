@@ -19,7 +19,7 @@ Scale shape:
 * pagerank: iterates over the DOMAIN-grain graph (edges ~ |domains|^2
   worst case, millions of rows at web scale — never the page grain).
   Each iteration is one equi-join + one aggregate; the iterate is
-  localCheckpoint'd so lineage (and Catalyst analysis time) stays O(1)
+  checkpointed so lineage (and Catalyst analysis time) stays O(1)
   in the iteration count instead of O(iters) — the same reason
   dup_clusters checkpoints its label frontier.
 * anchor_topk: rank window runs on per-(domain, token) AGGREGATED
@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .dedup import WS_RE, ascii_lower
 
 #: href + anchor-text extractor. Syntax restricted to the Java-regex ∩
@@ -109,7 +110,7 @@ def pagerank(
     count, or aggregation order. Dangling mass (domains with no
     outlinks) is dropped, the standard simplification.
 
-    The iterate is localCheckpoint'd every second round: lineage stays
+    The iterate is checkpointed every second round: lineage stays
     at most two iterations deep, so plan analysis cost is flat in
     `iters` and a failed run resumes from the last materialized iterate
     instead of replaying the whole chain — the checkpoint discipline the
@@ -121,7 +122,7 @@ def pagerank(
     # Materialize the (tiny) domain edge list once — every iteration's
     # contrib join re-references `edges`; without this the upstream link
     # extraction re-scans the corpus `iters`+2 times.
-    edges = edges.localCheckpoint()
+    edges = materialize(edges)
     nodes = (
         edges.select(F.col("src_host").alias("host"))
         .unionByName(edges.select(F.col("dst_host").alias("host")))
@@ -156,7 +157,7 @@ def pagerank(
         # bounded at two iterations, the failure cut-point property
         # holds, and half the eager materialization jobs disappear
         if it % 2 == 1 and it != iters - 1:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize(ranks)
     return (
         ranks.join(outdeg, "host", "left")
         .select(
@@ -218,7 +219,7 @@ def hits(
     truncating div / max — order-free and bit-identical across engines
     and partitionings, like pagerank above. The max_raw scalar rides a
     broadcast single-row cross join. Both score frames are
-    localCheckpoint'd per iteration (same lineage discipline as
+    checkpointed per iteration (same lineage discipline as
     pagerank).
 
     Output: host, auth_scaled, hub_scaled (all integers).
@@ -227,12 +228,11 @@ def hits(
     # references `edges` twice (the score join and the max_raw scalar),
     # so an un-checkpointed upstream (regex link extraction over the
     # full corpus) would be re-scanned 2*2*iters times.
-    edges = edges.localCheckpoint()
-    nodes = (
+    edges = materialize(edges)
+    nodes = materialize(
         edges.select(F.col("src_host").alias("host"))
         .unionByName(edges.select(F.col("dst_host").alias("host")))
         .distinct()
-        .localCheckpoint()
     )
     hubs = nodes.select("host", F.lit(scale).cast("long").alias("r"))
 
@@ -244,7 +244,7 @@ def hits(
             .agg(F.sum("c").alias("raw"))
         )
         mx = raw.agg(F.max("raw").alias("mx"))
-        return (
+        return materialize(
             nodes.join(raw, "host", "left")
             .crossJoin(F.broadcast(mx))
             .select(
@@ -253,7 +253,6 @@ def hits(
                     f"coalesce(raw, 0) div greatest(1, mx div {scale})"
                 ).cast("long").alias("r"),
             )
-            .localCheckpoint()
         )
 
     if iters < 1:
@@ -286,14 +285,14 @@ def bfs_depth(
 
     Iteration k joins the previous FRONTIER (not the visited set)
     against the edge list, anti-joins out already-visited hosts, and
-    localCheckpoints — lineage stays one hop deep and each round's work
+    checkpoints — lineage stays one hop deep and each round's work
     is bounded by the frontier, the textbook distributed-BFS shape. At
     domain grain every join side is tiny vs the corpus; the edge list is
     checkpointed once so the upstream link extraction never re-scans.
 
     Output: host, depth (0 for seeds).
     """
-    edges = edges.localCheckpoint()
+    edges = materialize(edges)
     seeds = (
         edges.groupBy("src_host")
         .agg(F.sum("n_links").alias("_w"))
@@ -301,9 +300,7 @@ def bfs_depth(
         .limit(seeds_k)
         .select(F.col("src_host").alias("host"))
     )
-    visited = seeds.select(
-        "host", F.lit(0).cast("long").alias("depth")
-    ).localCheckpoint()
+    visited = materialize(seeds.select("host", F.lit(0).cast("long").alias("depth")))
     frontier = visited.select("host")
     for d in range(1, iters + 1):
         nxt = (
@@ -312,9 +309,9 @@ def bfs_depth(
             .distinct()
             .join(visited, "host", "left_anti")
         )
-        visited = visited.unionByName(
-            nxt.select("host", F.lit(d).cast("long").alias("depth"))
-        ).localCheckpoint()
+        visited = materialize(
+            visited.unionByName(nxt.select("host", F.lit(d).cast("long").alias("depth")))
+        )
         # next frontier reads back from the CHECKPOINTED visited set so
         # the loop's lineage stays one hop deep (frontier = nxt would
         # chain every prior hop's anti-join into the next plan)
@@ -348,12 +345,12 @@ def trustrank(
     Seeds are the n_seeds hosts with the smallest md5(host) — the
     deterministic hash-ordered sample any engine reproduces. All integer
     multiply + truncating div on non-negative operands (the pagerank
-    exactness contract); iterates localCheckpoint'd so lineage stays one
+    exactness contract); iterates checkpointed so lineage stays one
     iteration deep.
 
     Output: host, is_seed (INT), n_out (BIGINT), rank_scaled (BIGINT).
     """
-    edges = edges.localCheckpoint()
+    edges = materialize(edges)
     hosts = (
         edges.select(F.col("src_host").alias("host"))
         .unionByName(edges.select(F.col("dst_host").alias("host")))
@@ -362,10 +359,9 @@ def trustrank(
     seed_set = hosts.orderBy(F.md5(F.col("host"))).limit(n_seeds).select(
         "host", F.lit(1).alias("is_seed")
     )
-    nodes = (
+    nodes = materialize(
         hosts.join(seed_set, "host", "left")
         .select("host", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
-        .localCheckpoint()
     )
     outdeg = (
         edges.groupBy("src_host")
@@ -387,7 +383,7 @@ def trustrank(
             ).alias("c"),
         )
         inc = contrib.groupBy("host").agg(F.sum("c").alias("s"))
-        ranks = (
+        ranks = materialize(
             nodes.join(inc, "host", "left")
             .select(
                 "host",
@@ -398,7 +394,6 @@ def trustrank(
                 .cast("long")
                 .alias("rank"),
             )
-            .localCheckpoint()
         )
     return (
         ranks.join(nodes, "host")
@@ -436,13 +431,13 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
     (host, label) map-side-combined weight sum, and one rank window
     whose partitions are bounded by a host's distinct NEIGHBOR-LABEL
     count (<= degree, shrinking as labels merge — the anchor_topk
-    bounded-partition argument). Labels are localCheckpoint'd per round
+    bounded-partition argument). Labels are checkpointed per round
     so lineage stays one iteration deep (the pagerank discipline).
 
     Output: host, label (STRING), community_size (BIGINT).
     """
     e = edges.where(F.col("src_host") != F.col("dst_host"))
-    sym = (
+    sym = materialize(
         e.select(
             F.col("src_host").alias("s"),
             F.col("dst_host").alias("t"),
@@ -457,13 +452,11 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
         )
         .groupBy("s", "t")
         .agg(F.sum("n_links").alias("w"))
-        .localCheckpoint()
     )
-    labels = (
+    labels = materialize(
         sym.select(F.col("s").alias("host"))
         .distinct()
         .select("host", F.col("host").alias("label"))
-        .localCheckpoint()
     )
     w_rank = Window.partitionBy("host").orderBy(
         F.col("w").desc(), F.col("label").asc()
@@ -479,11 +472,10 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
             .groupBy(F.col("s").alias("host"), "label")
             .agg(F.sum("w").alias("w"))
         )
-        labels = (
+        labels = materialize(
             votes.withColumn("_rn", F.row_number().over(w_rank))
             .where(F.col("_rn") == 1)
             .select("host", "label")
-            .localCheckpoint()
         )
     w_size = Window.partitionBy("label")
     return labels.select(
@@ -529,15 +521,15 @@ def k_core(
     self-loops dropped. Each round = two semi-joins of the symmetrized
     distinct-pair edge list against the alive set (induced subgraph) +
     one map-side-combined degree aggregate + a codegen'd filter; the
-    alive set is localCheckpoint'd per round so lineage stays one
+    alive set is checkpointed per round so lineage stays one
     iteration deep. Edge-list shuffles are domain-grain.
 
     Output: host, degree (BIGINT, within the final induced subgraph).
     """
     if iters < 1:
         raise ValueError(f"k_core needs iters >= 1, got {iters}")
-    sym = _sym_edges(edges).localCheckpoint()
-    alive = sym.select(F.col("s").alias("host")).distinct().localCheckpoint()
+    sym = materialize(_sym_edges(edges))
+    alive = materialize(sym.select(F.col("s").alias("host")).distinct())
     deg = None
     for _ in range(iters):
         induced = sym.join(
@@ -546,9 +538,7 @@ def k_core(
         deg = induced.groupBy(F.col("s").alias("host")).agg(
             F.count(F.lit(1)).alias("degree")
         )
-        alive = (
-            deg.where(F.col("degree") >= k).select("host").localCheckpoint()
-        )
+        alive = materialize(deg.where(F.col("degree") >= k).select("host"))
     return deg.where(F.col("degree") >= k).select("host", "degree")
 
 
@@ -576,7 +566,7 @@ def connected_components(edges: DataFrame, iters: int = CC_ITERS) -> DataFrame:
     Scale shape: runs at the DOMAIN grain on the symmetrized distinct
     edge list. Each round is one equi-join of edges with the current
     labels + one map-side-combined MIN aggregate + a coalesce against
-    the host's own label; the label relation is localCheckpoint'd per
+    the host's own label; the label relation is checkpointed per
     round (the pagerank lineage discipline). Component sizes come from
     one count over the final label column.
 
@@ -585,12 +575,11 @@ def connected_components(edges: DataFrame, iters: int = CC_ITERS) -> DataFrame:
     """
     if iters < 1:
         raise ValueError(f"connected_components needs iters >= 1, got {iters}")
-    sym = _sym_edges(edges).localCheckpoint()
-    labels = (
+    sym = materialize(_sym_edges(edges))
+    labels = materialize(
         sym.select(F.col("s").alias("host"))
         .distinct()
         .select("host", F.col("host").alias("label"))
-        .localCheckpoint()
     )
     prev = labels
     for _ in range(iters):
@@ -600,7 +589,7 @@ def connected_components(edges: DataFrame, iters: int = CC_ITERS) -> DataFrame:
             .agg(F.min("label").alias("nmin"))
         )
         prev = labels
-        labels = (
+        labels = materialize(
             labels.join(neigh_min, "host", "left")
             .select(
                 "host",
@@ -608,7 +597,6 @@ def connected_components(edges: DataFrame, iters: int = CC_ITERS) -> DataFrame:
                     "label", F.coalesce("nmin", F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("comp_size")
@@ -822,7 +810,7 @@ def textrank_keywords(documents: DataFrame, k: int = 30) -> DataFrame:
     corpus-wide co-occurrence count, hapax edges dropped
     (TEXTRANK_MIN_COOC). The ranking is the module's fixed-iteration
     integer `pagerank` verbatim — symmetric edge list, exact scaled-
-    integer arithmetic, localCheckpoint'd iterate — so TextRank inherits
+    integer arithmetic, checkpointed iterate — so TextRank inherits
     every cross-engine-exactness and lineage property domain_pagerank
     already proved.
 
@@ -1012,7 +1000,7 @@ def cheapest_paths(
 
     Shape per round: ONE equi-join of the current distance relation
     with the (checkpointed) weighted edge list + one map-side MIN
-    aggregate, localCheckpoint'd so lineage stays flat (the
+    aggregate, checkpointed so lineage stays flat (the
     connected_components discipline). Relaxation runs from ALL current
     distances each round — correct and simple at domain grain; the
     100 TB upgrade is frontier-only / delta-stepping relaxation, a
@@ -1020,7 +1008,7 @@ def cheapest_paths(
 
     Output: host, dist_micro (0 for seeds).
     """
-    edges = edges.localCheckpoint()
+    edges = materialize(edges)
     w_edges = edges.select(
         "src_host",
         "dst_host",
@@ -1033,9 +1021,7 @@ def cheapest_paths(
         .limit(seeds_k)
         .select(F.col("src_host").alias("host"))
     )
-    dist = seeds.select(
-        "host", F.lit(0).cast("long").alias("dist_micro")
-    ).localCheckpoint()
+    dist = materialize(seeds.select("host", F.lit(0).cast("long").alias("dist_micro")))
     for _ in range(iters):
         relaxed = w_edges.join(
             dist, w_edges["src_host"] == dist["host"]
@@ -1043,10 +1029,9 @@ def cheapest_paths(
             F.col("dst_host").alias("host"),
             (F.col("dist_micro") + F.col("w")).alias("dist_micro"),
         )
-        dist = (
+        dist = materialize(
             dist.unionByName(relaxed)
             .groupBy("host")
             .agg(F.min("dist_micro").alias("dist_micro"))
-            .localCheckpoint()
         )
     return dist

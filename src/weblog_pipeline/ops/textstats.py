@@ -14,6 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .dedup import WS_RE, _fan_out, ascii_lower, lower_tokens_col
 
 #: small per-language marker-word sets for the n-gram/stopword language
@@ -1292,7 +1293,7 @@ def bpe_train(documents: DataFrame, n_merges: int = 6) -> DataFrame:
 
     Scale shape — the reason BPE training is cheap at 100 TB: the corpus
     is scanned ONCE into the word-frequency table (map-side-combined
-    aggregate, localCheckpoint'd), which is bounded by VOCABULARY, not
+    aggregate, checkpointed), which is bounded by VOCABULARY, not
     corpus size; every merge round then runs on that bounded table. Per
     round: one pair aggregate + a single-row driver pull (the max pair —
     the same bounded-collect class as IVF's Lloyd step) + one codegen'd
@@ -1311,7 +1312,7 @@ def bpe_train(documents: DataFrame, n_merges: int = 6) -> DataFrame:
     fewer than n_merges rows iff the pair supply runs dry.
     """
     spark = documents.sparkSession
-    words = (
+    words = materialize(
         _fan_out(documents.select("doc_id", "text"))
         .select(F.explode(lower_tokens_col()).alias("word"))
         .where(F.col("word").rlike(BPE_WORD_RE))
@@ -1327,7 +1328,6 @@ def bpe_train(documents: DataFrame, n_merges: int = 6) -> DataFrame:
             ).alias("syms"),
             "cnt",
         )
-        .localCheckpoint()
     )
     return _bpe_merge_loop(spark, words, n_merges)
 
@@ -1352,7 +1352,7 @@ def bpe_train_bytes(documents: DataFrame, n_merges: int = 6) -> DataFrame:
     strings), pair_count."""
     spark = documents.sparkSession
     hexed = F.hex(F.encode(F.col("word"), "UTF-8"))
-    words = (
+    words = materialize(
         _fan_out(documents.select("doc_id", "text"))
         .select(F.explode(lower_tokens_col()).alias("word"))
         .where(F.col("word") != "")
@@ -1368,7 +1368,6 @@ def bpe_train_bytes(documents: DataFrame, n_merges: int = 6) -> DataFrame:
             ).alias("syms"),
             "cnt",
         )
-        .localCheckpoint()
     )
     return _bpe_merge_loop(spark, words, n_merges)
 
@@ -1377,7 +1376,7 @@ def _bpe_merge_loop(spark, words: DataFrame, n_merges: int) -> DataFrame:
     """The shared BPE merge loop over a double-separator symbol-string
     word-frequency table (see bpe_train for the representation and the
     greedy-replace argument). Per round: one pair aggregate + a 1-row
-    driver pull + one codegen'd replace, re-localCheckpoint'd so lineage
+    driver pull + one codegen'd replace, re-checkpointed so lineage
     stays one round deep."""
     from pyspark.sql import types as T
 
@@ -1412,14 +1411,16 @@ def _bpe_merge_loop(spark, words: DataFrame, n_merges: int) -> DataFrame:
             break
         lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
         merges.append((step, lhs, rhs, int(cnt)))
-        words = words.select(
-            F.replace(
-                "syms",
-                F.lit(BPE_SEP + lhs + BPE_SEP * 2 + rhs + BPE_SEP),
-                F.lit(BPE_SEP + lhs + rhs + BPE_SEP),
-            ).alias("syms"),
-            "cnt",
-        ).localCheckpoint()
+        words = materialize(
+            words.select(
+                F.replace(
+                    "syms",
+                    F.lit(BPE_SEP + lhs + BPE_SEP * 2 + rhs + BPE_SEP),
+                    F.lit(BPE_SEP + lhs + rhs + BPE_SEP),
+                ).alias("syms"),
+                "cnt",
+            )
+        )
     schema = T.StructType(
         [
             T.StructField("step", T.IntegerType()),

@@ -37,11 +37,8 @@ LEDGER_SCHEMA = (
 @dataclass
 class PipelineResult:
     logs: DataFrame
-    texts: DataFrame
     #: the parse output both logs and texts read
     parsed: DataFrame
-    per_sink: DataFrame
-    per_domain: DataFrame
     observed_ts_us: int
     sink_names: tuple[str, ...] = ()
     metrics: dict = field(default_factory=dict)
@@ -51,6 +48,20 @@ class PipelineResult:
     pages_in: Observation | None = None
     #: (webpages, observed_ts_us) -> the same pipeline over other input
     rebuild: Callable[[DataFrame, int], PipelineResult] | None = None
+
+    # derived on read: run_to_sinks reads texts only with write_texts and
+    # neither aggregate, so a (re)build declares none of them
+    @property
+    def texts(self) -> DataFrame:
+        return page_texts(self.parsed)
+
+    @property
+    def per_sink(self) -> DataFrame:
+        return sink_counts(self.logs)
+
+    @property
+    def per_domain(self) -> DataFrame:
+        return domain_counts(self.logs)
 
 
 def route_events(
@@ -104,10 +115,7 @@ def build_pipeline(
 
     return PipelineResult(
         logs=logs,
-        texts=page_texts(parsed),
         parsed=parsed,
-        per_sink=sink_counts(logs),
-        per_domain=domain_counts(logs),
         observed_ts_us=observed_ts_us,
         # dedupe: a route reusing default_sink (or two routes sharing a
         # sink) must not double-count in the Observation / run_metrics

@@ -14,11 +14,32 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: pages per Arrow batch sent to the parse UDF, which holds a whole batch's
 #: `html` in worker memory at once (see above)
 ARROW_BATCH_ROWS = 1024
+
+
+def export_worker_path() -> None:
+    """Make the package importable by Python workers. In local mode workers
+    inherit the driver environment (set it before the JVM starts); on a
+    real cluster this is superseded by `spark-submit --py-files`."""
+    src_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    existing = os.environ.get("PYTHONPATH", "")
+    if src_dir not in existing.split(os.pathsep):
+        os.environ["PYTHONPATH"] = src_dir + (os.pathsep + existing if existing else "")
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize `df` and cut its lineage, the one checkpoint
+    policy of every iterative operator. With a checkpoint dir on the
+    SparkContext (`setCheckpointDir`, on HDFS/S3 for a real cluster) this
+    is a reliable `checkpoint()`, which survives executor loss; without
+    one a `localCheckpoint()`, whose blocks live on executors only."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def build_session(
@@ -34,15 +55,7 @@ def build_session(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
 
-    # Make the package importable by Python workers. In local mode workers
-    # inherit the driver environment (set it before the JVM starts); on a
-    # real cluster this is superseded by `spark-submit --py-files`.
-    src_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if src_dir not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            src_dir + (os.pathsep + existing if existing else "")
-        )
+    export_worker_path()
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -73,9 +86,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        # reliable checkpoints (connected_components iterations, when a
-        # checkpoint dir is set) are deleted once their RDD is GC'd instead
-        # of accumulating one labels snapshot per iteration until app exit
+        # reliable checkpoints (every `materialize` of an iterative
+        # operator, when a checkpoint dir is set) are deleted once their
+        # RDD is GC'd instead of accumulating one snapshot per iteration
+        # until app exit
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")

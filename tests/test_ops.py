@@ -1703,38 +1703,66 @@ def test_resize_mixed_axis_and_topdown(spark, docs_df):
         multimodal.resize_bmp(bytes(bad), 3, 2)
 
 
-def test_connected_components_reliable_checkpoint(spark):
-    """With a checkpoint dir configured (the production setup), the
-    per-iteration state must use RELIABLE checkpointing — files under the
-    dir — so executor loss mid-iteration cannot strand the labels.
-
-    NOTE: SparkContext offers no way to UNSET a checkpoint dir, so this
-    test intentionally uses a stable session-lifetime directory (not a
-    per-test tmp_path that pytest may reap): every later CC call in this
-    session simply keeps writing reliable checkpoints there, which is
-    behaviorally identical, just a touch slower."""
-    import os as _os
-    import tempfile as _tempfile
-
-    sc = spark.sparkContext
-    had_dir = sc._jsc.sc().getCheckpointDir().isDefined()
-    if not had_dir:
-        ckpt_root = _tempfile.mkdtemp(prefix="weblog_cc_ckpt_")
-        sc.setCheckpointDir(ckpt_root)
-    else:
-        ckpt_root = None
+def _cc_op(spark):
     edges = spark.createDataFrame(
         [Row(doc_a=1, doc_b=2), Row(doc_a=2, doc_b=3), Row(doc_a=10, doc_b=11)]
     )
+    return dedup.connected_components(edges)
+
+
+def _pagerank_op(spark):
+    from weblog_pipeline.ops import graph
+
+    edges = spark.createDataFrame(
+        [Row(src_host=s, dst_host=t, n_links=n)
+         for s, t, n in [("a", "b", 2), ("a", "c", 1), ("b", "c", 3), ("c", "a", 1)]]
+    )
+    return graph.pagerank(edges, iters=4)
+
+
+def _bpe_op(spark):
+    df = spark.createDataFrame(
+        [Row(doc_id=0, text="banana band"), Row(doc_id=1, text="banana")]
+    )
+    return textstats.bpe_train(df, n_merges=4)
+
+
+def _markov_op(spark):
+    import datetime
+
+    from weblog_pipeline.aggregate import markov_stationary
+
+    base = datetime.datetime(2024, 1, 1)
+    seq = ["a", "b"] * 4 + ["a", "c"]
+    return markov_stationary(spark.createDataFrame(
+        [Row(event_id=i, ts=base + datetime.timedelta(seconds=i), user_id=1,
+             event_type=t, value=1.0, props=None) for i, t in enumerate(seq)],
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ), iters=4)
+
+
+@pytest.mark.parametrize(
+    "op", [_cc_op, _pagerank_op, _bpe_op, _markov_op],
+    ids=["connected_components", "pagerank", "bpe_train", "markov_stationary"],
+)
+def test_iterative_op_reliable_checkpoint(spark, set_checkpoint_dir, tmp_path, op):
+    """With a checkpoint dir configured (the production setup), an
+    iterative operator's per-iteration state must use RELIABLE
+    checkpointing -- files under the dir -- so executor loss mid-iteration
+    cannot strand it, and its rows must equal the local-checkpoint run's."""
+    import os as _os
+
+    set_checkpoint_dir(None)
+    local_rows = sorted(op(spark).collect())
+    set_checkpoint_dir(str(tmp_path))
     # keep the result DataFrame referenced until after the file check:
     # cleanCheckpoints=true (build_session) lets the ContextCleaner reap
     # snapshots once their RDD is GC'd, which could race os.walk
-    result = dedup.connected_components(edges)
-    got = {r["doc_id"]: r["cluster_id"] for r in result.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    if ckpt_root is not None:
-        files = [f for _, _, fs in _os.walk(ckpt_root) for f in fs]
-        assert files, "no reliable checkpoint files were written"
+    result = op(spark)
+    assert sorted(result.collect()) == local_rows
+    files = [f for _, _, fs in _os.walk(tmp_path) for f in fs]
+    assert files, "no reliable checkpoint files were written"
     del result
 
 

@@ -306,7 +306,7 @@ def test_posting_lists_first_window_is_salted(spark):
 
 
 def test_pagerank_lineage_flat_in_iteration_count(spark):
-    """The iterate must be localCheckpoint'd: without it the final plan
+    """The iterate must be checkpointed: without it the final plan
     contains every iteration's joins (Catalyst analysis O(iters^2), no
     failure cut-point). With it, the executed plan holds exactly ONE
     iteration's join pair above a checkpointed scan."""
@@ -322,6 +322,49 @@ def test_pagerank_lineage_flat_in_iteration_count(spark):
     p6 = _physical(graph.pagerank(edges, iters=6))
     assert p2.count("Join") == p6.count("Join"), "plan grows with iters"
     assert "ExistingRDD" in p6  # the checkpointed iterate
+
+
+def test_pagerank_lineage_flat_with_reliable_checkpoints(spark, set_checkpoint_dir, tmp_path):
+    """With a checkpoint dir set, `materialize` takes the reliable
+    `checkpoint()`; its result must plan as the same ExistingRDD leaf, so
+    the lineage-shape guards above hold on a cluster setup too."""
+    from weblog_pipeline.ops import graph
+
+    set_checkpoint_dir(str(tmp_path))
+    edges = spark.createDataFrame(
+        [Row(src_host="a", dst_host="b", n_links=1),
+         Row(src_host="b", dst_host="a", n_links=2)]
+    )
+    p2 = _physical(graph.pagerank(edges, iters=2))
+    p6 = _physical(graph.pagerank(edges, iters=6))
+    assert p2.count("Join") == p6.count("Join"), "plan grows with iters"
+    assert "ExistingRDD" in p6
+
+
+def test_every_checkpoint_goes_through_materialize():
+    """One checkpoint policy: `.checkpoint` and `.localCheckpoint` appear in
+    src/ only inside `session.materialize`, so a configured checkpoint dir
+    reaches every operator that cuts lineage."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parent.parent / "src"
+    inside, outside = [], []
+    for path in sorted(src.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        policy = {
+            id(n)
+            for fn in ast.walk(tree)
+            if path.name == "session.py"
+            and isinstance(fn, ast.FunctionDef) and fn.name == "materialize"
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in ("checkpoint", "localCheckpoint"):
+                where = f"{path.relative_to(src)}:{node.lineno}"
+                (inside if id(node) in policy else outside).append(where)
+    assert len(inside) == 2, inside
+    assert not outside, f"raw checkpoint calls outside session.materialize: {outside}"
 
 
 def test_bloom_prefilter_bits_side_broadcasts(spark):
@@ -419,7 +462,7 @@ def test_mixture_sample_has_no_windows(spark):
 
 
 def test_bfs_depth_lineage_flat_in_hop_count(spark):
-    """Each BFS hop must be localCheckpoint'd: the final plan's join
+    """Each BFS hop must be checkpointed: the final plan's join
     count is constant in the hop budget (frontier reads back from the
     materialized visited set, never the whole chain)."""
     from pyspark.sql import Row
@@ -693,7 +736,7 @@ def test_session_paths_first_window_is_salted_and_day_bounded(spark):
 
 
 def test_label_propagation_lineage_flat_in_iteration_count(spark):
-    """LPA's per-round labels must be localCheckpoint'd (the pagerank
+    """LPA's per-round labels must be checkpointed (the pagerank
     discipline): plan size is independent of rounds, and the winner rank
     window partitions by host — never a global window."""
     from weblog_pipeline.ops import graph
