@@ -100,7 +100,7 @@ def main() -> None:
         "pages_in": m["pages_in"],
         "per_sink_counts": counts,
         "observed_records": m["records"],
-        "run_metrics_table": f"{args.output}/run_metrics",
+        "run_metrics_table": io.target("run_metrics"),
         "elapsed_sec": round(elapsed, 3),
         "docs_per_sec": round(m["pages_processed"] / elapsed, 1),
         "output": args.output,

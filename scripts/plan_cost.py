@@ -1,12 +1,15 @@
-"""Planning cost of `pipeline.build_pipeline` at a git revision against the
-working tree: JVM Column functions per plan and warm wall time per build.
+"""Planning cost of `pipeline.build_pipeline(...).logs` at a git revision
+against the working tree: JVM Column functions per plan and warm wall time
+per build.
 
 Each side's `src/` runs in its own Python process with its own JVM; the
 revision's is exported with `git archive`. A process builds a session as
 perfbench does, reads perfbench's cached seed-1 pages of the workload
-(generated through perfbench/gen.py when missing) and calls
-`build_pipeline` with that workload's config (`gen.config_for`). The
-first call warms the session up and is counted: every call of
+(generated through perfbench/gen.py when missing), calls `build_pipeline`
+with that workload's config (`gen.config_for`) and reads `.logs`: a build
+whose plans are derived on read plans nothing until then, so reading the
+log records keeps revisions compared like for like. The first build warms
+the session up and is counted: every call of
 `pyspark.sql.functions.builtin._invoke_function` (each JVM Column
 function, `lit` included) and of `F.lit`. The counters are then removed
 and --builds more calls are timed; the process prints their median wall
@@ -48,7 +51,7 @@ def child(src: str, workload: str, pages: str, builds: int) -> dict:
 
     def build() -> float:
         t0 = time.perf_counter()
-        build_pipeline(webpages, cfg, observed_ts_us=gen.OBSERVED_TS_US)
+        build_pipeline(webpages, cfg, observed_ts_us=gen.OBSERVED_TS_US).logs
         return time.perf_counter() - t0
 
     counts = {"functions": 0, "lits": 0}

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .config import (
     DEFAULT_ROUTES,
+    DEFAULT_SINK,
     AttributeMappings,
     PipelineConfig,
     SinkRoute,
@@ -46,7 +47,7 @@ from .oracle import populate_log_record, render_attrs
 from .ops import corpus, dedup, graph, htmlstats, multimodal, similarity, textstats
 from . import otlp
 from .parse import page_texts, parse_events
-from .pipeline import build_pipeline
+from .pipeline import build_pipeline, compile_records
 from .route import with_sink
 from .session import materialize
 from .sqlgen import (
@@ -6892,9 +6893,8 @@ FROM ev GROUP BY 1
 
 
 def q_filter_include_names(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_span_view(spark, sf_dir)
-    ev = ev.where(F.col("event_name").isin(list(CFG_FILTER.include_event_names)))
-    rec = enrich_events(ev, CFG_FILTER, OBSERVED_TS_US)
+    records = compile_records(CFG_FILTER, EVENT_ROUTES, DEFAULT_SINK, OBSERVED_TS_US)
+    rec = records(events_span_view(spark, sf_dir))
     return rec.groupBy("event_name").agg(
         F.count(F.lit(1)).alias("records"),
         F.max("severity_number").alias("max_sev"),

@@ -5,12 +5,14 @@ This is the Spark analogue of the reference's constructor-time folding
 package-init severity maps, connector.go:58-80): at driver time a validated
 PipelineConfig is compiled into pure Catalyst Column expressions — literal
 map lookups and `when` ladders — so the hot path is 100% JVM whole-stage
-codegen with zero Python and zero shuffles.
+codegen with zero Python and zero shuffles. Like newConnector, a job folds
+its config once per run: `log_record_columns` builds the select list once,
+and every chunk of the run (`pipeline.run_to_sinks`) reuses it.
 
 The severity chain is stated once: it resolves the severity number, and the
 text derives from that number (its canonical name) unless the connector
 keeps the text attribute verbatim. Each literal lookup table (text->number,
-number->text) is built at most once per `enrich_events` call.
+number->text) is built at most once per fold.
 
 Operators covered (SURVEY.md §2): O5-O18 (severity precedence chain, scalar
 map_severity / severityNumberToText as literal maps, body fallback,
@@ -23,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .config import PipelineConfig
+from .config import PipelineConfig, SinkRoute
+from .route import sink_column
 from .severity import FULL_TEXT_DOMAIN, NUMBER_TO_TEXT, map_severity
 
 # -- literal lookup tables (driver-side constant folding) --------------------
@@ -45,10 +48,6 @@ def _wrap_int32(col: Column) -> Column:
         ((col % two32 + two32 + F.lit(2147483648)) % two32 - F.lit(2147483648))
         .cast("int")
     )
-
-
-def _empty_map() -> Column:
-    return F.expr(EMPTY_STR_MAP)
 
 
 # -- severity precedence chain (connector.go:261-335) -------------------------
@@ -136,13 +135,9 @@ def severity_columns(
 # -- full record population (connector.go:261-404) ----------------------------
 
 
-def enrich_events(
-    events: DataFrame,
-    cfg: PipelineConfig,
-    observed_ts_us: int,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """Flattened event rows -> log-record rows (FIXTURES.md §6 schema).
+def enrich_columns(cfg: PipelineConfig, observed_ts_us: int) -> list[Column]:
+    """The select list from flattened event rows to log-record rows
+    (FIXTURES.md §6 schema).
 
     ``observed_ts_us`` is a job-level constant (resume-safe determinism;
     the reference stamps wall-clock per record, connector.go:341 — a
@@ -153,6 +148,7 @@ def enrich_events(
     attrs_s = F.col("event_attrs_s")
     attrs_i = F.col("event_attrs_i")
 
+    empty = F.expr(EMPTY_STR_MAP)
     sev_num, sev_text = severity_columns(cfg, name, attrs_s, attrs_i)
 
     body = (
@@ -163,13 +159,9 @@ def enrich_events(
     # under LAST_WIN reproduces pdata upsert-by-key semantics.
     parts: list[Column] = []
     if cfg.copies_from("event.attributes"):
-        parts.append(F.coalesce(attrs_s, _empty_map()))
-        parts.append(
-            F.coalesce(
-                F.transform_values(attrs_i, lambda _, v: v.cast("string")),
-                _empty_map(),
-            )
-        )
+        ints = F.transform_values(attrs_i, lambda _, v: v.cast("string"))
+        parts.append(F.coalesce(attrs_s, empty))
+        parts.append(F.coalesce(ints, empty))
     if am.event_name:
         parts.append(F.create_map(F.lit(am.event_name), name))
     if cfg.add_level:
@@ -180,35 +172,28 @@ def enrich_events(
             ) | F.coalesce(F.map_contains_key(attrs_i, "level"), F.lit(False))
         if am.event_name == "level":
             already = F.lit(True)
-        parts.append(
-            F.when(~already, F.create_map(F.lit("level"), sev_text)).otherwise(
-                _empty_map()
-            )
-        )
+        parts.append(F.when(~already, F.create_map(F.lit("level"), sev_text)).otherwise(empty))
     if cfg.copies_from("span.attributes"):
-        parts.append(F.coalesce(F.col("span_attrs"), _empty_map()))
+        parts.append(F.coalesce(F.col("span_attrs"), empty))
     if cfg.include_span_context:
         parts.append(
             F.when(
                 F.col("trace_state") != "",
                 F.create_map(F.lit("trace.state"), F.col("trace_state")),
-            ).otherwise(_empty_map())
+            ).otherwise(empty)
         )
         parts.append(F.create_map(F.lit("span.name"), F.col("span_name")))
         parts.append(F.create_map(F.lit("span.kind"), F.col("span_kind")))
-    attributes = F.map_concat(*parts) if parts else _empty_map()
+    attributes = F.map_concat(*parts) if parts else empty
 
     res_attributes = (
-        F.coalesce(F.col("res_attrs"), _empty_map())
-        if cfg.copies_from("resource.attributes")
-        else _empty_map()
+        F.coalesce(F.col("res_attrs"), empty) if cfg.copies_from("resource.attributes") else empty
     )
 
     trace_id = F.col("trace_id") if cfg.include_span_context else F.lit("")
     span_id = F.col("span_id") if cfg.include_span_context else F.lit("")
 
-    return events.select(
-        *[F.col(c) for c in passthrough],
+    return [
         F.col("url"),
         F.col("warc_ts"),
         F.col("lang"),
@@ -228,7 +213,29 @@ def enrich_events(
         F.col("span_name"),
         F.col("span_kind"),
         F.coalesce(F.col("trace_state"), F.lit("")).alias("trace_state"),
-    )
+    ]
+
+
+def log_record_columns(
+    cfg: PipelineConfig,
+    routes: tuple[SinkRoute, ...],
+    default_sink: str,
+    observed_ts_us: int,
+) -> list[Column]:
+    """The config folded: the log-record select list over flattened event
+    rows, the enrich columns plus each record's `sink`."""
+    sink = sink_column(routes, default_sink).alias("sink")
+    return [*enrich_columns(cfg, observed_ts_us), sink]
+
+
+def enrich_events(
+    events: DataFrame,
+    cfg: PipelineConfig,
+    observed_ts_us: int,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """Flattened event rows -> log-record rows, `passthrough` columns first."""
+    return events.select(*passthrough, *enrich_columns(cfg, observed_ts_us))
 
 
 def attrs_rendered(attrs_col: Column) -> Column:

@@ -14,6 +14,7 @@ import uuid
 from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
@@ -23,9 +24,8 @@ from pyspark.sql import types as T
 
 from .aggregate import domain_counts, sink_counts
 from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig, SinkRoute
-from .enrich import enrich_events
+from .enrich import log_record_columns
 from .parse import event_rows, page_texts, parse_events
-from .route import with_sink
 
 #: run_metrics is the run ledger: one row per committed chunk
 LEDGER_SCHEMA = (
@@ -34,23 +34,71 @@ LEDGER_SCHEMA = (
 )
 
 
+def compile_records(
+    cfg: PipelineConfig,
+    routes: tuple[SinkRoute, ...],
+    default_sink: str,
+    observed_ts_us: int,
+) -> Callable[[DataFrame], DataFrame]:
+    """Fold the config once: event rows -> routed log records. The
+    returned function reuses the filter and select list it holds, so
+    planning another input folds nothing again."""
+    # O3 predicate filter: empty list = pass-all (connector.go:103-109,220-224)
+    names = list(cfg.include_event_names)
+    keep = F.col("event_name").isin(names) if names else None
+    columns = log_record_columns(cfg, routes, default_sink, observed_ts_us)
+
+    def records(events: DataFrame) -> DataFrame:
+        return (events if keep is None else events.where(keep)).select(*columns)
+
+    return records
+
+
+def record_plan(
+    pages: DataFrame,
+    records: Callable[[DataFrame], DataFrame],
+    pages_in: Observation | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """pages -> (parse output, routed log records), with `records` from
+    `compile_records`: the plan batch chunks and streaming runs share.
+    `pages_in` counts the pages that reach the parse."""
+    # cheap prunes BEFORE the opaque UDF (Catalyst can't push through it);
+    # the pages that reach the parse are counted above the pushed-down prune
+    pages = pages.where(F.col("html").isNotNull())
+    if pages_in is not None:
+        pages = pages.observe(pages_in, F.count(F.lit(1)).alias("pages"))
+    parsed = parse_events(pages)
+    return parsed, records(event_rows(parsed))
+
+
 @dataclass
 class PipelineResult:
-    logs: DataFrame
-    #: the parse output both logs and texts read
-    parsed: DataFrame
-    observed_ts_us: int
-    sink_names: tuple[str, ...] = ()
-    metrics: dict = field(default_factory=dict)
-    webpages: DataFrame | None = None
-    #: input pages with html (the parse's input), observed on the scan by
-    #: whichever write runs first
-    pages_in: Observation | None = None
-    #: (webpages, observed_ts_us) -> the same pipeline over other input
-    rebuild: Callable[[DataFrame, int], PipelineResult] | None = None
+    """A job's inputs, with its plans derived on read: the config is
+    folded, and the input planned, the first time `parsed` or `logs` is
+    read, and once. `run_to_sinks` plans its chunks from the same inputs
+    and reads none of them."""
 
-    # derived on read: run_to_sinks reads texts only with write_texts and
-    # neither aggregate, so a (re)build declares none of them
+    webpages: DataFrame
+    cfg: PipelineConfig
+    routes: tuple[SinkRoute, ...]
+    default_sink: str
+    observed_ts_us: int
+    metrics: dict = field(default_factory=dict)
+
+    @cached_property
+    def _plan(self) -> tuple[DataFrame, DataFrame]:
+        return record_plan(self.webpages, compile_records(
+            self.cfg, self.routes, self.default_sink, self.observed_ts_us))
+
+    @property
+    def parsed(self) -> DataFrame:
+        """The parse output both logs and texts read."""
+        return self._plan[0]
+
+    @property
+    def logs(self) -> DataFrame:
+        return self._plan[1]
+
     @property
     def texts(self) -> DataFrame:
         return page_texts(self.parsed)
@@ -64,41 +112,6 @@ class PipelineResult:
         return domain_counts(self.logs)
 
 
-def route_events(
-    events: DataFrame,
-    cfg: PipelineConfig,
-    observed_ts_us: int,
-    routes: tuple[SinkRoute, ...],
-    default_sink: str,
-) -> DataFrame:
-    """Span-event rows -> routed log records."""
-    # O3 predicate filter: empty list = pass-all (connector.go:103-109,220-224)
-    if cfg.include_event_names:
-        events = events.where(
-            F.col("event_name").isin(list(cfg.include_event_names))
-        )
-    return with_sink(enrich_events(events, cfg, observed_ts_us), routes, default_sink)
-
-
-def record_plan(
-    pages: DataFrame,
-    cfg: PipelineConfig,
-    observed_ts_us: int,
-    routes: tuple[SinkRoute, ...],
-    default_sink: str,
-    pages_in: Observation | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """pages -> (parse output, routed log records): the plan batch and
-    streaming runs share. `pages_in` counts the pages that reach the parse."""
-    # cheap prunes BEFORE the opaque UDF (Catalyst can't push through it);
-    # the pages that reach the parse are counted above the pushed-down prune
-    pages = pages.where(F.col("html").isNotNull())
-    if pages_in is not None:
-        pages = pages.observe(pages_in, F.count(F.lit(1)).alias("pages"))
-    parsed = parse_events(pages)
-    return parsed, route_events(event_rows(parsed), cfg, observed_ts_us, routes, default_sink)
-
-
 def build_pipeline(
     webpages: DataFrame,
     cfg: PipelineConfig,
@@ -106,26 +119,11 @@ def build_pipeline(
     default_sink: str = DEFAULT_SINK,
     observed_ts_us: int | None = None,
 ) -> PipelineResult:
-    """Declare the full logical plan (no execution happens here)."""
+    """The job over `webpages`, with its clock fixed (now, unless given).
+    Nothing is planned here: see PipelineResult."""
     if observed_ts_us is None:
         observed_ts_us = int(time.time() * 1_000_000)
-
-    pages_in = Observation()
-    parsed, logs = record_plan(webpages, cfg, observed_ts_us, routes, default_sink, pages_in)
-
-    return PipelineResult(
-        logs=logs,
-        parsed=parsed,
-        observed_ts_us=observed_ts_us,
-        # dedupe: a route reusing default_sink (or two routes sharing a
-        # sink) must not double-count in the Observation / run_metrics
-        sink_names=tuple(
-            dict.fromkeys(tuple(r.sink for r in routes) + (default_sink,))
-        ),
-        webpages=webpages,
-        pages_in=pages_in,
-        rebuild=lambda pages, ts: build_pipeline(pages, cfg, routes, default_sink, ts),
-    )
+    return PipelineResult(webpages, cfg, routes, default_sink, observed_ts_us)
 
 
 def _chunk_width(spark: SparkSession, webpages: DataFrame, files: list[str]) -> int:
@@ -188,10 +186,12 @@ def run_to_sinks(
     run_metrics row commits the chunk (the ledger). A re-run with the same
     run_id skips committed chunks and reuses the run's observed_ts_us and
     chunk width, so resumed rows equal a clean run's; it refuses an input
-    whose file list changed. An input of up to one scan wave is one chunk
-    and runs the plan `result` already holds. Per-sink counts ride the
-    log_records write as an Observation. When texts are written too, the
-    chunk's parse output is cached for its two writes, so each page is
+    whose file list changed. An input of up to one scan wave is one chunk.
+    The config is folded once per run, with the run's clock, and not at
+    all when every chunk is committed; each chunk is then planned by one
+    `record_plan` call over its own files. Pages in and per-sink counts
+    ride the chunk's writes as Observations. When texts are written too,
+    the chunk's parse output is cached for its two writes, so each page is
     parsed once. Returns the run's {sink: records}.
     """
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
@@ -212,42 +212,41 @@ def run_to_sinks(
     width = rows[0]["chunk_files"] if rows else _chunk_width(spark, result.webpages, files)
     chunks = [files[i : i + width] for i in range(0, len(files), width)] or [files]
     done = {r["chunk"] for r in rows}
+    todo = [k for k in range(len(chunks)) if k not in done]
+    records = compile_records(result.cfg, result.routes, result.default_sink, ts) if todo else None
+    # per-sink counts are algebraic count_if aggregates over the statically
+    # known sink set, so they ride the write as an Observation. dedupe: a
+    # route reusing default_sink (or two routes sharing a sink) must not
+    # double-count
+    sinks = dict.fromkeys((*(r.sink for r in result.routes), result.default_sink))
+    per_sink = [F.count_if(F.col("sink") == s).alias(s) for s in sinks]
 
     pages_now = 0
-    for k, chunk_files in enumerate(chunks):
-        if k in done:
-            continue
-        part = result
-        if len(chunks) > 1:
-            part = result.rebuild(_chunk_input(result.webpages, chunk_files), ts)
-        elif ts != result.observed_ts_us:
-            part = result.rebuild(result.webpages, ts)
+    for k in todo:
+        pages = result.webpages if len(chunks) == 1 else _chunk_input(result.webpages, chunks[k])
+        pages_in, obs = Observation(), Observation()
+        parsed, logs = record_plan(pages, records, pages_in)
         scope = {"run_id": F.lit(run_id), "chunk": F.lit(k)}
 
         # a chunk is one scan wave, so its cached parse output is bounded
         # by one wave's; it spills to disk when memory runs short
         if write_texts:
-            part.parsed.persist(StorageLevel.MEMORY_AND_DISK)
+            parsed.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if write_texts:
                 io.overwrite_partitions(
-                    part.texts.withColumns(scope), "page_texts", ["run_id", "chunk"]
+                    page_texts(parsed).withColumns(scope), "page_texts", ["run_id", "chunk"]
                 )
-            # per-sink counts are algebraic count_if aggregates over the
-            # statically known sink set, so they ride the write as an Observation
-            obs = Observation()
-            observed = part.logs.observe(
-                obs, *[F.count_if(F.col("sink") == s).alias(s) for s in part.sink_names]
-            )
             # single pass, partitioned by sink (O20 fan-out without N scans)
             io.overwrite_partitions(
-                observed.withColumns(scope), "log_records", ["sink", "run_id", "chunk"]
+                logs.observe(obs, *per_sink).withColumns(scope),
+                "log_records", ["sink", "run_id", "chunk"],
             )
         finally:
             if write_texts:
-                part.parsed.unpersist()
+                parsed.unpersist()
         row = Row(run_id=run_id, chunk=k, chunk_files=width, input_digest=digest,
-                  observed_ts_us=ts, pages_in=part.pages_in.get["pages"], records=obs.get)
+                  observed_ts_us=ts, pages_in=pages_in.get["pages"], records=obs.get)
         io.append(_ledger_row(spark, row), "run_metrics")
         rows.append(row)
         pages_now += row.pages_in

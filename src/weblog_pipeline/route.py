@@ -13,6 +13,9 @@ writers additionally skip the job when the frame is all-empty.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -21,34 +24,23 @@ from .config import DEFAULT_SINK, DEFAULT_ROUTES, SinkRoute
 
 def route_predicate(route: SinkRoute, name: Column) -> Column:
     if route.kind == "contains_any":
-        pred = name.contains(route.values[0])
-        for v in route.values[1:]:
-            pred = pred | name.contains(v)
-        return pred
+        return reduce(operator.or_, map(name.contains, route.values))
     if route.kind == "prefix_any":
-        pred = name.startswith(route.values[0])
-        for v in route.values[1:]:
-            pred = pred | name.startswith(v)
-        return pred
+        return reduce(operator.or_, map(name.startswith, route.values))
     return name.isin(list(route.values))
 
 
 def sink_column(
-    routes: tuple[SinkRoute, ...] = DEFAULT_ROUTES,
-    name: Column | None = None,
-    default_sink: str = DEFAULT_SINK,
+    routes: tuple[SinkRoute, ...] = DEFAULT_ROUTES, default_sink: str = DEFAULT_SINK
 ) -> Column:
     """First-match-wins `when` ladder assigning each record its sink."""
-    name = F.col("event_name") if name is None else name
-    ladder: Column | None = None
+    name, ladder = F.col("event_name"), None
     for r in routes:
         cond = route_predicate(r, name)
         ladder = (
             F.when(cond, F.lit(r.sink)) if ladder is None else ladder.when(cond, F.lit(r.sink))
         )
-    if ladder is None:
-        return F.lit(default_sink)
-    return ladder.otherwise(F.lit(default_sink))
+    return F.lit(default_sink) if ladder is None else ladder.otherwise(F.lit(default_sink))
 
 
 def with_sink(
@@ -56,4 +48,4 @@ def with_sink(
     routes: tuple[SinkRoute, ...] = DEFAULT_ROUTES,
     default_sink: str = DEFAULT_SINK,
 ) -> DataFrame:
-    return records.withColumn("sink", sink_column(routes, default_sink=default_sink))
+    return records.withColumn("sink", sink_column(routes, default_sink))

@@ -74,7 +74,11 @@ def build_session(
         # −15%, dedup-recall audit −13%, and roughly half the cold-run
         # cost (no per-partition sorts to JIT). Both knobs are
         # env-overridable for clusters that prefer the conservative
-        # default.
+        # default. Rollback trigger: a shuffled-hash build side is held
+        # in memory whole and does not spill, so an underestimated one
+        # fails instead of slowing down. An executor OOM, or
+        # UNABLE_TO_ACQUIRE_MEMORY, in a stage running ShuffledHashJoin
+        # is that failure: rerun with SPARK_PREFER_SORTMERGEJOIN=true.
         .config(
             "spark.sql.join.preferSortMergeJoin",
             os.environ.get("SPARK_PREFER_SORTMERGEJOIN", "false"),

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig, SinkRoute
-from .pipeline import record_plan, route_events
+from .pipeline import compile_records, record_plan
 from .webpages import WEBPAGES_SCHEMA
 
 
@@ -38,7 +38,7 @@ def streaming_logs(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-    _, logs = record_plan(stream, cfg, observed_ts_us, routes, default_sink)
+    _, logs = record_plan(stream, compile_records(cfg, routes, default_sink, observed_ts_us))
     return logs
 
 
@@ -225,7 +225,7 @@ def streaming_otlp_logs(
         .withColumn("warc_ts", F.lit(None).cast("timestamp"))
         .withColumn("lang", F.lit(None).cast("string"))
     )
-    return route_events(events, cfg, observed_ts_us, routes, default_sink)
+    return compile_records(cfg, routes, default_sink, observed_ts_us)(events)
 
 
 # ---------------------------------------------------------------------------

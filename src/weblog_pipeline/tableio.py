@@ -52,35 +52,36 @@ class TableIO:
         self.backend = backend
         self.use_iceberg = backend == "iceberg"
 
-    def _target(self, table: str) -> str:
+    def target(self, table: str) -> str:
+        """`<namespace>.<table>` in the catalog, else a directory."""
         if self.use_iceberg:
             return f"{self.location}.{table}"
         return os.path.join(self.location, table)
 
     def read(self, table: str) -> DataFrame:
         if self.use_iceberg:
-            return self.spark.read.format("iceberg").load(self._target(table))
-        return self.spark.read.parquet(self._target(table))
+            return self.spark.read.format("iceberg").load(self.target(table))
+        return self.spark.read.parquet(self.target(table))
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         if self.use_iceberg:
-            df.writeTo(self._target(table)).append()
+            df.writeTo(self.target(table)).append()
             return
         writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._target(table))
+        writer.parquet(self.target(table))
 
     def overwrite(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
         if self.use_iceberg:
-            df.writeTo(self._target(table)).createOrReplace()
+            df.writeTo(self.target(table)).createOrReplace()
             return
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._target(table))
+        writer.parquet(self.target(table))
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_by: list[str]
@@ -91,13 +92,13 @@ class TableIO:
         natively (overwritePartitions); the parquet seam uses Spark's
         dynamic partitionOverwriteMode as an option of this one write."""
         if self.use_iceberg:
-            df.writeTo(self._target(table)).overwritePartitions()
+            df.writeTo(self.target(table)).overwritePartitions()
             return
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
-            .parquet(self._target(table))
+            .parquet(self.target(table))
         )
 
     def delete_partitions(self, table: str, column: str, value: str) -> None:
@@ -107,13 +108,13 @@ class TableIO:
             return
         if self.use_iceberg:
             self.spark.sql(
-                f"DELETE FROM {self._target(table)} WHERE {column} = :value",
+                f"DELETE FROM {self.target(table)} WHERE {column} = :value",
                 args={"value": value},
             )
             return
         utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
         name = f"{column}={utils.escapePathName(value)}"
-        for root, dirs, _ in os.walk(self._target(table)):
+        for root, dirs, _ in os.walk(self.target(table)):
             # descend only through the partition levels above `column`
             for d in [d for d in dirs if d.startswith(f"{column}=")]:
                 dirs.remove(d)
@@ -122,8 +123,8 @@ class TableIO:
 
     def exists(self, table: str) -> bool:
         if self.use_iceberg:
-            return self.spark.catalog.tableExists(self._target(table))
-        return os.path.exists(self._target(table))
+            return self.spark.catalog.tableExists(self.target(table))
+        return os.path.exists(self.target(table))
 
 
 def write_bucketed(

@@ -184,6 +184,33 @@ def test_ledger_records_real_rows_in(spark, tmp_path, input_path, two_file_chunk
     }
 
 
+def test_config_folded_once_per_run(spark, tmp_path, input_path, monkeypatch, request):
+    """A run folds its config (enrich.severity_columns builds the severity
+    chain) once however many chunks it plans, and not at all when every
+    chunk is already committed."""
+    from weblog_pipeline import enrich
+
+    folds = []
+    fold = enrich.severity_columns
+    monkeypatch.setattr(enrich, "severity_columns", lambda *a: folds.append(a) or fold(*a))
+
+    def run(out):
+        folds.clear()
+        _, m = _run(spark, input_path, out)
+        return len(folds), m["chunks"], m["chunks_skipped"]
+
+    one = str(tmp_path / "one")
+    assert run(one) == (1, 1, 0)
+    assert_exact(spark, input_path, one)
+
+    request.getfixturevalue("two_file_chunks")
+    two = str(tmp_path / "two")
+    assert run(two) == (1, 2, 0)
+    assert_exact(spark, input_path, two)
+    assert run(two) == (0, 2, 2)
+    assert_exact(spark, input_path, two)
+
+
 class _Listener:
     """QueryExecutionListener (a py4j callback) keeping each finished
     QueryExecution, writes included."""
