@@ -6,9 +6,11 @@ under .perfbench_work/inputs/, generated through perfbench/gen.py when
 missing), cut into Arrow batches of the session's maxRecordsPerBatch with
 the columns `parse_events` hands the UDF. Every output batch of the
 working tree must be `RecordBatch.equals` the revision's (schema and
-values); then both are timed in process CPU time, alternating batch by
-batch, and the medians over the reps printed. Exits 1 on the first
-unequal batch.
+values), and every page row (event_idx <= 0) without a parse_error must
+carry the page_text `markers.extract_text`, the oracle's spec, gives for
+its page's html; then both are timed in process CPU time, alternating
+batch by batch, and the medians over the reps printed. Exits 1 on the
+first unequal batch or page text.
 
 Usage: python3 scripts/parse_ab.py [--rev HEAD] [--seeds 1 4 5 6 7 8]
        [--workloads crawl_text dense_telemetry] [--reps 7]
@@ -31,9 +33,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [os.path.join(ROOT, "src"), os.path.join(ROOT, "perfbench")]
 
 import gen  # noqa: E402  (perfbench/gen.py)
+import pyarrow.compute as pc  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
 from weblog_pipeline import parse as work  # noqa: E402
+from weblog_pipeline.markers import extract_text  # noqa: E402
 from weblog_pipeline.session import ARROW_BATCH_ROWS  # noqa: E402
 
 
@@ -57,6 +61,21 @@ def input_batches(workload: str, seed: int) -> list:
         table = pq.read_table(path, columns=["url", "warc_ts", "html", "lang"])
         batches += table.to_batches(max_chunksize=ARROW_BATCH_ROWS)
     return batches
+
+
+def text_mismatch(batches: list, out: list) -> int | None:
+    """Index of the first output batch whose page rows (event_idx <= 0,
+    one per input page, in page order) carry a page_text other than
+    `extract_text` of their page, parse_error rows aside; None if none."""
+    for k, (rb, ob) in enumerate(zip(batches, out)):
+        pages = ob.filter(pc.less_equal(ob.column("event_idx"), 0))
+        if pages.num_rows != rb.num_rows:
+            return k
+        rows = zip(rb.column("html").to_pylist(), pages.column("page_text").to_pylist(),
+                   pages.column("parse_error").to_pylist())
+        if any(err is None and text != extract_text(html or b"") for html, text, err in rows):
+            return k
+    return None
 
 
 def cpu_s(sides: dict, batches: list, reps: int) -> dict:
@@ -100,8 +119,13 @@ def main() -> int:
                 if not g.equals(w):
                     print(f"{workload} seed {seed}: batch {k} differs from {args.rev}")
                     return 1
+            bad = text_mismatch(batches, got)
+            if bad is not None:
+                print(f"{workload} seed {seed}: batch {bad} page_text differs from extract_text")
+                return 1
             rows = sum(b.num_rows for b in got)
-            print(f"{workload} seed {seed}: {len(got)} batches, {rows} rows equal")
+            print(f"{workload} seed {seed}: {len(got)} batches, {rows} rows equal, "
+                  f"page_text equal to extract_text")
 
         # timed on the first seed
         gc.collect()

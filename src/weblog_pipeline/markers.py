@@ -7,9 +7,12 @@ fixed field order, attrs as compact sorted-key JSON (values: str|int only):
         ts=<ns_epoch_int> name=<event_name> attrs=<json> span_attrs=<json>
         res_attrs=<json>-->
 
-Parsing is byte-level regex over the raw ``html`` bytes with strict UTF-8
-decoding of captured fields — never locale- or Unicode-version-dependent —
-so extraction is byte-identical across pandas/pyarrow versions.
+Markers and page text are parsed from the raw ``html`` bytes by byte-level
+regexes with strict UTF-8 decoding of captured fields — never locale- or
+Unicode-version-dependent — so extraction is byte-identical across
+pandas/pyarrow versions. `extract_text` is the oracle's spec of page text;
+the parse UDF extracts the same bytes with its own `bytes.find` kernel
+(parse._page_text), which the tests check against it.
 
 Field meanings map 1:1 to what the reference reads from pdata:
 event name/timestamp/attributes (connector.go:221,338,274), span

@@ -3,9 +3,10 @@
 This is the engine's replacement for the reference's 4-deep nested-loop
 flatten (connector.go:203-216), re-expressed as a `mapInArrow` UDF:
 pages arrive as Arrow record batches, a precompiled byte-level regex
-extracts every embedded telemetry marker plus the visible page text, and
-one output row is emitted per span event (page-grain context denormalized
-onto each row).
+extracts every embedded telemetry marker, a `bytes.find` loop extracts the
+visible page text (tested against `markers.extract_text`, the oracle's
+spec), and one output row is emitted per span event (page-grain context
+denormalized onto each row).
 
 Scale notes (100 TB design):
   * The UDF is the ONLY Python stage in the pipeline; everything downstream
@@ -39,7 +40,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
-from .markers import _MARKER_RE, _TEXT_RE, _loads, int64
+from .markers import _MARKER_RE, _loads, int64
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -132,6 +133,26 @@ class _Memo(dict):
         return entries
 
 
+def _page_text(blob: bytes) -> bytes:
+    """The contents of every <p>…</p> block of `blob`, joined by a newline:
+    the bytes `markers.extract_text`, the oracle's spec, decodes. Found by
+    `bytes.find` in place of its lazy regex (Python's `re` runs `.*?` a
+    byte at a time, and most of a text-heavy page sits inside <p> blocks);
+    tests/test_property.py checks the two against each other. Each block
+    ends at the first </p> after its <p>, as the lazy match does, and a
+    <p> with no later </p> ends the scan: no later <p> can match either."""
+    find = blob.find
+    blocks = []
+    i = find(b"<p>")
+    while i >= 0:
+        j = find(b"</p>", i + 3)
+        if j < 0:
+            break
+        blocks.append(blob[i + 3 : j])
+        i = find(b"<p>", j + 4)
+    return b"\n".join(blocks)
+
+
 #: the columns of a zero-event page's sentinel row after event_idx
 _NO_EVENT = (None,) * 11
 
@@ -180,9 +201,9 @@ def _parse_arrow_batches(
         for i, blob in enumerate(rb.column("html").to_pylist()):
             blob = blob or b""
             try:
-                # join the <p> byte blocks, decode ONCE (newline is
-                # ASCII, UTF-8 self-synchronizing — identical text)
-                text = b"\n".join(_TEXT_RE.findall(blob)).decode("utf-8", "strict")
+                # decode the joined blocks ONCE (newline is ASCII, UTF-8
+                # self-synchronizing — identical text)
+                text = _page_text(blob).decode("utf-8", "strict")
                 evs, err = _events(blob, memo_a, memo_s), None
             except Exception as exc:  # corrupt marker -> quarantine page
                 text, evs, err = None, [], f"{type(exc).__name__}: {exc}"
@@ -217,7 +238,8 @@ def event_rows(parsed: "DataFrame") -> "DataFrame":
 
 
 def page_texts(parsed: "DataFrame") -> "DataFrame":
-    """Page-grain (url, page_text, n_page_events, parse_error) view."""
+    """Page-grain (url, warc_ts, lang, page_text, n_page_events,
+    parse_error) view."""
     return parsed.where(parsed.event_idx <= 0).select(
         "url", "warc_ts", "lang", "page_text", "n_page_events", "parse_error"
     )

@@ -1,15 +1,23 @@
-"""Property-based tests (hypothesis): marker grammar round-trip, severity
-scalar total-function properties, router totality. Pure Python — no Spark —
+"""Property-based tests (hypothesis): marker grammar round-trip, the parse
+UDF's page-text kernel against the oracle's regex, severity scalar
+total-function properties, router totality. Pure Python — no Spark —
 so they run in milliseconds and fuzz the byte-level grammar hard."""
 
 import json
 import string
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from weblog_pipeline.config import DEFAULT_ROUTES, route_event
-from weblog_pipeline.markers import SpanEvent, extract_text, parse_markers, render_marker
+from weblog_pipeline.markers import (
+    _TEXT_RE,
+    SpanEvent,
+    extract_text,
+    parse_markers,
+    render_marker,
+)
+from weblog_pipeline.parse import _page_text
 from weblog_pipeline.severity import (
     FULL_TEXT_DOMAIN,
     NUMBER_TO_TEXT,
@@ -68,6 +76,26 @@ def test_marker_roundtrip_property(events, text):
         assert got.res_attrs == want.res_attrs
         assert got.span_name == want.span_name
     assert extract_text(html) == "\n".join(paragraphs)
+
+
+# the parse UDF's page-text kernel against the oracle's regex: pages
+# built from the delimiters, their near misses, and bytes a strict UTF-8
+# decode accepts and rejects
+_text_tokens = st.sampled_from(
+    [b"<p>", b"</p>", b"<p", b"</p", b"p>", b"<P>", b"<p/>", b"\n", b"\xff",
+     b"\xc3\xa9", b"a", b" ", b"<", b"/", b">", b"p"]
+)
+
+
+@settings(max_examples=1000)
+@given(st.lists(_text_tokens, max_size=40).map(b"".join))
+@example(b"a<p>unclosed")
+@example(b"</p>stray<p>b</p>")
+@example(b"<p><p>a</p></p>")
+@example(b"<p></p>")
+@example(b"text<p>")
+def test_page_text_kernel_matches_regex(html):
+    assert _page_text(html) == b"\n".join(_TEXT_RE.findall(html))
 
 
 @settings(max_examples=500)

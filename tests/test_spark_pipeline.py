@@ -167,14 +167,37 @@ def test_corrupt_marker_quarantined(spark, markers, error):
     """A page with an unparseable marker must not fail the task: it yields
     a parse_error row, contributes no events, and other pages are fine."""
     from weblog_pipeline.markers import parse_markers
-    from weblog_pipeline.webpages import WEBPAGES_SCHEMA
 
-    good = gen_page(11)
     bad_html = b"<p>fine</p>" + markers
     with pytest.raises(Exception) as oracle_error:
         parse_markers(bad_html)
     assert type(oracle_error.value).__name__ == error
 
+    bad = _quarantined_page(spark, bad_html)
+    assert bad["parse_error"].startswith(f"{error}: ")
+
+
+def test_invalid_utf8_page_text_quarantined(spark):
+    """Invalid UTF-8 inside a <p> block quarantines the page with the
+    oracle's own UnicodeDecodeError message: text is read before markers,
+    so the corrupt marker after it never names the class."""
+    from weblog_pipeline.markers import extract_text
+
+    bad_html = b"<p>\xff</p>" + _marker(attrs=b"{not-json}")
+    with pytest.raises(UnicodeDecodeError) as oracle_error:
+        extract_text(bad_html)
+
+    bad = _quarantined_page(spark, bad_html)
+    assert bad["parse_error"] == f"UnicodeDecodeError: {oracle_error.value}"
+
+
+def _quarantined_page(spark, bad_html):
+    """Run `bad_html` through the pipeline next to a good page; check the
+    bad page is quarantined with no text or events while the good page
+    still yields its records, and return the bad page's texts row."""
+    from weblog_pipeline.webpages import WEBPAGES_SCHEMA
+
+    good = gen_page(11)
     df = spark.createDataFrame(
         [
             (good.url, None, bytearray(good.html), good.text, "en"),
@@ -185,12 +208,12 @@ def test_corrupt_marker_quarantined(spark, markers, error):
     result = build_pipeline(df, PipelineConfig(), observed_ts_us=OBS_US)
     texts = {r["url"]: r for r in result.texts.collect()}
     bad = texts["https://bad.example.com/x"]
-    assert bad["parse_error"].startswith(f"{error}: ")
     assert bad["page_text"] is None and bad["n_page_events"] == 0
     # the good page still produced its records
     logs = result.logs.collect()
     assert {r["url"] for r in logs} == {good.url}
     assert len(logs) == 5
+    return bad
 
 
 def test_domain_counts(spark):
