@@ -32,8 +32,9 @@ CLAIMS = {
     "(never SinglePartition)",
     "cdc_dup_stats": "per-doc window partitioned by doc_id; chunk-frequency "
     "aggregate joined back (AQE broadcast at small sizes)",
-    "ann_lsh_topk": "bucket equi-join with broadcast query side; two-phase "
-    "salted rank (no single-reducer window)",
+    "ann_lsh_topk": "bucket equi-join with broadcast query side; the rank "
+    "is group-limited (WindowGroupLimit Partial before the Exchange, "
+    "Final after: no single-reducer window)",
     "bigram_logprob": "corpus counts are groupBy aggregates joined back — "
     "NO unbounded window over token-frequency keys",
     "otlp_roundtrip": "from_json + three Generate (explode) nodes in the "
@@ -56,10 +57,10 @@ CLAIMS = {
     "source_boilerplate": "one (source, line-md5) hash aggregate (map-side "
     "combined) with the tiny per-source doc-count table BROADCAST onto it; "
     "nothing shuffles by raw line text",
-    "posting_lists": "two-phase SALTED per-term rank: first Window "
-    "partitions by (token, doc_id % salt) — Zipf-hot terms spread over "
-    "salt buckets — the token-only Window ranks only the <= k*salt "
-    "survivors (WindowGroupLimit caps both)",
+    "posting_lists": "per-term rank over tf, group-limited: "
+    "WindowGroupLimit Partial keeps k postings per term on each map task "
+    "before the Exchange, Final after it, so a Zipf-hot term never "
+    "reaches one task whole; the df join runs after the cut",
     "domain_pagerank": "iterate is localCheckpoint'd (ExistingRDD leaf): "
     "the final plan holds ONE iteration's join pair regardless of "
     "iteration count; edge/outdeg joins broadcast at domain grain",
@@ -113,20 +114,21 @@ CLAIMS = {
     "whole op is one scan, one histogram exchange, ZERO joins",
     "bm25_topk": "token stream explodes once; corpus stats attach as a "
     "broadcast single-row cross join (no driver collect); tf is "
-    "pre-filtered to the query's own terms; final top-k is the "
-    "two-phase SALTED rank — never a single-reducer window over every "
-    "matching document",
+    "pre-filtered to the query's own terms; final top-k is a "
+    "TakeOrderedAndProject under the rank window — never a "
+    "single-reducer window over every matching document",
     "pq_codes": "ONE Arrow-batched block-diagonal int64 matmul assigns "
     "all m subspace codes in a single map stage — zero shuffle, no "
     "per-row Python; the codebook sample is a TakeOrdered scan "
     "collecting n_codes rows",
     "pq_adc_topk": "corpus side touches ONLY the codes relation; the "
     "per-query LUT attaches by BROADCAST (subspace, code) equi-join; "
-    "per-doc score is a map-side-combined sum; top-k is the two-phase "
-    "salted rank — raw corpus floats are never read at query time",
+    "per-doc score is a map-side-combined sum; top-k is group-limited "
+    "(WindowGroupLimit Partial, Exchange, Final) — raw corpus floats are "
+    "never read at query time",
     "pq_adc_refined": "ADC nominates a CONSTANT candidate count per "
     "query; the exact-cosine join fetches raw floats for those rows "
-    "ONLY, then the shared two-phase salted rank keeps k",
+    "ONLY, then the shared group-limited rank keeps k",
     "domain_trustrank": "the pagerank iterate with seed-gated teleport: "
     "localCheckpoint'd each round (lineage one iteration deep), pure "
     "integer updates, domain-grain joins",
@@ -152,8 +154,8 @@ CLAIMS = {
     "in the scan stage right after the hash probe — the fact never "
     "shuffles",
     "kmv_audit": "distinct (type, user) dedups map-side; the k-smallest "
-    "selection is the two-phase SALTED rank (Zipf-hot types spread "
-    "over salt buckets); everything after runs on <= k rows per key",
+    "selection is group-limited (each map task keeps k hashes per type "
+    "before the Exchange); everything after runs on <= k rows per key",
     "markov_stationary": "fixed-round integer power iteration over the "
     "STATE-DOMAIN matrix relation, localCheckpoint'd each round — the "
     "final plan holds one round's join regardless of iteration count",

@@ -5,21 +5,46 @@ a count per (sink, domain) needs no salt: map-side combine (the partial
 HashAggregate) sends at most one row per map task for any key, so the
 hot key's reducer gets one row per map task however hot the key is.
 Among this module's aggregates and joins, only `salted_skew_join` salts: a
-non-broadcast join has no map-side combine to lean on. (Top-k ranks
-elsewhere in this module salt their window partitions, which is a
-different problem: a window cannot combine map-side.)
+non-broadcast join has no map-side combine to lean on. A top-k rank
+needs no salt either: `topk`, the one top-k cut of the whole catalog,
+leaves the map-side cut to Spark's window group limit.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .session import materialize
 
 DEFAULT_SALT_BUCKETS = 16
+
+
+def topk(
+    df: DataFrame, k: int, order: Sequence[Column], by: Sequence = ()
+) -> DataFrame:
+    """The first k rows of `df` under `order` in each group of `by` (in
+    the whole frame when `by` is empty), numbered 1..k in a new INT
+    column `rank`. End `order` on a column unique within a group, so the
+    cut is the same in any engine and on any input split.
+
+    One `row_number()` window, filtered `rank <= k` directly above it:
+    the shape Spark's InsertWindowGroupLimit optimizer rule rewrites
+    when k is a literal no larger than
+    `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000; no k
+    in this catalog is above a few hundred). With `by`, each map task
+    keeps k rows per group (`WindowGroupLimit ... Partial`) before the
+    Exchange and the reducer cuts again (`... Final`), so a hot group
+    sends at most k rows per map task however hot it is. Without `by`,
+    the cut is a TakeOrderedAndProject (per-partition heaps) and the
+    window numbers only its k rows. No task ranks a whole group, and no
+    salt is needed."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def sink_counts(records: DataFrame) -> DataFrame:
@@ -125,8 +150,6 @@ def keyed_quota(
 
     Output: event_id, user_id, win_start (epoch s), seq, allowed.
     """
-    from pyspark.sql import Window
-
     win = F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("win_start")
     w = Window.partitionBy(key, "win_start").orderBy("ts", "event_id")
     return (
@@ -361,8 +384,6 @@ def event_transitions(
 
     Output: from_type, to_type, n (BIGINT), p_bp (BIGINT).
     """
-    from pyspark.sql import Window
-
     day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     w = Window.partitionBy(user_col, "_day_s").orderBy(ts_col, "event_id")
     pairs = (
@@ -409,8 +430,6 @@ def value_percentiles(
     Output: <key_col>, q (INT), bucket (INT) — bucket * width is the
     percentile's lower bound.
     """
-    from pyspark.sql import Window
-
     b = F.floor(F.col(value_col) / F.lit(bucket_width)).cast("int")
     hist = (
         events.select(key_col, b.alias("bucket"))
@@ -545,8 +564,6 @@ def bot_gap_stats(
     Output: user_id, win_start (epoch s), n_gaps, sum_gap_ms,
     sum_gap2_ms, min_gap_ms, max_gap_ms (BIGINT), is_regular (INT).
     """
-    from pyspark.sql import Window
-
     win = F.unix_timestamp(F.date_trunc("day", F.col(ts_col))).alias(
         "win_start"
     )
@@ -612,8 +629,6 @@ def anomaly_days(
     Output: <key_col>, n_days, med_cnt, mad, n_anomalies, max_dev
     (all BIGINT).
     """
-    from pyspark.sql import Window
-
     day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     daily = (
         events.select(key_col, day_s.alias("day_s"))
@@ -732,7 +747,6 @@ def session_paths(
     ts_col: str = "ts",
     path_len: int = 5,
     k: int = 20,
-    salt_mod: int = 8,
 ) -> DataFrame:
     """Top-k user-journey prefixes — the product-analytics "what do
     sessions look like" query: each (user, day) session is reduced to
@@ -740,37 +754,33 @@ def session_paths(
     by ts, then event_id for engine-exact ties), identical prefixes are
     counted, and the k most common are ranked.
 
-    Shape: the ordering window is partitioned by the bounded (user, day)
-    stratum (the keyed_quota discipline); the prefix is assembled by
-    sorting the collected (rn, type) structs INSIDE each group —
-    array_sort on <= path_len elements, no second window. The final
-    global top-k uses the bm25_topk two-phase salted rank: phase 1 ranks
-    inside hash(path) % salt_mod partitions and keeps k per partition,
-    phase 2 ranks the <= k * salt_mod survivors — no single-task global
-    sort over the (unbounded) distinct-path domain.
+    Shape: the first `path_len` events are a `topk` by the bounded
+    (user, day) stratum (the keyed_quota discipline); the prefix is
+    assembled by sorting the collected (rank, type) structs INSIDE each
+    group — array_sort on <= path_len elements, no second window. The final
+    global top-k is `topk` without groups: Spark's group limit rule
+    plans it as a TakeOrderedAndProject, so no task sorts the
+    (unbounded) distinct-path domain.
 
     Output: rank (INT), path (STRING), n_sessions (BIGINT).
     """
-    from pyspark.sql import Window
-
     day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
-    w = Window.partitionBy(user_col, "_day_s").orderBy(ts_col, "event_id")
+    typed = events.select(
+        user_col,
+        "event_id",
+        ts_col,
+        day_s.alias("_day_s"),
+        F.col(type_col).alias("_et"),
+    )
+    by_ts = [F.col(ts_col), F.col("event_id")]
     paths = (
-        events.select(
-            user_col,
-            "event_id",
-            ts_col,
-            day_s.alias("_day_s"),
-            F.col(type_col).alias("_et"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= path_len)
+        topk(typed, path_len, by_ts, by=[user_col, "_day_s"])
         .groupBy(user_col, "_day_s")
         .agg(
             F.array_join(
                 F.transform(
                     F.array_sort(
-                        F.collect_list(F.struct("_rn", "_et"))
+                        F.collect_list(F.struct("rank", "_et"))
                     ),
                     lambda x: x["_et"],
                 ),
@@ -781,18 +791,7 @@ def session_paths(
         .agg(F.count(F.lit(1)).alias("n_sessions"))
     )
     order = [F.col("n_sessions").desc(), F.col("path").asc()]
-    w1 = Window.partitionBy(
-        F.pmod(F.hash("path"), F.lit(salt_mod))
-    ).orderBy(*order)
-    survivors = paths.withColumn("_r", F.row_number().over(w1)).where(
-        F.col("_r") <= k
-    )
-    w2 = Window.partitionBy().orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(F.col("rank").cast("int").alias("rank"), "path", "n_sessions")
-    )
+    return topk(paths, k, order).select("rank", "path", "n_sessions")
 
 
 #: hex digits whose low bit is 0 — md5-parity arm assignment shared
@@ -887,8 +886,6 @@ def trimmed_mean(
     Output: <key_col>, n_events, n_kept, sum_kept_c (BIGINT),
     trimmed_mean_c, raw_mean_c (BIGINT, integer cents).
     """
-    from pyspark.sql import Window
-
     b = F.floor(F.col(value_col) / F.lit(bucket_width)).cast("int")
     cents = F.floor(F.col(value_col) * 100).cast("long")
     hist = (
@@ -950,8 +947,6 @@ def _covisit_kept(
     the shared candidate relation of item_covisitation and
     item_similarity (the cap bounds any later pair fan-out at
     C(cap, 2) per stratum)."""
-    from pyspark.sql import Window
-
     day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     items = (
         events.where(F.col("props").isNotNull())
@@ -1043,8 +1038,6 @@ def daily_anomalies(
 
     Output: <key_col>, day, n_events, base_days, base_sum, is_anomaly.
     """
-    from pyspark.sql import Window
-
     day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     daily = (
         events.select(key_col, day.alias("day"))
@@ -1257,8 +1250,6 @@ def cusum_alerts(
     Output: <key_col>, day, n_events, cusum (scaled by n_days),
     is_alarm.
     """
-    from pyspark.sql import Window
-
     day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     daily = (
         events.select(key_col, day.alias("day"))
@@ -1334,8 +1325,6 @@ def km_hazard(
 
     Output: lifetime, n_at_risk, n_churned, n_censored, hazard_bp.
     """
-    from pyspark.sql import Window
-
     day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     spans = (
         events.select("user_id", day.alias("day"))
@@ -1391,8 +1380,6 @@ def rfm_segments(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     Output: user_id, recency, frequency, monetary_cents, r_score,
     f_score, m_score, rfm_code (r*100 + f*10 + m).
     """
-    from pyspark.sql import Window
-
     day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     cents = F.floor(F.col("value") * F.lit(100)).cast("long")
     agg = (
@@ -1479,8 +1466,6 @@ def engagement_gini(
 
     Output: <key_col>, n_users, total_events, gini_bp.
     """
-    from pyspark.sql import Window
-
     per_user = (
         events.groupBy(key_col, "user_id")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1756,8 +1741,8 @@ def item_similarity(
     Scale shape: the pair fan-out inherits item_covisitation's stratum
     cap (C(cap,2) per stratum, worst case); the per-item degree is one
     map-side aggregate over the kept relation, broadcast back onto the
-    (already support-gated) pair relation; the final top-k is
-    TakeOrderedAndProject. Headroom: n_covisits^2 * 10^4 overflows
+    (already support-gated) pair relation; the final top-k is `topk`
+    (a TakeOrderedAndProject). Headroom: n_covisits^2 * 10^4 overflows
     int64 past ~10^7 co-visits per pair.
 
     Output: rank, item_a, item_b, n_covisits, n_a, n_b, sim_sq_bp.
@@ -1815,16 +1800,8 @@ def item_similarity(
         F.col("item_a").asc(),
         F.col("item_b").asc(),
     ]
-    from pyspark.sql import Window
-
-    return (
-        scored.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .select(
-            "rank", "item_a", "item_b", "n_covisits", "n_a", "n_b",
-            "sim_sq_bp",
-        )
+    return topk(scored, k, order).select(
+        "rank", "item_a", "item_b", "n_covisits", "n_a", "n_b", "sim_sq_bp"
     )
 
 
@@ -1848,8 +1825,6 @@ def disorder_audit(events: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     Output per event_type: n_events, n_late, max_late_us, sum_late_us.
     """
-    from pyspark.sql import Window
-
     day = F.expr(
         f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
     )
@@ -1917,8 +1892,6 @@ def benford_audit(events: DataFrame) -> DataFrame:
 
     Output: event_type, digit, n_total, n_obs, obs_pm, p_pm, dev_pm.
     """
-    from pyspark.sql import Window
-
     pm = _benford_pm()
     digits = (
         events.select(
@@ -1978,16 +1951,14 @@ def kmv_audit(events: DataFrame, k: int = KMV_K) -> DataFrame:
     (est = n, err = 0) — the sketch IS exact below k.
 
     Scale shape: the distinct (type, user) relation map-side dedups;
-    the k-smallest selection is the posting_lists two-phase SALTED
-    rank — a Zipf-hot type never funnels one task; everything after
-    runs on <= k rows per type. The estimate is pure BIGINT; bottom-of-range
-    hash collisions at 52 bits are birthday-negligible for the k
-    smallest even at billions of keys.
+    the k-smallest selection is `topk` per type, whose map-side group
+    limit keeps a Zipf-hot type from funneling one task; everything
+    after runs on <= k rows per type. The estimate is pure BIGINT;
+    bottom-of-range hash collisions at 52 bits are birthday-negligible
+    for the k smallest even at billions of keys.
 
     Output: event_type, n_exact, h_k, est, err_bp.
     """
-    from pyspark.sql import Window
-
     pairs = events.select("event_type", "user_id").distinct()
     # the k-min set is over DISTINCT HASH VALUES (the standard KMV
     # formulation) — this is what makes the sketch maintainable in a
@@ -2005,17 +1976,7 @@ def kmv_audit(events: DataFrame, k: int = KMV_K) -> DataFrame:
         .cast("long")
         .alias("h"),
     ).distinct()
-    w1 = Window.partitionBy(
-        "event_type", F.col("_salt")
-    ).orderBy(F.col("h").asc())
-    w2 = Window.partitionBy("event_type").orderBy(F.col("h").asc())
-    kept = (
-        hashed.withColumn("_salt", F.col("h") % 8)
-        .withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= k)
-        .withColumn("_r2", F.row_number().over(w2))
-        .where(F.col("_r2") <= k)
-    )
+    kept = topk(hashed, k, [F.col("h").asc()], by=["event_type"])
     sk = kept.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("_n_kept"),
         F.max("h").alias("h_k"),
@@ -2072,8 +2033,6 @@ def conversion_latency(
     Output: touch_type, q (INT), bucket (INT — bucket * 1 min is the
     percentile's lower bound), n_conv.
     """
-    from pyspark.sql import Window
-
     at = attribution_last_touch(events).where(F.col("delta_us") >= 0)
     hist = (
         at.select(
@@ -2531,8 +2490,6 @@ def burst_census(
 
     Output: peak_burst, n_users.
     """
-    from pyspark.sql import Window
-
     day = F.expr(
         f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
     )
@@ -2862,8 +2819,6 @@ def error_budget_burn(
     Output: day, n_total, n_errors, rate_bp, cum_burned_bp,
     fast_burn (0/1).
     """
-    from pyspark.sql import Window
-
     day = F.expr(
         f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
     )
@@ -3068,8 +3023,6 @@ def user_p95_distribution(
     Output: bucket, n_users (bucket * bucket_c = lower bound of the
     users' p95 in cents).
     """
-    from pyspark.sql import Window
-
     cents = F.floor(F.col("value") * 100).cast("long")
     w = Window.partitionBy("user_id").orderBy("_c", "event_id")
     ranked = (
@@ -3149,8 +3102,6 @@ def forecast_baselines(
     Output: <key_col>, n_scored, sae_naive, sae_seasonal, mase_bp
     (-1 sentinel when sae_naive is 0).
     """
-    from pyspark.sql import Window
-
     day = F.expr(
         f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
     )

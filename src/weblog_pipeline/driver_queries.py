@@ -775,7 +775,7 @@ FROM ij GROUP BY 1, 2
 
 def q_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Float-free ANN filter: 1-bit-per-dim sign packing, XOR+popcount
-    Hamming distance, two-phase salted top-10 for query vec 0."""
+    Hamming distance, group-limited top-10 for query vec 0."""
     emb = _read(spark, sf_dir, "embeddings")
     return similarity.hamming_topk(emb, query_id=0, k=10)
 
@@ -1671,7 +1671,7 @@ FROM sel GROUP BY 1
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval for a fixed 3-term query: Lucene idf in
     floored integer micro-nats, integer fixed-point (k1=1.2, b=0.75)
-    length-normalized saturation, two-phase salted top-k."""
+    length-normalized saturation, TakeOrdered top-k."""
     return textstats.bm25_topk(
         _read(spark, sf_dir, "documents"), BM25_TERMS, k=BM25_K
     )
@@ -1822,7 +1822,7 @@ FROM g
 def q_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dirichlet-smoothed query-likelihood retrieval for the shared
     3-term query: every ln floored once on exact integer arguments
-    (micro-nats), two-phase salted top-k — the LM-based counterpart to
+    (micro-nats), TakeOrdered top-k — the LM-based counterpart to
     bm25_topk over identical corpus statistics."""
     return textstats.query_likelihood_topk(
         _read(spark, sf_dir, "documents"), BM25_TERMS, k=BM25_K
@@ -1888,7 +1888,7 @@ WHERE rank <= {k}
 def q_vocab_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language train-vs-heldout unigram JS divergence over a
     top-50+OOV support: Laplace ppm integers, ln floored once per cell,
-    two-phase salted per-lang top-k."""
+    group-limited per-lang top-k."""
     return textstats.vocab_js_drift(_read(spark, sf_dir, "documents"))
 
 
@@ -3300,7 +3300,7 @@ FROM x GROUP BY 1, 2
 
 def q_kmv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-user sketch per event type (60-bit md5 hashes, k
-    smallest via salted two-phase rank) with exact count and bp error
+    smallest via a group-limited rank) with exact count and bp error
     beside it."""
     from weblog_pipeline.aggregate import kmv_audit
 
@@ -3753,7 +3753,7 @@ FROM dau JOIN wau USING (d)
 
 def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 user-journey prefixes: first 5 event types per (user, day)
-    session joined by '>', counted, two-phase salted global rank."""
+    session joined by '>', counted, TakeOrdered global rank."""
     from weblog_pipeline.aggregate import session_paths
 
     return session_paths(_read(spark, sf_dir, "events"))
@@ -3904,7 +3904,7 @@ FROM q LEFT JOIN ov USING (query_id)
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining: per query vector, the 5 most
     cosine-similar corpus vectors with a DIFFERENT label — label filter
-    before ranking, two-phase salted top-k."""
+    before ranking, group-limited top-k."""
     emb = _emb_labeled(spark, sf_dir)
     return similarity.hard_negatives(emb, _labeled_queries(emb), k=5)
 
@@ -5661,7 +5661,7 @@ SELECT doc_id, {hits_names}, {case} AS lang_guess FROM pre
 
 def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-quota stratified sample: precisely min(20, stratum) docs
-    per language by md5('qs:'||doc_id) order, two-phase salted rank."""
+    per language by md5('qs:'||doc_id) order, group-limited rank."""
     return corpus.quota_sample(_read(spark, sf_dir, "documents"), k=20)
 
 
@@ -8682,8 +8682,8 @@ SELECT * FROM (
 
 
 def _sql_posting_lists(k: int = 3, min_df: int = 2) -> str:
-    # the NAIVE per-token window — proving the Spark side's two-phase
-    # salted rank computes exactly the unsalted result
+    # the NAIVE per-token window — proving the Spark side's group-limited
+    # rank computes exactly the single-window result
     return f"""
 WITH tok AS (
   SELECT doc_id, unnest({_TOKS}) AS token FROM documents

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..aggregate import topk
 from . import dedup, textstats
 
 SAMPLE_BUCKETS = 100
@@ -519,30 +520,25 @@ def key_skew(df: DataFrame, key_col: str, top_k: int = 20) -> DataFrame:
     monitor reads one result.
 
     Scale shape: one map-side-combined count aggregate over the key, then
-    the distributed TakeOrdered top-k (orderBy+limit compiles to
-    TakeOrderedAndProject — per-partition heaps, NEVER a single-reducer
-    sort over the full key domain); rank is assigned by a window over the
-    already-limited top_k rows (bounded), and the 1-row totals ride a
-    broadcast. Ties break on the key string so the result is
-    deterministic on any engine.
+    `topk` without groups, which Spark plans as TakeOrderedAndProject
+    (per-partition heaps, NEVER a single-reducer sort over the full key
+    domain) with the rank window over the top_k survivors only; the
+    1-row totals ride a broadcast. Ties break on the key string so the
+    result is deterministic on any engine.
 
     Output: rank, key (stringified), n, share_bp, n_rows, n_keys.
     """
-    from pyspark.sql import Window
-
     counts = df.groupBy(F.col(key_col).cast("string").alias("key")).agg(
         F.count(F.lit(1)).alias("n")
     )
     totals = counts.agg(
         F.sum("n").alias("n_rows"), F.count(F.lit(1)).alias("n_keys")
     )
-    top = counts.orderBy(F.col("n").desc(), F.col("key")).limit(top_k)
-    w = Window.orderBy(F.col("n").desc(), F.col("key"))
     return (
-        top.withColumn("rank", F.row_number().over(w).cast("long"))
+        topk(counts, top_k, [F.col("n").desc(), F.col("key")])
         .crossJoin(F.broadcast(totals))
         .select(
-            "rank",
+            F.col("rank").cast("long").alias("rank"),
             "key",
             "n",
             F.expr("n * 10000 div n_rows").alias("share_bp"),
@@ -1113,7 +1109,7 @@ def split_leakage(
     )
 
 
-def quota_sample(documents: DataFrame, k: int = 100, salt_mod: int = 8) -> DataFrame:
+def quota_sample(documents: DataFrame, k: int = 100) -> DataFrame:
     """EXACT-quota stratified sampling: precisely min(k, stratum size)
     documents per language, chosen by the deterministic md5('qs:' ||
     doc_id) order — the "give me exactly 10k docs per language" request
@@ -1121,16 +1117,12 @@ def quota_sample(documents: DataFrame, k: int = 100, salt_mod: int = 8) -> DataF
     hash-binomial count, not an exact one). Distinct salt from the
     sp:/is:/mix samplers so all four compose without correlation.
 
-    Scale shape: the per-stratum cut is the posting_lists TWO-PHASE
-    SALTED rank — phase 1 ranks within (lang, doc_id % salt_mod) and
-    keeps k, so no partition ever holds more than stratum/salt_mod rows;
-    phase 2 ranks the <= k*salt_mod survivors. A naive lang-partitioned
-    window would pull a whole language's corpus through one task.
+    Scale shape: the per-stratum cut is `topk` by lang: Spark's window
+    group limit keeps k rows per language on each map task before the
+    shuffle, so no task ranks a whole language's corpus.
 
     Output: lang, rank, doc_id.
     """
-    from pyspark.sql import Window
-
     from .dedup import _fan_out
 
     keyed = _fan_out(documents.select("doc_id", "lang")).select(
@@ -1139,18 +1131,7 @@ def quota_sample(documents: DataFrame, k: int = 100, salt_mod: int = 8) -> DataF
         F.md5(F.concat(F.lit("qs:"), F.col("doc_id"))).alias("_h"),
     )
     order = [F.col("_h").asc(), F.col("doc_id").asc()]
-    w_salt = Window.partitionBy(
-        "lang", F.col("doc_id") % salt_mod
-    ).orderBy(*order)
-    survivors = keyed.withColumn("_r1", F.row_number().over(w_salt)).where(
-        F.col("_r1") <= k
-    )
-    w_final = Window.partitionBy("lang").orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w_final))
-        .where(F.col("rank") <= k)
-        .select("lang", "rank", "doc_id")
-    )
+    return topk(keyed, k, order, by=["lang"]).select("lang", "rank", "doc_id")
 
 
 def shard_assignment(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..aggregate import topk
 from ..session import materialize
 from .dedup import WS_RE, ascii_lower
 
@@ -184,13 +185,9 @@ def anchor_topk(links: DataFrame, k: int = 3) -> DataFrame:
     counts = toks.groupBy("dst_host", "token").agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )
-    w = Window.partitionBy("dst_host").orderBy(
-        F.col("n_occurrences").desc(), F.col("token").asc()
-    )
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("dst_host", "rank", "token", "n_occurrences")
+    order = [F.col("n_occurrences").desc(), F.col("token").asc()]
+    return topk(counts, k, order, by=["dst_host"]).select(
+        "dst_host", "rank", "token", "n_occurrences"
     )
 
 
@@ -458,9 +455,7 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
         .distinct()
         .select("host", F.col("host").alias("label"))
     )
-    w_rank = Window.partitionBy("host").orderBy(
-        F.col("w").desc(), F.col("label").asc()
-    )
+    order = [F.col("w").desc(), F.col("label").asc()]
     for _ in range(iters):
         votes = (
             sym.join(
@@ -473,9 +468,7 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
             .agg(F.sum("w").alias("w"))
         )
         labels = materialize(
-            votes.withColumn("_rn", F.row_number().over(w_rank))
-            .where(F.col("_rn") == 1)
-            .select("host", "label")
+            topk(votes, 1, order, by=["host"]).select("host", "label")
         )
     w_size = Window.partitionBy("label")
     return labels.select(
@@ -866,16 +859,8 @@ def textrank_keywords(documents: DataFrame, k: int = 30) -> DataFrame:
     )
     ranks = pagerank(edges)
     order = [F.col("rank_scaled").desc(), F.col("host").asc()]
-    return (
-        ranks.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .select(
-            "rank",
-            F.col("host").alias("word"),
-            "n_out",
-            "rank_scaled",
-        )
+    return topk(ranks, k, order).select(
+        "rank", F.col("host").alias("word"), "n_out", "rank_scaled"
     )
 
 

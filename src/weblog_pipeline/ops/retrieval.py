@@ -12,11 +12,11 @@ Vespa. Here the reciprocal is integer micro-units (1_000_000 DIV
 (k + rank)) so the fused score is a BIGINT both engines agree on
 bit-for-bit; ties break by doc_id.
 
-Scale shape: each input is ALREADY a bounded top-R list (BM25's salted
-two-phase rank, the ANN family's per-query top-k), so the fusion input
-is <= n_systems * R rows by construction — the union, the per-doc
-aggregate, and the final global rank window all run on that bounded
-relation, never on the corpus. The expensive parts (corpus scans)
+Scale shape: each input is ALREADY a bounded top-R list (BM25's and the
+ANN family's `aggregate.topk` cuts), so the fusion input is
+<= n_systems * R rows by construction — the union, the per-doc
+aggregate, and the final top-k all run on that bounded relation, never
+on the corpus. The expensive parts (corpus scans)
 stay inside the upstream rankers, which keep their own skew-safe
 plans.
 """
@@ -27,6 +27,8 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..aggregate import topk
 
 #: RRF smoothing constant — the k=60 from the original paper, shared
 #: with the SQL oracle.
@@ -44,16 +46,14 @@ def rrf_fuse(
 ) -> DataFrame:
     """Fuse named (doc_id, rank) relations into one RRF-ranked top-k.
 
-    Each input must be a bounded top-R list (rank 1-based). The global
-    rank window is deliberate: the union holds at most
-    sum(R_s) rows — bounded by construction, not by data volume — so a
-    single-partition window is the honest plan, not a hazard (the same
-    reasoning as the <= k*salt_mod phase-2 window in bm25_topk).
+    Each input must be a bounded top-R list (rank 1-based), so the union
+    holds at most sum(R_s) rows — bounded by construction, not by data
+    volume. The final cut is `topk` without groups all the same: Spark's
+    group limit rule plans it as a TakeOrderedAndProject, and the rank
+    window numbers its k rows.
 
     Output: rank (INT), doc_id, n_systems (BIGINT), rrf_score (BIGINT).
     """
-    from pyspark.sql import Window
-
     u = None
     for df in rankings.values():
         part = df.select("doc_id", F.col("rank").cast("long").alias("rank"))
@@ -64,14 +64,7 @@ def rrf_fuse(
             F.expr(f"{RRF_SCALE} DIV ({rrf_k} + rank)")
         ).alias("rrf_score"),
     )
-    w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("rank").cast("int").alias("rank"),
-            "doc_id",
-            "n_systems",
-            "rrf_score",
-        )
+    order = [F.col("rrf_score").desc(), F.col("doc_id").asc()]
+    return topk(fused, k, order).select(
+        "rank", "doc_id", "n_systems", "rrf_score"
     )

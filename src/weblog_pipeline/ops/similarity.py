@@ -3,9 +3,10 @@
 * brute_force_topk — exact cosine top-k: broadcast the (small) query set
   against the full corpus; the dot product is a built-in `zip_with` +
   `aggregate` fold (JVM codegen, no Python). At 100 TB the corpus side
-  stays partition-parallel; the final rank is a TWO-PHASE top-k (partial
-  per-(query, salt) rank, then a final rank over <= k*salt_buckets rows)
-  so no single reducer ever receives the full corpus for one query.
+  stays partition-parallel; the final rank is `aggregate.topk` per query,
+  whose map-side group limit (WindowGroupLimit Partial, then Final)
+  keeps k rows per query per map task, so no single reducer ever
+  receives the full corpus for one query.
 * lsh_topk — sign-random-projection LSH: 8-bit band buckets from
   deterministic +-1 hyperplanes; candidates = bucket equi-join, then exact
   cosine re-rank. The scale path: candidate volume shrinks by the bucket
@@ -27,8 +28,10 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..aggregate import topk
 
 DIM = 64
 N_PLANES = 8  # bits per LSH band (near-dup family default)
@@ -52,7 +55,6 @@ IVF_TOPK_CELLS = 16
 IVF_TOPK_PROBE = 10
 LSH_QUANT = 1_000_000  # sign-projection quantizer: floor(x * 1e6) as long
 IVF_QUANT = 1_000  # centroid-assignment quantizer: floor(x * 1e3) as long
-TOPK_SALT_BUCKETS = 64
 
 
 def _dot(a, b):
@@ -83,38 +85,11 @@ def _cos_r6_pre(a, b, na, nb):
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    """Two-phase distributed top-k over (query_id, neighbor_id, cos_r6).
-
-    Phase 1 ranks within (query_id, salt) where salt = xxhash64(neighbor_id)
-    mod TOPK_SALT_BUCKETS: the shuffle key is uniform, every window
-    partition holds ~1/salt_buckets of one query's rows, and any global
-    top-k row is necessarily in its bucket's top-k. Phase 2 ranks the
-    surviving <= k*salt_buckets rows per query — tiny. This replaces the
-    single-reducer-per-query window that would ship the whole corpus for
-    one query to one task at scale.
-
-    Salting by a data hash (not spark_partition_id) keeps the result
-    deterministic under retries and input re-splits.
-    """
+    """Top-k per query over (query_id, neighbor_id, cos_r6): `topk` by
+    query, cos_r6 desc, ties on neighbor_id asc."""
     order = [F.col("cos_r6").desc(), F.col("neighbor_id").asc()]
-    salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(TOPK_SALT_BUCKETS))
-    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-    partial = (
-        scored.withColumn("salt", salt)
-        .withColumn("pr", F.row_number().over(w1))
-        .where(F.col("pr") <= k)
-        .drop("salt", "pr")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        partial.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "neighbor_id",
-            "cos_r6",
-        )
+    return topk(scored, k, order, by=["query_id"]).select(
+        "query_id", "rank", "neighbor_id", "cos_r6"
     )
 
 
@@ -264,7 +239,7 @@ def lsh_topk(
     n_planes: int = LSH_TOPK_PLANES,
 ) -> DataFrame:
     """Approximate top-k: candidates share >=1 sign-LSH band bucket;
-    exact cosine re-rank on candidates only; two-phase final rank.
+    exact cosine re-rank on candidates only; `topk` per query.
     Defaults: 6 bands x 6-bit buckets (see LSH_TOPK_PLANES note).
 
     probe_bits=1 enables MULTI-PROBE (Lv et al., VLDB'07): each query
@@ -958,8 +933,8 @@ def pq_adc_topk(
     Scale shape: the corpus side touches ONLY the codes relation (m
     small ints per vector); the LUT (|queries| * m * n_codes rows)
     attaches by BROADCAST equi-join on (subspace, code); the per-doc
-    score is a map-side-combined sum; top-k is the two-phase salted
-    rank. Zero scans of corpus floats after code assignment.
+    score is a map-side-combined sum; top-k is `topk` per query. Zero
+    scans of corpus floats after code assignment.
 
     With rerank=R > 0 this becomes the full production IVF-PQ pipeline:
     the ADC pass only NOMINATES each query's top-R candidates, and the
@@ -1009,33 +984,14 @@ def pq_adc_topk(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("part_dot").alias("adc_dot"))
     )
-    def adc_rank(df: DataFrame, depth: int) -> DataFrame:
-        order = [F.col("adc_dot").desc(), F.col("neighbor_id").asc()]
-        salt = F.pmod(
-            F.xxhash64(F.col("neighbor_id")), F.lit(TOPK_SALT_BUCKETS)
-        )
-        w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-        partial = (
-            df.withColumn("salt", salt)
-            .withColumn("pr", F.row_number().over(w1))
-            .where(F.col("pr") <= depth)
-            .drop("salt", "pr")
-        )
-        w2 = Window.partitionBy("query_id").orderBy(*order)
-        return (
-            partial.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= depth)
-            .select(
-                "query_id",
-                F.col("rank").cast("int").alias("rank"),
-                "neighbor_id",
-                "adc_dot",
-            )
-        )
-
+    order = [F.col("adc_dot").desc(), F.col("neighbor_id").asc()]
     if not rerank:
-        return adc_rank(scored, k)
-    cand = adc_rank(scored, rerank).select("query_id", "neighbor_id")
+        return topk(scored, k, order, by=["query_id"]).select(
+            "query_id", "rank", "neighbor_id", "adc_dot"
+        )
+    cand = topk(scored, rerank, order, by=["query_id"]).select(
+        "query_id", "neighbor_id"
+    )
     corpus = embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("vec"),
@@ -1072,8 +1028,8 @@ def hard_negatives(
     queries: (query_id, query_vec, query_label) — small, broadcast onto
     the corpus scan exactly like brute_force_topk; the label-mismatch
     filter runs BEFORE ranking (a post-filtered top-k would under-fill).
-    Ranking rides the shared two-phase salted _topk_per_query, so no
-    single-reducer-per-query window at scale.
+    Ranking rides the shared _topk_per_query (`topk` per query), so no
+    single reducer ranks a query's whole corpus at scale.
 
     Output: query_id, rank (INT), neighbor_id, neighbor_label (INT),
     cos_r6.
@@ -1122,9 +1078,9 @@ def knn_label_eval(
     embedding space clusters by label before anyone trains on it.
 
     queries: (query_id, query_vec, query_label). Neighbor search is the
-    exact brute_force_topk (two-phase salted rank); the majority vote is
-    a (query, label) aggregate plus a rank-1 window over <= k rows per
-    query — bounded partitions everywhere.
+    exact brute_force_topk; the majority vote is a (query, label)
+    aggregate plus a `topk` of 1 per query over <= k rows — bounded
+    partitions everywhere.
 
     Output: query_label (INT), n_queries, n_correct (BIGINT),
     acc_bp (BIGINT).
@@ -1139,13 +1095,9 @@ def knn_label_eval(
         .groupBy("query_id", "neighbor_label")
         .agg(F.count(F.lit(1)).alias("n_votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("neighbor_label").asc()
-    )
-    pred = (
-        votes.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("query_id", F.col("neighbor_label").alias("pred_label"))
+    order = [F.col("n_votes").desc(), F.col("neighbor_label").asc()]
+    pred = topk(votes, 1, order, by=["query_id"]).select(
+        "query_id", F.col("neighbor_label").alias("pred_label")
     )
     truth = queries.select("query_id", F.col("query_label"))
     return (
@@ -1321,7 +1273,7 @@ def hamming_topk(
     packed signature as both sides.
 
     The query's two words broadcast as a 1-row cross join; the top-k cut
-    is the shared two-phase salted rank (ties on vec_id asc).
+    is `topk` (ties on vec_id asc).
 
     Output: rank, vec_id, hamming.
     """
@@ -1339,8 +1291,8 @@ def hamming_topk_queries(
 ) -> DataFrame:
     """Multi-query hamming_topk for the tracked recall audit: queries
     (query_id, query_vec) pack once and broadcast; the corpus scan
-    scores every (query, vector) pair with XOR+popcount and the shared
-    two-phase salted rank cuts top-k per query.
+    scores every (query, vector) pair with XOR+popcount and `topk` cuts
+    top-k per query.
 
     Output: query_id, rank, neighbor_id, hamming.
     """
@@ -1368,18 +1320,8 @@ def hamming_topk_queries(
         )
     )
     order = [F.col("hamming").asc(), F.col("neighbor_id").asc()]
-    salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(TOPK_SALT_BUCKETS))
-    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-    partial = (
-        scored.withColumn("salt", salt)
-        .withColumn("pr", F.row_number().over(w1))
-        .where(F.col("pr") <= k)
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        partial.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "hamming")
+    return topk(scored, k, order, by=["query_id"]).select(
+        "query_id", "rank", "neighbor_id", "hamming"
     )
 
 
@@ -1393,7 +1335,6 @@ def matryoshka_recall(
     k: int = 5,
     prefix: int = MRL_PREFIX_DIMS,
     quant: int = LSH_QUANT,
-    salt_buckets: int = TOPK_SALT_BUCKETS,
 ) -> DataFrame:
     """Matryoshka truncation audit (Kusupati et al. 2022, MRL): how much
     of each query's exact top-k survives when ranking uses only the
@@ -1413,8 +1354,7 @@ def matryoshka_recall(
     Scale shape: ONE broadcast crossJoin of the bounded query set
     against the corpus computes both scores (the prefix dot is a slice
     of the same quantized array, not a second scan); each ranking is
-    the two-phase salted top-k; the overlap join runs on two k-bounded
-    relations.
+    `topk` per query; the overlap join runs on two k-bounded relations.
 
     Output: query_id, n_overlap, recall_bp (overlap * 10000 DIV k).
     """
@@ -1451,24 +1391,13 @@ def matryoshka_recall(
         )
     )
 
-    def topk(score_col: str) -> DataFrame:
+    def top(score_col: str) -> DataFrame:
         order = [F.col(score_col).desc(), F.col("neighbor_id").asc()]
-        w1 = Window.partitionBy(
-            "query_id", F.pmod(F.col("neighbor_id"), F.lit(salt_buckets))
-        ).orderBy(*order)
-        surv = scored.withColumn("_r", F.row_number().over(w1)).where(
-            F.col("_r") <= k
-        )
-        w2 = Window.partitionBy("query_id").orderBy(*order)
-        return (
-            surv.withColumn("_r2", F.row_number().over(w2))
-            .where(F.col("_r2") <= k)
-            .select("query_id", "neighbor_id")
+        return topk(scored, k, order, by=["query_id"]).select(
+            "query_id", "neighbor_id"
         )
 
-    overlap = topk("s_full").join(
-        topk("s_pre"), ["query_id", "neighbor_id"]
-    )
+    overlap = top("s_full").join(top("s_pre"), ["query_id", "neighbor_id"])
     counts = overlap.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_overlap")
     )

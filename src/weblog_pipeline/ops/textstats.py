@@ -14,6 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..aggregate import topk
 from ..session import materialize
 from .dedup import WS_RE, _fan_out, ascii_lower, lower_tokens_col
 
@@ -163,18 +164,6 @@ def fingerprint(documents: DataFrame) -> DataFrame:
     )
 
 
-def _ranked_topk(counts: DataFrame, k: int, tie_col: str) -> DataFrame:
-    """Deterministic top-k of a count table: TakeOrderedAndProject does the
-    distributed cut on (count desc, tie asc); the unpartitioned rank window
-    then runs on the <= k post-limit rows only."""
-    order = [F.col("n_occurrences").desc(), F.col(tie_col).asc()]
-    return (
-        counts.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-    )
-
-
 def vocab_topk(documents: DataFrame, k: int = 100) -> DataFrame:
     """Corpus-wide top-k token vocabulary with document frequencies — the
     seed statistics for tokenizer/vocab construction. One explode + one
@@ -189,7 +178,8 @@ def vocab_topk(documents: DataFrame, k: int = 100) -> DataFrame:
         F.count(F.lit(1)).alias("n_occurrences"),
         F.countDistinct("doc_id").alias("n_docs"),
     )
-    return _ranked_topk(counts, k, "token").select(
+    order = [F.col("n_occurrences").desc(), F.col("token").asc()]
+    return topk(counts, k, order).select(
         "rank", "token", "n_occurrences", "n_docs"
     )
 
@@ -215,7 +205,8 @@ def bpe_pair_counts(documents: DataFrame, k: int = 50) -> DataFrame:
         .select(F.explode(pairs).alias("pair"))
     )
     counts = exploded.groupBy("pair").agg(F.count(F.lit(1)).alias("n_occurrences"))
-    return _ranked_topk(counts, k, "pair").select("rank", "pair", "n_occurrences")
+    order = [F.col("n_occurrences").desc(), F.col("pair").asc()]
+    return topk(counts, k, order).select("rank", "pair", "n_occurrences")
 
 
 def winnow_fingerprints(
@@ -394,13 +385,9 @@ def tfidf_topk(documents: DataFrame, k: int = 3) -> DataFrame:
             ).alias("score_micro"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score_micro").desc(), F.col("token").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "rank", "token", "tf", "score_micro")
+    order = [F.col("score_micro").desc(), F.col("token").asc()]
+    return topk(scored, k, order, by=["doc_id"]).select(
+        "doc_id", "rank", "token", "tf", "score_micro"
     )
 
 
@@ -514,7 +501,7 @@ def quality_classifier(documents: DataFrame, weights: DataFrame) -> DataFrame:
 
 
 def posting_lists(
-    documents: DataFrame, k: int = 3, min_df: int = 2, salt_mod: int = 8
+    documents: DataFrame, k: int = 3, min_df: int = 2
 ) -> DataFrame:
     """Inverted-index construction: for every term with document
     frequency >= min_df, the top-k postings (documents) by term
@@ -522,15 +509,15 @@ def posting_lists(
     corpus.
 
     Scale shape: tf and df are groupBy aggregates (map-side combine).
-    The per-term top-k CANNOT be a naive window partitioned by token —
-    natural-language df is Zipfian, so "the"'s partition would hold a
-    row per document (10^12 rows through one task at target scale).
-    Instead the rank is TWO-PHASE SALTED: phase 1 ranks within
-    (token, doc_id % salt_mod) — each salted partition holds at most
-    df/salt_mod rows — and keeps k; phase 2 ranks the <= k*salt_mod
-    survivors per token. Any doc in the true top-k is in its salt
-    bucket's top-k, so the result is EXACTLY the naive window's (the
-    oracle runs the naive form; equality is the proof).
+    The per-term top-k must not rank a term's whole posting list in one
+    task: natural-language df is Zipfian, so "the" has a row per
+    document (10^12 rows at target scale). `topk` by token runs on tf
+    itself and leaves the cut to Spark's window group limit: each map
+    task keeps k rows per term before the shuffle, so "the"'s reducer
+    gets at most k rows per map task. The df join comes after the cut,
+    on <= k rows per term (joined first, it would itself shuffle every
+    posting by token). The result is exactly the naive window's (the
+    oracle runs the naive form).
 
     Output: token, df, rank, doc_id, tf.
     """
@@ -542,24 +529,15 @@ def posting_lists(
         F.col("df") >= min_df
     )
     order = [F.col("tf").desc(), F.col("doc_id").asc()]
-    w_salt = Window.partitionBy(
-        "token", (F.col("doc_id") % salt_mod)
-    ).orderBy(*order)
-    survivors = (
-        tf.join(df_tbl, "token")
-        .withColumn("_r1", F.row_number().over(w_salt))
-        .where(F.col("_r1") <= k)
-    )
-    w_final = Window.partitionBy("token").orderBy(*order)
     return (
-        survivors.withColumn("rank", F.row_number().over(w_final))
-        .where(F.col("rank") <= k)
+        topk(tf, k, order, by=["token"])
+        .join(df_tbl, "token")
         .select("token", "df", "rank", "doc_id", "tf")
     )
 
 
 def vocab_js_drift(
-    documents: DataFrame, top_k: int = 50, salt_mod: int = 8
+    documents: DataFrame, top_k: int = 50
 ) -> DataFrame:
     """Vocabulary drift between the train split and heldout (val+test):
     per-language Jensen-Shannon divergence of the two unigram token
@@ -580,9 +558,9 @@ def vocab_js_drift(
     the corpus's single split definition.
 
     Scale shape: one explode into a (lang, token) map-side-combined
-    conditional-count aggregate; the per-lang top-k is TWO-PHASE SALTED
-    (the posting_lists rule — a naive lang-partitioned window would pull
-    a whole language's vocabulary through one task); totals and the OOV
+    conditional-count aggregate; the per-lang top-k is `topk` by lang
+    (its map-side group limit keeps a whole language's vocabulary from
+    reaching one task); totals and the OOV
     cell derive from vocab-bounded aggregates; the JS sum is per-lang
     over K+1 rows.
 
@@ -604,18 +582,7 @@ def vocab_js_drift(
         F.count_if(~F.col("_tr")).alias("cb"),
     )
     order = [(F.col("ca") + F.col("cb")).desc(), F.col("token").asc()]
-    w_salt = Window.partitionBy(
-        "lang", F.abs(F.hash("token")) % salt_mod
-    ).orderBy(*order)
-    survivors = cnt.withColumn("_r1", F.row_number().over(w_salt)).where(
-        F.col("_r1") <= top_k
-    )
-    w_final = Window.partitionBy("lang").orderBy(*order)
-    kept = (
-        survivors.withColumn("_r", F.row_number().over(w_final))
-        .where(F.col("_r") <= top_k)
-        .select("lang", "ca", "cb")
-    )
+    kept = topk(cnt, top_k, order, by=["lang"]).select("lang", "ca", "cb")
     tot = cnt.groupBy("lang").agg(
         F.sum("ca").alias("sa"), F.sum("cb").alias("sb")
     )
@@ -764,11 +731,8 @@ def pmi_collocations(
         )
     )
     order = [F.col("pmi_micro").desc(), F.col("w1").asc(), F.col("w2").asc()]
-    return (
-        scored.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .select("rank", "w1", "w2", "c_bigram", "pmi_micro")
+    return topk(scored, k, order).select(
+        "rank", "w1", "w2", "c_bigram", "pmi_micro"
     )
 
 
@@ -1237,7 +1201,8 @@ def cms_heavy_hitters(
     )
     total = toks.agg(F.count(F.lit(1)).alias("n_total"))
     exact = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
-    top = _ranked_topk(exact, k, "token")
+    order = [F.col("n_occurrences").desc(), F.col("token").asc()]
+    top = topk(exact, k, order)
     probes = top.select(
         "rank",
         "token",
@@ -1808,7 +1773,6 @@ def bm25_topk(
     documents: DataFrame,
     query_terms: Sequence[str],
     k: int = 10,
-    salt_mod: int = 8,
 ) -> DataFrame:
     """BM25 ranked retrieval — the web-search scoring function over the
     corpus's own statistics: score(d) = sum over matched query terms of
@@ -1827,9 +1791,9 @@ def bm25_topk(
     combined aggregates (corpus stats attach as a broadcast single-row
     cross join, no driver collect); tf is pre-filtered to the query's
     own terms, so the scored relation is |matching docs x terms|, not
-    the corpus; the final top-k is the two-phase SALTED rank (phase 1
-    inside doc_id % salt buckets, phase 2 over <= salt*k survivors) —
-    never a single-reducer window over every matching document.
+    the corpus; the final top-k is `topk` without groups, a
+    TakeOrderedAndProject — never a single-reducer window over every
+    matching document.
 
     Output: rank (INT), doc_id, n_terms (BIGINT), score (BIGINT).
     """
@@ -1876,23 +1840,7 @@ def bm25_topk(
         F.sum("term_score").alias("score"),
     )
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    w1 = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(salt_mod))).orderBy(
-        *order
-    )
-    survivors = ds.withColumn("_r", F.row_number().over(w1)).where(
-        F.col("_r") <= k
-    )
-    w2 = Window.partitionBy().orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("rank").cast("int").alias("rank"),
-            "doc_id",
-            "n_terms",
-            "score",
-        )
-    )
+    return topk(ds, k, order).select("rank", "doc_id", "n_terms", "score")
 
 
 #: vowel-group syllable heuristic (ASCII, Java∩RE2): each maximal
@@ -2022,7 +1970,6 @@ def query_likelihood_topk(
     query_terms: Sequence[str],
     k: int = 10,
     mu: int = QL_MU,
-    salt_mod: int = 8,
 ) -> DataFrame:
     """Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty
     2001) — the language-modeling counterpart to bm25_topk:
@@ -2045,7 +1992,7 @@ def query_likelihood_topk(
     Scale shape: identical to bm25_topk — one token explode, map-side
     combined dl/cf/total aggregates, corpus stats broadcast as a
     single-row cross join, scored relation bounded by |matching docs x
-    terms|, two-phase salted top-k.
+    terms|, `topk` without groups.
 
     Output: rank (INT), doc_id, n_terms (BIGINT), score_micro (BIGINT).
     """
@@ -2101,22 +2048,8 @@ def query_likelihood_topk(
         )
     )
     order = [F.col("score_micro").desc(), F.col("doc_id").asc()]
-    w1 = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(salt_mod))).orderBy(
-        *order
-    )
-    survivors = scored.withColumn("_r", F.row_number().over(w1)).where(
-        F.col("_r") <= k
-    )
-    w2 = Window.partitionBy().orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("rank").cast("int").alias("rank"),
-            "doc_id",
-            "n_terms",
-            "score_micro",
-        )
+    return topk(scored, k, order).select(
+        "rank", "doc_id", "n_terms", "score_micro"
     )
 
 
@@ -2138,8 +2071,8 @@ def prf_expansion(
     cross-engine exactness. The top-k terms are what a second-round
     query would add.
 
-    Scale shape: the feedback set is bm25_topk's bounded top-r (already
-    salted two-phase), broadcast-semi-joined into the token stream —
+    Scale shape: the feedback set is bm25_topk's bounded top-r,
+    broadcast-semi-joined into the token stream —
     the candidate relation is r docs' vocabulary, never the corpus's;
     corpus df computes only for that candidate set (broadcast join onto
     the token stream, map-side-combined distinct count); the final
@@ -2189,13 +2122,8 @@ def prf_expansion(
         )
     )
     order = [F.col("rocchio_score").desc(), F.col("token").asc()]
-    return (
-        sc.orderBy(*order)
-        .limit(k)
-        .withColumn(
-            "rank", F.row_number().over(Window.orderBy(*order)).cast("int")
-        )
-        .select("rank", "token", "n_fb_docs", "total_tf", "rocchio_score")
+    return topk(sc, k, order).select(
+        "rank", "token", "n_fb_docs", "total_tf", "rocchio_score"
     )
 
 
@@ -2375,9 +2303,10 @@ def posting_compression(
     in-segment gaps ride a window bounded by the segment width, and the
     cross-segment boundary gaps ride a second window over the SEGMENT
     SUMMARY relation (<= corpus/seg rows per term) — so "the"'s
-    billion-row posting list never funnels through one partition (the
-    posting_lists salted-rank discipline, adapted to an order-dependent
-    statistic). The first posting stores doc_id + 1 (gaps stay >= 1).
+    billion-row posting list never funnels through one partition (a
+    group limit cannot bound a statistic over EVERY posting, so the
+    segments bound it). The first posting stores doc_id + 1 (gaps stay
+    >= 1).
 
     Output: token, df, bytes_varint, bytes_raw (8*df), ratio_bp.
     """
@@ -2595,11 +2524,8 @@ def llr_collocations(
         F.col("w1").asc(),
         F.col("w2").asc(),
     ]
-    return (
-        scored.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .select("rank", "w1", "w2", "c_bigram", "llr_micro")
+    return topk(scored, k, order).select(
+        "rank", "w1", "w2", "c_bigram", "llr_micro"
     )
 
 
@@ -2637,13 +2563,7 @@ def zipf_fit(documents: DataFrame, k: int = ZIPF_TOPK) -> DataFrame:
     )
     counts = uni.groupBy("token").agg(F.count(F.lit(1)).alias("c_tok"))
     order = [F.col("c_tok").desc(), F.col("token").asc()]
-    head = (
-        counts.orderBy(*order)
-        .limit(k)
-        .withColumn(
-            "rank", F.row_number().over(Window.orderBy(*order)).cast("long")
-        )
-    )
+    head = topk(counts, k, order).withColumn("rank", F.col("rank").cast("long"))
 
     def flog3(c):
         return F.floor(F.log(c.cast("double")) * F.lit(1000.0)).cast(
@@ -2892,12 +2812,7 @@ def token_burstiness(documents: DataFrame, k: int = 64) -> DataFrame:
         ).alias("fano_bp"),
     )
     order = [F.col("s1").desc(), F.col("token").asc()]
-    return (
-        scored.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .select("rank", "token", "df", "s1", "fano_bp")
-    )
+    return topk(scored, k, order).select("rank", "token", "df", "s1", "fano_bp")
 
 
 def bigram_holdout(documents: DataFrame) -> DataFrame:
@@ -3051,8 +2966,6 @@ def stump_finder(
     Output (1 row): split_bucket (right side starts here),
     n_left, n_left_pos, n_right, n_right_pos, score_micro.
     """
-    from pyspark.sql import Window
-
     def xlx(c):
         c = c.cast("long")
         return F.when(
@@ -3415,16 +3328,8 @@ def skipgram_counts(
         .where(F.col("n_cooc") >= min_count)
     )
     order = [F.col("n_cooc").desc(), F.col("a").asc(), F.col("b").asc()]
-    return (
-        counts.orderBy(*order)
-        .limit(k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .select(
-            "rank",
-            F.col("a").alias("w_a"),
-            F.col("b").alias("w_b"),
-            "n_cooc",
-        )
+    return topk(counts, k, order).select(
+        "rank", F.col("a").alias("w_a"), F.col("b").alias("w_b"), "n_cooc"
     )
 
 
@@ -3452,8 +3357,6 @@ def vocab_coverage(
     Output: budget, n_types_total, total_mass, covered_mass,
     coverage_bp.
     """
-    from pyspark.sql import Window
-
     arr = _fan_out(documents.select("doc_id", "text")).select(
         lower_tokens_col().alias("_w")
     )

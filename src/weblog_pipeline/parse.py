@@ -26,9 +26,10 @@ Scale notes (100 TB design):
   * The hot loop never goes through pandas (mapInArrow): url/warc_ts/lang
     are re-emitted with a `take` over the input batch, and the other
     columns are one Python tuple per output row, transposed once and built
-    by pyarrow (maps from the decoded JSON dicts). Attr payload bytes are
-    memoized per batch (span/resource attrs repeat per span), so most rows
-    skip json entirely.
+    by pyarrow (maps from the decoded JSON dicts). Span and resource attr
+    payloads are memoized per batch (they repeat per span), so most of
+    them skip json; event attrs, nearly always distinct, are decoded per
+    event.
 """
 
 from __future__ import annotations
@@ -122,8 +123,10 @@ def _trim_importers() -> None:
 
 
 class _Memo(dict):
-    """Per-batch {attr payload bytes: decoded map}: span and resource attrs
-    repeat per span, so most lookups skip json entirely."""
+    """Per-batch {span/resource attr payload bytes: decoded map}: these
+    repeat per span, so most lookups skip json entirely. Event attrs are
+    not memoized: on dense_telemetry seed 1 all 72,000 payloads are
+    distinct, so a memo of them would only grow."""
 
     def __init__(self, decode) -> None:
         self.decode = decode
@@ -157,7 +160,7 @@ def _page_text(blob: bytes) -> bytes:
 _NO_EVENT = (None,) * 11
 
 
-def _events(blob: bytes, memo_a: _Memo, memo_s: _Memo) -> list[tuple]:
+def _events(blob: bytes, memo_s: _Memo) -> list[tuple]:
     """One row per marker in `blob`, in EVENT_SCHEMA column order from
     page_text (None) on. Fields decode in the oracle's order (trace_id,
     span_id, span_name, span_kind, ts, name, attrs, span_attrs,
@@ -172,7 +175,7 @@ def _events(blob: bytes, memo_a: _Memo, memo_s: _Memo) -> list[tuple]:
         skd = skd.decode("utf-8", "strict")
         ts = int64(int(ts))
         nm = nm.decode("utf-8", "strict")
-        a_s, a_i = memo_a[a]
+        a_s, a_i = _split_flat(a)
         out.append((None, n, None, j, nm, ts, tid, sid, snm, skd, "", a_s, a_i, memo_s[sp], memo_s[rs]))
     return out
 
@@ -196,7 +199,7 @@ def _parse_arrow_batches(
     for rb in batches:
         if rb.num_rows == 0:
             continue
-        memo_a, memo_s = _Memo(_split_flat), _Memo(_str_flat)
+        memo_s = _Memo(_str_flat)
         idx, rows = [], []
         for i, blob in enumerate(rb.column("html").to_pylist()):
             blob = blob or b""
@@ -204,7 +207,7 @@ def _parse_arrow_batches(
                 # decode the joined blocks ONCE (newline is ASCII, UTF-8
                 # self-synchronizing — identical text)
                 text = _page_text(blob).decode("utf-8", "strict")
-                evs, err = _events(blob, memo_a, memo_s), None
+                evs, err = _events(blob, memo_s), None
             except Exception as exc:  # corrupt marker -> quarantine page
                 text, evs, err = None, [], f"{type(exc).__name__}: {exc}"
             if evs:

@@ -2129,10 +2129,11 @@ def test_lsh_dedup_quality_catches_planted_neardup(spark):
 # ---------------------------------------------------------------- lexical index
 
 
-def test_posting_lists_salted_equals_naive(spark):
-    """The two-phase salted per-term top-k must equal the naive single
-    window exactly (any true top-k member wins its salt bucket), across
-    salt widths — including salt_mod=1, which IS the naive plan."""
+def test_posting_lists_python_twin(spark):
+    """The per-term top-k against a Python twin: ranks by tf desc, then
+    doc_id asc, with every term's df beside them."""
+    from collections import Counter
+
     words = ["alpha", "beta", "gamma", "delta"]
     rows = []
     for d in range(24):
@@ -2140,19 +2141,18 @@ def test_posting_lists_salted_equals_naive(spark):
         body = " ".join([words[d % 4]] * (d // 4 + 1) + ["alpha"])
         rows.append(Row(doc_id=d, text=body))
     docs = spark.createDataFrame(rows)
-
-    def run(salt_mod):
-        return sorted(
-            (r["token"], r["rank"], r["doc_id"], r["tf"], r["df"])
-            for r in textstats.posting_lists(
-                docs, k=3, min_df=2, salt_mod=salt_mod
-            ).collect()
-        )
-
-    naive = run(1)
-    assert run(8) == naive and run(3) == naive
+    got = sorted(
+        (r["token"], r["rank"], r["doc_id"], r["tf"], r["df"])
+        for r in textstats.posting_lists(docs, k=3, min_df=2).collect()
+    )
+    tf = {(t, r.doc_id): n for r in rows for t, n in Counter(r.text.split()).items()}
+    want = []
+    for t in words:
+        posts = sorted((-n, d) for (tok, d), n in tf.items() if tok == t)
+        want += [(t, i + 1, d, -n, len(posts)) for i, (n, d) in enumerate(posts[:3])]
+    assert got == sorted(want)
     # python twin for one term: 'beta' appears in docs d%4==1 with tf d//4+1
-    beta = [t for t in naive if t[0] == "beta"]
+    beta = [t for t in got if t[0] == "beta"]
     # top tf: doc 21 (6), doc 17 (5), doc 13 (4)
     assert [(r, d, tf) for (_, r, d, tf, _) in beta] == [
         (1, 21, 6), (2, 17, 5), (3, 13, 4)
@@ -4273,7 +4273,7 @@ def test_degree_assortativity_signs(spark):
 
 def test_quota_sample_exact_quota_and_determinism(spark):
     """Exactly min(k, stratum) rows per lang; the cut equals the naive
-    md5-order rank (the salted two-phase is exact); stable across runs."""
+    md5-order rank (the group-limited cut is exact); stable across runs."""
     import hashlib
 
     from weblog_pipeline.ops.corpus import quota_sample

@@ -25,6 +25,32 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_topk_group_limited(plan: str) -> None:
+    """The scale property of every top-k cut: no task ranks a whole group.
+    Each row_number Window must sit either on `WindowGroupLimit ... Final`
+    whose Sort reads an Exchange fed by `WindowGroupLimit ... Partial`
+    (each map task keeps k rows per group before the shuffle), or on a
+    TakeOrderedAndProject (per-partition heaps, then k rows). Spark plans
+    this only for `row_number() <= literal k` with k at most
+    spark.sql.optimizer.windowGroupLimitThreshold."""
+    lines = [ln.lstrip(" :|+-") for ln in plan.splitlines()]
+    wins = [i for i, ln in enumerate(lines) if ln.startswith("Window [row_number()")]
+    assert wins, plan
+    for i in wins:
+        child = lines[i + 1]
+        if child.startswith("TakeOrderedAndProject"):
+            continue
+        assert child.startswith("WindowGroupLimit") and child.endswith(
+            ", Final"
+        ), f"rank window not group-limited:\n{plan}"
+        sort, exchange, partial = lines[i + 2 : i + 5]
+        assert sort.startswith("Sort"), plan
+        assert exchange.startswith("Exchange hashpartitioning"), plan
+        assert partial.startswith("WindowGroupLimit") and partial.endswith(
+            ", Partial"
+        ), plan
+
+
 def test_neardup_plan_has_no_cartesian_product(emb_df):
     df = similarity.cosine_near_dup_pairs(emb_df, threshold=0.9, dim=16)
     plan = _physical(df)
@@ -51,49 +77,154 @@ def test_neardup_bucketed_is_subset_of_exact_and_finds_planted_pair(emb_df):
 
 
 def test_topk_uses_two_phase_window(emb_df):
+    """The per-query rank is Spark's two-phase group limit: a partial cut
+    per map task before the shuffle, the final one after it."""
     q = emb_df.where(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     plan = _physical(similarity.brute_force_topk(emb_df, q, k=3))
-    # phase 1 ranks within (query_id, salt); phase 2 over the survivors only
-    assert plan.count("Window") >= 2
-    assert "salt" in plan
+    _assert_topk_group_limited(plan)
 
 
-def test_topk_two_phase_equals_single_window(emb_df):
-    """The salted partial rank must be lossless: any global top-k row is in
-    its salt bucket's top-k."""
-    q = emb_df.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+def test_topk_matches_python_sort(spark):
+    """aggregate.topk against a Python sort, per group and globally. One
+    group holds more rows than k x partitions, so the partial cuts of
+    several map tasks must merge; the score ties often, so the order's
+    last column decides; one group has fewer rows than k."""
+    from weblog_pipeline.aggregate import topk
+
+    k = 5
+    rows = [(0, i % 7, i) for i in range(200)]  # the hot group
+    rows += [(g, (g * i) % 3, 1000 * g + i) for g in (1, 2) for i in range(9)]
+    rows += [(3, 1, 3000), (3, 1, 3001)]  # fewer rows than k
+    df = spark.createDataFrame(rows, "g long, score long, id long").repartition(
+        8, "id"
     )
-    corpus = emb_df.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vec")
-    )
-    scored = corpus.crossJoin(F.broadcast(q)).where(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(similarity.cosine_col(F.col("query_vec"), F.col("vec")), 6).alias(
-            "cos_r6"
+    order = [F.col("score").desc(), F.col("id").asc()]
+
+    def cut(rs):
+        rs = sorted(rs, key=lambda r: (-r[1], r[2]))[:k]
+        return [(n + 1, r[2]) for n, r in enumerate(rs)]
+
+    want = {
+        (g, rank, i)
+        for g in {r[0] for r in rows}
+        for rank, i in cut([r for r in rows if r[0] == g])
+    }
+    got = {
+        (r["g"], r["rank"], r["id"])
+        for r in topk(df, k, order, by=["g"]).collect()
+    }
+    assert got == want
+    assert len([t for t in got if t[0] == 3]) == 2
+    got_all = [(r["rank"], r["id"]) for r in topk(df, k, order).collect()]
+    assert sorted(got_all) == cut(rows)
+
+
+def _topk_operators():
+    """Every catalog operator whose top-k cut goes through aggregate.topk,
+    as name -> plan of (emb, queries, docs, events)."""
+    from weblog_pipeline import aggregate
+    from weblog_pipeline.ops import corpus, graph, retrieval, textstats
+
+    qv = lambda q: q.select("query_id", "query_vec")  # noqa: E731
+    return {
+        "anchor_topk": lambda e, q, d, v: graph.anchor_topk(
+            d.select(F.col("lang").alias("dst_host"), F.col("text").alias("anchor"))
         ),
-    )
-    from pyspark.sql import Window
+        "textrank_keywords": lambda e, q, d, v: graph.textrank_keywords(d, k=3),
+        "brute_force_topk": lambda e, q, d, v: similarity.brute_force_topk(e, qv(q), k=3),
+        "lsh_topk": lambda e, q, d, v: similarity.lsh_topk(e, qv(q), k=3, dim=16),
+        "ivf_topk": lambda e, q, d, v: similarity.ivf_topk(
+            e, qv(q), k=3, n_cells=4, n_probe=2
+        ),
+        "pq_adc_topk": lambda e, q, d, v: similarity.pq_adc_topk(e, qv(q), k=3),
+        "pq_adc_topk_rerank": lambda e, q, d, v: similarity.pq_adc_topk(
+            e, qv(q), k=3, rerank=10
+        ),
+        "hamming_topk": lambda e, q, d, v: similarity.hamming_topk(e, k=3),
+        "matryoshka_recall": lambda e, q, d, v: similarity.matryoshka_recall(
+            e, qv(q), k=3, prefix=8
+        ),
+        "hard_negatives": lambda e, q, d, v: similarity.hard_negatives(e, q, k=3),
+        "knn_label_eval": lambda e, q, d, v: similarity.knn_label_eval(e, q, k=3),
+        "quota_sample": lambda e, q, d, v: corpus.quota_sample(d, k=3),
+        "key_skew": lambda e, q, d, v: corpus.key_skew(d, "lang", top_k=2),
+        "posting_lists": lambda e, q, d, v: textstats.posting_lists(d, k=3),
+        "vocab_js_drift": lambda e, q, d, v: textstats.vocab_js_drift(d, top_k=3),
+        "vocab_topk": lambda e, q, d, v: textstats.vocab_topk(d, k=3),
+        "bpe_pair_counts": lambda e, q, d, v: textstats.bpe_pair_counts(d, k=3),
+        "tfidf_topk": lambda e, q, d, v: textstats.tfidf_topk(d, k=3),
+        "pmi_collocations": lambda e, q, d, v: textstats.pmi_collocations(
+            d, k=3, min_count=1
+        ),
+        "cms_heavy_hitters": lambda e, q, d, v: textstats.cms_heavy_hitters(d, k=3),
+        "bm25_topk": lambda e, q, d, v: textstats.bm25_topk(d, ["the", "lazy"], k=3),
+        "query_likelihood_topk": lambda e, q, d, v: textstats.query_likelihood_topk(
+            d, ["the", "lazy"], k=3
+        ),
+        "prf_expansion": lambda e, q, d, v: textstats.prf_expansion(
+            d, ["lazy"], r=3, k=3
+        ),
+        "llr_collocations": lambda e, q, d, v: textstats.llr_collocations(
+            d, k=3, min_count=1
+        ),
+        "zipf_fit": lambda e, q, d, v: textstats.zipf_fit(d, k=3),
+        "token_burstiness": lambda e, q, d, v: textstats.token_burstiness(d, k=3),
+        "skipgram_counts": lambda e, q, d, v: textstats.skipgram_counts(
+            d, k=3, min_count=1
+        ),
+        "rrf_fuse": lambda e, q, d, v: retrieval.rrf_fuse(
+            {
+                "a": textstats.bm25_topk(d, ["the"], k=3),
+                "b": textstats.bm25_topk(d, ["lazy"], k=3),
+            },
+            k=3,
+        ),
+        "session_paths": lambda e, q, d, v: aggregate.session_paths(v),
+        "kmv_audit": lambda e, q, d, v: aggregate.kmv_audit(v),
+        "item_similarity": lambda e, q, d, v: aggregate.item_similarity(
+            v, min_support=1
+        ),
+    }
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_r6").desc(), F.col("neighbor_id").asc()
+
+@pytest.fixture(scope="module")
+def topk_inputs(spark, emb_df):
+    import datetime
+
+    emb = emb_df.withColumn("label", (F.col("vec_id") % 3).cast("int"))
+    q = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+        F.col("label").alias("query_label"),
     )
-    single = {
-        (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 4)
-        .collect()
-    }
-    two_phase = {
-        (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in similarity._topk_per_query(scored, 4).collect()
-    }
-    assert two_phase == single
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=i, lang="ef"[i % 2], text="the quick the lazy the end")
+            for i in range(12)
+        ]
+    )
+    t0 = datetime.datetime(2025, 7, 4)
+    events = spark.createDataFrame(
+        [
+            (i, t0 + datetime.timedelta(hours=i % 48), i % 7, "ab"[i % 2],
+             1.0, f'{{"k": {i % 5}}}')
+            for i in range(60)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    )
+    return emb, q, docs, events
+
+
+@pytest.mark.parametrize("name", sorted(_topk_operators()))
+def test_every_topk_cut_is_group_limited(topk_inputs, name):
+    """One guard for all of them: a Zipf-hot group (a query over the whole
+    corpus, "the" in an index, a whole language) never reaches one task
+    whole, and a global top-k is a per-partition heap."""
+    plan = _physical(_topk_operators()[name](*topk_inputs))
+    _assert_topk_group_limited(plan)
 
 
 def test_ivf_topk_has_no_distinct_exchange(emb_df):
@@ -105,10 +236,10 @@ def test_ivf_topk_has_no_distinct_exchange(emb_df):
     )
     plan = _physical(similarity.ivf_topk(emb_df, q, k=3, n_cells=4, n_probe=2))
     # a distinct would compile to a HashAggregate + an Exchange on
-    # (query_id, neighbor_id, cos_r6); without it the only shuffles left
-    # are the two-phase rank windows plus the probe broadcast
+    # (query_id, neighbor_id, cos_r6); without it the only shuffle left
+    # is the group-limited rank's, plus the probe broadcast
     assert "HashAggregate" not in plan
-    assert plan.count("Exchange hashpartitioning") == 2
+    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_ivf_equals_distinct_version(emb_df):
@@ -280,11 +411,11 @@ def test_embedding_covariance_partials_not_explode(emb_df):
     assert "MapInPandas" in plan
 
 
-def test_posting_lists_first_window_is_salted(spark):
-    """The per-term top-k must rank within (token, salt) FIRST: natural
-    language df is Zipfian, so a single window partitioned by token funnels
-    every posting of 'the' through one task. The unsalted window may only
-    run on the <= k*salt_mod survivors."""
+def test_posting_lists_rank_is_group_limited(spark):
+    """Natural language df is Zipfian, so the per-term top-k must never
+    funnel every posting of 'the' through one task: each map task cuts
+    k postings per term before the shuffle (and no join on token shuffles
+    the postings before that cut)."""
     from pyspark.sql import Row
 
     from weblog_pipeline.ops import textstats
@@ -292,17 +423,8 @@ def test_posting_lists_first_window_is_salted(spark):
     df = spark.createDataFrame(
         [Row(doc_id=i, text="the quick the lazy the end") for i in range(6)]
     )
-    plan = _physical(textstats.posting_lists(df, k=3, min_df=2, salt_mod=8))
-    # exactly two Window operators, and the one that executes FIRST (the
-    # deeper one, later in toString order) partitions by (token, salt) —
-    # two partition keys — while the survivor rank partitions by token only
-    wins = [
-        ln for ln in plan.splitlines()
-        if "Window [row_number()" in ln and "WindowGroupLimit" not in ln
-    ]
-    assert len(wins) == 2, plan
-    part_keys = [ln.split("], [")[1].split(", ") for ln in wins]
-    assert len(part_keys[0]) == 1 and len(part_keys[1]) == 2, plan
+    plan = _physical(textstats.posting_lists(df, k=3, min_df=2))
+    _assert_topk_group_limited(plan)
 
 
 def test_pagerank_lineage_flat_in_iteration_count(spark):
@@ -706,11 +828,10 @@ def test_dau_wau_broadcasts_day_dim(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_session_paths_first_window_is_salted_and_day_bounded(spark):
-    """Two salted-rank invariants: the per-session ordering window
-    partitions by the bounded (user, day) stratum, and the global top-k
-    ranks inside pmod(hash(path)) salt partitions before the final
-    <= k*salt_mod-row global window."""
+def test_session_paths_ranks_are_group_limited_and_day_bounded(spark):
+    """The per-session ordering window partitions by the bounded (user,
+    day) stratum, and both ranks are group-limited: the session prefix
+    per (user, day), the global top-k as a TakeOrderedAndProject."""
     import datetime
 
     from weblog_pipeline.aggregate import session_paths
@@ -725,12 +846,9 @@ def test_session_paths_first_window_is_salted_and_day_bounded(spark):
     )
     plan = _physical(session_paths(df))
     wins = [l for l in plan.splitlines() if "Window [row_number()" in l]
-    assert len(wins) == 3, plan  # session order, salted phase, global phase
+    assert len(wins) == 2, plan  # session order, global top-k
     assert any("_day_s" in w for w in wins), wins
-    # the salt expression folds into the aggregate's output projection
-    # (_w0); what must hold is that every rank is group-limit pruned and
-    # the global phase is a bounded TakeOrdered, never a full sort
-    assert "WindowGroupLimit" in plan, plan
+    _assert_topk_group_limited(plan)
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -1141,7 +1259,7 @@ def test_scd2_lookup_point_in_time_and_broadcast(spark):
 
 def test_session6_ops_have_no_cartesian(spark):
     """Plan guard for the session-6 additions that join: no
-    CartesianProduct anywhere; the KMV rank is salted; NB scoring
+    CartesianProduct anywhere; the KMV rank is group-limited; NB scoring
     keeps the grid join an equi-join on token."""
     import datetime
     import json
@@ -1169,7 +1287,7 @@ def test_session6_ops_have_no_cartesian(spark):
 
     plan_kmv = _physical(kmv_audit(ev))
     assert "CartesianProduct" not in plan_kmv
-    assert "_salt" in plan_kmv  # the two-phase rank is salted
+    _assert_topk_group_limited(plan_kmv)
 
     docs = spark.createDataFrame(
         [Row(doc_id=i, lang="en" if i % 2 else "fr",
