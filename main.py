@@ -3,7 +3,11 @@
 Cluster launch (north rule):
     scripts/package.sh  # writes pipeline.zip with weblog_pipeline/ at its root
     spark-submit --master <cluster> --py-files pipeline.zip main.py \
-        --input <webpages table/path> --output <sink namespace/dir>
+        --input <webpages parquet path | iceberg:<table>> \
+        --output <sink dir | iceberg:<namespace>>
+
+--input and --output are parquet paths unless prefixed `iceberg:`; the
+backend is never inferred from the shape of a path.
 
 Sandbox launch:
     python main.py --generate 10000 --output /tmp/weblog_out
@@ -31,11 +35,12 @@ from weblog_pipeline.webpages import generate_webpages
 
 def main() -> None:
     ap = argparse.ArgumentParser(description="weblog parse→enrich→route→aggregate")
-    ap.add_argument("--input", help="webpages table (Iceberg name or parquet path)")
+    ap.add_argument("--input", help="webpages parquet path, or iceberg:<table>")
     ap.add_argument("--input-warc", help="WARC directory (warc.write_warc_files layout)")
     ap.add_argument("--generate", type=int, default=0,
                     help="instead of --input, generate N synthetic pages")
-    ap.add_argument("--output", required=True, help="sink namespace or directory")
+    ap.add_argument("--output", required=True,
+                    help="sink directory, or iceberg:<namespace>")
     ap.add_argument("--config", help="JSON file with PipelineConfig fields")
     ap.add_argument("--cpus", type=int, default=None, help="local[N] parallelism")
     ap.add_argument("--write-texts", action="store_true")
@@ -73,12 +78,11 @@ def main() -> None:
         webpages = read_warc_files(spark, args.input_warc).withColumn(
             "lang", F.lit(None).cast("string")
         )
+    elif args.input and args.input.startswith("iceberg:"):
+        # the catalog must be configured, as for an iceberg: --output
+        webpages = spark.read.format("iceberg").load(args.input[len("iceberg:"):])
     elif args.input:
-        if os.path.sep in args.input or args.input.endswith(".parquet"):
-            webpages = spark.read.parquet(args.input)
-        else:
-            # dotted name = Iceberg table (catalog must be configured)
-            webpages = spark.read.format("iceberg").load(args.input)
+        webpages = spark.read.parquet(args.input)
     else:
         ap.error("one of --input / --input-warc / --generate is required")
         return

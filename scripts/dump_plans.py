@@ -95,7 +95,8 @@ CLAIMS = {
     "join, no state; the single Exchange is _fan_out's small-input "
     "repartition (a no-op at real scale by its size guard); the only "
     "Python is the vectorized normalizer pass",
-    "multimodal_dib_depths_decode": "mapInPandas batch decode directly "
+    "multimodal_dib_depths_decode": "one mapInArrow row stage (_map_rows) "
+    "decodes directly "
     "over the media table — no shuffle before the projection; all three "
     "DIB layouts decode in the same single pass",
     "cohort_retention": "user-grain min-aggregate joined back on the "

@@ -32,7 +32,7 @@ from .config import (
     route_event,
 )
 from .aggregate import domain_counts, funnel_stages, trace_rollup
-from .enrich import attrs_rendered, enrich_events
+from .enrich import attrs_rendered, log_record_columns
 from .generate import (
     BASE_TS_NS,
     EVENT_TEMPLATES,
@@ -48,7 +48,6 @@ from .ops import corpus, dedup, graph, htmlstats, multimodal, similarity, textst
 from . import otlp
 from .parse import page_texts, parse_events
 from .pipeline import build_pipeline, compile_records
-from .route import with_sink
 from .session import materialize
 from .sqlgen import (
     attrs_str_sql,
@@ -233,8 +232,9 @@ def _events_records_spark(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig
 ) -> DataFrame:
     ev = events_span_view(spark, sf_dir)
-    rec = enrich_events(ev, cfg, OBSERVED_TS_US, passthrough=("event_id",))
-    rec = with_sink(rec, EVENT_ROUTES)
+    rec = ev.select(
+        "event_id", *log_record_columns(cfg, EVENT_ROUTES, DEFAULT_SINK, OBSERVED_TS_US)
+    )
     return rec.select(
         "event_id",
         "event_name",

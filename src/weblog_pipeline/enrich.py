@@ -22,7 +22,7 @@ preservation, add_level, span-context enrichment).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig, SinkRoute
@@ -226,16 +226,6 @@ def log_record_columns(
     rows, the enrich columns plus each record's `sink`."""
     sink = sink_column(routes, default_sink).alias("sink")
     return [*enrich_columns(cfg, observed_ts_us), sink]
-
-
-def enrich_events(
-    events: DataFrame,
-    cfg: PipelineConfig,
-    observed_ts_us: int,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """Flattened event rows -> log-record rows, `passthrough` columns first."""
-    return events.select(*passthrough, *enrich_columns(cfg, observed_ts_us))
 
 
 def attrs_rendered(attrs_col: Column) -> Column:

@@ -1,6 +1,8 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed by Arrow-batched pandas UDFs over
-`mapInPandas`.
+with typed metadata. Every media generator and decoder is a per-row
+kernel mapped by one Arrow row stage, `_map_rows` (`mapInArrow`, output
+batches built with `pa.RecordBatch.from_pylist`); the stage owns column
+pruning, batch assembly and the `on_error` quarantine contract.
 
 The decode kernels are REAL, hand-written against the public format specs
 with stdlib + numpy only (this container ships no PIL/ffmpeg): BMP, P6
@@ -26,13 +28,15 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 if TYPE_CHECKING:
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = T.StructType(
@@ -3004,67 +3008,98 @@ def decode_av(payload: bytes, media_type: str, fake: bool = False) -> dict:
     }
 
 
+#: the corrupt-input error classes: decoders raise ValueError for
+#: everything they can anticipate; struct/Index errors from an UNTRUSTED
+#: blob are the same corrupt-input condition. NotImplementedError (a
+#: missing codec) is a configuration problem and always propagates.
+_QUARANTINED = (ValueError, struct.error, IndexError)
+
+
+def _map_rows(
+    df: "DataFrame",
+    cols: list[str],
+    schema: T.StructType,
+    fn: Callable[..., Iterable[dict]],
+    on_error: str = "raise",
+) -> "DataFrame":
+    """The one media row stage: prune `df` to `cols`, then `mapInArrow`,
+    calling `fn(*row)` once per input row. `fn` returns (or yields) 0..n
+    output rows as dicts keyed by `schema`'s field names: extra keys are
+    ignored, absent ones are null. Each output batch is one
+    `pa.RecordBatch.from_pylist` against `schema`'s Arrow types.
+
+    on_error: 'raise' (default — a corrupt payload fails the job loudly,
+    the oracle-checked semantics) or 'skip' (quarantine: when `fn` raises
+    one of _QUARANTINED, every output row of that input row is dropped,
+    mirroring the parse stage's corrupt-page handling — the right mode
+    for a real crawl where a few truncated blobs must not kill a 100 TB
+    job). Checked here, when the plan is built."""
+    if on_error not in ("raise", "skip"):
+        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        for rb in batches:
+            out: list[dict] = []
+            for row in zip(*(rb.column(c).to_pylist() for c in cols)):
+                try:
+                    rows = list(fn(*row))
+                except _QUARANTINED:
+                    if on_error == "raise":
+                        raise
+                    continue
+                out += rows
+            if out:
+                yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+
+    return df.select(*cols).mapInArrow(run, schema)
+
+
+def _media_table(
+    documents: "DataFrame", media_type: str, encode: Callable[[int], bytes]
+) -> "DataFrame":
+    """MEDIA_SCHEMA rows, one per document: payload = encode(doc_id)."""
+    return _map_rows(
+        documents,
+        ["doc_id"],
+        MEDIA_SCHEMA,
+        lambda i: [{"media_id": i, "payload": encode(i), "media_type": media_type}],
+    )
+
+
 def extract_media_metadata(
     media: "DataFrame", fake: bool = True, on_error: str = "raise"
 ) -> "DataFrame":
     """media(media_id, payload, media_type) -> typed metadata + feature.
 
-    Arrow-batched; one output row per input row; payload never leaves the
-    UDF (downstream shuffles carry only metadata).
-
-    on_error: 'raise' (default — a corrupt payload fails the job loudly,
-    the oracle-checked semantics) or 'skip' (quarantine: corrupt payloads
-    are dropped, mirroring the parse stage's corrupt-page handling — the
-    right mode for a real crawl where a few truncated blobs must not kill
-    a 100 TB job). NotImplementedError (missing codec) always raises —
-    that is a configuration problem, not a data problem.
+    One output row per input row; payload never leaves the UDF
+    (downstream shuffles carry only metadata). on_error: the _map_rows
+    quarantine contract, which every decoder here shares.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def meta(mid: int, payload: bytes | None, mtype: str) -> list[dict]:
+        blob = payload or b""
+        if mtype == "image":
+            decoded = decode_image(blob, fake=fake)
+        else:
+            decoded = decode_av(blob, mtype, fake=fake)
+        return [
+            {
+                "media_id": mid,
+                "media_type": mtype,
+                "n_bytes": len(blob),
+                "content_sha": hashlib.sha256(blob).hexdigest(),
+                **decoded,
+            }
+        ]
 
-        for pdf in batches:
-            out = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    if mtype == "image":
-                        meta = decode_image(blob, fake=fake)
-                    else:
-                        meta = decode_av(blob, mtype, fake=fake)
-                except (ValueError, struct.error, IndexError):
-                    # decoders raise ValueError for everything they can
-                    # anticipate; struct/Index errors from an UNTRUSTED
-                    # blob are the same corrupt-input condition and must
-                    # not escape the quarantine (NotImplementedError — a
-                    # missing codec — still propagates: config problem)
-                    if on_error == "raise":
-                        raise
-                    continue
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "media_type": mtype,
-                        "n_bytes": len(blob),
-                        "content_sha": hashlib.sha256(blob).hexdigest(),
-                        **meta,
-                    }
-                )
-            if out:
-                o = pd.DataFrame(out)
-                o["media_id"] = o["media_id"].astype("Int64")
-                o["n_bytes"] = o["n_bytes"].astype("Int64")
-                o["width"] = o["width"].astype("Int32")
-                o["height"] = o["height"].astype("Int32")
-                o["n_frames"] = o["n_frames"].astype("Int32")
-                yield o[[f.name for f in META_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload", "media_type")
-    return pruned.mapInPandas(run, schema=META_SCHEMA)
+    return _map_rows(
+        media, ["media_id", "payload", "media_type"], META_SCHEMA, meta, on_error
+    )
 
 
 FRAME_SCHEMA = T.StructType(
@@ -3084,7 +3119,8 @@ def sample_frames(
     on_error: str = "raise",
 ) -> "DataFrame":
     """Frame sampling for video payloads: one output row per sampled frame
-    (frames 0, every_n, 2*every_n, ... of the decoded stream).
+    (frames 0, every_n, 2*every_n, ... of the decoded stream); non-video
+    rows are filtered out in the JVM before the UDF.
 
     fake=True (default): stub decode, frame content a deterministic
     function of (payload bytes, frame index) — ascii-index hashing so an
@@ -3102,76 +3138,40 @@ def sample_frames(
     Either way the Spark shape is the same: explode-like fan-out inside
     the UDF, bounded output rows per input row, payload never re-emitted.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def sampled(mid: int, payload: bytes | None) -> Iterator[dict]:
+        blob = payload or b""
+        if fake:
+            n_frames = decode_av(blob, "video", fake=True)["n_frames"]
+            for idx in range(0, n_frames, every_n):
+                # ascii index (not packed bytes): NUL-free, so any SQL
+                # engine's varchar sha256 reproduces it
+                fd = hashlib.sha256(blob + str(idx).encode()).digest()
+                yield {
+                    "media_id": mid,
+                    "frame_idx": idx,
+                    "frame_sha": fd.hex(),
+                    "frame_feature": [fd[i] / 255.0 for i in range(FEATURE_DIM)],
+                }
+            return
+        frames, kind, (fw, fh), layout = _avi_frames(blob)
+        for idx in range(0, len(frames), every_n):
+            if kind == "dib":
+                pix = _dib_bgr_prefix(
+                    frames[idx], fw, fh, layout[0], layout[1], FEATURE_DIM
+                )
+                feat = [b / 255.0 for b in pix] + [0.0] * (FEATURE_DIM - len(pix))
+            else:
+                feat = decode_jpeg(frames[idx])["feature"]
+            yield {
+                "media_id": mid,
+                "frame_idx": idx,
+                "frame_sha": hashlib.sha256(frames[idx]).hexdigest(),
+                "frame_feature": feat,
+            }
 
-        for pdf in batches:
-            out = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if mtype != "video":
-                    continue
-                blob = bytes(payload) if payload is not None else b""
-                rows = []
-                try:
-                    if fake:
-                        meta = decode_av(blob, "video", fake=True)
-                        for idx in range(0, meta["n_frames"], every_n):
-                            # ascii index (not packed bytes): NUL-free, so
-                            # any SQL engine's varchar sha256 reproduces it
-                            fd = hashlib.sha256(
-                                blob + str(idx).encode()
-                            ).digest()
-                            rows.append(
-                                {
-                                    "media_id": int(mid),
-                                    "frame_idx": idx,
-                                    "frame_sha": fd.hex(),
-                                    "frame_feature": [
-                                        fd[i] / 255.0
-                                        for i in range(FEATURE_DIM)
-                                    ],
-                                }
-                            )
-                    else:
-                        frames, kind, (fw, fh), layout = _avi_frames(blob)
-                        for idx in range(0, len(frames), every_n):
-                            if kind == "dib":
-                                pix = _dib_bgr_prefix(
-                                    frames[idx], fw, fh,
-                                    layout[0], layout[1], FEATURE_DIM,
-                                )
-                                feat = [b / 255.0 for b in pix]
-                                feat += [0.0] * (FEATURE_DIM - len(pix))
-                            else:
-                                feat = decode_jpeg(frames[idx])["feature"]
-                            rows.append(
-                                {
-                                    "media_id": int(mid),
-                                    "frame_idx": idx,
-                                    "frame_sha": hashlib.sha256(
-                                        frames[idx]
-                                    ).hexdigest(),
-                                    "frame_feature": feat,
-                                }
-                            )
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                out.extend(rows)
-            if out:
-                o = pd.DataFrame(out)
-                o["media_id"] = o["media_id"].astype("Int64")
-                o["frame_idx"] = o["frame_idx"].astype("Int32")
-                yield o[[f.name for f in FRAME_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload", "media_type")
-    return pruned.mapInPandas(run, schema=FRAME_SCHEMA)
+    videos = media.where(F.col("media_type") == "video")
+    return _map_rows(videos, ["media_id", "payload"], FRAME_SCHEMA, sampled, on_error)
 
 
 def media_bmp_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3180,23 +3180,9 @@ def media_bmp_from_documents(documents: "DataFrame") -> "DataFrame":
     fill id%256. Exercises the real decode path end-to-end: the decoder
     reads these actual header bytes, and an independent SQL oracle can
     recompute width/height/n_bytes from doc_id arithmetic."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_bmp(1 + i % 64, 1 + i % 48, i % 256) for i in ids
-                    ],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents, "image", lambda i: encode_bmp(1 + i % 64, 1 + i % 48, i % 256)
+    )
 
 
 def media_png_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3206,23 +3192,9 @@ def media_png_from_documents(documents: "DataFrame") -> "DataFrame":
     spec types. An independent SQL oracle recomputes width/height and the
     top-left decoded pixel bytes from doc_id arithmetic — so a wrong
     unfilter shows up as a value mismatch, not just a crash."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_png(1 + i % 32, 1 + i % 24, i % 256) for i in ids
-                    ],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents, "image", lambda i: encode_png(1 + i % 32, 1 + i % 24, i % 256)
+    )
 
 
 def media_gif_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3231,23 +3203,47 @@ def media_gif_from_documents(documents: "DataFrame") -> "DataFrame":
     (id + x + y) % 256, LZW-coded). The SQL oracle recomputes dimensions
     and the decoded leading RGB bytes from doc_id arithmetic — a wrong
     LZW decode or palette map mismatches values."""
+    return _media_table(
+        documents, "image", lambda i: encode_gif(1 + i % 40, 1 + i % 30, i % 256)
+    )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
 
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_gif(1 + i % 40, 1 + i % 30, i % 256) for i in ids
-                    ],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+def _jpeg_fixture(i: int) -> bytes:
+    """The JPEG fixture payload of doc i (see media_jpeg_from_documents)."""
+    w, h, s = 8 + i % 56, 8 + i % 40, i % 256
+    k = i % 8
+    if k == 0:
+        return encode_jpeg(w, h, s)
+    if k == 3:
+        return encode_jpeg_progressive(w, h, s, levels=i % 3, restart_interval=i % 4)
+    if k == 4:
+        return encode_jpeg_progressive_color(
+            w, h, s, subsample=(i % 2 == 1), restart_interval=i % 4
+        )
+    if k == 5:
+        return encode_jpeg_color_noninterleaved(
+            w, h, s, subsample=(i % 2 == 1),
+            restart_interval=i % 3,  # 0 = none; 1-2 = RSTn path
+        )
+    if k == 6:
+        return encode_jpeg_color_partial(
+            w, h, s, subsample=(i % 2 == 1), restart_interval=i % 3
+        )
+    if k == 7:
+        # generalized sampling: 4:2:2 / 4:4:0 / 4:1:1 plus the
+        # FRACTIONAL-ratio layouts (luma 4 against chroma 3 both axes,
+        # and a mixed 3:2) — every T.81 sampling class decodes through
+        # the Spark UDF path
+        layout = (
+            (2, 1, 1, 1),
+            (1, 2, 1, 1),
+            (4, 1, 1, 1),
+            (4, 1, 3, 1),
+            (1, 4, 1, 3),
+            (3, 2, 2, 1),
+        )[i % 6]
+        return encode_jpeg_color_sampled(w, h, s, *layout)
+    return encode_jpeg_color(w, h, s, subsample=(k == 2))
 
 
 def media_jpeg_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3259,64 +3255,10 @@ def media_jpeg_from_documents(documents: "DataFrame") -> "DataFrame":
     sequential color, and partially-interleaved sequential color (a scan
     listing 2 of 3 components), and generalized-sampling color
     (4:2:2 / 4:4:0 / 4:1:1 plus fractional 4:3 and 3:2 chroma ratios) —
-    so every decode path runs through Spark. The SQL oracle pins the header fields (exact by construction);
-    pixel fidelity of the lossy path is pinned by pytest tolerance, not
+    so every decode path runs through Spark. The SQL oracle pins the
+    header fields (exact by construction); pixel fidelity of the lossy path is pinned by pytest tolerance, not
     the cross-engine hash."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def pick(i: int) -> bytes:
-            w, h, s = 8 + i % 56, 8 + i % 40, i % 256
-            k = i % 8
-            if k == 0:
-                return encode_jpeg(w, h, s)
-            if k == 3:
-                return encode_jpeg_progressive(
-                    w, h, s, levels=i % 3, restart_interval=i % 4
-                )
-            if k == 4:
-                return encode_jpeg_progressive_color(
-                    w, h, s, subsample=(i % 2 == 1),
-                    restart_interval=i % 4,
-                )
-            if k == 5:
-                return encode_jpeg_color_noninterleaved(
-                    w, h, s, subsample=(i % 2 == 1),
-                    restart_interval=i % 3,  # 0 = none; 1-2 = RSTn path
-                )
-            if k == 6:
-                return encode_jpeg_color_partial(
-                    w, h, s, subsample=(i % 2 == 1),
-                    restart_interval=i % 3,
-                )
-            if k == 7:
-                # generalized sampling: 4:2:2 / 4:4:0 / 4:1:1 plus the
-                # FRACTIONAL-ratio layouts (luma 4 against chroma 3 both
-                # axes, and a mixed 3:2) — every T.81 sampling class
-                # decodes through the Spark UDF path
-                layout = (
-                    (2, 1, 1, 1),
-                    (1, 2, 1, 1),
-                    (4, 1, 1, 1),
-                    (4, 1, 3, 1),
-                    (1, 4, 1, 3),
-                    (3, 2, 2, 1),
-                )[i % 6]
-                return encode_jpeg_color_sampled(w, h, s, *layout)
-            return encode_jpeg_color(w, h, s, subsample=(k == 2))
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [pick(i) for i in ids],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(documents, "image", _jpeg_fixture)
 
 
 def media_avi_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3325,24 +3267,11 @@ def media_avi_from_documents(documents: "DataFrame") -> "DataFrame":
     frame f seeded id%200+f). The SQL oracle pins the container-level
     facts (dimensions, frame count, sampled frame indices) from doc_id
     arithmetic; per-frame pixel fidelity is pinned by pytest tolerance."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_avi(8 + i % 24, 8 + i % 16, 1 + i % 5, i % 200)
-                        for i in ids
-                    ],
-                    "media_type": ["video"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "video",
+        lambda i: encode_avi(8 + i % 24, 8 + i % 16, 1 + i % 5, i % 200),
+    )
 
 
 def media_avi_dib_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3352,27 +3281,11 @@ def media_avi_dib_from_documents(documents: "DataFrame") -> "DataFrame":
     % 256). Raw frames make the decode SQL-exact: the oracle recomputes
     dimensions, frame count, AND the leading pixel bytes from doc_id
     arithmetic — the pixel-fidelity twin of the MJPEG container check."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_avi(
-                            4 + i % 12, 2 + i % 6, 1 + i % 5, i % 256,
-                            codec="DIB ",
-                        )
-                        for i in ids
-                    ],
-                    "media_type": ["video"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "video",
+        lambda i: encode_avi(4 + i % 12, 2 + i % 6, 1 + i % 5, i % 256, codec="DIB "),
+    )
 
 
 #: doc_id % 3 -> DIB bit depth for the mixed-depth fixture
@@ -3386,27 +3299,14 @@ def media_avi_dib_depths_from_documents(documents: "DataFrame") -> "DataFrame":
     frame-count/seed arithmetic. Every decoded BGR byte stays
     SQL-recomputable: stored byte i of frame f is (id%256 + f + i) % 256,
     and the palette channels are linear in the index."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_avi(
-                            4 + i % 12, 2 + i % 6, 1 + i % 5, i % 256,
-                            codec="DIB ", bpp=DIB_DEPTH_CYCLE[i % 3],
-                        )
-                        for i in ids
-                    ],
-                    "media_type": ["video"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "video",
+        lambda i: encode_avi(
+            4 + i % 12, 2 + i % 6, 1 + i % 5, i % 256,
+            codec="DIB ", bpp=DIB_DEPTH_CYCLE[i % 3],
+        ),
+    )
 
 
 def media_wav_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3414,21 +3314,9 @@ def media_wav_from_documents(documents: "DataFrame") -> "DataFrame":
     per doc, 1+id%100 mono samples at 8 kHz, sample i = (id + i) % 256.
     The SQL oracle recomputes the frame count and leading sample bytes
     from doc_id arithmetic."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [encode_wav(1 + i % 100, i % 256) for i in ids],
-                    "media_type": ["audio"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents, "audio", lambda i: encode_wav(1 + i % 100, i % 256)
+    )
 
 
 def media_mulaw_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3436,24 +3324,11 @@ def media_mulaw_from_documents(documents: "DataFrame") -> "DataFrame":
     format-7 WAV per doc, 1+id%100 mono companded samples, code i =
     (id + i) % 256. The SQL oracle reproduces the integer mu-law
     expansion of every leading sample from doc_id arithmetic."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_wav(1 + i % 100, i % 256, audio_format=7)
-                        for i in ids
-                    ],
-                    "media_type": ["audio"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "audio",
+        lambda i: encode_wav(1 + i % 100, i % 256, audio_format=7),
+    )
 
 
 def media_alaw_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3461,24 +3336,11 @@ def media_alaw_from_documents(documents: "DataFrame") -> "DataFrame":
     format-6 WAV per doc, 1+id%100 mono companded samples, code i =
     (id + i) % 256. The SQL oracle reproduces the integer A-law
     expansion of every leading sample from doc_id arithmetic."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_wav(1 + i % 100, i % 256, audio_format=6)
-                        for i in ids
-                    ],
-                    "media_type": ["audio"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "audio",
+        lambda i: encode_wav(1 + i % 100, i % 256, audio_format=6),
+    )
 
 
 def media_adpcm_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3488,32 +3350,17 @@ def media_adpcm_from_documents(documents: "DataFrame") -> "DataFrame":
     predictors — exact source values the SQL oracle recomputes from
     doc_id arithmetic; the in-between nibble-decoded samples are pinned
     sample-exact in pytest against the encoder's reconstruction list."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_wav_adpcm(1 + i % 100, i % 256, block_align=5)
-                        for i in ids
-                    ],
-                    "media_type": ["audio"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "audio",
+        lambda i: encode_wav_adpcm(1 + i % 100, i % 256, block_align=5),
+    )
 
 
 def media_from_documents(documents: "DataFrame") -> "DataFrame":
     """Deterministic fake media table: each document's utf-8 bytes act as
     an opaque payload (media_type cycles by doc_id). Lets the multimodal
     plumbing run on driver testdata with zero external files."""
-    from pyspark.sql import functions as F
-
     mtype = (
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")
@@ -3596,69 +3443,38 @@ def resize_images(
     target_h: int | None = 8,
     on_error: str = "raise",
 ) -> "DataFrame":
-    """Batch image resize over mapInPandas: one resized BMP per input image
-    row (non-image rows are dropped). target_w/target_h None = halve the
-    source dimensions (floor, min 1). The payload column is re-emitted here
-    by necessity — the resized image IS the product — but it is the SMALL
-    post-resize blob (target dims), so downstream stages shuffle thumbnails,
-    not originals. on_error: as in extract_media_metadata ('skip' drops
-    undecodable payloads instead of failing the job)."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
+    """Batch image resize: one resized BMP per input image row (non-image
+    rows are filtered out in the JVM before the UDF). target_w/target_h
+    None = halve the source dimensions (floor, min 1). The payload column
+    is re-emitted here by necessity — the resized image IS the product —
+    but it is the SMALL post-resize blob (target dims), so downstream
+    stages shuffle thumbnails, not originals. on_error: the _map_rows
+    quarantine contract ('skip' drops undecodable payloads instead of
+    failing the job)."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def resized(mid: int, payload: bytes | None) -> list[dict]:
+        src = payload or b""
+        if target_w is None or target_h is None:
+            # each None axis halves independently; a given axis is
+            # honored as-is (fixed width + auto height)
+            hdr = decode_bmp(src)
+            tw = target_w if target_w is not None else max(1, hdr["width"] // 2)
+            th = target_h if target_h is not None else max(1, hdr["height"] // 2)
+        else:
+            tw, th = target_w, target_h
+        blob = resize_bmp(src, tw, th)
+        return [
+            {
+                "media_id": mid,
+                "payload": blob,
+                "width": tw,
+                "height": th,
+                "n_bytes": len(blob),
+            }
+        ]
 
-        for pdf in batches:
-            out = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if mtype != "image":
-                    continue
-                src = bytes(payload) if payload is not None else b""
-                try:
-                    if target_w is None or target_h is None:
-                        # each None axis halves independently; a given axis
-                        # is honored as-is (fixed width + auto height)
-                        hdr = decode_bmp(src)
-                        tw = (
-                            target_w
-                            if target_w is not None
-                            else max(1, hdr["width"] // 2)
-                        )
-                        th = (
-                            target_h
-                            if target_h is not None
-                            else max(1, hdr["height"] // 2)
-                        )
-                    else:
-                        tw, th = target_w, target_h
-                    blob = resize_bmp(src, tw, th)
-                except (ValueError, struct.error, IndexError):
-                    # same quarantine contract as extract_media_metadata
-                    if on_error == "raise":
-                        raise
-                    continue
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": blob,
-                        "width": tw,
-                        "height": th,
-                        "n_bytes": len(blob),
-                    }
-                )
-            if out:
-                o = pd.DataFrame(out)
-                o["media_id"] = o["media_id"].astype("Int64")
-                o["width"] = o["width"].astype("Int32")
-                o["height"] = o["height"].astype("Int32")
-                o["n_bytes"] = o["n_bytes"].astype("Int64")
-                yield o[[f.name for f in RESIZED_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload", "media_type")
-    return pruned.mapInPandas(run, schema=RESIZED_SCHEMA)
+    images = media.where(F.col("media_type") == "image")
+    return _map_rows(images, ["media_id", "payload"], RESIZED_SCHEMA, resized, on_error)
 
 
 AHASH_GRID = 8
@@ -3711,81 +3527,68 @@ def _ahash_of(lum) -> tuple[str, int]:
     return format(h, "016X"), format(dh, "014X"), n_blocks
 
 
+def _luminance(blob: bytes, stat: str) -> tuple[int, int, "np.ndarray"]:
+    """(width, height, integer luminance grid) of a PNG or JPEG payload:
+    the integer mean over a pixel's channels (alpha included). Other
+    magics raise NotImplementedError — `stat` needs a full-pixel decode,
+    and only these two decoders reconstruct the whole image."""
+    import numpy as np
+
+    if blob[:8] == PNG_SIG:
+        meta = decode_png(blob, want_pixels=True)
+        ch = meta["channels"]
+        arr = np.frombuffer(meta["pixels"], dtype=np.uint8).reshape(
+            meta["height"], meta["width"], ch
+        )
+        lum = arr.astype(np.int64).sum(axis=2) // ch
+    elif blob[:2] == b"\xff\xd8":
+        meta = decode_jpeg(blob)
+        img = meta["pixels"].astype(np.int64)
+        lum = img if img.ndim == 2 else img.sum(axis=2) // 3
+    else:
+        raise NotImplementedError(f"{stat} needs a full-pixel decode (PNG/JPEG)")
+    return int(meta["width"]), int(meta["height"]), lum
+
+
 def media_ahash(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
     """Perceptual image hash (aHash) from the REAL decoded pixel grid —
     the near-duplicate key an image-dedup pass buckets on (byte-level
-    hashing misses re-encodes; aHash survives them). Luminance is the
-    integer mean over a pixel's channels (alpha included — determinism
-    over photometric nicety); the hash recipe is _ahash_of's.
+    hashing misses re-encodes; aHash survives them). Luminance is
+    _luminance's (alpha included — determinism over photometric nicety);
+    the hash recipe is _ahash_of's.
 
     Full-pixel decode currently rides the PNG and JPEG decoders (the two
     formats whose decoders reconstruct the whole image); other magics
     raise NotImplementedError — a codec gap, never quarantined. Corrupt
-    payloads follow extract_media_metadata's on_error contract.
+    payloads follow the _map_rows on_error contract. _ahash_of raises
+    none of _QUARANTINED on the 2-D grid _luminance returns (its block
+    indices are < 64 by construction), so the quarantine catches decode
+    errors only.
 
-    Scale shape: mapInPandas batch decode; the payload never leaves the
-    UDF — downstream carries five scalar columns per image. Grouping
-    equal hashes afterwards is an ordinary hash aggregate.
+    Scale shape: one _map_rows pass; the payload never leaves the UDF —
+    downstream carries five scalar columns per image. Grouping equal
+    hashes afterwards is an ordinary hash aggregate.
 
     Output: media_id, width, height, n_blocks, ahash (16 hex),
     dhash (14 hex — the 56-bit horizontal-gradient sibling; the pair is
     the standard perceptual-dedup key set).
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def ahash(mid: int, payload: bytes | None) -> list[dict]:
+        width, height, lum = _luminance(payload or b"", "aHash")
+        ahash, dhash, n_blocks = _ahash_of(lum)
+        return [
+            {
+                "media_id": mid,
+                "width": width,
+                "height": height,
+                "n_blocks": n_blocks,
+                "ahash": ahash,
+                "dhash": dhash,
+            }
+        ]
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    if blob[:8] == PNG_SIG:
-                        meta = decode_png(blob, want_pixels=True)
-                        ch = meta["channels"]
-                        arr = np.frombuffer(
-                            meta["pixels"], dtype=np.uint8
-                        ).reshape(meta["height"], meta["width"], ch)
-                        lum = arr.astype(np.int64).sum(axis=2) // ch
-                    elif blob[:2] == b"\xff\xd8":
-                        meta = decode_jpeg(blob)
-                        img = meta["pixels"]
-                        lum = (
-                            img.astype(np.int64)
-                            if img.ndim == 2
-                            else img.astype(np.int64).sum(axis=2) // 3
-                        )
-                    else:
-                        raise NotImplementedError(
-                            "aHash needs a full-pixel decode (PNG/JPEG)"
-                        )
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                ahash, dhash, n_blocks = _ahash_of(lum)
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "width": int(meta["width"]),
-                        "height": int(meta["height"]),
-                        "n_blocks": n_blocks,
-                        "ahash": ahash,
-                        "dhash": dhash,
-                    }
-                )
-            if out:
-                o = pd.DataFrame(out)
-                o["media_id"] = o["media_id"].astype("Int64")
-                for c in ("width", "height", "n_blocks"):
-                    o[c] = o[c].astype("Int32")
-                yield o[[f.name for f in AHASH_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload")
-    return pruned.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _map_rows(media, ["media_id", "payload"], AHASH_SCHEMA, ahash, on_error)
 
 
 FP_BANDS = 8
@@ -3812,66 +3615,36 @@ def audio_fingerprint(media: "DataFrame", on_error: str = "raise") -> "DataFrame
 
     Rides decode_wav's full-sample path (PCM 8/16-bit, A-law, mu-law,
     IMA-ADPCM all expand to integer samples — the same exact expansion
-    the oracle reproduces). Scale shape: mapInPandas; the payload and
-    the sample stream never leave the UDF — four scalars per clip.
+    the oracle reproduces). Scale shape: one _map_rows pass; the payload
+    and the sample stream never leave the UDF — four scalars per clip.
 
     Output: media_id, n_samples, s_total, fp (0..2^(FP_BANDS-1)-1).
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fingerprint(mid: int, payload: bytes | None) -> list[dict]:
+        samples = decode_wav(payload or b"", want_samples=True)["samples"]
+        n = len(samples)
+        sums = [0] * FP_BANDS
+        cnts = [0] * FP_BANDS
+        for i, s in enumerate(samples):
+            b = i * FP_BANDS // n
+            sums[b] += s
+            cnts[b] += 1
+        # compare consecutive PRESENT bands (clips shorter than FP_BANDS
+        # samples skip band indices); bit = band - 1
+        fp = 0
+        prev = None
+        for b in range(FP_BANDS):
+            if not cnts[b]:
+                continue
+            if prev is not None and sums[b] * cnts[prev] > sums[prev] * cnts[b]:
+                fp |= 1 << (b - 1)
+            prev = b
+        return [{"media_id": mid, "n_samples": n, "s_total": sum(sums), "fp": fp}]
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    meta = decode_wav(blob, want_samples=True)
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                samples = meta["samples"]
-                n = len(samples)
-                sums = [0] * FP_BANDS
-                cnts = [0] * FP_BANDS
-                for i, s in enumerate(samples):
-                    b = i * FP_BANDS // n
-                    sums[b] += s
-                    cnts[b] += 1
-                # compare consecutive PRESENT bands (clips shorter than
-                # FP_BANDS samples skip band indices); bit = band - 1
-                fp = 0
-                prev = None
-                for b in range(FP_BANDS):
-                    if not cnts[b]:
-                        continue
-                    if (
-                        prev is not None
-                        and sums[b] * cnts[prev] > sums[prev] * cnts[b]
-                    ):
-                        fp |= 1 << (b - 1)
-                    prev = b
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": n,
-                        "s_total": sum(sums),
-                        "fp": fp,
-                    }
-                )
-            if out:
-                o = pd.DataFrame(out)
-                o["media_id"] = o["media_id"].astype("Int64")
-                o["n_samples"] = o["n_samples"].astype("Int64")
-                o["s_total"] = o["s_total"].astype("Int64")
-                o["fp"] = o["fp"].astype("Int32")
-                yield o[[f.name for f in AUDIO_FP_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload")
-    return pruned.mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    return _map_rows(
+        media, ["media_id", "payload"], AUDIO_FP_SCHEMA, fingerprint, on_error
+    )
 
 
 def media_avi_scenes_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3883,27 +3656,14 @@ def media_avi_scenes_from_documents(documents: "DataFrame") -> "DataFrame":
     keeps every decoded byte SQL-recomputable (the dib fixture
     contract), which makes the downstream shot detector value-oracled
     end-to-end: real container encode -> real RIFF decode -> detector."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "payload": [
-                        encode_avi(
-                            4 + i % 12, 2 + i % 6, 2 + i % 5, i % 256,
-                            codec="DIB ", scene_cut=1 + i % 4,
-                        )
-                        for i in ids
-                    ],
-                    "media_type": ["video"] * len(ids),
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _media_table(
+        documents,
+        "video",
+        lambda i: encode_avi(
+            4 + i % 12, 2 + i % 6, 2 + i % 5, i % 256,
+            codec="DIB ", scene_cut=1 + i % 4,
+        ),
+    )
 
 
 def shot_boundaries(frames: "DataFrame", thresh: int = 512) -> "DataFrame":
@@ -3930,7 +3690,6 @@ def shot_boundaries(frames: "DataFrame", thresh: int = 512) -> "DataFrame":
     Output: media_id, frame_idx, dist (bigint), is_cut.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     paired = frames.select(
@@ -3966,6 +3725,21 @@ def shot_boundaries(frames: "DataFrame", thresh: int = 512) -> "DataFrame":
     )
 
 
+COLORSTATS_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("n_px", T.LongType()),
+        T.StructField("sum_b", T.LongType()),
+        T.StructField("sum_g", T.LongType()),
+        T.StructField("sum_r", T.LongType()),
+        T.StructField("min_b", T.IntegerType()),
+        T.StructField("max_b", T.IntegerType()),
+    ]
+)
+
+
 def media_colorstats(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
     """Per-channel color statistics over the FULL first frame of an
     uncompressed (DIB) video payload — the feature-extract stage of an
@@ -3978,62 +3752,37 @@ def media_colorstats(media: "DataFrame", on_error: str = "raise") -> "DataFrame"
     maxes are exact integers, so the DIB fixture keeps the entire
     statistic SQL-recomputable from doc_id arithmetic.
 
-    Scale shape: mapInPandas batch decode, payload never re-emitted —
+    Scale shape: one _map_rows pass, payload never re-emitted —
     downstream carries eight scalars per clip.
 
     Output: media_id, width, height, n_px, sum_b, sum_g, sum_r,
     min_b, max_b.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def colorstats(mid: int, payload: bytes | None) -> list[dict]:
+        frames, kind, (fw, fh), layout = _avi_frames(payload or b"")
+        if kind != "dib" or layout[0] != 24:
+            raise NotImplementedError("colorstats needs an uncompressed 24-bit stream")
+        stride = bmp_stride(fw, 24)
+        arr = np.frombuffer(frames[0], dtype=np.uint8).reshape(fh, stride)
+        px = arr[:, : fw * 3].reshape(fh * fw, 3).astype(np.int64)
+        return [
+            {
+                "media_id": mid,
+                "width": fw,
+                "height": fh,
+                "n_px": fh * fw,
+                "sum_b": int(px[:, 0].sum()),
+                "sum_g": int(px[:, 1].sum()),
+                "sum_r": int(px[:, 2].sum()),
+                "min_b": int(px[:, 0].min()),
+                "max_b": int(px[:, 0].max()),
+            }
+        ]
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    frames, kind, (fw, fh), layout = _avi_frames(blob)
-                    if kind != "dib" or layout[0] != 24:
-                        raise NotImplementedError(
-                            "colorstats needs an uncompressed 24-bit stream"
-                        )
-                    stride = bmp_stride(fw, 24)
-                    arr = np.frombuffer(
-                        frames[0], dtype=np.uint8
-                    ).reshape(fh, stride)[:, : fw * 3]
-                    px = arr.reshape(fh * fw, 3).astype(np.int64)
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "width": fw,
-                            "height": fh,
-                            "n_px": fh * fw,
-                            "sum_b": int(px[:, 0].sum()),
-                            "sum_g": int(px[:, 1].sum()),
-                            "sum_r": int(px[:, 2].sum()),
-                            "min_b": int(px[:, 0].min()),
-                            "max_b": int(px[:, 0].max()),
-                        }
-                    )
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "n_px", "sum_b",
-                         "sum_g", "sum_r", "min_b", "max_b"],
-            )
-
-    return media.mapInPandas(
-        run,
-        schema=(
-            "media_id long, width int, height int, n_px long, "
-            "sum_b long, sum_g long, sum_r long, min_b int, max_b int"
-        ),
+    return _map_rows(
+        media, ["media_id", "payload"], COLORSTATS_SCHEMA, colorstats, on_error
     )
 
 
@@ -4118,68 +3867,24 @@ def media_phash(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
 
     Same decode surface and on_error contract as media_ahash (PNG and
     JPEG full-pixel decoders; other magics raise NotImplementedError).
+    _phash_of works on fixed 8x8/6x6 shapes and raises none of
+    _QUARANTINED.
 
-    Scale shape: mapInPandas batch decode, payload never re-emitted;
+    Scale shape: one _map_rows pass, payload never re-emitted;
     downstream carries four scalars per image. Headroom:
     |coef| <= 255 * 1024^2 * 64 ~ 1.7e13 — int64-safe.
 
     Output: media_id, width, height, dc, phash (9 hex, 35 bits).
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def phash(mid: int, payload: bytes | None) -> list[dict]:
+        width, height, lum = _luminance(payload or b"", "pHash")
+        dc, ph = _phash_of(lum)
+        return [
+            {"media_id": mid, "width": width, "height": height, "dc": dc, "phash": ph}
+        ]
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    if blob[:8] == PNG_SIG:
-                        meta = decode_png(blob, want_pixels=True)
-                        ch = meta["channels"]
-                        arr = np.frombuffer(
-                            meta["pixels"], dtype=np.uint8
-                        ).reshape(meta["height"], meta["width"], ch)
-                        lum = arr.astype(np.int64).sum(axis=2) // ch
-                    elif blob[:2] == b"\xff\xd8":
-                        meta = decode_jpeg(blob)
-                        img = meta["pixels"]
-                        lum = (
-                            img.astype(np.int64)
-                            if img.ndim == 2
-                            else img.astype(np.int64).sum(axis=2) // 3
-                        )
-                    else:
-                        raise NotImplementedError(
-                            "pHash needs a full-pixel decode (PNG/JPEG)"
-                        )
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                dc, ph = _phash_of(lum)
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "width": int(meta["width"]),
-                        "height": int(meta["height"]),
-                        "dc": dc,
-                        "phash": ph,
-                    }
-                )
-            if out:
-                o = pd.DataFrame(out)
-                o["media_id"] = o["media_id"].astype("Int64")
-                for c in ("width", "height"):
-                    o[c] = o[c].astype("Int32")
-                o["dc"] = o["dc"].astype("Int64")
-                yield o[[f.name for f in PHASH_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload")
-    return pruned.mapInPandas(run, schema=PHASH_SCHEMA)
+    return _map_rows(media, ["media_id", "payload"], PHASH_SCHEMA, phash, on_error)
 
 
 LOUDNESS_FRAME = 32  # samples per loudness frame
@@ -4209,57 +3914,40 @@ def audio_loudness(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
     Peak selection is deterministic under energy ties: the EARLIEST
     loudest frame wins (max over (ms, -frame) pairs).
 
-    Scale shape: mapInPandas batch decode; payload and samples never
+    Scale shape: one _map_rows pass; payload and samples never
     re-emitted — five scalars per clip.
 
     Output: media_id, n_samples, ssq_total, n_frames, peak_frame,
     peak_ms.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def loudness(mid: int, payload: bytes | None) -> list[dict]:
+        samples = decode_wav(payload or b"", want_samples=True)["samples"]
+        v = np.asarray(samples, dtype=np.int64)
+        n = len(v)
+        fidx = np.arange(n) // LOUDNESS_FRAME
+        nf = int(fidx[-1]) + 1 if n else 0
+        ssq = np.zeros(nf, dtype=np.int64)
+        np.add.at(ssq, fidx, v * v)
+        cnt = np.bincount(fidx, minlength=nf)
+        if nf:
+            ms = ssq // np.maximum(cnt, 1)
+            best = int(np.lexsort((np.arange(nf), -ms))[0])
+            peak_f, peak_m = best, int(ms[best])
+        else:
+            peak_f, peak_m = -1, 0
+        return [
+            {
+                "media_id": mid,
+                "n_samples": n,
+                "ssq_total": int((v * v).sum()),
+                "n_frames": nf,
+                "peak_frame": peak_f,
+                "peak_ms": peak_m,
+            }
+        ]
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    meta = decode_wav(blob, want_samples=True)
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                v = np.asarray(meta["samples"], dtype=np.int64)
-                n = len(v)
-                fidx = np.arange(n) // LOUDNESS_FRAME
-                nf = int(fidx[-1]) + 1 if n else 0
-                ssq = np.zeros(nf, dtype=np.int64)
-                np.add.at(ssq, fidx, v * v)
-                cnt = np.bincount(fidx, minlength=nf)
-                if nf:
-                    ms = ssq // np.maximum(cnt, 1)
-                    best = int(np.lexsort((np.arange(nf), -ms))[0])
-                    peak_f, peak_m = best, int(ms[best])
-                else:
-                    peak_f, peak_m = -1, 0
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": n,
-                        "ssq_total": int((v * v).sum()),
-                        "n_frames": nf,
-                        "peak_frame": peak_f,
-                        "peak_ms": peak_m,
-                    }
-                )
-            if out:
-                o = pd.DataFrame(out)
-                for c in o.columns:
-                    o[c] = o[c].astype("Int64")
-                yield o[[f.name for f in LOUDNESS_SCHEMA.fields]]
-
-    pruned = media.select("media_id", "payload")
-    return pruned.mapInPandas(run, schema=LOUDNESS_SCHEMA)
+    return _map_rows(
+        media, ["media_id", "payload"], LOUDNESS_SCHEMA, loudness, on_error
+    )

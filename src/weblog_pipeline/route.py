@@ -16,7 +16,7 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_SINK, DEFAULT_ROUTES, SinkRoute
@@ -41,11 +41,3 @@ def sink_column(
             F.when(cond, F.lit(r.sink)) if ladder is None else ladder.when(cond, F.lit(r.sink))
         )
     return F.lit(default_sink) if ladder is None else ladder.otherwise(F.lit(default_sink))
-
-
-def with_sink(
-    records: DataFrame,
-    routes: tuple[SinkRoute, ...] = DEFAULT_ROUTES,
-    default_sink: str = DEFAULT_SINK,
-) -> DataFrame:
-    return records.withColumn("sink", sink_column(routes, default_sink))

@@ -4,9 +4,10 @@ The production design targets Iceberg tables (`spark.read.format("iceberg")`
 / `df.writeTo(tbl).append()`, sinks partitioned by days(warc_ts)); this
 sandbox has no Iceberg runtime jar and no network, so the seam falls back to
 schema-identical parquet directories with the same write semantics
-(append / dynamic overwrite). Activate Iceberg via
+(append / dynamic partition overwrite). Activate Iceberg via
 `--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13` plus a
-catalog conf; call sites do not change.
+catalog conf and an `iceberg:<namespace>` location; call sites do not
+change.
 """
 
 from __future__ import annotations
@@ -31,26 +32,22 @@ class TableIO:
     """Read/write seam. `location` is a catalog namespace (Iceberg) or a
     base directory (parquet).
 
-    The backend is EXPLICIT — `backend="parquet"` (default) or
-    `backend="iceberg"`, or the scheme prefix `iceberg:<namespace>` in the
-    location. No inference from path shape + classpath: a relative output
-    directory must never silently become catalog table writes."""
+    The backend is EXPLICIT: the scheme prefix `iceberg:<namespace>`
+    selects Iceberg, anything else is a parquet directory. No inference
+    from path shape + classpath: a relative output directory must never
+    silently become catalog table writes."""
 
-    def __init__(self, spark: SparkSession, location: str, backend: str = "parquet"):
+    def __init__(self, spark: SparkSession, location: str):
         self.spark = spark
-        if location.startswith("iceberg:"):
-            backend = "iceberg"
+        self.use_iceberg = location.startswith("iceberg:")
+        if self.use_iceberg:
             location = location[len("iceberg:"):]
-        if backend not in ("parquet", "iceberg"):
-            raise ValueError(f"unknown TableIO backend: {backend!r}")
-        if backend == "iceberg" and not _iceberg_available(spark):
-            raise ValueError(
-                "iceberg backend requested but no Iceberg runtime on the "
-                "classpath (add --packages org.apache.iceberg:iceberg-spark-runtime)"
-            )
+            if not _iceberg_available(spark):
+                raise ValueError(
+                    "iceberg backend requested but no Iceberg runtime on the "
+                    "classpath (add --packages org.apache.iceberg:iceberg-spark-runtime)"
+                )
         self.location = location
-        self.backend = backend
-        self.use_iceberg = backend == "iceberg"
 
     def target(self, table: str) -> str:
         """`<namespace>.<table>` in the catalog, else a directory."""
@@ -63,25 +60,11 @@ class TableIO:
             return self.spark.read.format("iceberg").load(self.target(table))
         return self.spark.read.parquet(self.target(table))
 
-    def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
+    def append(self, df: DataFrame, table: str) -> None:
         if self.use_iceberg:
             df.writeTo(self.target(table)).append()
             return
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.target(table))
-
-    def overwrite(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        if self.use_iceberg:
-            df.writeTo(self.target(table)).createOrReplace()
-            return
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.target(table))
+        df.write.mode("append").parquet(self.target(table))
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_by: list[str]

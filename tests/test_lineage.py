@@ -94,9 +94,9 @@ class CrashingIO(TableIO):
         self._maybe_crash(table)
         super().overwrite_partitions(df, table, partition_by)
 
-    def append(self, df, table, partition_by=None):
+    def append(self, df, table):
         self._maybe_crash(table)
-        super().append(df, table, partition_by)
+        super().append(df, table)
 
 
 def test_full_run_then_noop_resume(spark, tmp_path, input_path, two_file_chunks):
@@ -266,8 +266,8 @@ def test_one_parse_pass_per_chunk(spark, tmp_path, input_path, two_file_chunks):
     per_chunk = []  # (writes that read a parse, distinct parse nodes)
 
     class ChunkPlans(TableIO):
-        def append(self, df, table, partition_by=None):
-            super().append(df, table, partition_by)
+        def append(self, df, table):
+            super().append(df, table)
             if table == "run_metrics":  # the chunk's commit: close its group
                 spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
                 reads = [_parse_nodes(spark, qe.executedPlan()) for qe in listener.qes]
@@ -410,7 +410,11 @@ def test_main_run_id_resumes_after_kill(spark, tmp_path):
     n_committed = committed()
     assert 1 <= n_committed < 4, "the kill must land between the first and the last chunk"
 
-    done = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+    # the resume names the input relative to its cwd: a bare directory
+    # name is a parquet path, and the run's input digest still matches
+    cmd[cmd.index("--input") + 1] = "webpages"
+    done = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600,
+                          cwd=tmp_path)
     assert done.returncode == 0, done.stderr[-2000:]
     report = json.loads(done.stdout.strip().splitlines()[-1])
     assert (report["chunks"], report["chunks_skipped"]) == (4, n_committed)

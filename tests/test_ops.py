@@ -3,6 +3,7 @@ LSH, SimHash, Jaccard, text stats, ANN, multimodal plumbing."""
 
 import hashlib
 import math
+import struct
 
 import pytest
 from pyspark.sql import Row
@@ -1798,6 +1799,49 @@ def test_media_quarantine_skip_mode(spark, docs_df):
     assert [r["media_id"] for r in meta] == [0]
     resized = multimodal.resize_images(media, 2, 2, on_error="skip").collect()
     assert [r["media_id"] for r in resized] == [0]
+    # any other mode is refused when the plan is built, by every decoder
+    for stage in (
+        multimodal.extract_media_metadata, multimodal.sample_frames,
+        multimodal.resize_images, multimodal.media_ahash, multimodal.media_phash,
+        multimodal.audio_fingerprint, multimodal.audio_loudness,
+        multimodal.media_colorstats,
+    ):
+        with pytest.raises(ValueError, match="on_error must be 'raise' or 'skip'"):
+            stage(media, on_error="ignore")
+
+
+@pytest.mark.parametrize(
+    "exc", [ValueError, struct.error, IndexError, NotImplementedError],
+    ids=["ValueError", "struct.error", "IndexError", "NotImplementedError"],
+)
+def test_map_rows_on_error_contract(spark, exc):
+    """The one media row stage's quarantine: under 'skip' a ValueError,
+    struct.error or IndexError from the kernel drops EVERY output row of
+    that input row, those yielded before the raise included; under
+    'raise' it fails the job. NotImplementedError (a codec gap) fails the
+    job under both."""
+    df = spark.createDataFrame([(0,), (1,), (2,)], "media_id long")
+
+    def two_frames(mid):
+        yield {"media_id": mid, "frame_idx": 0}
+        if mid == 1:
+            raise exc("corrupt frame")
+        yield {"media_id": mid, "frame_idx": 1}
+
+    def run(on_error):
+        return multimodal._map_rows(
+            df, ["media_id"], multimodal.FRAME_SCHEMA, two_frames, on_error
+        ).collect()
+
+    raised = "struct.error" if exc is struct.error else exc.__name__
+    with pytest.raises(Exception, match=f"{raised}: corrupt frame"):
+        run("raise")
+    if exc is NotImplementedError:
+        with pytest.raises(Exception, match=f"{raised}: corrupt frame"):
+            run("skip")
+    else:
+        got = sorted((r["media_id"], r["frame_idx"], r["frame_sha"]) for r in run("skip"))
+        assert got == [(0, 0, None), (0, 1, None), (2, 0, None), (2, 1, None)]
 
 
 def test_quality_classifier_python_twin(spark):

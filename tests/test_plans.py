@@ -489,6 +489,41 @@ def test_every_checkpoint_goes_through_materialize():
     assert not outside, f"raw checkpoint calls outside session.materialize: {outside}"
 
 
+def test_media_stages_share_one_arrow_row_stage():
+    """One media row stage: ops/multimodal.py imports no pandas and calls
+    no mapInPandas; its one mapInArrow call and its one on_error
+    validation are both inside `_map_rows`, so every generator and decoder shares the
+    batch assembly and the quarantine contract."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "src/weblog_pipeline/ops/multimodal.py"
+    tree = ast.parse(path.read_text(), str(path))
+    helper = next(
+        fn for fn in tree.body if isinstance(fn, ast.FunctionDef) and fn.name == "_map_rows"
+    )
+    in_helper = {id(n) for n in ast.walk(helper)}
+    calls = {"mapInPandas": [], "mapInArrow": [], "on_error check": []}
+    pandas_imports = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr in calls:
+            calls[node.attr].append((node.lineno, id(node) in in_helper))
+        if (
+            isinstance(node, ast.Compare)
+            and isinstance(node.left, ast.Name) and node.left.id == "on_error"
+            and isinstance(node.ops[0], (ast.In, ast.NotIn))
+        ):
+            calls["on_error check"].append((node.lineno, id(node) in in_helper))
+        if isinstance(node, ast.Import):
+            pandas_imports += [a.name for a in node.names if a.name.split(".")[0] == "pandas"]
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
+            pandas_imports.append(node.module)
+    assert not pandas_imports, pandas_imports
+    assert not calls["mapInPandas"], calls["mapInPandas"]
+    assert [inside for _, inside in calls["mapInArrow"]] == [True], calls["mapInArrow"]
+    assert [inside for _, inside in calls["on_error check"]] == [True], calls["on_error check"]
+
+
 def test_bloom_prefilter_bits_side_broadcasts(spark):
     """The bloom bit set must ride a BroadcastHashJoin (it is <=
     depth*width rows regardless of corpus size); the exact audit join

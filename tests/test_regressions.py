@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from weblog_pipeline.config import AttributeMappings, PipelineConfig
-from weblog_pipeline.enrich import attrs_rendered, enrich_events
+from weblog_pipeline.enrich import attrs_rendered, enrich_columns
 from weblog_pipeline.generate import gen_page
 from weblog_pipeline.markers import SpanEvent, render_marker
 from weblog_pipeline.oracle import populate_log_record, render_attrs
@@ -38,7 +38,7 @@ def _ev(**kw):
 
 
 def _run(spark, df, cfg):
-    logs = enrich_events(event_rows(parse_events(df)), cfg, OBS_US)
+    logs = event_rows(parse_events(df)).select(*enrich_columns(cfg, OBS_US))
     return logs.withColumn("attrs_str", attrs_rendered("attributes")).withColumn(
         "res_str", attrs_rendered("resource_attributes")
     ).collect()

@@ -142,9 +142,9 @@ _CHAIN_NAMES = (
     ids=["full-chain", "number-only", "text-only", "no-mappings", "no-signal"],
 )
 def test_spark_severity_chain_matches_oracle(spark, cfg):
-    """Spark's enrich_events resolves (severity_number, severity_text) as
+    """Spark's enrich_columns resolve (severity_number, severity_text) as
     oracle.resolve_severity does, for every branch of the chain."""
-    from weblog_pipeline.enrich import enrich_events
+    from weblog_pipeline.enrich import enrich_columns
     from weblog_pipeline.oracle import resolve_severity
     from weblog_pipeline.parse import EVENT_SCHEMA
 
@@ -160,6 +160,6 @@ def test_spark_severity_chain_matches_oracle(spark, cfg):
          {}, {})
         for e in events
     ]
-    df = enrich_events(spark.createDataFrame(rows, schema=EVENT_SCHEMA), cfg, 0)
+    df = spark.createDataFrame(rows, schema=EVENT_SCHEMA).select(*enrich_columns(cfg, 0))
     got = {r["ts_ns"]: (r["severity_number"], r["severity_text"]) for r in df.collect()}
     assert got == {e.ts_ns: resolve_severity(cfg, e) for e in events}

@@ -90,12 +90,14 @@ def test_stateful_sessions_accumulate_across_microbatches(spark, tmp_path):
         for r in updates.orderBy("batch_id").collect()  # later overwrites earlier
     }
 
-    from weblog_pipeline.enrich import enrich_events
+    from weblog_pipeline.config import DEFAULT_ROUTES, DEFAULT_SINK
+    from weblog_pipeline.enrich import log_record_columns
     from weblog_pipeline.parse import event_rows, parse_events
-    from weblog_pipeline.route import with_sink
 
     wp = spark.read.parquet(inp).where("html IS NOT NULL")
-    blogs = with_sink(enrich_events(event_rows(parse_events(wp)), CFG, OBSERVED_TS_US))
+    blogs = event_rows(parse_events(wp)).select(
+        *log_record_columns(CFG, DEFAULT_ROUTES, DEFAULT_SINK, OBSERVED_TS_US)
+    )
     expected = {
         r["span_id"]: (r["n_events"], r["first_ts_ns"], r["last_ts_ns"], r["max_severity"])
         for r in span_sessions(blogs).collect()
@@ -224,8 +226,8 @@ def test_streaming_otlp_ingest_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from weblog_pipeline import otlp
-    from weblog_pipeline.enrich import enrich_events
-    from weblog_pipeline.route import with_sink
+    from weblog_pipeline.config import DEFAULT_ROUTES, DEFAULT_SINK
+    from weblog_pipeline.enrich import log_record_columns
     from weblog_pipeline.streaming import streaming_otlp_logs
 
     events = [
@@ -269,7 +271,9 @@ def test_streaming_otlp_ingest_equals_batch(spark, tmp_path):
         .withColumn("warc_ts", F.lit(None).cast("timestamp"))
         .withColumn("lang", F.lit(None).cast("string"))
     )
-    want = with_sink(enrich_events(batch_events, CFG, OBSERVED_TS_US))
+    want = batch_events.select(
+        *log_record_columns(CFG, DEFAULT_ROUTES, DEFAULT_SINK, OBSERVED_TS_US)
+    )
     w_rows = {tuple(str(v) for v in r) for r in want.collect()}
     g_rows = {tuple(str(v) for v in r) for r in got.select(*want.columns).collect()}
     assert g_rows == w_rows and len(g_rows) == 4

@@ -1,7 +1,7 @@
 """TableIO contract: the parquet seam must honor the same write semantics
-the Iceberg branch documents (append accumulates snapshots, overwrite is
-createOrReplace, partitioned writes fan out), and the backend choice is
-explicit — never inferred from path shape."""
+the Iceberg branch documents (append accumulates snapshots, partition
+overwrite is surgical), and the backend choice is explicit — the
+`iceberg:` prefix, never inferred from path shape."""
 
 import pytest
 from pyspark.sql import Row
@@ -21,24 +21,6 @@ def test_append_accumulates_like_iceberg_append(spark, tmp_path):
     assert got == [1, 2, 3]
 
 
-def test_overwrite_is_create_or_replace(spark, tmp_path):
-    io = TableIO(spark, str(tmp_path))
-    io.append(_df(spark, [(1, "a"), (2, "b")]), "t")
-    io.overwrite(_df(spark, [(9, "c")]), "t")
-    got = [(r["k"], r["sink"]) for r in io.read("t").collect()]
-    assert got == [(9, "c")]  # full replace, not per-partition
-
-
-def test_partitioned_append_fans_out(spark, tmp_path):
-    io = TableIO(spark, str(tmp_path))
-    io.append(_df(spark, [(1, "a"), (2, "b"), (3, "a")]), "t", partition_by=["sink"])
-    assert (tmp_path / "t" / "sink=a").exists()
-    assert (tmp_path / "t" / "sink=b").exists()
-    # partition column round-trips on read
-    got = sorted((r["k"], r["sink"]) for r in io.read("t").collect())
-    assert got == [(1, "a"), (2, "b"), (3, "a")] or len(got) == 3
-
-
 def test_exists(spark, tmp_path):
     io = TableIO(spark, str(tmp_path))
     assert not io.exists("t")
@@ -46,12 +28,12 @@ def test_exists(spark, tmp_path):
     assert io.exists("t")
 
 
-def test_backend_is_explicit_not_inferred(spark, tmp_path):
-    # a relative location stays parquet unless the caller opts in
-    io = TableIO(spark, "some/relative/dir")
-    assert io.backend == "parquet" and not io.use_iceberg
-    with pytest.raises(ValueError, match="unknown TableIO backend"):
-        TableIO(spark, str(tmp_path), backend="delta")
+def test_backend_is_explicit_not_inferred(spark):
+    # a relative location, dotted or bare, stays parquet unless the caller
+    # opts in with the iceberg: prefix
+    for location in ("some/relative/dir", "warehouse.ns", "pages"):
+        io = TableIO(spark, location)
+        assert not io.use_iceberg and io.target("t") == f"{location}/t"
 
 
 def test_iceberg_request_fails_loudly_without_runtime(spark):
@@ -59,8 +41,6 @@ def test_iceberg_request_fails_loudly_without_runtime(spark):
         pytest.skip("Iceberg runtime present; the loud-failure branch is moot")
     with pytest.raises(ValueError, match="iceberg backend requested"):
         TableIO(spark, "iceberg:warehouse.ns")
-    with pytest.raises(ValueError, match="iceberg backend requested"):
-        TableIO(spark, "warehouse.ns", backend="iceberg")
 
 
 def test_iceberg_prefix_strips_scheme(spark):
