@@ -91,11 +91,11 @@ CLAIMS = {
     "sentence_stats": "one codegen'd scan, ZERO exchanges: each "
     "higher-order-function stage materialized in its own projection "
     "(the shingles_over CSE contract)",
-    "unicode_nfc": "pure Arrow-batched map stage (mapInPandas) — no "
-    "join, no state; the single Exchange is _fan_out's small-input "
-    "repartition (a no-op at real scale by its size guard); the only "
-    "Python is the vectorized normalizer pass",
-    "multimodal_dib_depths_decode": "one mapInArrow row stage (_map_rows) "
+    "unicode_nfc": "pure Arrow-batched map stage (the rows.map_rows "
+    "mapInArrow) — no join, no state; the single Exchange is _fan_out's "
+    "small-input repartition (a no-op at real scale by its size guard); "
+    "the only Python is the per-document normalizer",
+    "multimodal_dib_depths_decode": "one mapInArrow row stage (rows.map_rows) "
     "decodes directly "
     "over the media table — no shuffle before the projection; all three "
     "DIB layouts decode in the same single pass",

@@ -10,7 +10,7 @@ Two sources:
   generated from the same config object, re-deriving the reference
   semantics in two engines).
 * ``documents`` — deterministically derived webpages feed the REAL
-  mapInPandas parse stage and the full pipeline; the DuckDB oracle
+  mapInArrow parse stage and the full pipeline; the DuckDB oracle
   re-derives expected outputs from pure integer arithmetic on doc_id plus
   pure-Python-oracle-computed per-template literals (oracle.py computes
   them at SQL-generation time).

@@ -1,8 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata. Every media generator and decoder is a per-row
-kernel mapped by one Arrow row stage, `_map_rows` (`mapInArrow`, output
-batches built with `pa.RecordBatch.from_pylist`); the stage owns column
-pruning, batch assembly and the `on_error` quarantine contract.
+kernel mapped by the package's one Arrow row stage, `rows.map_rows`
+(`mapInArrow`, output batches built with `pa.RecordBatch.from_pylist`);
+the stage owns column pruning, batch assembly and the `on_error`
+quarantine contract.
 
 The decode kernels are REAL, hand-written against the public format specs
 with stdlib + numpy only (this container ships no PIL/ffmpeg): BMP, P6
@@ -28,15 +29,16 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..rows import map_rows
+
 if TYPE_CHECKING:
     import numpy as np
-    import pyarrow as pa
     from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = T.StructType(
@@ -2984,7 +2986,8 @@ def decode_av(payload: bytes, media_type: str, fake: bool = False) -> dict:
     video (container walk + per-frame baseline JPEG decode). Compressed
     audio codecs and non-MJPEG video need ffmpeg, absent in this
     environment: with fake=True a deterministic stand-in derives metadata
-    purely from the bytes; otherwise raise."""
+    purely from the bytes; otherwise raise. An empty payload (what a NULL
+    becomes) is corrupt input, ValueError, not a codec gap."""
     if not fake:
         if media_type == "audio" and payload[:4] == b"RIFF":
             out = decode_wav(payload)
@@ -2995,6 +2998,8 @@ def decode_av(payload: bytes, media_type: str, fake: bool = False) -> dict:
             out = decode_avi(payload)
             out.pop("frames", None)
             return out
+        if not payload:
+            raise ValueError(f"empty {media_type} payload")
         raise NotImplementedError(
             "compressed audio / non-MJPEG video decoding requires ffmpeg "
             "(WAV-PCM and AVI-MJPEG decode natively)"
@@ -3008,62 +3013,11 @@ def decode_av(payload: bytes, media_type: str, fake: bool = False) -> dict:
     }
 
 
-#: the corrupt-input error classes: decoders raise ValueError for
-#: everything they can anticipate; struct/Index errors from an UNTRUSTED
-#: blob are the same corrupt-input condition. NotImplementedError (a
-#: missing codec) is a configuration problem and always propagates.
-_QUARANTINED = (ValueError, struct.error, IndexError)
-
-
-def _map_rows(
-    df: "DataFrame",
-    cols: list[str],
-    schema: T.StructType,
-    fn: Callable[..., Iterable[dict]],
-    on_error: str = "raise",
-) -> "DataFrame":
-    """The one media row stage: prune `df` to `cols`, then `mapInArrow`,
-    calling `fn(*row)` once per input row. `fn` returns (or yields) 0..n
-    output rows as dicts keyed by `schema`'s field names: extra keys are
-    ignored, absent ones are null. Each output batch is one
-    `pa.RecordBatch.from_pylist` against `schema`'s Arrow types.
-
-    on_error: 'raise' (default — a corrupt payload fails the job loudly,
-    the oracle-checked semantics) or 'skip' (quarantine: when `fn` raises
-    one of _QUARANTINED, every output row of that input row is dropped,
-    mirroring the parse stage's corrupt-page handling — the right mode
-    for a real crawl where a few truncated blobs must not kill a 100 TB
-    job). Checked here, when the plan is built."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            out: list[dict] = []
-            for row in zip(*(rb.column(c).to_pylist() for c in cols)):
-                try:
-                    rows = list(fn(*row))
-                except _QUARANTINED:
-                    if on_error == "raise":
-                        raise
-                    continue
-                out += rows
-            if out:
-                yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select(*cols).mapInArrow(run, schema)
-
-
 def _media_table(
     documents: "DataFrame", media_type: str, encode: Callable[[int], bytes]
 ) -> "DataFrame":
     """MEDIA_SCHEMA rows, one per document: payload = encode(doc_id)."""
-    return _map_rows(
+    return map_rows(
         documents,
         ["doc_id"],
         MEDIA_SCHEMA,
@@ -3077,7 +3031,7 @@ def extract_media_metadata(
     """media(media_id, payload, media_type) -> typed metadata + feature.
 
     One output row per input row; payload never leaves the UDF
-    (downstream shuffles carry only metadata). on_error: the _map_rows
+    (downstream shuffles carry only metadata). on_error: the map_rows
     quarantine contract, which every decoder here shares.
     """
 
@@ -3097,7 +3051,7 @@ def extract_media_metadata(
             }
         ]
 
-    return _map_rows(
+    return map_rows(
         media, ["media_id", "payload", "media_type"], META_SCHEMA, meta, on_error
     )
 
@@ -3171,7 +3125,7 @@ def sample_frames(
             }
 
     videos = media.where(F.col("media_type") == "video")
-    return _map_rows(videos, ["media_id", "payload"], FRAME_SCHEMA, sampled, on_error)
+    return map_rows(videos, ["media_id", "payload"], FRAME_SCHEMA, sampled, on_error)
 
 
 def media_bmp_from_documents(documents: "DataFrame") -> "DataFrame":
@@ -3448,7 +3402,7 @@ def resize_images(
     None = halve the source dimensions (floor, min 1). The payload column
     is re-emitted here by necessity — the resized image IS the product —
     but it is the SMALL post-resize blob (target dims), so downstream
-    stages shuffle thumbnails, not originals. on_error: the _map_rows
+    stages shuffle thumbnails, not originals. on_error: the map_rows
     quarantine contract ('skip' drops undecodable payloads instead of
     failing the job)."""
 
@@ -3474,7 +3428,7 @@ def resize_images(
         ]
 
     images = media.where(F.col("media_type") == "image")
-    return _map_rows(images, ["media_id", "payload"], RESIZED_SCHEMA, resized, on_error)
+    return map_rows(images, ["media_id", "payload"], RESIZED_SCHEMA, resized, on_error)
 
 
 AHASH_GRID = 8
@@ -3529,9 +3483,10 @@ def _ahash_of(lum) -> tuple[str, int]:
 
 def _luminance(blob: bytes, stat: str) -> tuple[int, int, "np.ndarray"]:
     """(width, height, integer luminance grid) of a PNG or JPEG payload:
-    the integer mean over a pixel's channels (alpha included). Other
-    magics raise NotImplementedError — `stat` needs a full-pixel decode,
-    and only these two decoders reconstruct the whole image."""
+    the integer mean over a pixel's channels (alpha included). An empty
+    payload is corrupt (ValueError); other magics raise
+    NotImplementedError — `stat` needs a full-pixel decode, and only these
+    two decoders reconstruct the whole image."""
     import numpy as np
 
     if blob[:8] == PNG_SIG:
@@ -3545,6 +3500,8 @@ def _luminance(blob: bytes, stat: str) -> tuple[int, int, "np.ndarray"]:
         meta = decode_jpeg(blob)
         img = meta["pixels"].astype(np.int64)
         lum = img if img.ndim == 2 else img.sum(axis=2) // 3
+    elif not blob:
+        raise ValueError(f"empty payload: {stat} needs an image")
     else:
         raise NotImplementedError(f"{stat} needs a full-pixel decode (PNG/JPEG)")
     return int(meta["width"]), int(meta["height"]), lum
@@ -3560,12 +3517,12 @@ def media_ahash(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
     Full-pixel decode currently rides the PNG and JPEG decoders (the two
     formats whose decoders reconstruct the whole image); other magics
     raise NotImplementedError — a codec gap, never quarantined. Corrupt
-    payloads follow the _map_rows on_error contract. _ahash_of raises
-    none of _QUARANTINED on the 2-D grid _luminance returns (its block
+    payloads follow the map_rows on_error contract. _ahash_of raises
+    none of rows._QUARANTINED on the 2-D grid _luminance returns (its block
     indices are < 64 by construction), so the quarantine catches decode
     errors only.
 
-    Scale shape: one _map_rows pass; the payload never leaves the UDF —
+    Scale shape: one map_rows pass; the payload never leaves the UDF —
     downstream carries five scalar columns per image. Grouping equal
     hashes afterwards is an ordinary hash aggregate.
 
@@ -3588,7 +3545,7 @@ def media_ahash(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
             }
         ]
 
-    return _map_rows(media, ["media_id", "payload"], AHASH_SCHEMA, ahash, on_error)
+    return map_rows(media, ["media_id", "payload"], AHASH_SCHEMA, ahash, on_error)
 
 
 FP_BANDS = 8
@@ -3615,7 +3572,7 @@ def audio_fingerprint(media: "DataFrame", on_error: str = "raise") -> "DataFrame
 
     Rides decode_wav's full-sample path (PCM 8/16-bit, A-law, mu-law,
     IMA-ADPCM all expand to integer samples — the same exact expansion
-    the oracle reproduces). Scale shape: one _map_rows pass; the payload
+    the oracle reproduces). Scale shape: one map_rows pass; the payload
     and the sample stream never leave the UDF — four scalars per clip.
 
     Output: media_id, n_samples, s_total, fp (0..2^(FP_BANDS-1)-1).
@@ -3642,7 +3599,7 @@ def audio_fingerprint(media: "DataFrame", on_error: str = "raise") -> "DataFrame
             prev = b
         return [{"media_id": mid, "n_samples": n, "s_total": sum(sums), "fp": fp}]
 
-    return _map_rows(
+    return map_rows(
         media, ["media_id", "payload"], AUDIO_FP_SCHEMA, fingerprint, on_error
     )
 
@@ -3752,7 +3709,7 @@ def media_colorstats(media: "DataFrame", on_error: str = "raise") -> "DataFrame"
     maxes are exact integers, so the DIB fixture keeps the entire
     statistic SQL-recomputable from doc_id arithmetic.
 
-    Scale shape: one _map_rows pass, payload never re-emitted —
+    Scale shape: one map_rows pass, payload never re-emitted —
     downstream carries eight scalars per clip.
 
     Output: media_id, width, height, n_px, sum_b, sum_g, sum_r,
@@ -3781,7 +3738,7 @@ def media_colorstats(media: "DataFrame", on_error: str = "raise") -> "DataFrame"
             }
         ]
 
-    return _map_rows(
+    return map_rows(
         media, ["media_id", "payload"], COLORSTATS_SCHEMA, colorstats, on_error
     )
 
@@ -3868,9 +3825,9 @@ def media_phash(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
     Same decode surface and on_error contract as media_ahash (PNG and
     JPEG full-pixel decoders; other magics raise NotImplementedError).
     _phash_of works on fixed 8x8/6x6 shapes and raises none of
-    _QUARANTINED.
+    rows._QUARANTINED.
 
-    Scale shape: one _map_rows pass, payload never re-emitted;
+    Scale shape: one map_rows pass, payload never re-emitted;
     downstream carries four scalars per image. Headroom:
     |coef| <= 255 * 1024^2 * 64 ~ 1.7e13 — int64-safe.
 
@@ -3884,7 +3841,7 @@ def media_phash(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
             {"media_id": mid, "width": width, "height": height, "dc": dc, "phash": ph}
         ]
 
-    return _map_rows(media, ["media_id", "payload"], PHASH_SCHEMA, phash, on_error)
+    return map_rows(media, ["media_id", "payload"], PHASH_SCHEMA, phash, on_error)
 
 
 LOUDNESS_FRAME = 32  # samples per loudness frame
@@ -3914,7 +3871,7 @@ def audio_loudness(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
     Peak selection is deterministic under energy ties: the EARLIEST
     loudest frame wins (max over (ms, -frame) pairs).
 
-    Scale shape: one _map_rows pass; payload and samples never
+    Scale shape: one map_rows pass; payload and samples never
     re-emitted — five scalars per clip.
 
     Output: media_id, n_samples, ssq_total, n_frames, peak_frame,
@@ -3948,6 +3905,6 @@ def audio_loudness(media: "DataFrame", on_error: str = "raise") -> "DataFrame":
             }
         ]
 
-    return _map_rows(
+    return map_rows(
         media, ["media_id", "payload"], LOUDNESS_SCHEMA, loudness, on_error
     )

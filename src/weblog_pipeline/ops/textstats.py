@@ -9,12 +9,15 @@ whole-stage-codegen'd scan with full column pruning.
 
 from __future__ import annotations
 
+import unicodedata
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..aggregate import topk
+from ..rows import map_rows
 from ..session import materialize
 from .dedup import WS_RE, _fan_out, ascii_lower, lower_tokens_col
 
@@ -1635,37 +1638,28 @@ def unicode_nfc(documents: DataFrame) -> DataFrame:
     would change under the normalize-first policy.
 
     The one Python stage in this module: Spark has no built-in Unicode
-    normalizer, so this is an Arrow-batched mapInPandas over
+    normalizer, so this is a per-document kernel over
     unicodedata.normalize (NFC is stability-frozen by the Unicode
     standard, so Python's tables and the oracle engine's utf8proc agree
-    on every assigned codepoint). Integer outputs only.
+    on every assigned codepoint), mapped by `rows.map_rows`. A NULL text
+    counts as "". Integer outputs only.
 
-    Scale shape: pure map stage — no shuffle, no state; the Python cost
-    is one vectorized pass per Arrow batch.
+    Scale shape: pure map stage — no shuffle, no state.
 
     Output: doc_id, is_nfc (1/0), raw_len, nfc_len (codepoints).
     """
 
-    def run(batches):
-        import unicodedata
+    def nfc(doc_id: int, text: str | None) -> list[dict]:
+        raw = text or ""
+        norm = unicodedata.normalize("NFC", raw)
+        return [{"doc_id": doc_id, "is_nfc": int(raw == norm),
+                 "raw_len": len(raw), "nfc_len": len(norm)}]
 
-        import pandas as pd
-
-        for pdf in batches:
-            txt = pdf["text"].fillna("")
-            nfc = txt.map(lambda s: unicodedata.normalize("NFC", s))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "is_nfc": (txt == nfc).astype("int32"),
-                    "raw_len": txt.str.len().astype("int64"),
-                    "nfc_len": nfc.str.len().astype("int64"),
-                }
-            )
-
-    return (
-        _fan_out(documents.select("doc_id", "text"))
-        .mapInPandas(run, "doc_id long, is_nfc int, raw_len long, nfc_len long")
+    return map_rows(
+        _fan_out(documents.select("doc_id", "text")),
+        ["doc_id", "text"],
+        T.StructType.fromDDL("doc_id long, is_nfc int, raw_len long, nfc_len long"),
+        nfc,
     )
 
 

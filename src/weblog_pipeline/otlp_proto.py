@@ -5,22 +5,22 @@ field numbers cited inline). No protobuf runtime exists in this sandbox,
 so the varint / length-delimited framing is implemented directly — the
 same stdlib-first discipline as the media codecs.
 
-Spark shape: encode/decode are Arrow-batched pandas UDFs over the
-flattened span-event grain (otlp.py's JSON twin shares the column
-contract); one TracesData message per row on encode, and a record walker
-on decode that flattens arbitrary resource/scope/span/event nesting.
+Spark shape: encode/decode are per-row kernels over the flattened
+span-event grain (otlp.py's JSON twin shares the column contract), mapped
+by the package's row stage (`rows.map_rows`): one TracesData message per
+row on encode, and a record walker on decode that flattens arbitrary
+resource/scope/span/event nesting into 0..n rows per message.
 """
 
 from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .rows import map_rows
 
 # wire types
 _VARINT, _FIX64, _LEN = 0, 1, 2
@@ -153,7 +153,8 @@ def encode_record(row: dict) -> bytes:
         return "" if v is None else v
 
     def _m(v) -> dict:
-        return {} if v is None else v
+        # a map arrives as a dict, or from Arrow as (key, value) pairs
+        return {} if v is None else dict(v)
 
     ts_ns = row["ts_ns"]
     ts_ns = 0 if ts_ns is None else int(ts_ns)
@@ -286,23 +287,13 @@ def decode_traces(blob: bytes) -> list[dict]:
 
 def encode_otlp_proto(events: DataFrame, out_col: str = "pb") -> DataFrame:
     """Flattened span events -> one TracesData protobuf blob per row."""
-
-    def enc(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    out_col: [
-                        encode_record(
-                            {k: row[k] for k in pdf.columns}
-                        )
-                        for row in pdf.to_dict("records")
-                    ]
-                }
-            )
-
-    return events.mapInPandas(enc, schema=f"{out_col} binary")
+    cols = events.columns
+    return map_rows(
+        events,
+        cols,
+        T.StructType([T.StructField(out_col, T.BinaryType())]),
+        lambda *row: [{out_col: encode_record(dict(zip(cols, row)))}],
+    )
 
 
 _EVENT_OUT_SCHEMA = (
@@ -315,21 +306,4 @@ _EVENT_OUT_SCHEMA = (
 
 def decode_otlp_proto(df: DataFrame, col: str = "pb") -> DataFrame:
     """TracesData blobs -> flattened span-event rows."""
-
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = [
-            "event_name", "ts_ns", "trace_id", "span_id", "span_name",
-            "span_kind", "trace_state", "event_attrs_s", "event_attrs_i",
-            "span_attrs", "res_attrs",
-        ]
-        for pdf in batches:
-            rows: list[dict] = []
-            for blob in pdf[col]:
-                rows.extend(decode_traces(bytes(blob)))
-            yield pd.DataFrame(
-                {c: [r[c] for r in rows] for c in cols}
-            )
-
-    return df.mapInPandas(dec, schema=_EVENT_OUT_SCHEMA)
+    return map_rows(df, [col], T.StructType.fromDDL(_EVENT_OUT_SCHEMA), decode_traces)

@@ -6,22 +6,19 @@ documented).
 
 Spark shape: robots bodies are PER-DOMAIN — thousands of rows against
 billions of pages — so the rule table rides the BROADCAST side of the
-join; the decision itself runs in an Arrow-batched pandas UDF that parses
-each distinct robots body ONCE per batch (memoized) and then applies
-longest-prefix matching per row. Pages whose domain has no robots row are
-allowed (fetch-failure convention).
+join; the decision itself is a per-row kernel mapped by the package's
+row stage (`rows.map_rows`) that parses each distinct robots body ONCE per
+task (memoized) and then applies longest-prefix matching per row. Pages
+whose domain has no robots row are allowed (fetch-failure convention).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .rows import map_rows
 
 Rules = dict[str, list[tuple[bool, str]]]
 
@@ -81,38 +78,28 @@ def robots_filter(
 ) -> DataFrame:
     """(url, ...) x (host, robots_txt) -> url, host, path, allowed(0/1).
 
-    The robots frame is broadcast; the decision UDF memoizes parsed rule
-    groups per distinct body within each Arrow batch."""
+    The robots frame is broadcast; the decision kernel memoizes parsed
+    rule groups per distinct body within each task."""
     with_parts = pages.select(
         "url",
         F.try_parse_url(F.col("url"), F.lit("HOST")).alias("host"),
         F.try_parse_url(F.col("url"), F.lit("PATH")).alias("path"),
     )
     joined = with_parts.join(F.broadcast(robots), "host", "left")
+    cache: dict[str, Rules] = {}
 
-    def decide(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def decide(url: str, host: str, path: str, txt: str | None) -> list[dict]:
+        allowed = 1
+        if txt is not None and path is not None:
+            groups = cache.get(txt)
+            if groups is None:
+                groups = cache[txt] = parse_robots(txt)
+            allowed = int(is_allowed(groups, agent, path))
+        return [{"url": url, "host": host, "path": path, "allowed": allowed}]
 
-        cache: dict[str, Rules] = {}
-        for pdf in batches:
-            out = []
-            for txt, path in zip(pdf["robots_txt"], pdf["path"]):
-                if txt is None or path is None:
-                    out.append(1)
-                    continue
-                groups = cache.get(txt)
-                if groups is None:
-                    groups = cache[txt] = parse_robots(txt)
-                out.append(1 if is_allowed(groups, agent, path) else 0)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "host": pdf["host"],
-                    "path": pdf["path"],
-                    "allowed": pd.array(out, dtype="int64"),
-                }
-            )
-
-    return joined.mapInPandas(
-        decide, schema="url string, host string, path string, allowed long"
+    return map_rows(
+        joined,
+        ["url", "host", "path", "robots_txt"],
+        T.StructType.fromDDL("url string, host string, path string, allowed long"),
+        decide,
     )

@@ -5,22 +5,21 @@ what was actually crawled, yielding per-domain coverage statistics.
 
 Spark shape: sitemap XML bodies are per-domain documents built with one
 groupBy + collect_list (bounded by a domain's advertised url count, the
-same cardinality a real sitemap file has); parsing is an Arrow-batched
-pandas UDF over stdlib ElementTree; the audit is one full-outer equi-join
-on (host, url) followed by a per-host aggregate.
+same cardinality a real sitemap file has); building and parsing the XML
+are per-row kernels over stdlib ElementTree, mapped by the package's row
+stage (`rows.map_rows`); the audit is one full-outer equi-join on
+(host, url) followed by a per-host aggregate.
 """
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .rows import map_rows
 
 _NS = "http://www.sitemaps.org/schemas/sitemap/0.9"
 
@@ -59,21 +58,12 @@ def sitemaps_from_pages(
     grouped = adv.groupBy("host").agg(
         F.sort_array(F.collect_list("url")).alias("urls")
     )
-
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "host": pdf["host"],
-                    "sitemap_xml": [
-                        build_sitemap(list(us)) for us in pdf["urls"]
-                    ],
-                }
-            )
-
-    return grouped.mapInPandas(build, schema="host string, sitemap_xml string")
+    return map_rows(
+        grouped,
+        ["host", "urls"],
+        T.StructType.fromDDL("host string, sitemap_xml string"),
+        lambda host, urls: [{"host": host, "sitemap_xml": build_sitemap(urls)}],
+    )
 
 
 def sitemap_coverage(pages: DataFrame, sitemaps: DataFrame) -> DataFrame:
@@ -81,25 +71,16 @@ def sitemap_coverage(pages: DataFrame, sitemaps: DataFrame) -> DataFrame:
     n_crawled, n_matched (advertised AND crawled). The sitemap side is
     re-expanded through the REAL XML parser, so the statistic exercises
     build -> parse -> join end-to-end."""
-
-    def explode_xml(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            hosts, urls = [], []
-            for host, xml_text in zip(pdf["host"], pdf["sitemap_xml"]):
-                for u in parse_sitemap(xml_text):
-                    hosts.append(host)
-                    urls.append(u)
-            yield pd.DataFrame({"host": hosts, "url": urls})
-
     # distinct BOTH sides: a re-crawled url (or a sitemap listing one loc
     # twice) must count once, or the full-outer join multiplies rows and
     # the audit reports >100% coverage
     advertised = (
-        sitemaps.mapInPandas(explode_xml, schema="host string, url string")
+        map_rows(
+            sitemaps,
+            ["host", "sitemap_xml"],
+            T.StructType.fromDDL("host string, url string"),
+            lambda host, xml: ({"host": host, "url": u} for u in parse_sitemap(xml)),
+        )
         .distinct()
         .withColumn("adv", F.lit(1))
     )

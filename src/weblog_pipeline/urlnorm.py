@@ -14,21 +14,20 @@ Normalizations applied (the RFC's semantics-preserving set):
     the common crawler convention (this one is convention, not RFC)
   * fragment dropped (never sent to the server)
 
-Spark shape: an Arrow-batched pandas UDF (stdlib urllib only) — string
-surgery with stateful parsing is exactly the documented UDF escape hatch;
-everything upstream/downstream of the column stays JVM-side.
+Spark shape: a per-row kernel (stdlib urllib only) mapped by the
+package's row stage (`rows.map_rows`) — string surgery with stateful
+parsing is exactly the documented UDF escape hatch; everything
+upstream/downstream of the column stays JVM-side.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 from urllib.parse import parse_qsl, urlencode, urlsplit
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .rows import map_rows
 
 _UNRESERVED = set(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
@@ -120,21 +119,9 @@ def normalize_url(url: str) -> str | None:
 
 def normalize_urls(df: DataFrame, col: str = "url") -> DataFrame:
     """Add url_norm (None for unparseable rows) beside the raw column."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    col: pdf[col],
-                    "url_norm": [
-                        normalize_url(u) if u is not None else None
-                        for u in pdf[col]
-                    ],
-                }
-            )
-
-    return df.select(col).mapInPandas(
-        run, schema=f"{col} string, url_norm string"
+    return map_rows(
+        df,
+        [col],
+        T.StructType.fromDDL(f"{col} string, url_norm string"),
+        lambda u: [{col: u, "url_norm": None if u is None else normalize_url(u)}],
     )

@@ -7,26 +7,29 @@ Payloads here are the raw html bytes, optionally zlib/gzip-compressed
 per record (the common crawl layout); WARC-Date carries microseconds via
 the WARC 1.1 fractional-second form.
 
-Spark shape: encode/decode are Arrow-batched pandas UDF stages
-(mapInPandas) — the record walker is pure byte arithmetic driven by
-Content-Length (never a delimiter split, which a payload could spoof), and
-a whole .warc file is one input row via ``spark.read.format("binaryFile")``,
-so files parallelize across executors while records inside a file stay
-together, mirroring how a production crawl reader assigns WARC files to
-tasks.
+Spark shape: encode and decode are per-row kernels mapped by the
+package's row stage (`rows.map_rows`): one record per page on encode,
+0..n pages per blob on decode. The record walker is pure byte arithmetic
+driven by Content-Length (never a delimiter split, which a payload could
+spoof), and a whole .warc file is one input row, so files parallelize
+across executors while records inside a file stay together, mirroring how
+a production crawl reader assigns WARC files to tasks.
 """
 
 from __future__ import annotations
 
 import zlib
 from collections.abc import Iterator
+from datetime import datetime, timezone
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .rows import map_rows
+
 if TYPE_CHECKING:
-    import pandas as pd
+    import pyarrow as pa
 
 WARC_VERSION = b"WARC/1.1"
 
@@ -48,14 +51,18 @@ PAGE_SCHEMA = T.StructType(
 
 
 def _format_ts(ts) -> bytes:
+    if ts is None:
+        raise ValueError("a WARC record needs a WARC-Date")
     # WARC 1.1 permits fractional seconds; microseconds survive roundtrip
     return ts.strftime("%Y-%m-%dT%H:%M:%S.%fZ").encode()
 
 
-def _parse_ts(raw: bytes):
-    import pandas as pd
-
-    return pd.Timestamp(raw.decode().rstrip("Z"))
+def _parse_ts(raw: bytes) -> datetime:
+    """WARC-Date -> naive UTC datetime (an explicit offset is converted)."""
+    ts = datetime.fromisoformat(raw.decode().rstrip("Z"))
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    return ts
 
 
 def build_record(url: str, ts, html: bytes, compress: bool = False) -> bytes:
@@ -128,62 +135,40 @@ def walk_records(blob: bytes) -> Iterator[tuple[str, object, bytes]]:
 
 def encode_warc(pages: DataFrame, compress: bool = False) -> DataFrame:
     """(url, warc_ts, html) -> one WARC record (binary) per page."""
-
-    def enc(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "record": [
-                        build_record(u, t, bytes(h), compress)
-                        for u, t, h in zip(
-                            pdf["url"], pdf["warc_ts"], pdf["html"]
-                        )
-                    ],
-                }
-            )
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(
-        enc, schema=RECORD_SCHEMA
+    return map_rows(
+        pages,
+        ["url", "warc_ts", "html"],
+        RECORD_SCHEMA,
+        lambda u, t, h: [{"url": u, "warc_ts": t, "record": build_record(u, t, h, compress)}],
     )
 
 
 def decode_warc_records(records: DataFrame, col: str = "record") -> DataFrame:
     """Binary WARC records (one or MANY concatenated per row) -> pages."""
-
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            urls, tss, htmls = [], [], []
-            for blob in pdf[col]:
-                for url, ts, html in walk_records(bytes(blob)):
-                    urls.append(url)
-                    tss.append(ts)
-                    htmls.append(html)
-            yield pd.DataFrame({"url": urls, "warc_ts": tss, "html": htmls})
-
-    return records.mapInPandas(dec, schema=PAGE_SCHEMA)
+    return map_rows(
+        records,
+        [col],
+        PAGE_SCHEMA,
+        lambda blob: (
+            {"url": u, "warc_ts": t, "html": h} for u, t, h in walk_records(blob)
+        ),
+    )
 
 
 def write_warc_files(pages: DataFrame, path: str, compress: bool = True) -> None:
     """Materialize pages as .warc files, one per partition (records
     concatenated) — parquet carrier keeps the write Spark-native here;
     a production sink would stream to .warc.gz objects the same way."""
-    recs = encode_warc(pages, compress=compress)
 
-    def concat(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def concat(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
 
-        chunks = [bytes(b) for pdf in batches for b in pdf["record"]]
-        yield pd.DataFrame({"warc": [b"".join(chunks)]})
+        blob = b"".join(b for rb in batches for b in rb.column(0).to_pylist())
+        yield pa.RecordBatch.from_pydict({"warc": [blob]})
 
-    recs.select("record").mapInPandas(concat, schema="warc binary").write.mode(
-        "overwrite"
-    ).parquet(path)
+    encode_warc(pages, compress=compress).select("record").mapInArrow(
+        concat, schema="warc binary"
+    ).write.mode("overwrite").parquet(path)
 
 
 def read_warc_files(spark, path: str) -> DataFrame:

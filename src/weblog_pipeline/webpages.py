@@ -1,24 +1,24 @@
 """Materialize the webpages input table as a Spark DataFrame.
 
-Two deterministic sources (generate.py): index-derived synthetic pages
-(spark.range -> mapInPandas, fully partition-parallel — used by unit tests
-and the benchmark) and pages derived from the driver-testdata ``documents``
-table (used by the SQL-checked parse round-trip / flagship query, because a
-SQL oracle can re-derive the same facts from ``documents`` with integer
-arithmetic).
+Two deterministic sources (generate.py), each a per-row kernel mapped by
+the package's row stage (`rows.map_rows`): index-derived synthetic pages
+(spark.range -> one page per id, fully partition-parallel — used by unit
+tests and the benchmark) and pages derived from the driver-testdata
+``documents`` table (used by the SQL-checked parse round-trip / flagship
+query, because a SQL oracle can re-derive the same facts from
+``documents`` with integer arithmetic).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
-from .generate import gen_page, page_from_doc
+from .generate import Page, gen_page, page_from_doc
+from .rows import map_rows
 
 if TYPE_CHECKING:
-    import pandas as pd
     from pyspark.sql import DataFrame, SparkSession
 
 WEBPAGES_SCHEMA = T.StructType(
@@ -32,47 +32,24 @@ WEBPAGES_SCHEMA = T.StructType(
 )
 
 
-def _pages_to_pdf(pages) -> "pd.DataFrame":
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "url": [p.url for p in pages],
-            "warc_ts": [pd.Timestamp(p.warc_ts_us, unit="us") for p in pages],
-            "html": [p.html for p in pages],
-            "text": [p.text for p in pages],
-            "lang": [p.lang for p in pages],
-        }
-    )
+def _row(p: Page) -> list[dict]:
+    # an int is the raw value of Arrow's timestamp[us]: no datetime built
+    return [{**vars(p), "warc_ts": p.warc_ts_us}]
 
 
 def generate_webpages(
     spark: "SparkSession", n_pages: int, partitions: int | None = None
 ) -> "DataFrame":
     """n_pages index-derived synthetic pages, generated in parallel."""
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            if len(pdf):
-                yield _pages_to_pdf([gen_page(int(i)) for i in pdf["id"]])
-
     rng = spark.range(n_pages, numPartitions=partitions)
-    return rng.mapInPandas(gen, schema=WEBPAGES_SCHEMA)
+    return map_rows(rng, ["id"], WEBPAGES_SCHEMA, lambda i: _row(gen_page(i)))
 
 
 def webpages_from_documents(documents: "DataFrame") -> "DataFrame":
     """Derive one webpage per ``documents`` row (doc_id -> url/events)."""
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            if len(pdf):
-                yield _pages_to_pdf(
-                    [
-                        page_from_doc(int(d), t, lg)
-                        for d, t, lg in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ]
-                )
-
-    return documents.select("doc_id", "text", "lang").mapInPandas(
-        gen, schema=WEBPAGES_SCHEMA
+    return map_rows(
+        documents,
+        ["doc_id", "text", "lang"],
+        WEBPAGES_SCHEMA,
+        lambda d, t, lg: _row(page_from_doc(d, t, lg)),
     )

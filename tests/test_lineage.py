@@ -434,3 +434,70 @@ def test_main_run_id_resumes_after_kill(spark, tmp_path):
     assert logs.select("observed_ts").distinct().count() == 1
     _assert_same_rows(logs.drop("observed_ts"), want.read("log_records").drop("observed_ts"))
     _assert_same_rows(got.read("page_texts"), want.read("page_texts"))
+
+
+RETRY_SCRIPT = '''
+import json, os, sys
+
+from pyspark import TaskContext
+
+from weblog_pipeline import parse, pipeline
+from weblog_pipeline.config import PipelineConfig
+from weblog_pipeline.session import build_session
+from weblog_pipeline.tableio import TableIO
+
+inp, out, marker, ts = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
+
+
+def crash_first_attempt(batches):
+    """Kill the Python worker on attempt 0 of partition 0, mid-parse."""
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        open(os.path.join(marker, f"stage-{ctx.stageId()}"), "w").close()
+        os._exit(1)
+    yield from parse._parse_arrow_batches(batches)
+
+
+def parse_events(webpages):
+    pruned = webpages.select("url", "warc_ts", "html", "lang")
+    return pruned.mapInArrow(crash_first_attempt, schema=parse.EVENT_SCHEMA)
+
+
+# defined in __main__, so cloudpickle ships it to the workers by value
+pipeline.parse_events = parse_events
+spark = build_session(master="local[2,2]")
+result = pipeline.build_pipeline(spark.read.parquet(inp), PipelineConfig(), observed_ts_us=ts)
+pipeline.run_to_sinks(spark, result, TableIO(spark, out), write_texts=True, run_id="r1")
+print(json.dumps(result.metrics))
+'''
+
+
+def test_retried_parse_task_writes_exactly_once(spark, tmp_path, input_path):
+    """A parse task whose Python worker dies on its first attempt is
+    retried by Spark (local[2,2]: two attempts per task). The sinks then
+    hold exactly a clean run's rows, the ledger's pages_in and records
+    equal a clean run's, and no staging directory is left behind."""
+    script, out, marker = tmp_path / "retry.py", str(tmp_path / "out"), tmp_path / "crashes"
+    script.write_text(RETRY_SCRIPT)
+    marker.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    done = subprocess.run(
+        [sys.executable, str(script), input_path, out, str(marker), str(OBSERVED_TS_US)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert os.listdir(marker), "the first attempt of partition 0 must have crashed"
+
+    assert_exact(spark, input_path, out)
+    rows = TableIO(spark, out).read("run_metrics").where("run_id = 'r1'").collect()
+    assert sum(r["pages_in"] for r in rows) == 120
+    summed = {}
+    for r in rows:
+        for sink, n in r["records"].items():
+            summed[sink] = summed.get(sink, 0) + n
+    assert {s: n for s, n in summed.items() if n} == expected_counts(spark, input_path)
+    staging = [
+        os.path.join(root, d) for root, dirs, _ in os.walk(out)
+        for d in dirs if d.startswith((".spark-staging", "_temporary"))
+    ]
+    assert not staging, staging

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from weblog_pipeline.rows import map_rows
 from weblog_pipeline.ops import corpus, dedup, multimodal, similarity, textstats
 
 DOCS = [
@@ -1549,8 +1550,12 @@ def test_truncated_bmp_is_quarantined(spark):
 
 def test_null_payload_is_quarantined_in_both_udfs(spark):
     """Review regression: a NULL payload must be quarantined (skip) or
-    raise ValueError (raise) in BOTH media UDFs — never a TypeError from
-    bytes(None) outside the try block."""
+    raise ValueError (raise) in every media decoder — never a TypeError
+    from bytes(None) outside the try block, and never the
+    NotImplementedError of a missing codec, which 'skip' cannot drop:
+    images under extract_media_metadata and resize_images, audio and
+    video under extract_media_metadata(fake=False), and the full-pixel
+    decode of media_ahash and media_phash."""
     media = spark.createDataFrame(
         [
             Row(media_id=0, payload=bytearray(multimodal.encode_bmp(2, 2, 1)),
@@ -1565,6 +1570,21 @@ def test_null_payload_is_quarantined_in_both_udfs(spark):
     assert [r["media_id"] for r in kept_meta] == [0]
     kept_resized = multimodal.resize_images(media, 2, 2, on_error="skip").collect()
     assert [r["media_id"] for r in kept_resized] == [0]
+
+    def metadata(df, on_error):
+        return multimodal.extract_media_metadata(df, fake=False, on_error=on_error)
+
+    av = [(0, multimodal.encode_wav(64, 3), "audio"), (1, None, "audio"),
+          (2, multimodal.encode_avi(8, 8, 2, 5), "video"), (3, None, "video")]
+    pixels = [(0, multimodal.encode_png(4, 4, 1), "image"), (1, None, "image"),
+              (2, multimodal.encode_jpeg(8, 8, 2), "image"), (3, None, "image")]
+    for stage, rows_in in ((metadata, av), (multimodal.media_ahash, pixels),
+                           (multimodal.media_phash, pixels)):
+        df = spark.createDataFrame(rows_in, schema=multimodal.MEDIA_SCHEMA)
+        assert sorted(r["media_id"] for r in stage(df, "skip").collect()) == [0, 2]
+        for null_id in (1, 3):
+            with pytest.raises(Exception, match="ValueError: empty"):
+                stage(df.where(f"media_id = {null_id}"), "raise").collect()
 
 
 def test_resize_images_through_spark(spark, docs_df):
@@ -1815,7 +1835,7 @@ def test_media_quarantine_skip_mode(spark, docs_df):
     ids=["ValueError", "struct.error", "IndexError", "NotImplementedError"],
 )
 def test_map_rows_on_error_contract(spark, exc):
-    """The one media row stage's quarantine: under 'skip' a ValueError,
+    """The one row stage's quarantine: under 'skip' a ValueError,
     struct.error or IndexError from the kernel drops EVERY output row of
     that input row, those yielded before the raise included; under
     'raise' it fails the job. NotImplementedError (a codec gap) fails the
@@ -1829,7 +1849,7 @@ def test_map_rows_on_error_contract(spark, exc):
         yield {"media_id": mid, "frame_idx": 1}
 
     def run(on_error):
-        return multimodal._map_rows(
+        return map_rows(
             df, ["media_id"], multimodal.FRAME_SCHEMA, two_frames, on_error
         ).collect()
 

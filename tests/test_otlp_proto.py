@@ -93,6 +93,17 @@ def test_encode_null_fields_proto3_defaults():
         op.encode_record(bad)
 
 
+def test_spark_encode_null_fields_equals_encode_record(spark):
+    """The Spark stage encodes NULL fields as encode_record does: a NULL
+    ts_ns is the proto3 default 0, a NULL map is absent on the wire."""
+    nulls = dict(_row(4), ts_ns=None, event_attrs_s=None, res_attrs=None)
+    df = spark.createDataFrame([Row(**_row(3)), Row(**nulls)], spark.createDataFrame(
+        [Row(**_row(3))]).schema)
+    got = [bytes(r["pb"]) for r in op.encode_otlp_proto(df).collect()]
+    assert got == [op.encode_record(_row(3)), op.encode_record(nulls)]
+    assert op.decode_traces(got[1])[0]["ts_ns"] == 0
+
+
 def test_kind_table_shared_with_json_twin():
     from weblog_pipeline import otlp
 

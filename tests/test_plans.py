@@ -489,39 +489,51 @@ def test_every_checkpoint_goes_through_materialize():
     assert not outside, f"raw checkpoint calls outside session.materialize: {outside}"
 
 
-def test_media_stages_share_one_arrow_row_stage():
-    """One media row stage: ops/multimodal.py imports no pandas and calls
-    no mapInPandas; its one mapInArrow call and its one on_error
-    validation are both inside `_map_rows`, so every generator and decoder shares the
-    batch assembly and the quarantine contract."""
+def test_python_row_stages_share_map_rows():
+    """One row stage for the package, by an AST walk over every module of
+    src/weblog_pipeline: `mapInArrow` is called only by rows.map_rows, the
+    parse UDF and the WARC file fold; `mapInPandas` only by similarity's
+    two numpy batch kernels; the codec modules import no pandas; and the
+    one `on_error` membership check is the one inside map_rows, so every
+    per-row stage shares the batch assembly and the quarantine contract."""
     import ast
     import pathlib
 
-    path = pathlib.Path(__file__).resolve().parent.parent / "src/weblog_pipeline/ops/multimodal.py"
-    tree = ast.parse(path.read_text(), str(path))
-    helper = next(
-        fn for fn in tree.body if isinstance(fn, ast.FunctionDef) and fn.name == "_map_rows"
-    )
-    in_helper = {id(n) for n in ast.walk(helper)}
-    calls = {"mapInPandas": [], "mapInArrow": [], "on_error check": []}
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "src/weblog_pipeline"
+    allowed = {
+        "mapInArrow": {"rows.map_rows", "parse.parse_events", "warc.write_warc_files"},
+        "mapInPandas": {"ops.similarity._with_matmul_column", "ops.similarity.embedding_covariance"},
+        "on_error check": {"rows.map_rows"},
+    }
+    no_pandas = {"warc", "webpages", "otlp_proto", "robots", "sitemap", "urlnorm",
+                 "ops.multimodal", "rows"}
+    found = {k: [] for k in allowed}
     pandas_imports = []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Attribute) and node.attr in calls:
-            calls[node.attr].append((node.lineno, id(node) in in_helper))
-        if (
-            isinstance(node, ast.Compare)
-            and isinstance(node.left, ast.Name) and node.left.id == "on_error"
-            and isinstance(node.ops[0], (ast.In, ast.NotIn))
-        ):
-            calls["on_error check"].append((node.lineno, id(node) in in_helper))
-        if isinstance(node, ast.Import):
-            pandas_imports += [a.name for a in node.names if a.name.split(".")[0] == "pandas"]
-        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
-            pandas_imports.append(node.module)
+    for path in sorted(pkg.rglob("*.py")):
+        module = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            where = f"{module}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr in ("mapInArrow", "mapInPandas"):
+                    found[node.attr].append(where)
+                if (
+                    isinstance(node, ast.Compare)
+                    and isinstance(node.left, ast.Name) and node.left.id == "on_error"
+                    and isinstance(node.ops[0], (ast.In, ast.NotIn))
+                ):
+                    found["on_error check"].append(where)
+                names = []
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    names = [node.module or ""]
+                if module in no_pandas and any(n.split(".")[0] == "pandas" for n in names):
+                    pandas_imports.append(f"{module}:{node.lineno}")
     assert not pandas_imports, pandas_imports
-    assert not calls["mapInPandas"], calls["mapInPandas"]
-    assert [inside for _, inside in calls["mapInArrow"]] == [True], calls["mapInArrow"]
-    assert [inside for _, inside in calls["on_error check"]] == [True], calls["on_error check"]
+    for kind, where in found.items():
+        assert set(where) <= allowed[kind], (kind, sorted(set(where) - allowed[kind]))
+        assert len(where) == len(allowed[kind]), (kind, where)
 
 
 def test_bloom_prefilter_bits_side_broadcasts(spark):

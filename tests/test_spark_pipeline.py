@@ -9,10 +9,10 @@ import pytest
 
 from weblog_pipeline.config import DEFAULT_ROUTES, PipelineConfig
 from weblog_pipeline.enrich import attrs_rendered
-from weblog_pipeline.generate import gen_page
+from weblog_pipeline.generate import gen_page, page_from_doc
 from weblog_pipeline.oracle import process_page, render_attrs
 from weblog_pipeline.pipeline import build_pipeline
-from weblog_pipeline.webpages import generate_webpages
+from weblog_pipeline.webpages import generate_webpages, webpages_from_documents
 
 N_PAGES = 200
 OBS_US = 1_751_600_000_000_000
@@ -216,6 +216,22 @@ def _quarantined_page(spark, bad_html):
     return bad
 
 
+def test_webpages_from_documents_equal_page_from_doc(spark):
+    """One page per documents row, each equal to page_from_doc of it;
+    warc_ts holds the page's microseconds exactly."""
+    docs = [(i, f"doc {i} text {'é' * (i % 3)}", ("en", "de", "fr")[i % 3]) for i in range(40)]
+    df = spark.createDataFrame(docs, "doc_id long, text string, lang string").repartition(3)
+    got = {r["url"]: r for r in webpages_from_documents(df).collect()}
+    assert len(got) == len(docs)
+    for d in docs:
+        p = page_from_doc(*d)
+        r = got[p.url]
+        # collect() gives a naive local datetime; timestamp() reads it back
+        ts = r["warc_ts"]
+        us = int(ts.replace(microsecond=0).timestamp()) * 1_000_000 + ts.microsecond
+        assert (us, bytes(r["html"]), r["text"], r["lang"]) == (p.warc_ts_us, p.html, p.text, p.lang)
+
+
 def test_domain_counts(spark):
     cfg = PipelineConfig()
     webpages = generate_webpages(spark, N_PAGES, partitions=4)
@@ -280,8 +296,9 @@ def test_spark_submit_pyfiles_launch_path(tmp_path):
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:
         pytest.skip("spark-submit not on PATH")
+    zip_path = str(tmp_path / "pipeline.zip")
     subprocess.run(
-        ["bash", os.path.join(repo, "scripts", "package.sh")],
+        ["bash", os.path.join(repo, "scripts", "package.sh"), zip_path],
         check=True, capture_output=True,
     )
     out_dir = str(tmp_path / "out")
@@ -290,7 +307,7 @@ def test_spark_submit_pyfiles_launch_path(tmp_path):
         [
             spark_submit,
             "--master", "local[4]",
-            "--py-files", os.path.join(repo, "pipeline.zip"),
+            "--py-files", zip_path,
             "--conf", "spark.sql.mapKeyDedupPolicy=LAST_WIN",
             "--conf", "spark.sql.session.timeZone=UTC",
             os.path.join(repo, "main.py"),

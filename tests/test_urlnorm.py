@@ -5,7 +5,7 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from weblog_pipeline.urlnorm import normalize_url
+from weblog_pipeline.urlnorm import normalize_url, normalize_urls
 
 VECTORS = [
     ("HTTPS://Site.Example.COM:443/a/../b", "https://site.example.com/b"),
@@ -31,10 +31,24 @@ def test_canonical_vectors():
         assert normalize_url(raw) == want, raw
 
 
+UNPARSEABLE = ("", "notaurl", "ftp://h/x", "https://", "http://h:bad/x",
+               "http://[::1", "://x")
+
+
 def test_unparseable_quarantined_not_raised():
-    for bad in ("", "notaurl", "ftp://h/x", "https://", "http://h:bad/x",
-                "http://[::1", None if False else "://x"):
+    for bad in UNPARSEABLE:
         assert normalize_url(bad) is None, bad
+
+
+def test_normalize_urls_through_spark_matches_normalize_url(spark):
+    """The Spark stage keeps each input url beside normalize_url of it;
+    a NULL url stays NULL."""
+    urls = [raw for raw, _ in VECTORS] + list(UNPARSEABLE) + [None]
+    df = spark.createDataFrame([(u, i) for i, u in enumerate(urls)], "link string, i int")
+    got = [tuple(r) for r in normalize_urls(df, "link").collect()]
+    assert sorted(got, key=repr) == sorted(
+        [(u, None if u is None else normalize_url(u)) for u in urls], key=repr
+    )
 
 
 @settings(max_examples=300, deadline=None)

@@ -21,6 +21,24 @@ def _pages(spark, n=6):
     return spark.createDataFrame(rows)
 
 
+@pytest.mark.parametrize(
+    "raw, want",
+    [
+        (b"2025-07-04T00:00:00.123456Z", datetime.datetime(2025, 7, 4, 0, 0, 0, 123456)),
+        (b"2025-07-04T00:00:00Z", datetime.datetime(2025, 7, 4)),
+        # an explicit offset is converted, so every WARC-Date lands in UTC
+        (b"2025-07-04T02:00:00.5+02:00", datetime.datetime(2025, 7, 4, 0, 0, 0, 500000)),
+    ],
+)
+def test_warc_date_parses_to_naive_utc(raw, want):
+    assert warc._parse_ts(raw) == want
+
+
+def test_record_without_timestamp_is_corrupt():
+    with pytest.raises(ValueError, match="WARC-Date"):
+        warc.build_record("https://ex.com/", None, b"<p>x</p>")
+
+
 @pytest.mark.parametrize("compress", [False, True])
 def test_record_roundtrip(spark, compress):
     pages = _pages(spark)
