@@ -11,6 +11,14 @@ counters over event time with a watermark for late data.
 At scale this runs as readStream over an Iceberg/file source with
 maxFilesPerTrigger bounding micro-batch size; the same compiled plan
 (identical code path as batch) serves both modes.
+
+The stateful operators (span sessions, the keyed quota, the CMS and HDR
+cell counters, last-touch attribution and the four day-close monitors)
+are per-key steps mapped by one stateful stage, `_stateful`, the
+module's one `applyInPandasWithState` call. It hands a step its key's
+state and rows as plain tuples with exact values (None for NULL, an int
+for every integral column) and builds the output from the step's tuples,
+so no operator touches pandas.
 """
 
 from __future__ import annotations
@@ -102,7 +110,100 @@ def dedup_stream(
 
 
 # ---------------------------------------------------------------------------
-# custom stateful operator: span sessionization (applyInPandasWithState)
+# the stateful stage: per-key steps over applyInPandasWithState
+# ---------------------------------------------------------------------------
+
+
+def _stateful(df: DataFrame, keys: list[str], step, schema: str,
+              state_schema: str, mode: str) -> DataFrame:
+    """The one stateful stage: group `df` by `keys` and call
+    `step(state, rows) -> (new_state, out_rows)` once per key and
+    micro-batch. `state` is the key's stored tuple, or None before its
+    first update; `rows` are all of the key's rows in the micro-batch,
+    from every Arrow chunk, as tuples of `df`'s columns in select order.
+    A returned state of None leaves the stored one as it is; `out_rows`
+    are tuples in `schema`'s field order.
+
+    Values cross exactly both ways: NULL is None and every integral
+    column is an int. pandas would hand a nullable BIGINT over as
+    float64 (NaN for NULL, and 1755000000123456789 beside a NULL reads
+    back 21 ns off), so integral columns cross as strings, and the
+    output is built from object columns.
+    """
+    from pyspark.sql.types import IntegralType, StructType
+
+    ints = [isinstance(f.dataType, IntegralType) for f in df.schema]
+    names = StructType.fromDDL(schema).fieldNames()
+    # the keys keep their types (the state store's key schema); the rows
+    # ride beside them as positional copies, integral ones as strings
+    wire = df.select(*keys, *(
+        (F.col(c).cast("string") if i else F.col(c)).alias(f"_{n}")
+        for n, (c, i) in enumerate(zip(df.columns, ints))
+    ))
+
+    def apply(_key, chunks, state):
+        import pandas as pd
+
+        rows = []
+        for pdf in chunks:
+            vals = pdf.iloc[:, len(keys):].astype(object)
+            vals = vals.where(vals.notna(), None)
+            rows.extend(zip(*(
+                [None if v is None else int(v) for v in col] if i else col.tolist()
+                for (_, col), i in zip(vals.items(), ints)
+            )))
+        new, out = step(state.getOption, rows)
+        if new is not None:
+            state.update(new)
+        yield pd.DataFrame({
+            name: pd.Series([r[j] for r in out], dtype=object)
+            for j, name in enumerate(names)
+        })
+
+    return wire.groupBy(*keys).applyInPandasWithState(
+        apply, outputStructType=schema, stateStructType=state_schema,
+        outputMode=mode, timeoutConf="NoTimeout",
+    )
+
+
+def _nulls_last(*values) -> list:
+    """Sort key over `values` that orders NULLs after every value, as
+    pandas' sort_values did, instead of raising on None < int."""
+    return [(v is None, v) for v in values]
+
+
+def _close_days(rows, day, n, close, fold=None):
+    """The day-close loop of the per-day monitors, over rows of (key,
+    day, ...): walk them in (day, ...) order, NULL days skipped (a row
+    without a timestamp has no day), and call `close(day, n)` on the open
+    day when a later day's first row arrives; `fold(row)`, if given, sees
+    each row after any close. Returns the still-open (day, n)."""
+    for row in sorted((r for r in rows if r[1] is not None),
+                      key=lambda r: _nulls_last(*r[1:])):
+        if row[1] != day:
+            if day is not None:
+                close(day, n)
+            day, n = row[1], 0
+        n += 1
+        if fold:
+            fold(row)
+    return day, n
+
+
+def _day():
+    """The event-time day of `ts`, in days since the epoch."""
+    return F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400").alias("day")
+
+
+def _count_step(state, rows):
+    """A sketch cell's running counter over rows of its key: emits the
+    new total, which only grows, so the final value is max(cnt)."""
+    cnt = (state[0] if state else 0) + len(rows)
+    return (cnt,), [(*rows[0], cnt)]
+
+
+# ---------------------------------------------------------------------------
+# stateful operator: span sessionization
 # ---------------------------------------------------------------------------
 
 SESSION_SCHEMA = (
@@ -114,7 +215,7 @@ _SESSION_STATE_SCHEMA = "n long, first long, last long, maxsev int"
 
 def span_sessions_stateful(logs: DataFrame) -> DataFrame:
     """Custom STATEFUL streaming operator: per-span session summaries that
-    accumulate across micro-batches via applyInPandasWithState.
+    accumulate across micro-batches in the state store.
 
     The reference has no cross-batch state (connector.go:120-144 is
     stateless per ConsumeTraces call); this is a north-rule/brief addition:
@@ -129,46 +230,20 @@ def span_sessions_stateful(logs: DataFrame) -> DataFrame:
     row per live span, hash-partitioned by span_id (the groupBy key), and
     Spark's HDFS-backed state store checkpoints it per batch.
     """
-    import pandas as pd
 
-    def summarize(key, pdfs, state):
-        if state.exists:
-            n, first, last, maxsev = state.get
-        else:
-            n, first, last, maxsev = 0, None, None, None
-        for pdf in pdfs:
-            n += len(pdf)
-            lo = int(pdf["ts_ns"].min())
-            hi = int(pdf["ts_ns"].max())
-            first = lo if first is None else min(first, lo)
-            last = hi if last is None else max(last, hi)
-            # NULL severities arrive as NaN through Arrow; like the batch
-            # twin's MAX, they are ignored (all-NULL span -> NULL), and
-            # negative severities (int32-wrap values) are preserved — a
-            # `max(0, ...)` floor would diverge from the groupBy twin
-            sv = pdf["severity_number"].dropna()
-            if len(sv):
-                batch_max = int(sv.max())
-                maxsev = batch_max if maxsev is None else max(maxsev, batch_max)
-        state.update((n, first, last, maxsev))
-        yield pd.DataFrame(
-            {
-                "span_id": [key[0]],
-                "n_events": [n],
-                "first_ts_ns": [first],
-                "last_ts_ns": [last],
-                "max_severity": [maxsev],
-            }
-        )
+    def summarize(state, rows):
+        n, first, last, maxsev = state or (0, None, None, None)
+        # like the batch twin's MIN/MAX, NULLs are ignored (an all-NULL
+        # span stays NULL) and negative (int32-wrap) severities are kept
+        ts = [v for v in (first, last, *(r[1] for r in rows)) if v is not None]
+        sev = [v for v in (maxsev, *(r[2] for r in rows)) if v is not None]
+        new = (n + len(rows), min(ts, default=None), max(ts, default=None),
+               max(sev, default=None))
+        return new, [(rows[0][0], *new)]
 
     pruned = logs.select("span_id", "ts_ns", "severity_number")
-    return pruned.groupBy("span_id").applyInPandasWithState(
-        summarize,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(pruned, ["span_id"], summarize, SESSION_SCHEMA,
+                     _SESSION_STATE_SCHEMA, "update")
 
 
 def span_sessions(logs: DataFrame) -> DataFrame:
@@ -229,7 +304,7 @@ def streaming_otlp_logs(
 
 
 # ---------------------------------------------------------------------------
-# custom stateful operator: per-key daily quota (applyInPandasWithState)
+# stateful operator: per-key daily quota
 # ---------------------------------------------------------------------------
 
 QUOTA_SCHEMA = (
@@ -254,46 +329,24 @@ def keyed_quota_stateful(events: DataFrame, k: int = 3) -> DataFrame:
     At 100 TB-equivalent rates the state is ONE counter per active
     (key, day) — fixed width, hash-partitioned by the grouping key.
     """
-    import pandas as pd
 
-    def quota(key, pdfs, state):
-        cnt = state.get[0] if state.exists else 0
-        # Materialize the whole group first: applyInPandasWithState may
-        # deliver one (user_id, win_start) group as multiple Arrow chunks
-        # in a single micro-batch with NO ordering guarantee, so sorting
-        # chunks independently would make seq/allowed depend on chunk
-        # boundaries. One group per (key, day) is micro-batch-bounded —
-        # concat is safe for a day stratum.
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        # reset_index matters: pandas aligns Series by index when building
-        # the output frame, so a permuted post-sort index would silently
-        # pair seq values with ARRIVAL-order rows
-        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        seqs = list(range(cnt + 1, cnt + len(pdf) + 1))
-        state.update((cnt + len(pdf),))
-        yield pd.DataFrame(
-            {
-                "event_id": pdf["event_id"].astype("int64"),
-                "user_id": [key[0]] * len(pdf),
-                "win_start": [key[1]] * len(pdf),
-                "seq": pd.Series(seqs, dtype="int32"),
-                "allowed": [s <= k for s in seqs],
-            }
-        )
+    def quota(state, rows):
+        cnt = state[0] if state else 0
+        # one (ts, event_id) order over the whole group: its Arrow chunks
+        # arrive in no guaranteed order
+        rows = sorted(rows, key=lambda r: _nulls_last(r[2], r[0]))
+        out = [(eid, user, win, seq, seq <= k)
+               for seq, (eid, user, _, win) in enumerate(rows, cnt + 1)]
+        return (cnt + len(rows),), out
 
     keyed = events.select(
         "event_id",
         "user_id",
-        "ts",
+        F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
         F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("win_start"),
     )
-    return keyed.groupBy("user_id", "win_start").applyInPandasWithState(
-        quota,
-        outputStructType=QUOTA_SCHEMA,
-        stateStructType=_QUOTA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(keyed, ["user_id", "win_start"], quota, QUOTA_SCHEMA,
+                     _QUOTA_STATE_SCHEMA, "append")
 
 
 #: emitted per updated CMS cell per micro-batch; counters are monotone so
@@ -317,22 +370,8 @@ def cms_stream(documents: DataFrame, depth: int | None = None,
     makes CMS the monitoring sketch. Contrast dedup_stream, whose state
     is one key per distinct content hash inside the watermark.
     """
-    import pandas as pd
-
     from .ops.dedup import lower_tokens_col
     from .ops.textstats import CMS_DEPTH, CMS_WIDTH, cms_cell_rows
-
-    def bump(key, pdfs, state):
-        cnt = state.get[0] if state.exists else 0
-        cnt += sum(len(p) for p in pdfs)
-        state.update((cnt,))
-        yield pd.DataFrame(
-            {
-                "row": pd.array([key[0]], dtype="int32"),
-                "bucket": pd.array([key[1]], dtype="int64"),
-                "cnt": pd.array([cnt], dtype="int64"),
-            }
-        )
 
     toks = documents.select(
         F.explode(lower_tokens_col()).alias("token")
@@ -342,13 +381,8 @@ def cms_stream(documents: DataFrame, depth: int | None = None,
         depth=CMS_DEPTH if depth is None else depth,
         width=CMS_WIDTH if width is None else width,
     )
-    return cells.groupBy("row", "bucket").applyInPandasWithState(
-        bump,
-        outputStructType=CMS_CELL_SCHEMA,
-        stateStructType=_CMS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(cells.select("row", "bucket"), ["row", "bucket"], _count_step,
+                     CMS_CELL_SCHEMA, _CMS_STATE_SCHEMA, "append")
 
 
 #: streaming HDR histogram cells: running totals are append-safe because
@@ -372,31 +406,12 @@ def hdr_stream(events: DataFrame, bucket_width: float = 10.0) -> DataFrame:
     pass; that is what makes fixed-width histograms THE production
     latency-SLO sketch (HDR/DDSketch shape).
     """
-    import pandas as pd
-
-    def bump(key, pdfs, state):
-        cnt = state.get[0] if state.exists else 0
-        cnt += sum(len(p) for p in pdfs)
-        state.update((cnt,))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "bucket": pd.array([key[1]], dtype="int32"),
-                "cnt": pd.array([cnt], dtype="int64"),
-            }
-        )
-
     cells = events.select(
         "event_type",
         F.floor(F.col("value") / F.lit(bucket_width)).cast("int").alias("bucket"),
     )
-    return cells.groupBy("event_type", "bucket").applyInPandasWithState(
-        bump,
-        outputStructType=HDR_CELL_SCHEMA,
-        stateStructType=_HDR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(cells, ["event_type", "bucket"], _count_step,
+                     HDR_CELL_SCHEMA, _HDR_STATE_SCHEMA, "append")
 
 
 #: emitted once per conversion, as it arrives (append-safe: an
@@ -418,8 +433,8 @@ def attribution_stateful(
     (touch_us, touch_id, touch_type) triple per live user in the state
     store — the user's latest touch so far — and every conversion emits
     its verdict the moment it arrives (append mode). Within a
-    micro-batch the group is concat'd then sorted by (ts_us, event_id)
-    — the keyed_quota chunk discipline — so processing order IS the
+    micro-batch the group is sorted by (ts_us, event_id) — the
+    keyed_quota discipline — so processing order IS the
     strictly-earlier order: a touch sharing the conversion's timestamp
     with a lower event_id lands in state before the conversion, one
     with a higher id after it, reproducing the batch twin's tie rule
@@ -430,52 +445,25 @@ def attribution_stateful(
     candidates from scratch each run); the lookback window applies at
     emit time, so stale touches cost nothing but their row.
     """
-    import pandas as pd
-
     from .aggregate import ATTRIBUTION_WINDOW_US
 
     win = ATTRIBUTION_WINDOW_US if window_us is None else window_us
     touches = set(touch_types)
 
-    def attrib(key, pdfs, state):
-        if state.exists:
-            cur_us, cur_id, cur_type = state.get
-        else:
-            cur_us, cur_id, cur_type = None, None, None
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts_us", "event_id"]).reset_index(drop=True)
-        out = {k: [] for k in
-               ("conv_id", "touch_id", "touch_type", "delta_us")}
-        for eid, etype, us in zip(
-            pdf["event_id"], pdf["event_type"], pdf["ts_us"]
-        ):
+    def attrib(state, rows):
+        cur_us, cur_id, cur_type = state or (None, None, None)
+        out = []
+        for eid, user, etype, us in sorted(rows, key=lambda r: _nulls_last(r[3], r[0])):
             if etype in touches:
                 if cur_us is None or (us, eid) > (cur_us, cur_id):
-                    cur_us, cur_id, cur_type = int(us), int(eid), etype
+                    cur_us, cur_id, cur_type = us, eid, etype
             elif etype == conversion_type:
-                if cur_us is not None and int(us) - cur_us <= win:
-                    out["conv_id"].append(int(eid))
-                    out["touch_id"].append(cur_id)
-                    out["touch_type"].append(cur_type)
-                    out["delta_us"].append(int(us) - cur_us)
+                if cur_us is not None and us - cur_us <= win:
+                    out.append((eid, user, cur_id, cur_type, us - cur_us))
                 else:
-                    out["conv_id"].append(int(eid))
-                    out["touch_id"].append(-1)
-                    out["touch_type"].append("none")
-                    out["delta_us"].append(-1)
-        if cur_us is not None:
-            state.update((cur_us, cur_id, cur_type))
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.array(out["conv_id"], dtype="int64"),
-                "user_id": pd.array(
-                    [key[0]] * len(out["conv_id"]), dtype="int64"
-                ),
-                "touch_id": pd.array(out["touch_id"], dtype="int64"),
-                "touch_type": out["touch_type"],
-                "delta_us": pd.array(out["delta_us"], dtype="int64"),
-            }
-        )
+                    out.append((eid, user, -1, "none", -1))
+        # a user with no touch yet keeps no state row
+        return (None if cur_us is None else (cur_us, cur_id, cur_type)), out
 
     keyed = events.select(
         "event_id",
@@ -483,13 +471,8 @@ def attribution_stateful(
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        attrib,
-        outputStructType=ATTR_SCHEMA,
-        stateStructType=_ATTR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(keyed, ["user_id"], attrib, ATTR_SCHEMA,
+                     _ATTR_STATE_SCHEMA, "append")
 
 
 ANOM_SCHEMA = (
@@ -514,63 +497,28 @@ def anomaly_stream(events: DataFrame, z: int = 2,
     verbatim on every closed day (the open day has no verdict yet —
     the batch-twin pytest drops each key's last day before comparing).
 
-    Rows are day-sorted within each micro-batch (the keyed_quota chunk
+    Rows are day-sorted within each micro-batch (the keyed_quota
     discipline); cross-batch disorder is out of scope — production
     would put a watermark-delayed day-close upstream.
     """
-    import pandas as pd
 
-    def step(key, pdfs, state):
-        if state.exists:
-            hd, hc, cur_day, cur_cnt = state.get
-            hd, hc = list(hd), list(hc)
-        else:
-            hd, hc, cur_day, cur_cnt = [], [], None, 0
-        out = []
+    def step(state, rows):
+        hd, hc, day, n = state or ([], [], None, 0)
+        hd, hc, out = list(hd), list(hc), []
 
         def close(day, cnt):
-            base = list(zip(hd[-7:], hc[-7:]))
-            w = len(base)
-            s1 = sum(c for _, c in base)
-            s2 = sum(c * c for _, c in base)
+            w, s1, s2 = len(hd), sum(hc), sum(c * c for c in hc)
             lhs = w * cnt - s1
             flag = w >= min_base_days and lhs * lhs > z * z * (w * s2 - s1 * s1)
-            out.append((key[0], day, cnt, w, s1, bool(flag)))
+            out.append((rows[0][0], day, cnt, w, s1, flag))
             hd.append(day)
             hc.append(cnt)
             del hd[:-7], hc[:-7]
 
-        days = sorted(
-            d for p in pdfs for d in p["day"].tolist()
-        )
-        for d in days:
-            if cur_day is None:
-                cur_day, cur_cnt = d, 0
-            elif d != cur_day:
-                close(cur_day, cur_cnt)
-                cur_day, cur_cnt = d, 0
-            cur_cnt += 1
-        state.update((hd, hc, cur_day, cur_cnt if cur_day is not None else 0))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["event_type", "day", "n_events", "base_days",
-                         "base_sum", "is_anomaly"],
-            )
+        return (hd, hc, *_close_days(rows, day, n, close)), out
 
-    cells = events.select(
-        "event_type",
-        F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400").alias(
-            "day"
-        ),
-    )
-    return cells.groupBy("event_type").applyInPandasWithState(
-        step,
-        outputStructType=ANOM_SCHEMA,
-        stateStructType=_ANOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(events.select("event_type", _day()), ["event_type"], step, ANOM_SCHEMA,
+                     _ANOM_STATE_SCHEMA, "append")
 
 
 def touch_conversion_join(
@@ -665,49 +613,21 @@ def cusum_stream(events: DataFrame, ref: int = 8,
     reproduces the same recurrence a batch pass over closed days
     computes (the batch-twin pytest runs the pure-Python recurrence).
     """
-    import pandas as pd
 
-    def step(key, pdfs, state):
-        if state.exists:
-            cur_day, cur_cnt, s = state.get
-        else:
-            cur_day, cur_cnt, s = None, 0, 0
+    def step(state, rows):
+        day, n, s = state or (None, 0, 0)
         out = []
 
-        def close(day, cnt, s_in):
-            s_new = max(0, s_in + (cnt - ref))
-            out.append((key[0], day, cnt, s_new, bool(s_new > h)))
-            return s_new
+        def close(day, cnt):
+            nonlocal s
+            s = max(0, s + (cnt - ref))
+            out.append((rows[0][0], day, cnt, s, s > h))
 
-        days = sorted(d for p in pdfs for d in p["day"].tolist())
-        for d in days:
-            if cur_day is None:
-                cur_day, cur_cnt = d, 0
-            elif d != cur_day:
-                s = close(cur_day, cur_cnt, s)
-                cur_day, cur_cnt = d, 0
-            cur_cnt += 1
-        state.update((cur_day, cur_cnt if cur_day is not None else 0, s))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["event_type", "day", "n_events", "cusum",
-                         "is_alarm"],
-            )
+        day, n = _close_days(rows, day, n, close)
+        return (day, n, s), out
 
-    cells = events.select(
-        "event_type",
-        F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400").alias(
-            "day"
-        ),
-    )
-    return cells.groupBy("event_type").applyInPandasWithState(
-        step,
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(events.select("event_type", _day()), ["event_type"], step,
+                     CUSUM_SCHEMA, _CUSUM_STATE_SCHEMA, "append")
 
 
 TREND_SCHEMA = (
@@ -721,8 +641,8 @@ _TREND_STATE_SCHEMA = (
 
 def trending_stream(events: DataFrame, window_days: int = 16,
                     recent_days: int = 3) -> DataFrame:
-    """Streaming twin of aggregate.trending_items — the NINTH stateful
-    op: per item the state store holds the trailing <= window_days
+    """Streaming twin of aggregate.trending_items: per item the state
+    store holds the trailing <= window_days
     closed (day, count) pairs plus the open day's running counter, a
     fixed-width row per live item forever. A day closes (and emits,
     append-safe) when a later day's first event arrives for that item;
@@ -737,15 +657,10 @@ def trending_stream(events: DataFrame, window_days: int = 16,
     within a micro-batch; cross-batch disorder is a watermark's job
     upstream.
     """
-    import pandas as pd
 
-    def step(key, pdfs, state):
-        if state.exists:
-            hd, hc, cur_day, cur_cnt = state.get
-            hd, hc = list(hd), list(hc)
-        else:
-            hd, hc, cur_day, cur_cnt = [], [], None, 0
-        out = []
+    def step(state, rows):
+        hd, hc, day, n = state or ([], [], None, 0)
+        hd, hc, out = list(hd), list(hc), []
 
         def close(day, cnt):
             hd.append(day)
@@ -761,26 +676,10 @@ def trending_stream(events: DataFrame, window_days: int = 16,
                 w_tot += w
                 if age < recent_days:
                     w_rec += w
-            out.append((key[0], day, n_ev, w_tot, w_rec,
+            out.append((rows[0][0], day, n_ev, w_tot, w_rec,
                         1 if 2 * w_rec > w_tot else 0))
 
-        days = sorted(d for p in pdfs for d in p["day"].tolist())
-        for d in days:
-            if cur_day is None:
-                cur_day, cur_cnt = d, 0
-            elif d != cur_day:
-                close(cur_day, cur_cnt)
-                cur_day, cur_cnt = d, 0
-            cur_cnt += 1
-        state.update(
-            (hd, hc, cur_day, cur_cnt if cur_day is not None else 0)
-        )
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["item", "day", "n_events", "w_total",
-                         "w_recent", "trending"],
-            )
+        return (hd, hc, *_close_days(rows, day, n, close)), out
 
     cells = (
         events.where(
@@ -789,18 +688,11 @@ def trending_stream(events: DataFrame, window_days: int = 16,
         )
         .select(
             F.get_json_object("props", "$.k").cast("long").alias("item"),
-            F.expr(
-                "unix_timestamp(date_trunc('day', ts)) DIV 86400"
-            ).alias("day"),
+            _day(),
         )
     )
-    return cells.groupBy("item").applyInPandasWithState(
-        step,
-        outputStructType=TREND_SCHEMA,
-        stateStructType=_TREND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _stateful(cells, ["item"], step, TREND_SCHEMA,
+                     _TREND_STATE_SCHEMA, "append")
 
 
 KMV_STREAM_SCHEMA = (
@@ -810,8 +702,8 @@ _KMV_STATE_SCHEMA = "hs array<long>, cur_day long"
 
 
 def kmv_stream(events: DataFrame, k: int = 64) -> DataFrame:
-    """Streaming twin of aggregate.kmv_audit — the TENTH stateful op,
-    and the reason KMV (not HLL) is the audit sketch this engine
+    """Streaming twin of aggregate.kmv_audit, and the reason KMV (not
+    HLL) is the audit sketch this engine
     ships: its state is just the k smallest distinct 52-bit hashes, a
     fixed-width sorted array maintained by plain insert, mergeable by
     min. Per event type the state holds that array plus the open day;
@@ -824,70 +716,34 @@ def kmv_stream(events: DataFrame, k: int = 64) -> DataFrame:
     Hashes are computed with Python's md5 in the state function —
     byte-identical to Spark's and DuckDB's md5 of the same string, so
     the emitted rows equal the batch op on the prefix (batch-twin
-    pytest).
+    pytest). A NULL user has no hash, as the batch op's NULL concat.
     """
+    import bisect
     import hashlib
-
-    import pandas as pd
 
     two52 = 1 << 52
 
-    def step(key, pdfs, state):
-        if state.exists:
-            hs, cur_day = state.get
-            hs = list(hs)
-        else:
-            hs, cur_day = [], None
-        out = []
+    def step(state, rows):
+        hs, day = state or ([], None)
+        hs, out = list(hs), []
 
-        def emit(day):
-            n_kept = len(hs)
+        def emit(day, _):
             h_k = hs[-1] if hs else 0
-            if n_kept < k:
-                est = n_kept
-            else:
-                est = (k - 1) * two52 // h_k
-            out.append((key[0], day, n_kept, h_k, est))
+            est = len(hs) if len(hs) < k else (k - 1) * two52 // h_k
+            out.append((rows[0][0], day, len(hs), h_k, est))
 
-        rows = sorted(
-            (int(d), int(u))
-            for p in pdfs
-            for d, u in zip(p["day"].tolist(), p["user_id"].tolist())
-        )
-        import bisect
-
-        for d, u in rows:
-            if cur_day is None:
-                cur_day = d
-            elif d != cur_day:
-                emit(cur_day)
-                cur_day = d
-            h = int(
-                hashlib.md5(f"kmv:{u}".encode()).hexdigest()[:13], 16
-            )
+        def add(row):
+            if row[2] is None:
+                return
+            h = int(hashlib.md5(f"kmv:{row[2]}".encode()).hexdigest()[:13], 16)
             if len(hs) < k or h < hs[-1]:
                 i = bisect.bisect_left(hs, h)
                 if i >= len(hs) or hs[i] != h:  # distinct-hash set
                     hs.insert(i, h)
                     del hs[k:]
-        state.update((hs, cur_day))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["event_type", "day", "n_kept", "h_k", "est"],
-            )
 
-    cells = events.select(
-        "event_type",
-        F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400").alias(
-            "day"
-        ),
-        "user_id",
-    )
-    return cells.groupBy("event_type").applyInPandasWithState(
-        step,
-        outputStructType=KMV_STREAM_SCHEMA,
-        stateStructType=_KMV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+        day, _ = _close_days(rows, day, 0, emit, add)
+        return (hs, day), out
+
+    return _stateful(events.select("event_type", _day(), "user_id"), ["event_type"],
+                     step, KMV_STREAM_SCHEMA, _KMV_STATE_SCHEMA, "append")

@@ -495,7 +495,10 @@ def test_python_row_stages_share_map_rows():
     parse UDF and the WARC file fold; `mapInPandas` only by similarity's
     two numpy batch kernels; the codec modules import no pandas; and the
     one `on_error` membership check is the one inside map_rows, so every
-    per-row stage shares the batch assembly and the quarantine contract."""
+    per-row stage shares the batch assembly and the quarantine contract.
+    Likewise `applyInPandasWithState` is called only by the stateful stage
+    streaming._stateful, the one place in streaming.py that imports
+    pandas."""
     import ast
     import pathlib
 
@@ -504,6 +507,7 @@ def test_python_row_stages_share_map_rows():
         "mapInArrow": {"rows.map_rows", "parse.parse_events", "warc.write_warc_files"},
         "mapInPandas": {"ops.similarity._with_matmul_column", "ops.similarity.embedding_covariance"},
         "on_error check": {"rows.map_rows"},
+        "applyInPandasWithState": {"streaming._stateful"},
     }
     no_pandas = {"warc", "webpages", "otlp_proto", "robots", "sitemap", "urlnorm",
                  "ops.multimodal", "rows"}
@@ -515,7 +519,9 @@ def test_python_row_stages_share_map_rows():
         for top in tree.body:
             where = f"{module}.{getattr(top, 'name', '<module>')}"
             for node in ast.walk(top):
-                if isinstance(node, ast.Attribute) and node.attr in ("mapInArrow", "mapInPandas"):
+                if isinstance(node, ast.Attribute) and node.attr in (
+                    "mapInArrow", "mapInPandas", "applyInPandasWithState"
+                ):
                     found[node.attr].append(where)
                 if (
                     isinstance(node, ast.Compare)
@@ -528,7 +534,8 @@ def test_python_row_stages_share_map_rows():
                     names = [a.name for a in node.names]
                 elif isinstance(node, ast.ImportFrom):
                     names = [node.module or ""]
-                if module in no_pandas and any(n.split(".")[0] == "pandas" for n in names):
+                pandas = any(n.split(".")[0] == "pandas" for n in names)
+                if pandas and (module in no_pandas or module == "streaming" and where != "streaming._stateful"):
                     pandas_imports.append(f"{module}:{node.lineno}")
     assert not pandas_imports, pandas_imports
     for kind, where in found.items():

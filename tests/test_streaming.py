@@ -129,6 +129,10 @@ def test_stateful_sessions_null_and_negative_severity(spark, tmp_path):
         Row(span_id="allnull", ts_ns=20, severity_number=None),
         Row(span_id="negative", ts_ns=5, severity_number=-2),
         Row(span_id="negative", ts_ns=7, severity_number=None),
+        Row(span_id="nullts", ts_ns=None, severity_number=9),
+        Row(span_id="nullts", ts_ns=None, severity_number=None),
+        Row(span_id="bigts", ts_ns=None, severity_number=13),
+        Row(span_id="bigts", ts_ns=1755000000123456789, severity_number=None),
     ]
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
