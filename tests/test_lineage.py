@@ -501,3 +501,73 @@ def test_retried_parse_task_writes_exactly_once(spark, tmp_path, input_path):
         for d in dirs if d.startswith((".spark-staging", "_temporary"))
     ]
     assert not staging, staging
+
+
+class CacheLossIO(TableIO):
+    """After each chunk's page_texts write, drops the blocks of the parse
+    cache that write filled but keeps the cache entry, as an executor loss
+    would, so the log_records write must recompute the parse. Keeps, per
+    chunk, the cache's cached partitions before the drop, after it and
+    after the log_records write."""
+
+    def __init__(self, spark, location):
+        super().__init__(spark, location)
+        self.jsc, self.jvm = spark.sparkContext._jsc, spark._jvm
+        self.ids, self.cached = set(), []
+
+    def _cached_partitions(self):
+        # asks the (local mode: only) block manager itself; the UI's storage
+        # info is not told of a removeRdd
+        bm, rdds = self.jvm.org.apache.spark.SparkEnv.get().blockManager(), self.jsc.getPersistentRDDs()
+        block = self.jvm.org.apache.spark.storage.RDDBlockId
+        return sum(
+            bm.getStatus(block(i, p)).isDefined()
+            for i in self.ids for p in range(rdds.get(i).getNumPartitions())
+        )
+
+    def overwrite_partitions(self, df, table, partition_by):
+        before = set(self.jsc.getPersistentRDDs().keys())
+        super().overwrite_partitions(df, table, partition_by)
+        if table == "page_texts":
+            self.ids = set(self.jsc.getPersistentRDDs().keys()) - before
+            filled = self._cached_partitions()
+            master = self.jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+            for i in self.ids:
+                master.removeRdd(i, True)
+            self.cached.append([filled, self._cached_partitions()])
+        elif table == "log_records":
+            self.cached[-1].append(self._cached_partitions())
+
+
+def _ledger_sums(spark, out):
+    rows = TableIO(spark, out).read("run_metrics").where("run_id = 'r1'").collect()
+    records = {}
+    for r in rows:
+        for sink, n in r["records"].items():
+            records[sink] = records.get(sink, 0) + n
+    return sum(r["pages_in"] for r in rows), records
+
+
+def test_lost_parse_cache_between_writes_recomputes_exactly(
+    spark, tmp_path, input_path, two_file_chunks
+):
+    """With texts written, a chunk's cached parse loses its blocks between
+    its page_texts and log_records writes. The log_records write
+    recomputes the parse (the cache fills again), and the sinks, the
+    ledger's pages_in and its per-sink records equal a clean run's."""
+    out, clean = str(tmp_path / "out"), str(tmp_path / "clean")
+    lossy = CacheLossIO(spark, out)
+    build = lambda: build_pipeline(  # noqa: E731
+        spark.read.parquet(input_path), CFG, observed_ts_us=OBSERVED_TS_US
+    )
+    counts = run_to_sinks(spark, build(), lossy, write_texts=True, run_id="r1")
+    want = run_to_sinks(spark, build(), TableIO(spark, clean), write_texts=True, run_id="r1")
+
+    assert len(lossy.cached) == 2
+    for filled, dropped, refilled in lossy.cached:
+        assert filled > 0 and dropped == 0 and refilled > 0, lossy.cached
+    assert counts == want
+    assert_exact(spark, input_path, out)
+    assert _ledger_sums(spark, out) == _ledger_sums(spark, clean)
+    assert _ledger_sums(spark, out)[0] == 120
+    assert TableIO(spark, out).read("page_texts").count() == 120
