@@ -15,6 +15,11 @@ column (pandas coerces int+NULL to float64) is REJECTED outright, even
 if its values happen to hash equal here.
 
 Usage: python scripts/check_queries.py [sf_dir] [query ...]
+
+Run it with no other Spark driver live: its session's driver heap
+defaults to 16g (`session.py`), so beside a pytest run or another job on
+a box of about 15 GB of RAM one driver can be lost mid-run (every later
+query then fails with "Connection refused").
 """
 
 from __future__ import annotations

@@ -45,7 +45,12 @@ def map_rows(
     one of _QUARANTINED, every output row of that input row is dropped,
     mirroring the parse stage's corrupt-page handling — the right mode
     for a real crawl where a few truncated blobs must not kill a 100 TB
-    job). Checked here, when the plan is built."""
+    job). Checked here, when the plan is built.
+
+    Every datetime `fn` returns must be naive UTC or UTC-aware:
+    `from_pylist` reads an aware datetime's wall clock as UTC, so an
+    offset of +02:00 would land two hours late. No kernel returns another
+    offset (`warc._parse_ts` converts to naive UTC)."""
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     from pyspark.sql.pandas.types import to_arrow_schema

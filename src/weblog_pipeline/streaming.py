@@ -167,8 +167,8 @@ def _stateful(df: DataFrame, keys: list[str], step, schema: str,
 
 
 def _nulls_last(*values) -> list:
-    """Sort key over `values` that orders NULLs after every value, as
-    pandas' sort_values did, instead of raising on None < int."""
+    """Sort key over `values` that orders NULLs after every value, so a
+    NULL sort key sorts last instead of raising on None < int."""
     return [(v is None, v) for v in values]
 
 
@@ -716,7 +716,7 @@ def kmv_stream(events: DataFrame, k: int = 64) -> DataFrame:
     Hashes are computed with Python's md5 in the state function —
     byte-identical to Spark's and DuckDB's md5 of the same string, so
     the emitted rows equal the batch op on the prefix (batch-twin
-    pytest). A NULL user has no hash, as the batch op's NULL concat.
+    pytest). A NULL user adds no hash.
     """
     import bisect
     import hashlib
