@@ -19,7 +19,8 @@ Usage: python scripts/check_queries.py [sf_dir] [query ...]
 Run it with no other Spark driver live: its session's driver heap
 defaults to 16g (`session.py`), so beside a pytest run or another job on
 a box of about 15 GB of RAM one driver can be lost mid-run (every later
-query then fails with "Connection refused").
+query then fails with "Connection refused"; one such run failed its last
+130 queries).
 """
 
 from __future__ import annotations

@@ -3,6 +3,11 @@ with the scale property each plan is supposed to exhibit. Run after any
 operator change:
 
     python scripts/dump_plans.py
+
+Run it with no other Spark driver live: each driver's heap defaults to
+16g (`session.py`), and with three drivers at once on a box of about
+15 GB of RAM one lost its JVM mid-run (every later query then fails with
+"Connection refused").
 """
 
 from __future__ import annotations

@@ -22,6 +22,15 @@ from .session import materialize
 DEFAULT_SALT_BUCKETS = 16
 
 
+def epoch_day(col: str = "ts") -> Column:
+    """The day of timestamp `col` (a column name or SQL expression) as
+    a BIGINT count of days since 1970-01-01: the one epoch-day
+    expression of the package. Under the UTC session every day starts
+    at an epoch second divisible by 86400, so `epoch_day() * 86400` is
+    the epoch second of the day's midnight."""
+    return F.expr(f"unix_timestamp(date_trunc('day', {col})) DIV 86400")
+
+
 def topk(
     df: DataFrame, k: int, order: Sequence[Column], by: Sequence = ()
 ) -> DataFrame:
@@ -134,30 +143,28 @@ def trace_rollup(events: DataFrame, key: str = "trace_id") -> DataFrame:
     )
 
 
-def keyed_quota(
-    events: DataFrame, k: int = 3, key: str = "user_id"
-) -> DataFrame:
-    """Per-key daily quota enforcement — the crawl-budget/rate-cap
-    operator: within each (key, event-time day) the first `k` arrivals
+def keyed_quota(events: DataFrame, k: int = 3) -> DataFrame:
+    """Per-user daily quota enforcement — the crawl-budget/rate-cap
+    operator: within each (user, event-time day) the first `k` arrivals
     (by ts, then event_id — deterministic) are `allowed`, the rest are
     deferred. The batch twin of streaming.keyed_quota_stateful, and the
     oracle-checked definition both must satisfy.
 
-    Scale shape: ONE window partitioned by (key, day) — a bounded
-    stratum (a key's single day), never a key's full history and never
+    Scale shape: ONE window partitioned by (user, day) — a bounded
+    stratum (a user's single day), never a user's full history and never
     SinglePartition; the quota decision therefore shuffles each event
     exactly once on the same key the downstream per-key work would use.
 
     Output: event_id, user_id, win_start (epoch s), seq, allowed.
     """
-    win = F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("win_start")
-    w = Window.partitionBy(key, "win_start").orderBy("ts", "event_id")
+    win = (epoch_day() * 86400).alias("win_start")
+    w = Window.partitionBy("user_id", "win_start").orderBy("ts", "event_id")
     return (
-        events.select("event_id", key, "ts", win)
+        events.select("event_id", "user_id", "ts", win)
         .withColumn("seq", F.row_number().over(w))
         .select(
             "event_id",
-            key,
+            "user_id",
             "win_start",
             "seq",
             (F.col("seq") <= k).alias("allowed"),
@@ -165,7 +172,7 @@ def keyed_quota(
     )
 
 
-#: default conversion funnel over the events table.
+#: the conversion funnel over the events table.
 FUNNEL_STAGES = ("view", "click", "purchase")
 #: default conversion window: each stage must complete within a day of
 #: the previous one.
@@ -173,15 +180,10 @@ FUNNEL_WINDOW_S = 86_400
 
 
 def funnel_stages(
-    events: DataFrame,
-    stages: Sequence[str] = FUNNEL_STAGES,
-    window_s: int = FUNNEL_WINDOW_S,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
+    events: DataFrame, window_s: int = FUNNEL_WINDOW_S
 ) -> DataFrame:
-    """Ordered conversion funnel — per user, how deep into the stage
-    sequence did they get, where stage i only counts if its FIRST
+    """Ordered conversion funnel — per user, how deep into the
+    FUNNEL_STAGES sequence did they get, where stage i only counts if its FIRST
     qualifying event is STRICTLY after the user's stage-(i-1) completion
     time and within the window_s conversion window (a purchase before
     any click does not complete the funnel; one a month later does not
@@ -195,56 +197,53 @@ def funnel_stages(
     funnels a task and memory stays flat. Since reaching stage i implies
     stage i-1, stage = sum of reached-flags.
 
-    Output: user_id, stage (0..len(stages)).
+    Output: user_id, stage (0..len(FUNNEL_STAGES)).
     """
-    if not stages:
-        raise ValueError("funnel_stages needs at least one stage")
-    users = events.select(user_col).distinct()
+    users = events.select("user_id").distinct()
     reached: list[DataFrame] = []
     prev: DataFrame | None = None
-    for i, s in enumerate(stages):
-        ev = events.where(F.col(type_col) == s).select(user_col, ts_col)
+    for i, s in enumerate(FUNNEL_STAGES):
+        ev = events.where(F.col("event_type") == s).select("user_id", "ts")
         if prev is None:
-            cur = ev.groupBy(user_col).agg(F.min(ts_col).alias(f"_t{i}"))
+            cur = ev.groupBy("user_id").agg(F.min("ts").alias(f"_t{i}"))
         else:
             prev_t = F.col(f"_t{i - 1}")
             cur = (
-                ev.join(prev, user_col)
+                ev.join(prev, "user_id")
                 .where(
-                    (F.col(ts_col) > prev_t)
+                    (F.col("ts") > prev_t)
                     & (
-                        F.col(ts_col)
+                        F.col("ts")
                         <= prev_t + F.expr(f"INTERVAL {window_s} SECOND")
                     )
                 )
-                .groupBy(user_col)
-                .agg(F.min(ts_col).alias(f"_t{i}"))
+                .groupBy("user_id")
+                .agg(F.min("ts").alias(f"_t{i}"))
             )
-        reached.append(cur.select(user_col, F.lit(1).alias(f"_s{i}")))
+        reached.append(cur.select("user_id", F.lit(1).alias(f"_s{i}")))
         prev = cur
     out = users
     for r in reached:
-        out = out.join(r, user_col, "left")
+        out = out.join(r, "user_id", "left")
     stage = None
-    for i in range(len(stages)):
+    for i in range(len(FUNNEL_STAGES)):
         flag = F.coalesce(F.col(f"_s{i}"), F.lit(0))
         stage = flag if stage is None else stage + flag
-    return out.select(user_col, stage.cast("int").alias("stage"))
+    return out.select("user_id", stage.cast("int").alias("stage"))
 
 
-#: default last-touch attribution lookback: 7 days, in microseconds.
-ATTRIBUTION_WINDOW_US = 7 * 86_400 * 1_000_000
+#: attribution policy of the batch operators and their streaming twins:
+#: a conversion event is credited to the same user's touch events that
+#: precede it within a 7-day lookback window.
+ATTRIBUTION_TOUCH_TYPES = ("view", "click")
+ATTRIBUTION_CONVERSION_TYPE = "purchase"
+ATTRIBUTION_WINDOW_S = 7 * 86_400
+ATTRIBUTION_WINDOW_US = ATTRIBUTION_WINDOW_S * 1_000_000
 
 
-def cohort_retention(
-    events: DataFrame,
-    cohort_type: str = "signup",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Classic retention triangle: users are cohorted by the day of their
-    first `cohort_type` event; a cohort's day-N retention is the number
+    first `signup` event; a cohort's day-N retention is the number
     of distinct cohort members with ANY activity N days after cohorting
     (day 0 = the cohort day itself; pre-cohort activity is excluded).
 
@@ -259,22 +258,22 @@ def cohort_retention(
     Output: cohort_day_s (epoch s, BIGINT), day_offset (INT),
     n_users (BIGINT).
     """
-    day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
+    day_s = epoch_day() * 86400
     cohort = (
-        events.where(F.col(type_col) == cohort_type)
-        .groupBy(user_col)
+        events.where(F.col("event_type") == "signup")
+        .groupBy("user_id")
         .agg(F.min(day_s).alias("cohort_day_s"))
     )
     return (
-        events.select(user_col, day_s.alias("_day_s"))
-        .join(cohort, user_col)
+        events.select("user_id", day_s.alias("_day_s"))
+        .join(cohort, "user_id")
         .where(F.col("_day_s") >= F.col("cohort_day_s"))
         .select(
             "cohort_day_s",
             F.expr("CAST((_day_s - cohort_day_s) DIV 86400 AS INT)").alias(
                 "day_offset"
             ),
-            user_col,
+            "user_id",
         )
         .distinct()
         .groupBy("cohort_day_s", "day_offset")
@@ -282,15 +281,59 @@ def cohort_retention(
     )
 
 
-def attribution_last_touch(
+def _attribution_candidates(
     events: DataFrame,
-    touch_types: Sequence[str] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = ATTRIBUTION_WINDOW_US,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
+    """The conversions (conv_id, user_id, conv_us) and every (conversion,
+    touch) candidate pair of the attribution policy: the touch is the
+    same user's, strictly earlier in (ts, event_id) order and within
+    ATTRIBUTION_WINDOW_US. Both sides are bucketed by floor(ts_us /
+    window); a conversion in bucket b can only match touches in buckets
+    {b-1, b}, so each conversion probes exactly two buckets."""
+    # parquet timestamps read as NTZ, which unix_micros rejects; the UTC
+    # session timezone makes the LTZ cast an identical-instant no-op
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
+    window_us = ATTRIBUTION_WINDOW_US
+    etype = F.col("event_type")
+    conv = events.where(etype == ATTRIBUTION_CONVERSION_TYPE).select(
+        F.col("event_id").alias("conv_id"),
+        F.col("user_id"),
+        ts_us.alias("conv_us"),
+    )
+    touch = events.where(etype.isin(list(ATTRIBUTION_TOUCH_TYPES))).select(
+        F.col("event_id").alias("touch_id"),
+        F.col("user_id"),
+        ts_us.alias("touch_us"),
+        F.col("event_type").alias("touch_type"),
+    )
+    probes = conv.select(
+        "conv_id",
+        "user_id",
+        "conv_us",
+        F.explode(
+            F.array(
+                F.expr(f"conv_us DIV {window_us}"),
+                F.expr(f"conv_us DIV {window_us} - 1"),
+            )
+        ).alias("_bucket"),
+    )
+    cand = probes.join(
+        touch.withColumn("_bucket", F.expr(f"touch_us DIV {window_us}")),
+        ["user_id", "_bucket"],
+    ).where(
+        (
+            (F.col("touch_us") < F.col("conv_us"))
+            | (
+                (F.col("touch_us") == F.col("conv_us"))
+                & (F.col("touch_id") < F.col("conv_id"))
+            )
+        )
+        & (F.col("conv_us") - F.col("touch_us") <= F.lit(window_us))
+    )
+    return conv, cand
+
+
+def attribution_last_touch(events: DataFrame) -> DataFrame:
     """Last-touch attribution — an as-of join: each conversion is matched
     to the user's latest touch event (view/click) that is strictly
     earlier (in (ts, event_id) order) and within the lookback window;
@@ -310,52 +353,13 @@ def attribution_last_touch(
     if none), delta_us (-1 if none) — nullables coalesced in-engine so
     the oracle dtypes stay integral.
     """
-    # parquet timestamps read as NTZ, which unix_micros rejects; the UTC
-    # session timezone makes the LTZ cast an identical-instant no-op
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
-    conv = events.where(F.col(type_col) == conversion_type).select(
-        F.col("event_id").alias("conv_id"),
-        F.col(user_col),
-        ts_us.alias("conv_us"),
-    )
-    touch = events.where(F.col(type_col).isin(list(touch_types))).select(
-        F.col("event_id").alias("touch_id"),
-        F.col(user_col),
-        ts_us.alias("touch_us"),
-        F.col(type_col).alias("touch_type"),
-    )
-    probes = conv.select(
-        "conv_id",
-        user_col,
-        "conv_us",
-        F.explode(
-            F.array(
-                F.expr(f"conv_us DIV {window_us}"),
-                F.expr(f"conv_us DIV {window_us} - 1"),
-            )
-        ).alias("_bucket"),
-    )
-    cand = (
-        probes.join(
-            touch.withColumn("_bucket", F.expr(f"touch_us DIV {window_us}")),
-            [user_col, "_bucket"],
-        )
-        .where(
-            (
-                (F.col("touch_us") < F.col("conv_us"))
-                | (
-                    (F.col("touch_us") == F.col("conv_us"))
-                    & (F.col("touch_id") < F.col("conv_id"))
-                )
-            )
-            & (F.col("conv_us") - F.col("touch_us") <= F.lit(window_us))
-        )
-        .groupBy("conv_id")
-        .agg(F.max(F.struct("touch_us", "touch_id", "touch_type")).alias("_t"))
+    conv, cand = _attribution_candidates(events)
+    cand = cand.groupBy("conv_id").agg(
+        F.max(F.struct("touch_us", "touch_id", "touch_type")).alias("_t")
     )
     return conv.join(cand, "conv_id", "left").select(
         "conv_id",
-        user_col,
+        "user_id",
         F.coalesce(F.col("_t.touch_id"), F.lit(-1)).alias("touch_id"),
         F.coalesce(F.col("_t.touch_type"), F.lit("none")).alias("touch_type"),
         F.coalesce(
@@ -364,12 +368,7 @@ def attribution_last_touch(
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """Day-scoped user-journey transition matrix: for each user, order
     the day's events by (ts, event_id) and count consecutive
     (from_type -> to_type) pairs, then normalize each row of the matrix
@@ -384,11 +383,11 @@ def event_transitions(
 
     Output: from_type, to_type, n (BIGINT), p_bp (BIGINT).
     """
-    day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
-    w = Window.partitionBy(user_col, "_day_s").orderBy(ts_col, "event_id")
+    w = Window.partitionBy("user_id", "_day_s").orderBy("ts", "event_id")
     pairs = (
-        events.select(user_col, "event_id", ts_col, day_s.alias("_day_s"),
-                      F.col(type_col).alias("to_type"))
+        events.select("user_id", "event_id", "ts",
+                      (epoch_day() * 86400).alias("_day_s"),
+                      F.col("event_type").alias("to_type"))
         .withColumn("from_type", F.lag("to_type").over(w))
         .where(F.col("from_type").isNotNull())
         .groupBy("from_type", "to_type")
@@ -403,12 +402,16 @@ def event_transitions(
     )
 
 
+#: width of the fixed value buckets of the HDR histograms: floor(value /
+#: width) is a value's bucket in every histogram operator and its
+#: streaming twin.
+HDR_BUCKET_WIDTH = 10.0
+
+
 def value_percentiles(
     events: DataFrame,
-    bucket_width: float = 10.0,
     qs: Sequence[int] = (50, 95, 99),
     key_col: str = "event_type",
-    value_col: str = "value",
 ) -> DataFrame:
     """HDR-histogram percentiles — the production latency-SLO shape: the
     raw double is quantized to fixed-width buckets with floor(value /
@@ -427,10 +430,10 @@ def value_percentiles(
     scan, one histogram exchange, zero joins — the naive totals-join plan
     scans the event stream twice.
 
-    Output: <key_col>, q (INT), bucket (INT) — bucket * width is the
-    percentile's lower bound.
+    Output: <key_col>, q (INT), bucket (INT) — bucket * HDR_BUCKET_WIDTH
+    is the percentile's lower bound.
     """
-    b = F.floor(F.col(value_col) / F.lit(bucket_width)).cast("int")
+    b = F.floor(F.col("value") / F.lit(HDR_BUCKET_WIDTH)).cast("int")
     hist = (
         events.select(key_col, b.alias("bucket"))
         .groupBy(key_col, "bucket")
@@ -462,13 +465,7 @@ def value_percentiles(
     )
 
 
-def drift_psi(
-    events: DataFrame,
-    bucket_width: float = 10.0,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
+def drift_psi(events: DataFrame) -> DataFrame:
     """Population-stability-index drift monitor — the production check
     that a metric's distribution has not shifted between two periods:
     events split into baseline/current by epoch-day parity (a
@@ -489,29 +486,28 @@ def drift_psi(
     bounded by keys x buckets, independent of event count (the
     value_percentiles sketch discipline).
 
-    Output: <key_col>, n_base, n_cur, psi_sum (all BIGINT; psi_sum is in
+    Output: event_type, n_base, n_cur, psi_sum (all BIGINT; psi_sum is in
     ppm x micro-nat units — 1e-12 of a natural PSI point).
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    b = F.floor(F.col(value_col) / F.lit(bucket_width)).cast("int")
+    b = F.floor(F.col("value") / F.lit(HDR_BUCKET_WIDTH)).cast("int")
     g = (
         events.select(
-            key_col, b.alias("bucket"), (day % 2 == 0).alias("_is_base")
+            "event_type",
+            b.alias("bucket"),
+            (epoch_day() % 2 == 0).alias("_is_base"),
         )
-        .groupBy(key_col, "bucket")
+        .groupBy("event_type", "bucket")
         .agg(
             F.count_if(F.col("_is_base")).alias("ca"),
             F.count_if(~F.col("_is_base")).alias("cb"),
         )
     )
-    tot = g.groupBy(key_col).agg(
+    tot = g.groupBy("event_type").agg(
         F.sum(F.col("ca") + 1).alias("ta"),
         F.sum(F.col("cb") + 1).alias("tb"),
     )
     joined = (
-        g.join(F.broadcast(tot), key_col)
+        g.join(F.broadcast(tot), "event_type")
         .withColumn(
             "pa", F.expr("greatest(1, (ca + 1) * 1000000 DIV ta)")
         )
@@ -529,18 +525,14 @@ def drift_psi(
             ).cast("long"),
         )
     )
-    return joined.groupBy(key_col).agg(
+    return joined.groupBy("event_type").agg(
         F.sum("ca").alias("n_base"),
         F.sum("cb").alias("n_cur"),
         F.sum("_term").alias("psi_sum"),
     )
 
 
-def bot_gap_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def bot_gap_stats(events: DataFrame) -> DataFrame:
     """Bot/automation signal from inter-event timing — the log-security
     classic: humans produce bursty, irregular gaps; scripted clients
     produce many events at near-constant intervals. Per (user, day) the
@@ -564,21 +556,17 @@ def bot_gap_stats(
     Output: user_id, win_start (epoch s), n_gaps, sum_gap_ms,
     sum_gap2_ms, min_gap_ms, max_gap_ms (BIGINT), is_regular (INT).
     """
-    win = F.unix_timestamp(F.date_trunc("day", F.col(ts_col))).alias(
-        "win_start"
-    )
-    ts_ms = F.expr(
-        f"unix_micros(CAST({ts_col} AS TIMESTAMP_LTZ)) DIV 1000"
-    )
-    w = Window.partitionBy(user_col, "win_start").orderBy(
+    win = (epoch_day() * 86400).alias("win_start")
+    ts_ms = F.expr("unix_micros(CAST(ts AS TIMESTAMP_LTZ)) DIV 1000")
+    w = Window.partitionBy("user_id", "win_start").orderBy(
         "_ts_ms", "event_id"
     )
     gaps = (
-        events.select("event_id", user_col, win, ts_ms.alias("_ts_ms"))
+        events.select("event_id", "user_id", win, ts_ms.alias("_ts_ms"))
         .withColumn("_gap", F.col("_ts_ms") - F.lag("_ts_ms").over(w))
         .where(F.col("_gap").isNotNull())
     )
-    agg = gaps.groupBy(user_col, "win_start").agg(
+    agg = gaps.groupBy("user_id", "win_start").agg(
         F.count(F.lit(1)).alias("n_gaps"),
         F.sum("_gap").alias("sum_gap_ms"),
         F.sum(F.col("_gap") * F.col("_gap")).alias("sum_gap2_ms"),
@@ -601,14 +589,9 @@ def bot_gap_stats(
     )
 
 
-def anomaly_days(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    k_mad: int = 3,
-) -> DataFrame:
+def anomaly_days(events: DataFrame) -> DataFrame:
     """Robust daily-volume anomaly monitor — the on-call dashboard
-    classic: per key, flag days whose event count sits more than k MADs
+    classic: per key, flag days whose event count sits more than 3 MADs
     from the median. Median and MAD (median absolute deviation) are the
     robust location/scale pair that a single incident day cannot drag,
     unlike mean/stddev.
@@ -617,7 +600,7 @@ def anomaly_days(
     row_number (n+1) DIV 2 under a total order ((cnt, day) then
     (dev, day)) — so every statistic is an integer the engines agree on
     bit-for-bit; no float percentile interpolation. The anomaly rule
-    dev > k * mad is a pure integer inequality (with mad = 0 it
+    dev > 3 * mad is a pure integer inequality (with mad = 0 it
     degenerates to dev > 0, exactly what a constant series wants).
 
     Shape: one events scan into a (key, day) map-side-combined count —
@@ -626,29 +609,28 @@ def anomaly_days(
     day-grain strata; per-event data never enters a window. The same
     aggregate-first discipline as value_percentiles.
 
-    Output: <key_col>, n_days, med_cnt, mad, n_anomalies, max_dev
+    Output: event_type, n_days, med_cnt, mad, n_anomalies, max_dev
     (all BIGINT).
     """
-    day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     daily = (
-        events.select(key_col, day_s.alias("day_s"))
-        .groupBy(key_col, "day_s")
+        events.select("event_type", epoch_day().alias("day"))
+        .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w_all = Window.partitionBy(key_col)
-    w_cnt = Window.partitionBy(key_col).orderBy("cnt", "day_s")
+    w_all = Window.partitionBy("event_type")
+    w_cnt = Window.partitionBy("event_type").orderBy("cnt", "day")
     # staged: window functions cannot nest, so rank/size land first and
     # the pick-the-median max-over runs in a second projection
     ranked = daily.select(
-        key_col,
-        "day_s",
+        "event_type",
+        "day",
         "cnt",
         F.row_number().over(w_cnt).alias("_rn"),
         F.count(F.lit(1)).over(w_all).alias("_n"),
     )
     med = ranked.select(
-        key_col,
-        "day_s",
+        "event_type",
+        "day",
         "cnt",
         F.max(
             F.when(F.col("_rn") == F.expr("(_n + 1) DIV 2"), F.col("cnt"))
@@ -656,16 +638,16 @@ def anomaly_days(
         .over(w_all)
         .alias("med_cnt"),
     ).withColumn("dev", F.abs(F.col("cnt") - F.col("med_cnt")))
-    w_dev = Window.partitionBy(key_col).orderBy("dev", "day_s")
+    w_dev = Window.partitionBy("event_type").orderBy("dev", "day")
     ranked_dev = med.select(
-        key_col,
+        "event_type",
         "med_cnt",
         "dev",
         F.row_number().over(w_dev).alias("_rn"),
         F.count(F.lit(1)).over(w_all).alias("_n"),
     )
     scored = ranked_dev.select(
-        key_col,
+        "event_type",
         "med_cnt",
         "dev",
         F.max(
@@ -674,31 +656,26 @@ def anomaly_days(
         .over(w_all)
         .alias("mad"),
     )
-    return scored.groupBy(key_col).agg(
+    return scored.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.max("med_cnt").alias("med_cnt"),
         F.max("mad").alias("mad"),
-        F.count_if(F.col("dev") > F.lit(k_mad) * F.col("mad")).alias(
+        F.count_if(F.col("dev") > F.lit(3) * F.col("mad")).alias(
             "n_anomalies"
         ),
         F.max("dev").alias("max_dev"),
     )
 
 
-def dau_wau(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-) -> DataFrame:
+def dau_wau(events: DataFrame) -> DataFrame:
     """DAU / trailing-WAU stickiness — the growth metric every product
     dashboard leads with: for each day, the distinct users active that
-    day (DAU) and in the trailing `window_days`-day window ending that
+    day (DAU) and in the trailing 7-day window ending that
     day (WAU), plus stickiness = DAU/WAU in basis points (integer DIV).
 
     Shape: the event stream collapses FIRST to distinct (user, day) —
     map-side-combined, the only pass over raw events — then each
-    user-day explodes into the `window_days` trailing windows it
+    user-day explodes into the 7 trailing windows it
     contributes to (a fixed 7x fan-out of the already-deduplicated
     user-day relation, NOT of the event stream), and a count-distinct
     per window day finishes the job. Phantom windows past the observed
@@ -710,24 +687,21 @@ def dau_wau(
     Output: day_s (epoch seconds, BIGINT), dau, wau (BIGINT),
     stickiness_bp (BIGINT).
     """
-    d = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    ud = events.select(user_col, d.alias("d")).distinct()
+    ud = events.select("user_id", epoch_day().alias("d")).distinct()
     days = ud.select("d").distinct()
     dau = ud.groupBy("d").agg(
-        F.count_distinct(F.col(user_col)).alias("dau")
+        F.count_distinct(F.col("user_id")).alias("dau")
     )
     wau = (
         ud.select(
-            user_col,
+            "user_id",
             F.explode(
-                F.sequence(F.col("d"), F.col("d") + F.lit(window_days - 1))
+                F.sequence(F.col("d"), F.col("d") + F.lit(6))
             ).alias("wd"),
         )
         .join(F.broadcast(days.withColumnRenamed("d", "wd")), "wd")
         .groupBy("wd")
-        .agg(F.count_distinct(F.col(user_col)).alias("wau"))
+        .agg(F.count_distinct(F.col("user_id")).alias("wau"))
     )
     return (
         dau.join(wau, dau["d"] == wau["wd"])
@@ -740,42 +714,34 @@ def dau_wau(
     )
 
 
-def session_paths(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    path_len: int = 5,
-    k: int = 20,
-) -> DataFrame:
-    """Top-k user-journey prefixes — the product-analytics "what do
+def session_paths(events: DataFrame) -> DataFrame:
+    """Top-20 user-journey prefixes — the product-analytics "what do
     sessions look like" query: each (user, day) session is reduced to
-    the '>'-joined sequence of its first `path_len` event types (ordered
-    by ts, then event_id for engine-exact ties), identical prefixes are
-    counted, and the k most common are ranked.
+    the '>'-joined sequence of its first 5 event types (ordered by ts,
+    then event_id for engine-exact ties), identical prefixes are
+    counted, and the 20 most common are ranked.
 
-    Shape: the first `path_len` events are a `topk` by the bounded
-    (user, day) stratum (the keyed_quota discipline); the prefix is
-    assembled by sorting the collected (rank, type) structs INSIDE each
-    group — array_sort on <= path_len elements, no second window. The final
+    Shape: the first 5 events are a `topk` by the bounded (user, day)
+    stratum (the keyed_quota discipline); the prefix is assembled by
+    sorting the collected (rank, type) structs INSIDE each group —
+    array_sort on <= 5 elements, no second window. The final
     global top-k is `topk` without groups: Spark's group limit rule
     plans it as a TakeOrderedAndProject, so no task sorts the
     (unbounded) distinct-path domain.
 
     Output: rank (INT), path (STRING), n_sessions (BIGINT).
     """
-    day_s = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     typed = events.select(
-        user_col,
+        "user_id",
         "event_id",
-        ts_col,
-        day_s.alias("_day_s"),
-        F.col(type_col).alias("_et"),
+        "ts",
+        (epoch_day() * 86400).alias("_day_s"),
+        F.col("event_type").alias("_et"),
     )
-    by_ts = [F.col(ts_col), F.col("event_id")]
+    by_ts = [F.col("ts"), F.col("event_id")]
     paths = (
-        topk(typed, path_len, by_ts, by=[user_col, "_day_s"])
-        .groupBy(user_col, "_day_s")
+        topk(typed, 5, by_ts, by=["user_id", "_day_s"])
+        .groupBy("user_id", "_day_s")
         .agg(
             F.array_join(
                 F.transform(
@@ -791,7 +757,7 @@ def session_paths(
         .agg(F.count(F.lit(1)).alias("n_sessions"))
     )
     order = [F.col("n_sessions").desc(), F.col("path").asc()]
-    return topk(paths, k, order).select("rank", "path", "n_sessions")
+    return topk(paths, 20, order).select("rank", "path", "n_sessions")
 
 
 #: hex digits whose low bit is 0 — md5-parity arm assignment shared
@@ -799,12 +765,7 @@ def session_paths(
 AB_EVEN_HEX = ("0", "2", "4", "6", "8", "a", "c", "e")
 
 
-def ab_metrics(
-    events: DataFrame,
-    user_col: str = "user_id",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def ab_metrics(events: DataFrame) -> DataFrame:
     """Deterministic A/B experiment readout — the growth-engineering
     staple: users are assigned an arm by the parity of the first hex
     digit of md5(user_id) (sticky, uniform, engine-portable — both
@@ -819,19 +780,19 @@ def ab_metrics(
     standard two-phase expand-aggregate. No joins, no windows, no
     per-user state — grain is event types.
 
-    Output: <key_col>, a_users, b_users, a_events, b_events,
+    Output: event_type, a_users, b_users, a_events, b_events,
     a_value_c, b_value_c, lift_bp (all BIGINT).
     """
-    is_a = F.substring(F.md5(F.col(user_col).cast("string")), 1, 1).isin(
+    is_a = F.substring(F.md5(F.col("user_id").cast("string")), 1, 1).isin(
         *AB_EVEN_HEX
     )
-    cents = F.floor(F.col(value_col) * 100).cast("long")
+    cents = F.floor(F.col("value") * 100).cast("long")
     per_arm = events.select(
-        key_col,
-        F.col(user_col).alias("_u"),
+        "event_type",
+        F.col("user_id").alias("_u"),
         is_a.alias("_a"),
         cents.alias("_c"),
-    ).groupBy(key_col).agg(
+    ).groupBy("event_type").agg(
         F.count_distinct(F.when(F.col("_a"), F.col("_u"))).alias("a_users"),
         F.count_distinct(F.when(~F.col("_a"), F.col("_u"))).alias("b_users"),
         F.count_if(F.col("_a")).alias("a_events"),
@@ -850,23 +811,17 @@ def ab_metrics(
     )
 
 
-def trimmed_mean(
-    events: DataFrame,
-    bucket_width: float = 10.0,
-    trim_pct: int = 5,
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def trimmed_mean(events: DataFrame) -> DataFrame:
     """Robust (winsorizing) mean per key — the revenue/latency metric a
     single whale or timeout cannot drag: drop the histogram buckets
-    whose mass lies entirely inside the bottom/top `trim_pct` percent,
+    whose mass lies entirely inside the bottom/top 5 percent,
     then average what remains. Trimming is BUCKET-grain (a boundary
     bucket straddling the cut is dropped whole): deterministic,
     documented, and engine-exact — the alternative, per-event rank
     trimming, needs an unbounded per-key sort at scale.
 
     A kept bucket satisfies cum_before >= lo AND cum <= hi with
-    lo = (trim*n + 99) DIV 100 and hi = ((100-trim)*n) DIV 100 — pure
+    lo = (5*n + 99) DIV 100 and hi = (95*n) DIV 100 — pure
     integer thresholds on the cumulative histogram. Values enter as
     floor(value*100) cents (one IEEE multiply + floor, bit-identical),
     so the trimmed mean is an integer DIV of exact integers. When the
@@ -883,28 +838,28 @@ def trimmed_mean(
     histogram size, independent of event count, and the raw mean reads
     off the same totals (no second scan, no join).
 
-    Output: <key_col>, n_events, n_kept, sum_kept_c (BIGINT),
+    Output: event_type, n_events, n_kept, sum_kept_c (BIGINT),
     trimmed_mean_c, raw_mean_c (BIGINT, integer cents).
     """
-    b = F.floor(F.col(value_col) / F.lit(bucket_width)).cast("int")
-    cents = F.floor(F.col(value_col) * 100).cast("long")
+    b = F.floor(F.col("value") / F.lit(HDR_BUCKET_WIDTH)).cast("int")
+    cents = F.floor(F.col("value") * 100).cast("long")
     hist = (
-        events.where(F.col(value_col).isNotNull())
-        .select(key_col, b.alias("bucket"), cents.alias("_c"))
-        .groupBy(key_col, "bucket")
+        events.where(F.col("value").isNotNull())
+        .select("event_type", b.alias("bucket"), cents.alias("_c"))
+        .groupBy("event_type", "bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("_c").alias("s"),
         )
     )
     w_cum = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_all = Window.partitionBy(key_col)
+    w_all = Window.partitionBy("event_type")
     cum = hist.select(
-        key_col,
+        "event_type",
         "n",
         "s",
         F.sum("n").over(w_cum).alias("cum"),
@@ -914,11 +869,11 @@ def trimmed_mean(
         "_keep",
         (
             (F.col("cum") - F.col("n"))
-            >= F.expr(f"({trim_pct} * n_total + 99) DIV 100")
+            >= F.expr("(5 * n_total + 99) DIV 100")
         )
-        & (F.col("cum") <= F.expr(f"({100 - trim_pct} * n_total) DIV 100")),
+        & (F.col("cum") <= F.expr("(95 * n_total) DIV 100")),
     )
-    return cum.groupBy(key_col).agg(
+    return cum.groupBy("event_type").agg(
         F.max("n_total").alias("n_events"),
         F.coalesce(
             F.sum(F.when(F.col("_keep"), F.col("n"))), F.lit(0)
@@ -928,7 +883,7 @@ def trimmed_mean(
         ).alias("sum_kept_c"),
         F.max("s_total").alias("_s_total"),
     ).select(
-        key_col,
+        "event_type",
         "n_events",
         "n_kept",
         "sum_kept_c",
@@ -940,19 +895,16 @@ def trimmed_mean(
     )
 
 
-def _covisit_kept(
-    events: DataFrame, stratum_cap: int, ts_col: str
-) -> DataFrame:
+def _covisit_kept(events: DataFrame, stratum_cap: int) -> DataFrame:
     """Distinct (user, day, item) strata with 2..stratum_cap items —
     the shared candidate relation of item_covisitation and
     item_similarity (the cap bounds any later pair fan-out at
     C(cap, 2) per stratum)."""
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     items = (
         events.where(F.col("props").isNotNull())
         .select(
             "user_id",
-            day.alias("day"),
+            epoch_day().alias("day"),
             F.get_json_object(F.col("props"), "$.k").cast("long").alias(
                 "item"
             ),
@@ -967,10 +919,7 @@ def _covisit_kept(
 
 
 def item_covisitation(
-    events: DataFrame,
-    min_support: int = 3,
-    stratum_cap: int = 20,
-    ts_col: str = "ts",
+    events: DataFrame, min_support: int = 3, stratum_cap: int = 20
 ) -> DataFrame:
     """Item co-visitation counts — the raw signal behind "users who
     engaged with A also engaged with B" recommenders: for every pair of
@@ -990,7 +939,7 @@ def item_covisitation(
 
     Output: item_a, item_b, n_covisits (BIGINT), support >= min_support.
     """
-    kept = _covisit_kept(events, stratum_cap, ts_col)
+    kept = _covisit_kept(events, stratum_cap)
     a, b = kept.alias("a"), kept.alias("b")
     pairs = a.join(
         b,
@@ -1007,13 +956,14 @@ def item_covisitation(
     )
 
 
-def daily_anomalies(
-    events: DataFrame,
-    z: int = 2,
-    min_base_days: int = 3,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+#: the trailing-baseline z-test of daily_anomalies and its streaming
+#: twin: a day is anomalous when |n - mean| > ANOMALY_Z * stddev of the
+#: previous 7 observed days, given at least ANOMALY_MIN_BASE_DAYS of them.
+ANOMALY_Z = 2
+ANOMALY_MIN_BASE_DAYS = 3
+
+
+def daily_anomalies(events: DataFrame) -> DataFrame:
     """Volume-anomaly detection on the per-key daily series — the
     ops monitor that pages when a route's traffic jumps or craters.
     Complements anomaly_days (global median+MAD, robust to outliers but
@@ -1022,13 +972,13 @@ def daily_anomalies(
     day's event count is compared against its trailing baseline
     (the previous 7 OBSERVED days of the same key), flagging when
 
-        |n - mean| > z * stddev
+        |n - mean| > ANOMALY_Z * stddev
 
     evaluated entirely in integers via the equivalent cross-multiplied
     form (w*n - s1)^2 > z^2 * (w*s2 - s1^2), where s1/s2 are the
     baseline's sum and sum-of-squares and w its day count — no floats,
     no sqrt, bit-identical across engines. Days with fewer than
-    min_base_days of history never flag.
+    ANOMALY_MIN_BASE_DAYS of history never flag.
 
     Scale shape: ONE raw-event scan into a (key, day) map-side-combined
     count; every window below runs over that AGGREGATED series — its
@@ -1036,21 +986,20 @@ def daily_anomalies(
     value_percentiles discipline), so the day-ordered frames cost
     nothing at any scale.
 
-    Output: <key_col>, day, n_events, base_days, base_sum, is_anomaly.
+    Output: event_type, day, n_events, base_days, base_sum, is_anomaly.
     """
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     daily = (
-        events.select(key_col, day.alias("day"))
-        .groupBy(key_col, "day")
+        events.select("event_type", epoch_day().alias("day"))
+        .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("day")
         .rowsBetween(-7, -1)
     )
     base = daily.select(
-        key_col,
+        "event_type",
         "day",
         "n_events",
         F.coalesce(F.count("n_events").over(w), F.lit(0)).alias("base_days"),
@@ -1059,28 +1008,23 @@ def daily_anomalies(
                    F.lit(0)).alias("_s2"),
     )
     lhs = F.col("base_days") * F.col("n_events") - F.col("base_sum")
-    rhs = F.lit(z * z) * (
+    rhs = F.lit(ANOMALY_Z * ANOMALY_Z) * (
         F.col("base_days") * F.col("_s2")
         - F.col("base_sum") * F.col("base_sum")
     )
     return base.select(
-        key_col,
+        "event_type",
         "day",
         "n_events",
         "base_days",
         "base_sum",
-        ((F.col("base_days") >= min_base_days) & (lhs * lhs > rhs)).alias(
-            "is_anomaly"
-        ),
+        (
+            (F.col("base_days") >= ANOMALY_MIN_BASE_DAYS) & (lhs * lhs > rhs)
+        ).alias("is_anomaly"),
     )
 
 
-def weekday_profile(
-    events: DataFrame,
-    chi2_threshold: int = 13,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def weekday_profile(events: DataFrame) -> DataFrame:
     """Weekly-seasonality detector per key: the day-of-week traffic
     profile plus a chi-square uniformity statistic — organic human
     traffic has a weekly rhythm, schedulers and bots are flat (or
@@ -1095,7 +1039,7 @@ def weekday_profile(
 
     (the exact (o-e)^2/e with e = total/7, cross-multiplied so no
     fraction ever materializes; each term floors independently, so the
-    7-term sum is order-free). is_seasonal flags chi2 >= threshold
+    7-term sum is order-free). is_seasonal flags chi2 >= 13
     (~the df=6, alpha=.05 critical value 12.59 rounded up).
 
     The chi-square sum runs over ALL SEVEN cells, including weekdays
@@ -1109,24 +1053,23 @@ def weekday_profile(
     7-cell grid comes from exploding a literal sequence against the
     per-key totals (keys x 7 rows, trivially small at any event count).
 
-    Output: <key_col>, weekday, n_events, total, chi2, is_seasonal
+    Output: event_type, weekday, n_events, total, chi2, is_seasonal
     (chi2/is_seasonal repeated on each of the key's 7 rows).
     """
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     prof = (
-        events.select(key_col, ((day + 3) % 7).alias("weekday"))
-        .groupBy(key_col, "weekday")
+        events.select("event_type", ((epoch_day() + 3) % 7).alias("weekday"))
+        .groupBy("event_type", "weekday")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    tot = prof.groupBy(key_col).agg(F.sum("n_events").alias("total"))
+    tot = prof.groupBy("event_type").agg(F.sum("n_events").alias("total"))
     grid = tot.select(
-        key_col,
+        "event_type",
         "total",
         F.explode(F.sequence(F.lit(0).cast("long"), F.lit(6).cast("long")))
         .alias("weekday"),
     )
-    full = grid.join(prof, [key_col, "weekday"], "left").select(
-        key_col,
+    full = grid.join(prof, ["event_type", "weekday"], "left").select(
+        "event_type",
         "weekday",
         "total",
         F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias(
@@ -1135,25 +1078,25 @@ def weekday_profile(
     )
     term = F.expr("(7 * n_events - total) * (7 * n_events - total)"
                   " DIV (7 * total)")
-    chi = full.select(key_col, term.alias("_t")).groupBy(key_col).agg(
-        F.sum("_t").alias("chi2")
+    chi = (
+        full.select("event_type", term.alias("_t"))
+        .groupBy("event_type")
+        .agg(F.sum("_t").alias("chi2"))
     )
     return (
-        full.join(F.broadcast(chi), key_col)
+        full.join(F.broadcast(chi), "event_type")
         .select(
-            key_col,
+            "event_type",
             "weekday",
             "n_events",
             "total",
             "chi2",
-            (F.col("chi2") >= chi2_threshold).alias("is_seasonal"),
+            (F.col("chi2") >= 13).alias("is_seasonal"),
         )
     )
 
 
-def traffic_rollup(
-    events: DataFrame, key_col: str = "event_type", ts_col: str = "ts"
-) -> DataFrame:
+def traffic_rollup(events: DataFrame) -> DataFrame:
     """Multi-level traffic rollup — ONE pass producing the (type,
     weekday) cells, the per-type subtotals, and the grand total, via
     Spark's ROLLUP operator (Catalyst expands the grouping sets into a
@@ -1163,17 +1106,17 @@ def traffic_rollup(
     (sentinels, not NULLs — the oracle gate rejects nullable integer
     columns, and sentinels keep the dtypes integral on both engines).
 
-    Output: <key_col>, weekday, gid (0 cell / 1 type subtotal /
+    Output: event_type, weekday, gid (0 cell / 1 type subtotal /
     3 grand total), n_events.
     """
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
-    base = events.select(key_col, ((day + 3) % 7).alias("weekday"))
+    weekday = ((epoch_day() + 3) % 7).alias("weekday")
+    base = events.select("event_type", weekday)
     return (
-        base.rollup(key_col, "weekday")
+        base.rollup("event_type", "weekday")
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.grouping_id().alias("gid"))
         .select(
-            F.coalesce(F.col(key_col), F.lit("ALL")).alias(key_col),
+            F.coalesce(F.col("event_type"), F.lit("ALL")).alias("event_type"),
             F.coalesce(F.col("weekday"), F.lit(-1)).cast("long").alias(
                 "weekday"
             ),
@@ -1214,12 +1157,7 @@ def props_schema_census(events: DataFrame) -> DataFrame:
     )
 
 
-def cusum_alerts(
-    events: DataFrame,
-    allowance_den: int = 4,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cusum_alerts(events: DataFrame) -> DataFrame:
     """CUSUM change-point alerts on each key's daily-count series — the
     control-chart complement to daily_anomalies (which flags single-day
     spikes against a trailing window): CUSUM accumulates SMALL persistent
@@ -1236,7 +1174,7 @@ def cusum_alerts(
     running MIN), no recursion, no UDF. Everything stays integral by
     scaling through n_days: the zero-mean deviation is
     d_i = n_days*x_i - total (sums to 0 exactly), the slack is
-    total DIV allowance_den (= n_days * mean/allowance_den), and the
+    total DIV 4 (= n_days * mean/4), and the
     alarm threshold is one full mean-day of cumulative excess,
     cusum > total — no floats, no division remainder games,
     bit-identical across engines.
@@ -1247,23 +1185,22 @@ def cusum_alerts(
     sum/min ride an ordered one — the value_percentiles discipline
     (window work is keys x days, independent of event volume).
 
-    Output: <key_col>, day, n_events, cusum (scaled by n_days),
+    Output: event_type, day, n_events, cusum (scaled by n_days),
     is_alarm.
     """
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     daily = (
-        events.select(key_col, day.alias("day"))
-        .groupBy(key_col, "day")
+        events.select("event_type", epoch_day().alias("day"))
+        .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    w_key = Window.partitionBy(key_col)
+    w_key = Window.partitionBy("event_type")
     w_ord = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     scored = daily.select(
-        key_col,
+        "event_type",
         "day",
         "n_events",
         F.sum("n_events").over(w_key).alias("_total"),
@@ -1272,10 +1209,10 @@ def cusum_alerts(
         "_step",
         F.col("_ndays") * F.col("n_events")
         - F.col("_total")
-        - F.expr(f"_total DIV {int(allowance_den)}"),
+        - F.expr("_total DIV 4"),
     )
     prefix = scored.select(
-        key_col,
+        "event_type",
         "day",
         "n_events",
         "_total",
@@ -1283,7 +1220,7 @@ def cusum_alerts(
     ).withColumn("_pmin", F.min("_p").over(w_ord))
     cusum = F.col("_p") - F.least(F.lit(0), F.col("_pmin"))
     return prefix.select(
-        key_col,
+        "event_type",
         "day",
         "n_events",
         cusum.alias("cusum"),
@@ -1291,18 +1228,14 @@ def cusum_alerts(
     )
 
 
-def km_hazard(
-    events: DataFrame,
-    censor_gap: int = 7,
-    ts_col: str = "ts",
-) -> DataFrame:
+def km_hazard(events: DataFrame) -> DataFrame:
     """Kaplan-Meier risk table over user lifetimes — the survival-
     analysis view of churn: how long does a user stay active, with the
     still-active tail handled honestly as RIGHT-CENSORED instead of
     counted as churn (the mistake naive retention averages make).
 
     Lifetime = last active day - first active day. A user whose last
-    activity is within censor_gap days of the corpus's last day is
+    activity is within 7 days of the corpus's last day is
     censored (they may still be alive). Per distinct lifetime t the
     classic risk-table ingredients:
 
@@ -1325,16 +1258,15 @@ def km_hazard(
 
     Output: lifetime, n_at_risk, n_churned, n_censored, hazard_bp.
     """
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     spans = (
-        events.select("user_id", day.alias("day"))
+        events.select("user_id", epoch_day().alias("day"))
         .groupBy("user_id")
         .agg(F.min("day").alias("d_first"), F.max("day").alias("d_last"))
     )
     dmax = spans.agg(F.max("d_last").alias("_dmax"))
     per_user = spans.crossJoin(F.broadcast(dmax)).select(
         (F.col("d_last") - F.col("d_first")).alias("lifetime"),
-        (F.col("_dmax") - F.col("d_last") <= censor_gap).alias("_cens"),
+        (F.col("_dmax") - F.col("d_last") <= 7).alias("_cens"),
     )
     per_t = per_user.groupBy("lifetime").agg(
         F.count(F.lit(1)).alias("_n"),
@@ -1356,7 +1288,7 @@ def km_hazard(
     )
 
 
-def rfm_segments(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def rfm_segments(events: DataFrame) -> DataFrame:
     """RFM (recency / frequency / monetary) segmentation — the classic
     customer-value grid: per user the days since last activity, the
     event count, and the summed per-event floor(value*100) cents, each
@@ -1380,10 +1312,11 @@ def rfm_segments(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     Output: user_id, recency, frequency, monetary_cents, r_score,
     f_score, m_score, rfm_code (r*100 + f*10 + m).
     """
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
     cents = F.floor(F.col("value") * F.lit(100)).cast("long")
     agg = (
-        events.select("user_id", day.alias("day"), cents.alias("_cents"))
+        events.select(
+            "user_id", epoch_day().alias("day"), cents.alias("_cents")
+        )
         .groupBy("user_id")
         .agg(
             F.max("day").alias("_d_last"),
@@ -1440,9 +1373,7 @@ def rfm_segments(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def engagement_gini(
-    events: DataFrame, key_col: str = "event_type"
-) -> DataFrame:
+def engagement_gini(events: DataFrame) -> DataFrame:
     """Gini concentration of user activity per event type — the
     one-number answer to "is this feature used broadly or by a whale
     tail?", and the drift signal fraud teams watch (a bot cohort
@@ -1464,27 +1395,27 @@ def engagement_gini(
     partitioned by type over that histogram. No user-grain sort, no
     single-partition pass.
 
-    Output: <key_col>, n_users, total_events, gini_bp.
+    Output: event_type, n_users, total_events, gini_bp.
     """
     per_user = (
-        events.groupBy(key_col, "user_id")
+        events.groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    hist = per_user.groupBy(key_col, "c").agg(
+    hist = per_user.groupBy("event_type", "c").agg(
         F.count(F.lit(1)).alias("m")
     )
     w_cum = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     blocks = hist.select(
-        key_col,
+        "event_type",
         "c",
         "m",
         (F.sum("m").over(w_cum) - F.col("m")).alias("r0"),
     ).select(
-        key_col,
+        "event_type",
         (F.col("m") * F.col("c")).alias("_t"),
         (
             F.col("c")
@@ -1495,13 +1426,13 @@ def engagement_gini(
         ).alias("_s"),
         F.col("m").alias("_m"),
     )
-    agg = blocks.groupBy(key_col).agg(
+    agg = blocks.groupBy("event_type").agg(
         F.sum("_m").alias("n_users"),
         F.sum("_t").alias("total_events"),
         F.sum("_s").alias("_s_sum"),
     )
     return agg.select(
-        key_col,
+        "event_type",
         "n_users",
         "total_events",
         F.expr(
@@ -1511,7 +1442,7 @@ def engagement_gini(
     )
 
 
-def user_entropy(events: DataFrame, key_col: str = "event_type") -> DataFrame:
+def user_entropy(events: DataFrame) -> DataFrame:
     """Per-user behavioral entropy over the event-type distribution, in
     integer micro-nats — the classic bot feature next to bot_gap_stats'
     timing signal: scripted clients hammer one action (H -> 0), organic
@@ -1528,7 +1459,7 @@ def user_entropy(events: DataFrame, key_col: str = "event_type") -> DataFrame:
 
     Output: user_id, n_events, n_types, entropy_micro.
     """
-    per = events.groupBy("user_id", key_col).agg(
+    per = events.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("c")
     )
     term = F.floor(
@@ -1563,11 +1494,7 @@ BOOTSTRAP_T = (24109, 48218, 60273)
 BOOTSTRAP_B = 32
 
 
-def bootstrap_ci(
-    events: DataFrame,
-    b: int = BOOTSTRAP_B,
-    key_col: str = "event_type",
-) -> DataFrame:
+def bootstrap_ci(events: DataFrame) -> DataFrame:
     """Poisson-bootstrap confidence interval for the per-type mean value
     — the one-pass, shuffle-light resampling trick production analytics
     uses at scale (Chamandy et al., "Estimating uncertainty for massive
@@ -1590,14 +1517,14 @@ def bootstrap_ci(
     collect_list per type. The full-sample mean rides its own tiny
     aggregate, broadcast-joined.
 
-    Output: <key_col>, n_events, mean_c, ci_lo_c, ci_hi_c.
+    Output: event_type, n_events, mean_c, ci_lo_c, ci_hi_c.
     """
     t0, t1, t2 = BOOTSTRAP_T
     cents = F.floor(F.col("value") * 100).cast("long")
     base = events.select(
-        key_col, F.col("event_id"), cents.alias("_c")
+        "event_type", F.col("event_id"), cents.alias("_c")
     ).withColumn(
-        "_b", F.explode(F.sequence(F.lit(0), F.lit(int(b) - 1)))
+        "_b", F.explode(F.sequence(F.lit(0), F.lit(BOOTSTRAP_B - 1)))
     )
     h16 = F.conv(
         F.substring(
@@ -1623,47 +1550,47 @@ def bootstrap_ci(
         .otherwise(F.lit(3))
         .cast("long"),
     )
-    reps = weighted.groupBy(key_col, "_b").agg(
+    reps = weighted.groupBy("event_type", "_b").agg(
         F.expr("sum(_w * _c) DIV greatest(sum(_w), 1)").alias("_mean")
     )
-    ci = reps.groupBy(key_col).agg(
+    ci = reps.groupBy("event_type").agg(
         F.sort_array(F.collect_list("_mean")).alias("_ms")
     )
-    full = events.groupBy(key_col).agg(
+    full = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.expr(
             "sum(cast(floor(value * 100) as bigint)) DIV count(*)"
         ).alias("mean_c"),
     )
-    return full.join(F.broadcast(ci), key_col).select(
-        key_col,
+    return full.join(F.broadcast(ci), "event_type").select(
+        "event_type",
         "n_events",
         "mean_c",
         F.element_at("_ms", 2).alias("ci_lo_c"),
-        F.element_at("_ms", int(b) - 1).alias("ci_hi_c"),
+        F.element_at("_ms", BOOTSTRAP_B - 1).alias("ci_hi_c"),
     )
 
 
-def trending_items(
-    events: DataFrame,
-    window_days: int = 16,
-    recent_days: int = 3,
-    min_events: int = 3,
-    ts_col: str = "ts",
-) -> DataFrame:
+#: trending_items and its streaming twin weigh an item's last 16 days
+#: and call it trending when most of the weight is in the last 3.
+TRENDING_WINDOW_DAYS = 16
+TRENDING_RECENT_DAYS = 3
+
+
+def trending_items(events: DataFrame, min_events: int = 3) -> DataFrame:
     """Exponentially-decayed item popularity with a trending flag — the
     half-life-weighted leaderboard ("what is hot NOW, not what was hot
     all month") every product-analytics surface runs. Items are the
     integer `k` props key (the item_covisitation parity idiom); the
     decay is EXACT: a day aged `a` days (newest = 0) weighs
-    2^(window_days-1-a), a power-of-two BIGINT shift, so every weight,
-    sum, and comparison is integer — no float half-life anywhere.
-    Days older than `window_days` carry zero weight and are dropped in
+    2^(TRENDING_WINDOW_DAYS-1-a), a power-of-two BIGINT shift, so every
+    weight, sum, and comparison is integer — no float half-life anywhere.
+    Days older than TRENDING_WINDOW_DAYS carry zero weight and are dropped in
     the scan (a deliberate truncated tail: with a 1-day half-life the
     dropped mass is < 2^-15 of the head).
 
     `trending` fires when more than half the decayed mass landed in the
-    last `recent_days` days — an integer cross-multiply, no ratios.
+    last TRENDING_RECENT_DAYS days — an integer cross-multiply, no ratios.
 
     Scale shape: one scan -> one map-side-combined aggregate keyed by
     item; the newest day is a broadcast one-row scalar; output is
@@ -1672,10 +1599,6 @@ def trending_items(
 
     Output: item, n_events, w_total, w_recent, trending (0/1).
     """
-    day = F.expr(
-        f"CAST(unix_timestamp(date_trunc('day', {ts_col})) AS BIGINT)"
-        " DIV 86400"
-    )
     it = (
         events.where(
             F.col("props").isNotNull()
@@ -1683,20 +1606,22 @@ def trending_items(
         )
         .select(
             F.get_json_object("props", "$.k").cast("long").alias("item"),
-            day.alias("_day"),
+            epoch_day().alias("_day"),
         )
     )
     dmax = it.agg(F.max("_day").alias("_dmax"))
     aged = (
         it.crossJoin(F.broadcast(dmax))
-        .where(F.col("_dmax") - F.col("_day") < window_days)
+        .where(F.col("_dmax") - F.col("_day") < TRENDING_WINDOW_DAYS)
         .select(
             "item",
             F.expr(
                 f"shiftleft(CAST(1 AS BIGINT),"
-                f" CAST({window_days - 1} - (_dmax - _day) AS INT))"
+                f" CAST({TRENDING_WINDOW_DAYS - 1} - (_dmax - _day) AS INT))"
             ).alias("w"),
-            (F.col("_dmax") - F.col("_day") < recent_days).alias("_rec"),
+            (F.col("_dmax") - F.col("_day") < TRENDING_RECENT_DAYS).alias(
+                "_rec"
+            ),
         )
     )
     agg = aged.groupBy("item").agg(
@@ -1717,13 +1642,7 @@ def trending_items(
     )
 
 
-def item_similarity(
-    events: DataFrame,
-    min_support: int = 5,
-    stratum_cap: int = 20,
-    k: int = 50,
-    ts_col: str = "ts",
-) -> DataFrame:
+def item_similarity(events: DataFrame, min_support: int = 5) -> DataFrame:
     """Item-item cosine similarity over co-visitation strata — the
     normalization step that turns raw "bought together" counts into a
     recommender's neighbor lists (frequent items stop winning merely by
@@ -1741,13 +1660,13 @@ def item_similarity(
     Scale shape: the pair fan-out inherits item_covisitation's stratum
     cap (C(cap,2) per stratum, worst case); the per-item degree is one
     map-side aggregate over the kept relation, broadcast back onto the
-    (already support-gated) pair relation; the final top-k is `topk`
+    (already support-gated) pair relation; the final top-50 is `topk`
     (a TakeOrderedAndProject). Headroom: n_covisits^2 * 10^4 overflows
     int64 past ~10^7 co-visits per pair.
 
     Output: rank, item_a, item_b, n_covisits, n_a, n_b, sim_sq_bp.
     """
-    kept = _covisit_kept(events, stratum_cap, ts_col)
+    kept = _covisit_kept(events, 20)
     a, b = kept.alias("a"), kept.alias("b")
     pairs = (
         a.join(
@@ -1800,12 +1719,12 @@ def item_similarity(
         F.col("item_a").asc(),
         F.col("item_b").asc(),
     ]
-    return topk(scored, k, order).select(
+    return topk(scored, 50, order).select(
         "rank", "item_a", "item_b", "n_covisits", "n_a", "n_b", "sim_sq_bp"
     )
 
 
-def disorder_audit(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def disorder_audit(events: DataFrame) -> DataFrame:
     """Event-time disorder census — the measurement that SIZES a
     watermark: how late does an event arrive relative to the newest
     event already ingested in its stratum, in exact microseconds?
@@ -1825,10 +1744,7 @@ def disorder_audit(events: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     Output per event_type: n_events, n_late, max_late_us, sum_late_us.
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    ts_us = F.expr(f"unix_micros(CAST({ts_col} AS TIMESTAMP_LTZ))")
+    ts_us = F.expr("unix_micros(CAST(ts AS TIMESTAMP_LTZ))")
     w = (
         Window.partitionBy("user_id", "_day")
         .orderBy("event_id")
@@ -1838,7 +1754,7 @@ def disorder_audit(events: DataFrame, ts_col: str = "ts") -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        day.alias("_day"),
+        epoch_day().alias("_day"),
         ts_us.alias("_us"),
     ).withColumn("_runmax", F.max("_us").over(w))
     late = rows.select(
@@ -2012,16 +1928,12 @@ def kmv_audit(events: DataFrame, k: int = KMV_K) -> DataFrame:
     )
 
 
-def conversion_latency(
-    events: DataFrame,
-    bucket_us: int = 60_000_000,
-    qs: Sequence[int] = (50, 95),
-) -> DataFrame:
+def conversion_latency(events: DataFrame) -> DataFrame:
     """Time-to-convert distribution — the funnel-health number behind
     "how long after the ad click does the purchase land": the as-of
     attribution join's delta_us, bucketed to minutes and reduced to
-    HDR percentiles. Composes two proven shapes end to end: the
-    RANGE-BUCKET as-of join (attribution_last_touch — bounded probe
+    HDR percentiles (p50 and p95). Composes two proven shapes end to
+    end: the RANGE-BUCKET as-of join (attribution_last_touch — bounded probe
     fan-out, never a user-history window) feeds the histogram
     percentile rule (value_percentiles — cumulative window over the
     bounded (touch_type, bucket) domain, percentile q = smallest
@@ -2037,9 +1949,7 @@ def conversion_latency(
     hist = (
         at.select(
             "touch_type",
-            F.expr(f"CAST(delta_us DIV {bucket_us} AS INT)").alias(
-                "bucket"
-            ),
+            F.expr("CAST(delta_us DIV 60000000 AS INT)").alias("bucket"),
         )
         .groupBy("touch_type", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -2062,7 +1972,7 @@ def conversion_latency(
             "bucket",
             "cum",
             "_total",
-            F.explode(F.array(*[F.lit(int(q)) for q in qs])).alias("q"),
+            F.explode(F.array(F.lit(50), F.lit(95))).alias("q"),
         )
         .where(F.col("cum") >= F.expr("(q * _total + 99) DIV 100"))
         .groupBy("touch_type", "q")
@@ -2073,12 +1983,11 @@ def conversion_latency(
     )
 
 
-def apdex_score(
-    events: DataFrame, t_satisfied: float = 10.0
-) -> DataFrame:
+def apdex_score(events: DataFrame) -> DataFrame:
     """Apdex — the industry-standard satisfaction rollup of a latency
-    column: satisfied (value <= T), tolerating (T < value <= 4T),
-    frustrated (the rest); score = (satisfied + tolerating/2) / total,
+    column with T = 10: satisfied (value <= T), tolerating
+    (T < value <= 4T), frustrated (the rest); score = (satisfied +
+    tolerating/2) / total,
     here in exact per-mille: (1000*sat + 500*tol) DIV total. The
     thresholds compare the raw double against the T literals directly
     (no quantization needed — comparisons are exact in IEEE), so both
@@ -2091,18 +2000,17 @@ def apdex_score(
     Output: event_type, n_events, n_satisfied, n_tolerating,
     apdex_pm.
     """
-    t4 = t_satisfied * 4
     return (
         events.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(
-                (F.col("value") <= t_satisfied).cast("long")
+                (F.col("value") <= 10.0).cast("long")
             ).alias("n_satisfied"),
             F.sum(
                 (
-                    (F.col("value") > t_satisfied)
-                    & (F.col("value") <= t4)
+                    (F.col("value") > 10.0)
+                    & (F.col("value") <= 40.0)
                 ).cast("long")
             ).alias("n_tolerating"),
         )
@@ -2119,7 +2027,7 @@ def apdex_score(
     )
 
 
-def landing_exit(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def landing_exit(events: DataFrame) -> DataFrame:
     """Landing / exit / bounce report — the classic session-edge
     dashboard: treating each (user, day) stratum as a session, which
     event type opens it, which closes it, and how many sessions are
@@ -2136,16 +2044,13 @@ def landing_exit(events: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     Output per event_type: n_landing, n_exit, n_bounce.
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    ts_us = F.expr(f"unix_micros(CAST({ts_col} AS TIMESTAMP_LTZ))")
+    ts_us = F.expr("unix_micros(CAST(ts AS TIMESTAMP_LTZ))")
     key = F.struct(
         ts_us.alias("u"),
         F.col("event_id").alias("e"),
         F.col("event_type").alias("t"),
     )
-    sess = events.groupBy("user_id", day.alias("_day")).agg(
+    sess = events.groupBy("user_id", epoch_day().alias("_day")).agg(
         F.min(key)["t"].alias("landing"),
         F.max(key)["t"].alias("exit"),
         F.count(F.lit(1)).alias("n_ev"),
@@ -2333,8 +2238,7 @@ def activity_histogram(events: DataFrame) -> DataFrame:
 
     Output: days_active, n_users, n_events, events_share_bp.
     """
-    day = F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400")
-    per_user = events.select("user_id", day.alias("_day")).groupBy(
+    per_user = events.select("user_id", epoch_day().alias("_day")).groupBy(
         "user_id"
     ).agg(
         F.countDistinct("_day").alias("days_active"),
@@ -2370,7 +2274,7 @@ def schema_drift(events: DataFrame) -> DataFrame:
     Output: key, n_base, n_cur, base_pm, cur_pm, dev_pm,
     is_new (0/1), vanished (0/1).
     """
-    day = F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400")
+    day = epoch_day()
     kv = events.where(F.col("props").isNotNull()).select(
         (day % 2 == 0).alias("_base"),
         F.explode(
@@ -2471,12 +2375,10 @@ def markov_stationary(
     return v
 
 
-def burst_census(
-    events: DataFrame, window_s: int = 60, ts_col: str = "ts"
-) -> DataFrame:
+def burst_census(events: DataFrame) -> DataFrame:
     """Peak-burst census — the abuse/rate-limit sizing view: for each
     user, the maximum number of events landing in any trailing
-    `window_s`-second window (exact, not bucketed: a RANGE frame over
+    60-second window (exact, not bucketed: a RANGE frame over
     event-time microseconds counts every event in (t - w, t]), then a
     histogram of users by that peak. The tail of this histogram is who
     a rate limiter would throttle; its body sizes the limit.
@@ -2490,18 +2392,15 @@ def burst_census(
 
     Output: peak_burst, n_users.
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    ts_us = F.expr(f"unix_micros(CAST({ts_col} AS TIMESTAMP_LTZ))")
+    ts_us = F.expr("unix_micros(CAST(ts AS TIMESTAMP_LTZ))")
     w = (
         Window.partitionBy("user_id", "_day")
         .orderBy("_us")
-        .rangeBetween(-(window_s * 1_000_000 - 1), 0)
+        .rangeBetween(-(60 * 1_000_000 - 1), 0)
     )
     bursts = (
         events.select(
-            "user_id", day.alias("_day"), ts_us.alias("_us")
+            "user_id", epoch_day().alias("_day"), ts_us.alias("_us")
         )
         .withColumn("_burst", F.count(F.lit(1)).over(w))
         .groupBy("user_id")
@@ -2512,12 +2411,7 @@ def burst_census(
     )
 
 
-def hourly_profile(
-    events: DataFrame,
-    chi2_threshold: int = 42,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def hourly_profile(events: DataFrame) -> DataFrame:
     """Diurnal-seasonality detector per key — weekday_profile's
     hour-of-day sibling and the other half of the bot signature:
     humans sleep (a 24-cell profile with a trough), schedulers fire
@@ -2528,30 +2422,31 @@ def hourly_profile(
 
     Chi-square against uniform over 24 cells with the weekday_profile
     integer recipe: term = (24*n - total)^2 DIV (24*total), missing
-    hours materialized by exploding a literal 0..23 sequence.
+    hours materialized by exploding a literal 0..23 sequence;
+    is_diurnal flags chi2 >= 42.
 
-    Output: <key_col>, hour, n_events, total, chi2, is_diurnal
+    Output: event_type, hour, n_events, total, chi2, is_diurnal
     (chi2/is_diurnal repeated on each of the key's 24 rows).
     """
     hour = F.expr(
-        f"CAST(unix_timestamp(date_trunc('hour', {ts_col})) AS BIGINT)"
+        "CAST(unix_timestamp(date_trunc('hour', ts)) AS BIGINT)"
         " DIV 3600 % 24"
     )
     prof = (
-        events.select(key_col, hour.alias("hour"))
-        .groupBy(key_col, "hour")
+        events.select("event_type", hour.alias("hour"))
+        .groupBy("event_type", "hour")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    tot = prof.groupBy(key_col).agg(F.sum("n_events").alias("total"))
+    tot = prof.groupBy("event_type").agg(F.sum("n_events").alias("total"))
     grid = tot.select(
-        key_col,
+        "event_type",
         "total",
         F.explode(
             F.sequence(F.lit(0).cast("long"), F.lit(23).cast("long"))
         ).alias("hour"),
     )
-    full = grid.join(prof, [key_col, "hour"], "left").select(
-        key_col,
+    full = grid.join(prof, ["event_type", "hour"], "left").select(
+        "event_type",
         "hour",
         "total",
         F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias(
@@ -2562,27 +2457,25 @@ def hourly_profile(
         "(24 * n_events - total) * (24 * n_events - total)"
         " DIV (24 * total)"
     )
-    chi = full.select(key_col, term.alias("_t")).groupBy(key_col).agg(
-        F.sum("_t").alias("chi2")
+    chi = (
+        full.select("event_type", term.alias("_t"))
+        .groupBy("event_type")
+        .agg(F.sum("_t").alias("chi2"))
     )
     return (
-        full.join(F.broadcast(chi), key_col)
+        full.join(F.broadcast(chi), "event_type")
         .select(
-            key_col,
+            "event_type",
             "hour",
             "n_events",
             "total",
             "chi2",
-            (F.col("chi2") >= chi2_threshold).alias("is_diurnal"),
+            (F.col("chi2") >= 42).alias("is_diurnal"),
         )
     )
 
 
-def deseasonalized_anomalies(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def deseasonalized_anomalies(events: DataFrame) -> DataFrame:
     """Weekday-adjusted daily anomaly flags — the fix for
     daily_anomalies' blind spot on weekly-patterned traffic (every
     Saturday looks like a dip against a trailing-week mean): each
@@ -2598,24 +2491,21 @@ def deseasonalized_anomalies(
     bounded relation broadcast back; leave-one-out is arithmetic on
     the rollup (sum - n, cnt - 1), never a second scan.
 
-    Output: <key_col>, day, weekday, n_events, base_days, base_sum,
+    Output: event_type, day, weekday, n_events, base_days, base_sum,
     is_high, is_low (0/1).
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
     daily = (
-        events.select(key_col, day.alias("day"))
-        .groupBy(key_col, "day")
+        events.select("event_type", epoch_day().alias("day"))
+        .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .withColumn("weekday", (F.col("day") + 3) % 7)
     )
-    wk = daily.groupBy(key_col, "weekday").agg(
+    wk = daily.groupBy("event_type", "weekday").agg(
         F.sum("n_events").alias("_wsum"),
         F.count(F.lit(1)).alias("_wcnt"),
     )
-    j = daily.join(F.broadcast(wk), [key_col, "weekday"]).select(
-        key_col,
+    j = daily.join(F.broadcast(wk), ["event_type", "weekday"]).select(
+        "event_type",
         "day",
         "weekday",
         "n_events",
@@ -2623,7 +2513,7 @@ def deseasonalized_anomalies(
         (F.col("_wsum") - F.col("n_events")).alias("base_sum"),
     )
     return j.select(
-        key_col,
+        "event_type",
         "day",
         "weekday",
         "n_events",
@@ -2657,7 +2547,7 @@ def deseasonalized_anomalies(
 STREAK_WINDOW = 62  # trailing days kept in the activity bitmap
 
 
-def streak_census(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def streak_census(events: DataFrame) -> DataFrame:
     """Longest consecutive-day activity streak per user, rolled into a
     census — the habit metric (Duolingo-style) growth teams track
     beside the L28 histogram: how many users sustained runs of exactly
@@ -2678,10 +2568,7 @@ def streak_census(events: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     Output: streak, n_users.
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    d = events.select("user_id", day.alias("_day"))
+    d = events.select("user_id", epoch_day().alias("_day"))
     dmax = d.agg(F.max("_day").alias("_dmax"))
     masks = (
         d.crossJoin(F.broadcast(dmax))
@@ -2712,15 +2599,7 @@ def streak_census(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def attribution_linear(
-    events: DataFrame,
-    touch_types: Sequence[str] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = ATTRIBUTION_WINDOW_US,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def attribution_linear(events: DataFrame) -> DataFrame:
     """Linear multi-touch attribution — last-touch's fairer sibling
     (the marketing-analytics standard pair): every qualifying touch in
     the lookback window splits the conversion's credit equally,
@@ -2739,46 +2618,7 @@ def attribution_linear(
     Output per touch_type: n_touches, n_conversions (distinct convs
     this type touched), credit_ppm_sum.
     """
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
-    conv = events.where(F.col(type_col) == conversion_type).select(
-        F.col("event_id").alias("conv_id"),
-        F.col(user_col),
-        ts_us.alias("conv_us"),
-    )
-    touch = events.where(
-        F.col(type_col).isin(list(touch_types))
-    ).select(
-        F.col("event_id").alias("touch_id"),
-        F.col(user_col),
-        ts_us.alias("touch_us"),
-        F.col(type_col).alias("touch_type"),
-    )
-    probes = conv.select(
-        "conv_id",
-        user_col,
-        "conv_us",
-        F.explode(
-            F.array(
-                F.expr(f"conv_us DIV {window_us}"),
-                F.expr(f"conv_us DIV {window_us} - 1"),
-            )
-        ).alias("_bucket"),
-    )
-    cand = probes.join(
-        touch.withColumn(
-            "_bucket", F.expr(f"touch_us DIV {window_us}")
-        ),
-        [user_col, "_bucket"],
-    ).where(
-        (
-            (F.col("touch_us") < F.col("conv_us"))
-            | (
-                (F.col("touch_us") == F.col("conv_us"))
-                & (F.col("touch_id") < F.col("conv_id"))
-            )
-        )
-        & (F.col("conv_us") - F.col("touch_us") <= F.lit(window_us))
-    )
+    _, cand = _attribution_candidates(events)
     per_conv = cand.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("_n")
     )
@@ -2794,22 +2634,21 @@ def attribution_linear(
     )
 
 
-def error_budget_burn(
-    events: DataFrame,
-    budget_bp: int = 100,
-    error_type: str = "error",
-    ts_col: str = "ts",
-) -> DataFrame:
+#: error_budget_burn's budget: 1% of events may be errors.
+ERROR_BUDGET_BP = 100
+
+
+def error_budget_burn(events: DataFrame) -> DataFrame:
     """SLO error-budget burn-down — the SRE view of the event stream:
-    daily error rate against a `budget_bp` (default 1%) error budget,
+    daily rate of `error` events against an ERROR_BUDGET_BP error budget,
     plus the CUMULATIVE share of the period's budget already burned
     (in bp of budget, can exceed 10000 = blown) and a fast-burn flag
     for days spending more than 3x their pro-rata budget. All integer
     cross-multiplies:
 
-      burned_bp      = cum_err * 10000 * 10000 DIV (budget_bp * cum_n)
-      fast_burn      = n_err * 10000 > 3 * budget_bp * n_total
-                       (i.e. the day's rate_bp exceeds 3x budget_bp)
+      burned_bp = cum_err * 10000 * 10000 DIV (ERROR_BUDGET_BP * cum_n)
+      fast_burn = n_err * 10000 > 3 * ERROR_BUDGET_BP * n_total
+                  (i.e. the day's rate_bp exceeds 3x ERROR_BUDGET_BP)
 
     Shape: one (day) map-side-combined aggregate with a conditional
     error count; the cumulative window runs over the BOUNDED day
@@ -2819,13 +2658,10 @@ def error_budget_burn(
     Output: day, n_total, n_errors, rate_bp, cum_burned_bp,
     fast_burn (0/1).
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
     daily = (
         events.select(
-            day.alias("day"),
-            (F.col("event_type") == error_type).cast("long").alias(
+            epoch_day().alias("day"),
+            (F.col("event_type") == "error").cast("long").alias(
                 "_e"
             ),
         )
@@ -2852,16 +2688,16 @@ def error_budget_burn(
         "n_errors",
         "rate_bp",
         F.expr(
-            f"_ce * 10000 * 10000 DIV ({budget_bp} * _cn)"
+            f"_ce * 10000 * 10000 DIV ({ERROR_BUDGET_BP} * _cn)"
         ).alias("cum_burned_bp"),
         F.expr(
             f"CAST(n_errors * 10000 >"
-            f" 3 * {budget_bp} * n_total AS LONG)"
+            f" 3 * {ERROR_BUDGET_BP} * n_total AS LONG)"
         ).alias("fast_burn"),
     )
 
 
-def srm_check(events: DataFrame, user_col: str = "user_id") -> DataFrame:
+def srm_check(events: DataFrame) -> DataFrame:
     """Sample-ratio-mismatch check — the A/B hygiene gate that must
     pass BEFORE anyone reads ab_metrics: with the same sticky md5-hex
     arm rule, distinct USERS (assignment grain, never events) should
@@ -2876,7 +2712,7 @@ def srm_check(events: DataFrame, user_col: str = "user_id") -> DataFrame:
 
     Output: n_users, n_a, n_b, srm_chi2, is_srm, is_srm_strong.
     """
-    users = events.select(F.col(user_col).alias("_u")).distinct()
+    users = events.select(F.col("user_id").alias("_u")).distinct()
     is_a = F.substring(
         F.md5(F.col("_u").cast("string")), 1, 1
     ).isin(*AB_EVEN_HEX)
@@ -3003,16 +2839,14 @@ def heaping_audit(events: DataFrame) -> DataFrame:
     )
 
 
-def user_p95_distribution(
-    events: DataFrame, bucket_c: int = 1000
-) -> DataFrame:
+def user_p95_distribution(events: DataFrame) -> DataFrame:
     """Per-USER p95 then the distribution of those p95s — the
     SRE/product-experience truth that a global p95 hides: a fine
     global tail can coexist with 5% of users living entirely in it.
     Level 1: each user's exact p95 of floored-cents values (rank
     ceil(0.95 n) under (cents, event_id) ordering — deterministic
     under value ties). Level 2: a histogram of user-p95s in
-    `bucket_c`-cent buckets.
+    1000-cent buckets.
 
     Shape: the rank window partitions by USER — the metric's own
     grain; per-user volumes are retention-bounded in practice and the
@@ -3020,7 +2854,7 @@ def user_p95_distribution(
     one task; cap upstream with keyed_quota if that is a live risk).
     Both rollups after the window are map-side-combined.
 
-    Output: bucket, n_users (bucket * bucket_c = lower bound of the
+    Output: bucket, n_users (bucket * 1000 = lower bound of the
     users' p95 in cents).
     """
     cents = F.floor(F.col("value") * 100).cast("long")
@@ -3039,14 +2873,14 @@ def user_p95_distribution(
     ).select("user_id", F.col("_c").alias("p95_c"))
     return (
         p95.select(
-            F.expr(f"p95_c DIV {bucket_c}").cast("long").alias("bucket")
+            F.expr("p95_c DIV 1000").cast("long").alias("bucket")
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
 
 
-def new_vs_returning(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def new_vs_returning(events: DataFrame) -> DataFrame:
     """Daily new-vs-returning split — growth accounting 101: per day,
     how many active users were seen for the first time that day vs
     returning, plus the new share in bp. First-seen day is one
@@ -3056,10 +2890,7 @@ def new_vs_returning(events: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     Output: day, n_active, n_new, n_returning, new_share_bp.
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
-    ud = events.select("user_id", day.alias("day")).distinct()
+    ud = events.select("user_id", epoch_day().alias("day")).distinct()
     first = ud.groupBy("user_id").agg(F.min("day").alias("_first"))
     j = ud.join(F.broadcast(first), "user_id").select(
         "day", (F.col("day") == F.col("_first")).cast("long").alias("_new")
@@ -3080,11 +2911,7 @@ def new_vs_returning(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def forecast_baselines(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def forecast_baselines(events: DataFrame) -> DataFrame:
     """Forecast-baseline scorecard — the sanity check that must beat
     any model before it ships: per key, the sum of absolute day-ahead
     errors of the NAIVE forecast (yesterday's count) vs the
@@ -3099,42 +2926,39 @@ def forecast_baselines(
     DAYS via a self-join on day-7 — gap-robust: a missing day yields
     no seasonal prediction rather than the wrong row).
 
-    Output: <key_col>, n_scored, sae_naive, sae_seasonal, mase_bp
+    Output: event_type, n_scored, sae_naive, sae_seasonal, mase_bp
     (-1 sentinel when sae_naive is 0).
     """
-    day = F.expr(
-        f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400"
-    )
     daily = (
-        events.select(key_col, day.alias("day"))
-        .groupBy(key_col, "day")
+        events.select("event_type", epoch_day().alias("day"))
+        .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy(key_col).orderBy("day")
+    w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.withColumn("_prev", F.lag("n").over(w)).withColumn(
         "_prev_day", F.lag("day").over(w)
     )
     week = daily.select(
-        F.col(key_col).alias("_k"),
+        F.col("event_type").alias("_k"),
         (F.col("day") + 7).alias("_d7"),
         F.col("n").alias("_n7"),
     )
     j = lagged.join(
         week,
-        (F.col(key_col) == F.col("_k")) & (F.col("day") == F.col("_d7")),
+        (F.col("event_type") == F.col("_k")) & (F.col("day") == F.col("_d7")),
         "left",
     ).where(
         F.col("_prev").isNotNull()
         & (F.col("_prev_day") == F.col("day") - 1)
         & F.col("_n7").isNotNull()
     )
-    agg = j.groupBy(key_col).agg(
+    agg = j.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_scored"),
         F.sum(F.abs(F.col("n") - F.col("_prev"))).alias("sae_naive"),
         F.sum(F.abs(F.col("n") - F.col("_n7"))).alias("sae_seasonal"),
     )
     return agg.select(
-        key_col,
+        "event_type",
         "n_scored",
         "sae_naive",
         "sae_seasonal",

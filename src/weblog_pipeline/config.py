@@ -11,7 +11,7 @@ compiled pipeline (see enrich.py) closes over a validated, frozen config.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from .severity import VALID_CONFIG_SEVERITIES
 
@@ -75,8 +75,21 @@ class PipelineConfig:
 
     @staticmethod
     def from_dict(raw: dict) -> "PipelineConfig":
-        """Build from a parsed YAML/JSON dict using the reference's key names."""
+        """Build from a parsed YAML/JSON dict using the reference's key
+        names. An unknown key, at the top level or inside
+        attribute_mappings, raises ValueError, as the reference's config
+        unmarshal does: a misspelled key would otherwise fall back to its
+        default without a word."""
         am_raw = raw.get("attribute_mappings", {}) or {}
+        for where, keys, cls in (
+            ("", raw, PipelineConfig),
+            ("attribute_mappings.", am_raw, AttributeMappings),
+        ):
+            unknown = sorted(set(keys) - {f.name for f in fields(cls)})
+            if unknown:
+                raise ValueError(
+                    f"unknown config keys: {', '.join(where + k for k in unknown)}"
+                )
         return PipelineConfig(
             include_event_names=tuple(raw.get("include_event_names", ()) or ()),
             include_span_context=raw.get("include_span_context", True),

@@ -31,7 +31,7 @@ from .config import (
     SinkRoute,
     route_event,
 )
-from .aggregate import domain_counts, funnel_stages, trace_rollup
+from .aggregate import domain_counts, epoch_day, funnel_stages, trace_rollup
 from .enrich import attrs_rendered, log_record_columns
 from .generate import (
     BASE_TS_NS,
@@ -1165,14 +1165,7 @@ def q_daily_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weblog_pipeline.aggregate import value_percentiles
 
     ev = _read(spark, sf_dir, "events").select(
-        F.concat_ws(
-            "#",
-            F.col("event_type"),
-            F.expr(
-                "CAST(unix_timestamp(date_trunc('day', ts)) AS BIGINT)"
-                " DIV 86400"
-            ),
-        ).alias("type_day"),
+        F.concat_ws("#", F.col("event_type"), epoch_day()).alias("type_day"),
         "value",
     )
     return value_percentiles(ev, qs=(50, 95), key_col="type_day")
@@ -2773,10 +2766,7 @@ def q_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weblog_pipeline.aggregate import schema_drift
 
     ev = _read(spark, sf_dir, "events")
-    parity = F.expr(
-        "CAST(unix_timestamp(date_trunc('day', ts)) AS BIGINT)"
-        " DIV 86400 % 2"
-    )
+    parity = epoch_day() % 2
     planted = ev.withColumn(
         "props",
         F.when(
@@ -4514,12 +4504,8 @@ def q_parity_epoch_us(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"unix_micros(TIMESTAMP '{s}')").alias(f"us_{i}")
         for i, s in enumerate(_EPOCH_US_STAMPS)
     ]
-    cols.append(
-        F.expr(
-            f"unix_timestamp(date_trunc('day', TIMESTAMP "
-            f"'{_EPOCH_US_STAMPS[3]}'))"
-        ).alias("day_s")
-    )
+    day = epoch_day(f"TIMESTAMP '{_EPOCH_US_STAMPS[3]}'")
+    cols.append((day * 86400).alias("day_s"))
     return spark.range(1).select(*cols)
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..aggregate import topk
+from ..aggregate import epoch_day, topk
 from . import dedup, textstats
 
 SAMPLE_BUCKETS = 100
@@ -1209,7 +1209,7 @@ def zone_maps(
     """
     from pyspark.sql import Window
 
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
+    day = epoch_day(ts_col)
     cents = F.floor(F.col("value") * F.lit(100)).cast("long")
     per_day = (
         events.select(
@@ -1305,7 +1305,7 @@ def zorder_bins(
     """
     from pyspark.sql import Window
 
-    day = F.expr(f"unix_timestamp(date_trunc('day', {ts_col})) DIV 86400")
+    day = epoch_day(ts_col)
     dims = events.select(
         (F.col("user_id") % 256).alias("u8"), (day % 256).alias("d8")
     )

@@ -24,11 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DAY = "CAST(unix_timestamp(date_trunc('day', {c})) AS BIGINT) DIV 86400"
-
-
-def _day(col: str):
-    return F.expr(_DAY.format(c=col))
+from ..aggregate import epoch_day
 
 
 def pricing_rollup(lineitem: DataFrame, ship_lag_days: int = 7) -> DataFrame:
@@ -40,10 +36,10 @@ def pricing_rollup(lineitem: DataFrame, ship_lag_days: int = 7) -> DataFrame:
     Output: l_returnflag, l_linestatus, n_rows, sum_qty_c, sum_base_c,
     sum_disc_c, sum_charge_c, avg_qty_c, avg_price_c, avg_disc_bp.
     """
-    dmax = lineitem.agg(F.max(_day("l_shipdate")).alias("_dmax"))
+    dmax = lineitem.agg(F.max(epoch_day("l_shipdate")).alias("_dmax"))
     rows = (
         lineitem.crossJoin(F.broadcast(dmax))
-        .where(_day("l_shipdate") <= F.col("_dmax") - ship_lag_days)
+        .where(epoch_day("l_shipdate") <= F.col("_dmax") - ship_lag_days)
         .select(
             "l_returnflag",
             "l_linestatus",
@@ -108,7 +104,7 @@ def shipping_topk(
     """
     pivot = orders.agg(
         (
-            (F.min(_day("o_orderdate")) + F.max(_day("o_orderdate")))
+            (F.min(epoch_day("o_orderdate")) + F.max(epoch_day("o_orderdate")))
             / 2
         )
         .cast("long")
@@ -119,15 +115,15 @@ def shipping_topk(
     )
     o = (
         orders.crossJoin(F.broadcast(pivot))
-        .where(_day("o_orderdate") < F.col("_mid"))
+        .where(epoch_day("o_orderdate") < F.col("_mid"))
         .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
         .select(
-            "o_orderkey", _day("o_orderdate").alias("order_day"), "_mid"
+            "o_orderkey", epoch_day("o_orderdate").alias("order_day"), "_mid"
         )
     )
     li = lineitem.select(
         "l_orderkey",
-        _day("l_shipdate").alias("_sday"),
+        epoch_day("l_shipdate").alias("_sday"),
         F.floor(
             F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
         )
@@ -250,10 +246,10 @@ def order_fulfilment(
     o = orders.select(
         "o_orderkey",
         "o_orderpriority",
-        _day("o_orderdate").alias("_oday"),
+        epoch_day("o_orderdate").alias("_oday"),
     )
     li = lineitem.select(
-        "l_orderkey", _day("l_shipdate").alias("_sday")
+        "l_orderkey", epoch_day("l_shipdate").alias("_sday")
     )
     late = (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
@@ -399,7 +395,7 @@ def heavy_orders(
             "o_orderkey",
             "c_custkey",
             "c_mktsegment",
-            _day("o_orderdate").alias("order_day"),
+            epoch_day("o_orderdate").alias("order_day"),
             F.floor(F.col("o_totalprice") * 100)
             .cast("long")
             .alias("total_c"),
@@ -461,19 +457,10 @@ def scd2_lookup(events: DataFrame, customer: DataFrame,
 
     Output: seg, version, n_events, n_users, sum_value_c.
     """
-    day0 = events.agg(
-        F.min(
-            F.expr("CAST(unix_timestamp(date_trunc('day', ts)) AS BIGINT)"
-                   " DIV 86400")
-        ).alias("_d0")
-    )
+    day0 = events.agg(F.min(epoch_day()).alias("_d0"))
     ev = events.crossJoin(F.broadcast(day0)).select(
         "user_id",
-        (
-            F.expr("CAST(unix_timestamp(date_trunc('day', ts)) AS BIGINT)"
-                   " DIV 86400")
-            - F.col("_d0")
-        ).alias("day"),
+        (epoch_day() - F.col("_d0")).alias("day"),
         F.floor(F.col("value") * 100).cast("long").alias("value_c"),
     )
     dim = scd2_dim(customer, n_days)

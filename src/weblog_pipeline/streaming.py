@@ -26,7 +26,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig, SinkRoute
+from .aggregate import (
+    ANOMALY_MIN_BASE_DAYS,
+    ANOMALY_Z,
+    ATTRIBUTION_CONVERSION_TYPE,
+    ATTRIBUTION_TOUCH_TYPES,
+    ATTRIBUTION_WINDOW_S,
+    ATTRIBUTION_WINDOW_US,
+    HDR_BUCKET_WIDTH,
+    TRENDING_RECENT_DAYS,
+    TRENDING_WINDOW_DAYS,
+    epoch_day,
+)
+from .config import DEFAULT_ROUTES, DEFAULT_SINK, PipelineConfig
 from .pipeline import compile_records, record_plan
 from .webpages import WEBPAGES_SCHEMA
 
@@ -36,8 +48,6 @@ def streaming_logs(
     input_path: str,
     cfg: PipelineConfig,
     observed_ts_us: int,
-    routes: tuple[SinkRoute, ...] = DEFAULT_ROUTES,
-    default_sink: str = DEFAULT_SINK,
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
     """Streaming DataFrame of routed log records from a file source."""
@@ -46,35 +56,31 @@ def streaming_logs(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-    _, logs = record_plan(stream, compile_records(cfg, routes, default_sink, observed_ts_us))
+    records = compile_records(cfg, DEFAULT_ROUTES, DEFAULT_SINK, observed_ts_us)
+    _, logs = record_plan(stream, records)
     return logs
 
 
-def start_sink_writer(
-    logs: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    trigger_available_now: bool = True,
-):
-    """Exactly-once partitioned fan-out write (one stream, all sinks)."""
-    writer = (
+def start_sink_writer(logs: DataFrame, output_path: str, checkpoint_path: str):
+    """Exactly-once partitioned fan-out write (one stream, all sinks) of
+    everything available now."""
+    return (
         logs.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .partitionBy("sink")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def windowed_sink_counts(logs: DataFrame, window: str = "1 hour",
-                         watermark: str = "2 hours") -> DataFrame:
-    """Per-sink counts over event-time windows with late-data watermark."""
+def windowed_sink_counts(logs: DataFrame) -> DataFrame:
+    """Per-sink counts over 1-hour event-time windows with a 2-hour
+    late-data watermark."""
     return (
-        logs.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "sink")
+        logs.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "sink")
         .agg(F.count(F.lit(1)).alias("records"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -85,13 +91,12 @@ def windowed_sink_counts(logs: DataFrame, window: str = "1 hour",
     )
 
 
-def dedup_stream(
-    pages: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def dedup_stream(pages: DataFrame) -> DataFrame:
     """Streaming exact deduplication: keep the first arrival of each
     normalized content hash, dropping any later duplicate whose event time
-    falls within the watermark horizon (dropDuplicatesWithinWatermark —
-    the streaming twin of `ops.dedup.exact_duplicates`).
+    falls within the 2-hour watermark horizon
+    (dropDuplicatesWithinWatermark — the streaming twin of
+    `ops.dedup.exact_duplicates`).
 
     The watermark is what makes this viable at 100 TB-equivalent rates:
     state holds one (hash, ts) entry per document seen in the horizon and
@@ -105,7 +110,7 @@ def dedup_stream(
 
     hashed = pages.withColumn("content_hash", content_hash_col("text"))
     return hashed.withWatermark(
-        "warc_ts", watermark
+        "warc_ts", "2 hours"
     ).dropDuplicatesWithinWatermark(["content_hash"])
 
 
@@ -188,11 +193,6 @@ def _close_days(rows, day, n, close, fold=None):
         if fold:
             fold(row)
     return day, n
-
-
-def _day():
-    """The event-time day of `ts`, in days since the epoch."""
-    return F.expr("unix_timestamp(date_trunc('day', ts)) DIV 86400").alias("day")
 
 
 def _count_step(state, rows):
@@ -286,8 +286,6 @@ def streaming_otlp_logs(
     input_path: str,
     cfg: PipelineConfig,
     observed_ts_us: int,
-    routes: tuple[SinkRoute, ...] = DEFAULT_ROUTES,
-    default_sink: str = DEFAULT_SINK,
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
     """Routed log records from a streaming OTLP/JSON directory: the full
@@ -300,7 +298,8 @@ def streaming_otlp_logs(
         .withColumn("warc_ts", F.lit(None).cast("timestamp"))
         .withColumn("lang", F.lit(None).cast("string"))
     )
-    return compile_records(cfg, routes, default_sink, observed_ts_us)(events)
+    records = compile_records(cfg, DEFAULT_ROUTES, DEFAULT_SINK, observed_ts_us)
+    return records(events)
 
 
 # ---------------------------------------------------------------------------
@@ -343,7 +342,7 @@ def keyed_quota_stateful(events: DataFrame, k: int = 3) -> DataFrame:
         "event_id",
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
-        F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("win_start"),
+        (epoch_day() * 86400).alias("win_start"),
     )
     return _stateful(keyed, ["user_id", "win_start"], quota, QUOTA_SCHEMA,
                      _QUOTA_STATE_SCHEMA, "append")
@@ -391,14 +390,15 @@ HDR_CELL_SCHEMA = "event_type string, bucket int, cnt long"
 _HDR_STATE_SCHEMA = "cnt long"
 
 
-def hdr_stream(events: DataFrame, bucket_width: float = 10.0) -> DataFrame:
+def hdr_stream(events: DataFrame) -> DataFrame:
     """Streaming HDR latency histogram — the continuous-monitoring twin
     of aggregate.value_percentiles' batch histogram: bucket assignment is
-    the SAME floor(value / width) expression, and each (event_type,
-    bucket) cell keeps one running counter in the state store, emitting
-    its new total every micro-batch it is touched (append-safe: each
-    emission is a new, strictly larger total — the final histogram is
-    max(cnt) per cell, and percentiles read off its cumulative sums).
+    the SAME floor(value / HDR_BUCKET_WIDTH) expression, and each
+    (event_type, bucket) cell keeps one running counter in the state
+    store, emitting its new total every micro-batch it is touched
+    (append-safe: each emission is a new, strictly larger total — the
+    final histogram is max(cnt) per cell, and percentiles read off its
+    cumulative sums).
 
     The 100 TB story is the STATE BOUND: like cms_stream, the store
     holds at most |event types| x |buckets| keys — the histogram
@@ -408,7 +408,9 @@ def hdr_stream(events: DataFrame, bucket_width: float = 10.0) -> DataFrame:
     """
     cells = events.select(
         "event_type",
-        F.floor(F.col("value") / F.lit(bucket_width)).cast("int").alias("bucket"),
+        F.floor(F.col("value") / F.lit(HDR_BUCKET_WIDTH))
+        .cast("int")
+        .alias("bucket"),
     )
     return _stateful(cells, ["event_type", "bucket"], _count_step,
                      HDR_CELL_SCHEMA, _HDR_STATE_SCHEMA, "append")
@@ -423,12 +425,7 @@ ATTR_SCHEMA = (
 _ATTR_STATE_SCHEMA = "touch_us long, touch_id long, touch_type string"
 
 
-def attribution_stateful(
-    events: DataFrame,
-    window_us: int | None = None,
-    touch_types: tuple = ("view", "click"),
-    conversion_type: str = "purchase",
-) -> DataFrame:
+def attribution_stateful(events: DataFrame) -> DataFrame:
     """Streaming twin of aggregate.attribution_last_touch: one
     (touch_us, touch_id, touch_type) triple per live user in the state
     store — the user's latest touch so far — and every conversion emits
@@ -445,10 +442,7 @@ def attribution_stateful(
     candidates from scratch each run); the lookback window applies at
     emit time, so stale touches cost nothing but their row.
     """
-    from .aggregate import ATTRIBUTION_WINDOW_US
-
-    win = ATTRIBUTION_WINDOW_US if window_us is None else window_us
-    touches = set(touch_types)
+    touches = set(ATTRIBUTION_TOUCH_TYPES)
 
     def attrib(state, rows):
         cur_us, cur_id, cur_type = state or (None, None, None)
@@ -457,8 +451,8 @@ def attribution_stateful(
             if etype in touches:
                 if cur_us is None or (us, eid) > (cur_us, cur_id):
                     cur_us, cur_id, cur_type = us, eid, etype
-            elif etype == conversion_type:
-                if cur_us is not None and us - cur_us <= win:
+            elif etype == ATTRIBUTION_CONVERSION_TYPE:
+                if cur_us is not None and us - cur_us <= ATTRIBUTION_WINDOW_US:
                     out.append((eid, user, cur_id, cur_type, us - cur_us))
                 else:
                     out.append((eid, user, -1, "none", -1))
@@ -485,8 +479,7 @@ _ANOM_STATE_SCHEMA = (
 )
 
 
-def anomaly_stream(events: DataFrame, z: int = 2,
-                   min_base_days: int = 3) -> DataFrame:
+def anomaly_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of aggregate.daily_anomalies: per event type the
     state store holds the trailing <=7 CLOSED days' counts plus the
     open day's running counter — a fixed-width row per key, however
@@ -509,7 +502,8 @@ def anomaly_stream(events: DataFrame, z: int = 2,
         def close(day, cnt):
             w, s1, s2 = len(hd), sum(hc), sum(c * c for c in hc)
             lhs = w * cnt - s1
-            flag = w >= min_base_days and lhs * lhs > z * z * (w * s2 - s1 * s1)
+            flag = (w >= ANOMALY_MIN_BASE_DAYS
+                    and lhs * lhs > ANOMALY_Z * ANOMALY_Z * (w * s2 - s1 * s1))
             out.append((rows[0][0], day, cnt, w, s1, flag))
             hd.append(day)
             hc.append(cnt)
@@ -517,17 +511,12 @@ def anomaly_stream(events: DataFrame, z: int = 2,
 
         return (hd, hc, *_close_days(rows, day, n, close)), out
 
-    return _stateful(events.select("event_type", _day()), ["event_type"], step, ANOM_SCHEMA,
+    days = events.select("event_type", epoch_day().alias("day"))
+    return _stateful(days, ["event_type"], step, ANOM_SCHEMA,
                      _ANOM_STATE_SCHEMA, "append")
 
 
-def touch_conversion_join(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    window_s: int = 7 * 86400,
-    touch_types: tuple = ("view", "click"),
-    conversion_type: str = "purchase",
-) -> DataFrame:
+def touch_conversion_join(events: DataFrame) -> DataFrame:
     """STREAM-STREAM event-time interval join — the Structured
     Streaming operator family the stateful ops don't exercise: the
     touch stream joins the conversion stream of the SAME source on
@@ -535,7 +524,8 @@ def touch_conversion_join(
 
         conv_ts - window <= touch_ts < conv_ts        (strictly earlier)
 
-    Both sides carry watermarks, so Spark can bound the join state: a
+    with the attribution window (ATTRIBUTION_WINDOW_S, 7 days). Both
+    sides carry 1-hour watermarks, so Spark can bound the join state: a
     touch row is dropped from state once the conversion watermark
     passes touch_ts + window (this is THE reason stream-stream joins
     require event-time bounds — unbounded conditions would accumulate
@@ -547,30 +537,30 @@ def touch_conversion_join(
     Output: conv_id, user_id, touch_id, touch_type, delta_us.
     """
     touches = (
-        events.where(F.col("event_type").isin(*touch_types))
+        events.where(F.col("event_type").isin(*ATTRIBUTION_TOUCH_TYPES))
         .select(
             F.col("event_id").alias("touch_id"),
             F.col("user_id").alias("t_user"),
             F.col("event_type").alias("touch_type"),
             F.col("ts").alias("t_ts"),
         )
-        .withWatermark("t_ts", watermark)
+        .withWatermark("t_ts", "1 hour")
     )
     convs = (
-        events.where(F.col("event_type") == conversion_type)
+        events.where(F.col("event_type") == ATTRIBUTION_CONVERSION_TYPE)
         .select(
             F.col("event_id").alias("conv_id"),
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "1 hour")
     )
     joined = touches.join(
         convs,
         (F.col("t_user") == F.col("c_user"))
         & (F.col("t_ts") < F.col("c_ts"))
         & (F.col("t_ts") >= F.col("c_ts") - F.expr(
-            f"INTERVAL {window_s} SECONDS"
+            f"INTERVAL {ATTRIBUTION_WINDOW_S} SECONDS"
         )),
         "inner",
     )
@@ -626,7 +616,8 @@ def cusum_stream(events: DataFrame, ref: int = 8,
         day, n = _close_days(rows, day, n, close)
         return (day, n, s), out
 
-    return _stateful(events.select("event_type", _day()), ["event_type"], step,
+    days = events.select("event_type", epoch_day().alias("day"))
+    return _stateful(days, ["event_type"], step,
                      CUSUM_SCHEMA, _CUSUM_STATE_SCHEMA, "append")
 
 
@@ -639,10 +630,9 @@ _TREND_STATE_SCHEMA = (
 )
 
 
-def trending_stream(events: DataFrame, window_days: int = 16,
-                    recent_days: int = 3) -> DataFrame:
+def trending_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of aggregate.trending_items: per item the state
-    store holds the trailing <= window_days
+    store holds the trailing <= TRENDING_WINDOW_DAYS
     closed (day, count) pairs plus the open day's running counter, a
     fixed-width row per live item forever. A day closes (and emits,
     append-safe) when a later day's first event arrives for that item;
@@ -665,16 +655,16 @@ def trending_stream(events: DataFrame, window_days: int = 16,
         def close(day, cnt):
             hd.append(day)
             hc.append(cnt)
-            del hd[:-window_days], hc[:-window_days]
+            del hd[:-TRENDING_WINDOW_DAYS], hc[:-TRENDING_WINDOW_DAYS]
             n_ev = w_tot = w_rec = 0
             for d2, c2 in zip(hd, hc):
                 age = day - d2
-                if age >= window_days:
+                if age >= TRENDING_WINDOW_DAYS:
                     continue
-                w = c2 << (window_days - 1 - age)
+                w = c2 << (TRENDING_WINDOW_DAYS - 1 - age)
                 n_ev += c2
                 w_tot += w
-                if age < recent_days:
+                if age < TRENDING_RECENT_DAYS:
                     w_rec += w
             out.append((rows[0][0], day, n_ev, w_tot, w_rec,
                         1 if 2 * w_rec > w_tot else 0))
@@ -688,7 +678,7 @@ def trending_stream(events: DataFrame, window_days: int = 16,
         )
         .select(
             F.get_json_object("props", "$.k").cast("long").alias("item"),
-            _day(),
+            epoch_day().alias("day"),
         )
     )
     return _stateful(cells, ["item"], step, TREND_SCHEMA,
@@ -745,5 +735,6 @@ def kmv_stream(events: DataFrame, k: int = 64) -> DataFrame:
         day, _ = _close_days(rows, day, 0, emit, add)
         return (hs, day), out
 
-    return _stateful(events.select("event_type", _day(), "user_id"), ["event_type"],
-                     step, KMV_STREAM_SCHEMA, _KMV_STATE_SCHEMA, "append")
+    days = events.select("event_type", epoch_day().alias("day"), "user_id")
+    return _stateful(days, ["event_type"], step, KMV_STREAM_SCHEMA,
+                     _KMV_STATE_SCHEMA, "append")

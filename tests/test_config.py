@@ -57,6 +57,20 @@ def test_from_dict_roundtrip():
 
 
 @pytest.mark.parametrize(
+    "raw,key",
+    [
+        ({"include_event_name": ["exception"]}, "include_event_name"),
+        ({"attribute_mappings": {"bdy": "event.body"}}, "attribute_mappings.bdy"),
+    ],
+)
+def test_from_dict_rejects_unknown_keys(raw, key):
+    # a misspelled key must not silently fall back to its default (here
+    # the pass-all event filter or a disabled body mapping)
+    with pytest.raises(ValueError, match=f"unknown config keys: {key}$"):
+        PipelineConfig.from_dict(raw)
+
+
+@pytest.mark.parametrize(
     "name,sink",
     [
         ("exception", "sink_errors"),

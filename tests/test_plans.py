@@ -543,6 +543,82 @@ def test_python_row_stages_share_map_rows():
         assert len(where) == len(allowed[kind]), (kind, where)
 
 
+def test_catalog_defaults_are_passed_and_epoch_day_is_stated_once():
+    """One events schema and one epoch day, by an AST walk. Every keyword
+    parameter with a default of a public function of aggregate.py or
+    streaming.py is passed by at least one call in src/, tests/,
+    scripts/, perfbench/, bench.py or main.py (positional arguments
+    count under their parameter's name, and ``*args``/``**kwargs`` pass
+    every parameter they can reach): a value no caller sets is a
+    constant, not an option. And no Spark code in src/ spells the day
+    truncation (``date_trunc('day', ...)`` in a SQL string, or a
+    ``date_trunc("day", ...)`` call) outside aggregate.epoch_day; the
+    DuckDB SQL of driver_queries (the ``SQL_*`` strings and the
+    ``_sql_*`` builders) is the oracle and keeps its own spelling."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "src/weblog_pipeline"
+    defaults = {}
+    for module in ("aggregate", "streaming"):
+        for fn in ast.parse((pkg / f"{module}.py").read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            kw = pos[len(pos) - len(a.defaults):] if a.defaults else []
+            kw += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            if kw:
+                defaults[fn.name] = (module, pos, kw)
+    callers = [p for d in ("src", "tests", "scripts", "perfbench") for p in (root / d).rglob("*.py")]
+    callers += [root / "bench.py", root / "main.py"]
+    passed = {name: set() for name in defaults}
+    day_spellings = []
+    for path in callers:
+        tree = ast.parse(path.read_text(), str(path))
+        oracle = path == pkg / "driver_queries.py"
+        in_pkg = pkg in path.parents
+        for top in tree.body:
+            where = f"{path.relative_to(root)}:{getattr(top, 'name', '<module>')}"
+            owner = getattr(top, "name", None) or "".join(
+                getattr(t, "id", "") for t in getattr(top, "targets", [])
+            )
+            exempt = where == "src/weblog_pipeline/aggregate.py:epoch_day" or (
+                oracle and (owner.startswith("SQL_") or owner.startswith("_sql"))
+            )
+            for node in ast.walk(top):
+                if in_pkg and not exempt and (
+                    isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and "date_trunc('day'" in node.value
+                    or isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "date_trunc" and node.args
+                    and isinstance(node.args[0], ast.Constant) and node.args[0].value == "day"
+                ):
+                    day_spellings.append(f"{where}:{node.lineno}")
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name not in defaults:
+                    continue
+                _, pos, kw = defaults[name]
+                for i, arg in enumerate(node.args):
+                    if isinstance(arg, ast.Starred):
+                        passed[name].update(pos[i:])
+                        break
+                    if i < len(pos):
+                        passed[name].add(pos[i])
+                for k in node.keywords:
+                    passed[name].update(kw if k.arg is None else [k.arg])
+    never = sorted(
+        f"{module}.{name}({p})"
+        for name, (module, _, kw) in defaults.items() for p in kw if p not in passed[name]
+    )
+    assert not never, f"{len(never)} keyword defaults no caller passes: {never}"
+    assert not day_spellings, day_spellings
+
+
 def test_bloom_prefilter_bits_side_broadcasts(spark):
     """The bloom bit set must ride a BroadcastHashJoin (it is <=
     depth*width rows regardless of corpus size); the exact audit join
